@@ -28,11 +28,14 @@ module is the local-disk rendition of the same contract.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import shutil
 import stat as stat_mod
 import tempfile
 import time
+import uuid
 
 #: Artifacts untouched for this long are rebuildable dead weight.
 STALE_AGE_SEC = 24 * 3600
@@ -102,10 +105,11 @@ def source_ident(src: str) -> str | None:
     place changes neither the directory's mtime nor its size, so a
     stale artifact would be silently served for a changed corpus.
     Directories therefore fold the sorted ``(relpath, mtime_ns, size)``
-    of every contained file into a digest appended to the ident.
+    of every contained file into a digest appended to the ident — the
+    walk is recursive, so a rewrite two levels deep
+    (``partition=X/part-*.parquet``) changes the ident even though the
+    table directory's own mtime does not.
     """
-    import hashlib
-
     try:
         st = os.stat(src)
     except OSError:
@@ -156,10 +160,9 @@ def publish_parquet_artifact(df, path: str) -> None:
     """Atomically publish a DataFrame as a parquet artifact directory:
     write to a hidden tmp sibling, then one POSIX rename moves it live.
     A concurrent builder that loses the race discards its copy and
-    reads the winner's — valid because every artifact build here is
-    deterministic (the write_knn_graph contract, generalized)."""
-    import uuid
-
+    reads the winner's, which is sound only for deterministic builds
+    (the ``memo_path`` contract).  Object stores swap the rename for a
+    transactional table commit, the merge_load precedent."""
     tmp = (
         f"{os.path.dirname(path)}/."
         f"{os.path.basename(path)}.__build_{uuid.uuid4().hex[:8]}"
@@ -171,3 +174,53 @@ def publish_parquet_artifact(df, path: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.isdir(path):
             raise
+
+
+def memo_path(kind: str, src: str, dials: str, ext: str = "") -> str | None:
+    """Path of the build-once artifact ``kind`` derived from ``src``.
+
+    The contract every memoized artifact (kNN edges, near-dup pairs,
+    fitted centroids, ...) shares: the key is the source identity
+    (``source_ident``) plus ``kind`` plus ``dials``, which must name
+    every parameter the build depends on — a regenerated corpus or a
+    changed dial lands under a new key, and the staleness sweep drops
+    the old one.  Builds are deterministic, so racing builders publish
+    identical artifacts and whichever publish loses discards its copy.
+    Returns None when ``src`` cannot be stat'ed (remote / non-local
+    sources): the caller builds fresh, uncached.
+    """
+    ident = source_ident(src)
+    if ident is None:
+        return None
+    tag = hashlib.md5(f"{ident}|{kind}|{dials}".encode()).hexdigest()[:16]
+    return artifact_path(f"{kind}_{tag}{ext}")
+
+
+def parquet_memo(spark, kind: str, src: str, dials: str, build):
+    """DataFrame artifact under the ``memo_path`` contract: publish
+    ``build()`` once with ``publish_parquet_artifact``, then every call
+    reads the parquet back."""
+    path = memo_path(kind, src, dials)
+    if path is None:
+        return build()
+    if not os.path.isdir(path):
+        publish_parquet_artifact(build(), path)
+    return spark.read.parquet(path)
+
+
+def json_memo(kind: str, src: str, dials: str, build):
+    """JSON-serializable artifact (a small fitted model) under the
+    ``memo_path`` contract, published by tmp file + ``os.replace``.
+    Always returns the DECODED value, so a cache hit and a fresh build
+    hand the caller the same types (lists, never tuples)."""
+    path = memo_path(kind, src, dials, ".json")
+    if path is not None and os.path.isfile(path):
+        with open(path) as fh:
+            return json.load(fh)
+    text = json.dumps(build())
+    if path is not None:
+        tmp = f"{path}.__build_{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, path)  # atomic on POSIX; losers overwrite identically
+    return json.loads(text)

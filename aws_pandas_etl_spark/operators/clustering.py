@@ -687,45 +687,6 @@ def cluster_blocked_cosine_pairs(
     return _rescore_pairs(cand, embeddings, id_col, vec_col, round_digits)
 
 
-def write_knn_graph(edges: DataFrame, path: str) -> None:
-    """Materialize a kNN edge list as a parquet artifact — the
-    build-once half of build-once/query-many graph analytics.
-
-    The kNN graph build (k-means blocking + pair rescore + per-source
-    top-k) dominates every downstream graph query; a deployment builds
-    it ONCE per corpus snapshot and runs PageRank / reachability /
-    clustering against the materialized edges.  The publish is atomic
-    on a POSIX filesystem: Spark writes to a hidden tmp sibling, then
-    one directory rename moves it live — a concurrent builder that
-    loses the race discards its copy and reads the winner's (object
-    stores swap the rename for a transactional table commit, the
-    merge_load precedent).
-
-    Scale shape: edge lists are k_neighbors x n rows (three thin
-    columns) — tiny next to the embeddings they index, cheap to
-    repartition by source node for downstream joins.
-    """
-    import os
-    import shutil
-    import uuid
-
-    tmp = f"{os.path.dirname(path)}/.{os.path.basename(path)}.__build_{uuid.uuid4().hex[:8]}"
-    edges.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # another builder published first — its artifact is equivalent
-        # (the build is deterministic); drop ours
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(path):
-            raise
-
-
-def read_knn_graph(spark, path: str) -> DataFrame:
-    """Read a materialized kNN edge artifact (a, b, cosine_sim)."""
-    return spark.read.parquet(path)
-
-
 def pca_fit(
     embeddings: DataFrame,
     iters: int = 3,

@@ -20,13 +20,20 @@ Parity engineering (why results hash-match exactly):
 from __future__ import annotations
 
 import datetime as _dt
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aws_pandas_etl_spark.artifacts import artifact_path, source_ident
+from aws_pandas_etl_spark.artifacts import (
+    artifact_path,
+    json_memo,
+    memo_path,
+    parquet_memo,
+    publish_parquet_artifact,
+)
 from aws_pandas_etl_spark.operators import dedup as D
 from aws_pandas_etl_spark.operators import multimodal as MM
 from aws_pandas_etl_spark.operators import similarity as SIM
@@ -1053,29 +1060,14 @@ def _shingle3_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every blocking/rescoring strategy reads the columnar result.
     The extraction is deterministic (pytext md5-prefix invariant), so
     cached and fresh tables are value-identical and DuckDB oracle
-    parity is untouched.  Non-stat-able (remote) sf_dirs build fresh."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        write_knn_graph,
-    )
+    parity is untouched."""
 
     def _build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         return D.shingle_hash_table(docs, "doc_id", "text", shingle_n=3)
 
     src = os.path.join(sf_dir, "documents.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = f"{src_id}|sh3-v1|n=3|hex=7"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"shingle3_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)  # generic atomic parquet publish
-    return read_knn_graph(spark, path)
+    return parquet_memo(spark, "shingle3", src, "sh3-v1|n=3|hex=7", _build)
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1089,36 +1081,14 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cc_components labeling build): a deployment computes its near-dup
     evidence once per snapshot and asks many questions of it — the
     _knn_edges/_cc_components contract applied one level lower, to the
-    pair set itself.  Fingerprint = source parquet identity (path,
-    mtime, size) + every dial, so a regenerated corpus or changed
-    threshold invalidates naturally; the build is deterministic, so
-    racing builders publish identical artifacts and the atomic rename
-    keeps exactly one.  Non-stat-able (remote) sf_dirs build fresh."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        write_knn_graph,
-    )
+    pair set itself."""
 
     def _build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         return D.dedup_near_minhash(docs, threshold=0.5, shingle_n=3)
 
     src = os.path.join(sf_dir, "documents.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = (
-        f"{src_id}"
-        f"|mhpairs-v1|thr=0.5|sh=3"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"mh_pairs_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)  # generic atomic parquet publish
-    return read_knn_graph(spark, path)
+    return parquet_memo(spark, "mh_pairs", src, "mhpairs-v1|thr=0.5|sh=3", _build)
 
 
 @register("dedup_minhash_lsh", _minhash_oracle())
@@ -1982,8 +1952,9 @@ def streaming_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sinks.merge_load_partitioned``: read pruned to the partitions
     the batch's keys touch, latest-row-per-key compaction, dynamic
     partition overwrite of ONLY those partitions.  Per-batch cost is
-    ∝ touched-partition bytes (tools/merge_probe.py measures the
-    economics on key-localized batches at 10x; BASELINE.md r12) — the
+    ∝ touched-partition bytes (economics on key-localized batches
+    recorded in BASELINE.md r12 "CDC merge partition-pruning
+    economics", raw JSON docs/merge_probe_r12.json) — the
     continuous-CDC-apply shape that survives a 100 TB target.  The
     flat form stays registered as the small-target default."""
     from aws_pandas_etl_spark.streaming.events_stream import (
@@ -2659,17 +2630,7 @@ FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
 def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once/query-many DSIR weights artifact (the paper's own
     flow: featurize + fit + score once per corpus snapshot, then every
-    selection/resample/analysis query reads the scored table).  Keyed
-    on the documents parquet identity + every build parameter, like
-    _knn_edges; non-stat-able sources build fresh."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.artifacts import (
-        artifact_path,
-        publish_parquet_artifact,
-        source_ident,
-    )
+    selection/resample/analysis query reads the scored table)."""
     from aws_pandas_etl_spark.operators.sampling import (
         DSIR_BUCKETS,
         dsir_log_weights,
@@ -2684,15 +2645,9 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_is_tgt",
         )
 
-    src_id = source_ident(os.path.join(sf_dir, "documents.parquet"))
-    if src_id is None:
-        return _build()
-    ident = f"{src_id}|b={DSIR_BUCKETS}|tgt={DSIR_TARGET_LANG}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"dsir_weights_{tag}")
-    if not os.path.isdir(path):
-        publish_parquet_artifact(_build(), path)
-    return spark.read.parquet(path)
+    src = os.path.join(sf_dir, "documents.parquet")
+    dials = f"b={DSIR_BUCKETS}|tgt={DSIR_TARGET_LANG}"
+    return parquet_memo(spark, "dsir_weights", src, dials, _build)
 
 
 @register("dsir_importance_weights", _dsir_weights_oracle())
@@ -3002,28 +2957,14 @@ def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     both read the same selection, and a deployment fingerprints a
     corpus snapshot once.  Deterministic (pytext md5 invariant), so
     cached and fresh tables are value-identical."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        write_knn_graph,
-    )
 
     def _build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         return D.winnow_fingerprints(docs)
 
     src = os.path.join(sf_dir, "documents.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = f"{src_id}|winnow-v1|k={D.WINNOW_K}|w={D.WINNOW_W}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"winnow_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)  # generic atomic parquet publish
-    return read_knn_graph(spark, path)
+    dials = f"winnow-v1|k={D.WINNOW_K}|w={D.WINNOW_W}"
+    return parquet_memo(spark, "winnow", src, dials, _build)
 
 
 def _winnow_pairs_oracle() -> str:
@@ -4510,14 +4451,9 @@ FROM flagged GROUP BY doc_id ORDER BY doc_id
 
 def _bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
     """Build-once bloom bitmap for the benchmark slice: ~num_bits/64
-    signed int64 words cached as a JSON artifact keyed by the
-    documents parquet identity + every dial (the _kmeans_cents
+    signed int64 words cached as a JSON artifact (the _kmeans_cents
     contract — a deployment builds the benchmark bitmap once and
     probes every corpus refresh against it)."""
-    import hashlib
-    import json as _json
-    import os
-    import uuid as _uuid
 
     def _build() -> list[int]:
         docs = load_table(spark, sf_dir, "documents")
@@ -4530,25 +4466,11 @@ def _bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
         )
 
     src = os.path.join(sf_dir, "documents.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = (
-        f"{src_id}"
-        f"|bloom-v1|b={DECON_BENCH_MAX_ID}|n={DECON_SHINGLE_N}"
+    dials = (
+        f"bloom-v1|b={DECON_BENCH_MAX_ID}|n={DECON_SHINGLE_N}"
         f"|bits={BLOOM_BITS}|k={BLOOM_K}"
     )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"bloom_words_{tag}.json")
-    if os.path.isfile(path):
-        with open(path) as fh:
-            return _json.load(fh)["words"]
-    words = _build()
-    tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        _json.dump({"words": words}, fh)
-    os.replace(tmp, path)  # atomic on POSIX; losers overwrite identically
-    return words
+    return json_memo("bloom_words", src, dials, _build)
 
 
 @register("decontaminate_bloom", _bloom_decon_oracle())
@@ -5012,37 +4934,14 @@ def _cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (threshold 0.5, shingle_n 3, the default band layout): a
     deployment labels its near-dup clusters once per corpus snapshot
     and then asks many questions of the labeling — the `_knn_edges`
-    contract applied to the dedup family.  The artifact key
-    fingerprints the source parquet identity (path, mtime, size) plus
-    every dedup dial, so a regenerated corpus or changed threshold
-    invalidates naturally; the build is deterministic, so racing
-    builders publish identical artifacts and the atomic rename keeps
-    exactly one.  Non-stat-able (remote) sf_dirs build fresh."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        write_knn_graph,
-    )
+    contract applied to the dedup family."""
 
     def _build() -> DataFrame:
         pairs = _minhash_pairs(spark, sf_dir).select("a", "b")
         return D.connected_components(pairs)
 
     src = os.path.join(sf_dir, "documents.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = (
-        f"{src_id}"
-        f"|cc-v1|thr=0.5|sh=3"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"cc_labels_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)  # generic atomic parquet publish
-    return read_knn_graph(spark, path)
+    return parquet_memo(spark, "cc_labels", src, "cc-v1|thr=0.5|sh=3", _build)
 
 
 def _clusters_oracle() -> str:
@@ -7155,55 +7054,33 @@ def _kmeans_cents(
 ) -> tuple[int, list[tuple[int, list[float]]]]:
     """Fit-once/assign-many k-means centroids for the embeddings table:
     returns (k, cents) for the standard dials (k = _kmeans_k rule,
-    KMEANS_ITERS), cached as a tiny JSON artifact keyed by the source
-    parquet's identity — the clustering sibling of _knn_edges and
-    _cc_components, one level lower: the centroids ARE the fitted
-    model (k x dim doubles), and every consumer (plain clustering,
-    cluster-balance report, SemDeDup blocking) assigns against the
-    SAME fit a deployment would train once per corpus snapshot.
-    kmeans_fit is deterministic, so cached and fresh centroids are
-    identical and oracle parity is untouched.  Non-stat-able (remote)
-    sf_dirs fit fresh.  ``split_old`` fits on the 90% "old" split
+    KMEANS_ITERS), cached as a tiny JSON artifact — the clustering
+    sibling of _knn_edges and _cc_components, one level lower: the
+    centroids ARE the fitted model (k x dim doubles), and every
+    consumer (plain clustering, cluster-balance report, SemDeDup
+    blocking) assigns against the SAME fit a deployment would train
+    once per corpus snapshot.  kmeans_fit is deterministic, so cached
+    and fresh centroids are identical and oracle parity is untouched.
+    ``split_old`` fits on the 90% "old" split
     (vec_id % INC_SPLIT_MOD != INC_SPLIT_REM) under its own key — the
     incremental-maintenance scenario's pinned prior fit."""
-    import hashlib
-    import json as _json
-    import os
-    import uuid as _uuid
-
     from aws_pandas_etl_spark.operators.clustering import kmeans_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
     if split_old:
         emb = emb.filter(F.col("vec_id") % INC_SPLIT_MOD != INC_SPLIT_REM)
 
-    def _fit() -> tuple[int, list[tuple[int, list[float]]]]:
+    def _fit() -> dict:
         k = _kmeans_k(emb)
-        return k, kmeans_fit(emb, k=k, iters=KMEANS_ITERS)
+        return {"k": k, "cents": kmeans_fit(emb, k=k, iters=KMEANS_ITERS)}
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _fit()
     split_tag = (
         f"|old%{INC_SPLIT_MOD}!{INC_SPLIT_REM}" if split_old else ""
     )
-    ident = (
-        f"{src_id}"
-        f"|kmc-v1{split_tag}|kk={KMEANS_K}|kd={KMEANS_DIV}|ki={KMEANS_ITERS}"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"kmeans_cents_{tag}.json")
-    if os.path.isfile(path):
-        with open(path) as fh:
-            d = _json.load(fh)
-        return d["k"], [(c, v) for c, v in d["cents"]]
-    k, cents = _fit()
-    tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        _json.dump({"k": k, "cents": [[c, v] for c, v in cents]}, fh)
-    os.replace(tmp, path)  # atomic on POSIX; losers overwrite identically
-    return k, cents
+    dials = f"kmc-v1{split_tag}|kk={KMEANS_K}|kd={KMEANS_DIV}|ki={KMEANS_ITERS}"
+    d = json_memo("kmeans_cents", src, dials, _fit)
+    return d["k"], [(c, v) for c, v in d["cents"]]
 
 
 def _pca_fit_cached(
@@ -7212,36 +7089,20 @@ def _pca_fit_cached(
     """Fit-once/project-many PCA for the embeddings table: (per-dim
     exact-decimal mean, unit top component) at the standard dials
     (PCA_ITERS power-iteration rounds), cached as a tiny JSON artifact
-    keyed by the source parquet identity — the _kmeans_cents contract
-    applied to the second fitted model: pca_top_component reports this
-    axis and pca_projection_by_label projects onto it, and a deployment
-    fits once per corpus snapshot.  pca_fit is deterministic (decimal
-    folds, fixed e_1 start), so cached and fresh fits are identical and
-    oracle parity is untouched.  Non-stat-able sf_dirs fit fresh."""
-    import hashlib
-    import json as _json
-    import os
-    import uuid as _uuid
-
+    — the _kmeans_cents contract applied to the second fitted model:
+    pca_top_component reports this axis and pca_projection_by_label
+    projects onto it, and a deployment fits once per corpus snapshot.
+    pca_fit is deterministic (decimal folds, fixed e_1 start), so
+    cached and fresh fits are identical and oracle parity is
+    untouched."""
     from aws_pandas_etl_spark.operators.clustering import pca_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return pca_fit(emb, iters=PCA_ITERS)
-    ident = f"{src_id}|pca-v1|iters={PCA_ITERS}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"pca_fit_{tag}.json")
-    if os.path.isfile(path):
-        with open(path) as fh:
-            d = _json.load(fh)
-        return d["mean"], d["v"]
-    mean, v = pca_fit(emb, iters=PCA_ITERS)
-    tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        _json.dump({"mean": mean, "v": v}, fh)
-    os.replace(tmp, path)  # atomic on POSIX; losers overwrite identically
+    mean, v = json_memo(
+        "pca_fit", src, f"pca-v1|iters={PCA_ITERS}",
+        lambda: pca_fit(emb, iters=PCA_ITERS),
+    )
     return mean, v
 
 
@@ -7702,16 +7563,8 @@ def semantic_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Served from a build-once pair artifact (the _minhash_pairs
     contract: semantic near-dup evidence is computed once per corpus
-    snapshot, then queried many times; fingerprint = embeddings
-    parquet identity + every dial)."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        semantic_dedup_pairs,
-        write_knn_graph,
-    )
+    snapshot, then queried many times)."""
+    from aws_pandas_etl_spark.operators.clustering import semantic_dedup_pairs
 
     def _build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -7726,18 +7579,8 @@ def semantic_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = (
-        f"{src_id}"
-        f"|semdedup-v1|it={KMEANS_ITERS}|t={SEMDEDUP_T}|p={SEMDEDUP_PROBES}"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"semdedup_pairs_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)  # generic atomic parquet publish
-    return read_knn_graph(spark, path)
+    dials = f"semdedup-v1|it={KMEANS_ITERS}|t={SEMDEDUP_T}|p={SEMDEDUP_PROBES}"
+    return parquet_memo(spark, "semdedup_pairs", src, dials, _build)
 
 
 JL_DIMS = 16
@@ -7924,21 +7767,9 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     A deployment builds the kNN graph once per corpus snapshot and runs
     MANY graph queries against the materialized edges — rebuilding the
     k-means blocking + pair rescore per query triples the dominant
-    cost.  The artifact key fingerprints the source parquet's identity
-    (path, mtime, size) plus every build parameter, so a regenerated
-    corpus or changed k invalidates naturally; the build itself is
-    deterministic (clustering.py's pinned k-means), so racing builders
-    publish identical artifacts and write_knn_graph's atomic rename
-    keeps exactly one.  Non-local sf_dirs (no cheap stat) fall back to
-    an uncached build."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        knn_graph,
-        read_knn_graph,
-        write_knn_graph,
-    )
+    cost.  The build is deterministic (clustering.py's pinned
+    k-means)."""
+    from aws_pandas_etl_spark.operators.clustering import knn_graph
 
     emb = load_table(spark, sf_dir, "embeddings")
 
@@ -7956,18 +7787,8 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:  # remote scheme — identity not stat-able, build fresh
-        return _build()
-    ident = (
-        f"{src_id}"
-        f"|kn={KNN_GRAPH_K}|ki={KMEANS_ITERS}|p={SEMDEDUP_PROBES}"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"knn_graph_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)
-    return read_knn_graph(spark, path)
+    dials = f"kn={KNN_GRAPH_K}|ki={KMEANS_ITERS}|p={SEMDEDUP_PROBES}"
+    return parquet_memo(spark, "knn_graph", src, dials, _build)
 
 
 INC_SPLIT_MOD, INC_SPLIT_REM = 10, 7
@@ -8035,14 +7856,9 @@ def knn_graph_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance price that keeps a corpus-sized graph current without
     corpus² rebuilds; the merge is a union + one per-source top-k
     window."""
-    import hashlib
-    import os
-
     from aws_pandas_etl_spark.operators.clustering import (
         knn_graph,
         knn_graph_extend,
-        read_knn_graph,
-        write_knn_graph,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -8066,20 +7882,11 @@ def knn_graph_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this operator exists to avoid (the _knn_edges precedent), so the
     # old graph caches exactly like the full-corpus artifact.
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:  # remote scheme — build fresh
-        old_edges = _old_edges_build()
-    else:
-        ident = (
-            f"{src_id}"
-            f"|old%{INC_SPLIT_MOD}!{INC_SPLIT_REM}|kn={KNN_GRAPH_K}"
-            f"|ki={KMEANS_ITERS}|p={SEMDEDUP_PROBES}"
-        )
-        tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-        path = artifact_path(f"knn_old_{tag}")
-        if not os.path.isdir(path):
-            write_knn_graph(_old_edges_build(), path)
-        old_edges = read_knn_graph(spark, path)
+    dials = (
+        f"old%{INC_SPLIT_MOD}!{INC_SPLIT_REM}|kn={KNN_GRAPH_K}"
+        f"|ki={KMEANS_ITERS}|p={SEMDEDUP_PROBES}"
+    )
+    old_edges = parquet_memo(spark, "knn_old", src, dials, _old_edges_build)
     return knn_graph_extend(
         old_edges,
         old,
@@ -9361,8 +9168,8 @@ def rare_token_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df∈[2,16] blocking keeps 7.68% of all pairs at sf0.1 — the
     template-heavy synthetic tail), so ~2.4 s warm is the steady
     state for the CURRENT semantics, not a plan defect.  MEASURED
-    (BASELINE.md r11 "Rare-token blocking candidate volume",
-    tools/rare_token_volume.py): candidates are bounded by
+    (BASELINE.md r11 "Rare-token blocking candidate volume"):
+    candidates are bounded by
     rare_vocab x C(cap,2) — 1x: 26,336 grams x 120 >= 1.16M
     enumerated (7.68% of 12.5M pairs); on the 10x clone possible
     pairs grow 100x but candidates FALL to 9,315 (0.0007%) because
@@ -9757,16 +9564,9 @@ def _bpe_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     iterative merge loop — a deployment trains its tokenizer once per
     corpus snapshot, then reads merges and applies the vocabulary as
     separate questions (the fit->apply contract _knn_edges and
-    _minhash_pairs already follow).  Fingerprint = source parquet
-    identity + iters; deterministic build, atomic publish, fresh build
-    for non-stat-able sf_dirs."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        write_knn_graph,
-    )
+    _minhash_pairs already follow).  One training run yields both
+    artifacts, so this is the one memo that publishes two paths under
+    ``memo_path`` keys instead of going through ``parquet_memo``."""
 
     def _build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
@@ -9777,21 +9577,16 @@ def _bpe_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         return merges, cur
 
     src = os.path.join(sf_dir, "documents.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
+    dials = f"bpe-v1|iters={BPE_ITERS}"
+    mp = memo_path("bpe_merges", src, dials)
+    vp = memo_path("bpe_vocab", src, dials)
+    if mp is None:
         return _build()
-    ident = (
-        f"{src_id}"
-        f"|bpe-v1|iters={BPE_ITERS}"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    mp = artifact_path(f"bpe_merges_{tag}")
-    vp = artifact_path(f"bpe_vocab_{tag}")
     if not (os.path.isdir(mp) and os.path.isdir(vp)):
         merges, cur = _build()
-        write_knn_graph(cur, vp)  # generic atomic parquet publish
-        write_knn_graph(merges, mp)
-    return read_knn_graph(spark, mp), read_knn_graph(spark, vp)
+        publish_parquet_artifact(cur, vp)
+        publish_parquet_artifact(merges, mp)
+    return spark.read.parquet(mp), spark.read.parquet(vp)
 
 
 @register("bpe_apply_corpus_stats", _bpe_apply_oracle())
@@ -14848,16 +14643,10 @@ def _pq_codebooks(
     spark: SparkSession, sf_dir: str
 ) -> list[list[tuple[int, list[float]]]]:
     """Fit-once/encode-many PQ codebooks: one deterministic k-means
-    centroid list per subspace, cached as a tiny JSON artifact keyed
-    by the embeddings parquet identity + every dial (the _kmeans_cents
-    contract — the codebooks ARE the fitted model, and a deployment
-    trains them once per corpus snapshot then encodes everything
-    against the same fit)."""
-    import hashlib
-    import json as _json
-    import os
-    import uuid as _uuid
-
+    centroid list per subspace, cached as a tiny JSON artifact (the
+    _kmeans_cents contract — the codebooks ARE the fitted model, and a
+    deployment trains them once per corpus snapshot then encodes
+    everything against the same fit)."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -14877,26 +14666,12 @@ def _pq_codebooks(
         return books
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _fit()
-    ident = (
-        f"{src_id}"
-        f"|pq-v1|s={PQ_SUBSPACES}|d={PQ_SUBDIM}"
+    dials = (
+        f"pq-v1|s={PQ_SUBSPACES}|d={PQ_SUBDIM}"
         f"|kk={KMEANS_K}|kd={KMEANS_DIV}|ki={KMEANS_ITERS}"
     )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"pq_books_{tag}.json")
-    if os.path.isfile(path):
-        with open(path) as fh:
-            d = _json.load(fh)
-        return [[(c, v) for c, v in book] for book in d["books"]]
-    books = _fit()
-    tmp = f"{path}.__build_{_uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        _json.dump({"books": [[[c, v] for c, v in b] for b in books]}, fh)
-    os.replace(tmp, path)  # atomic on POSIX; losers overwrite identically
-    return books
+    books = json_memo("pq_books", src, dials, _fit)
+    return [[(c, v) for c, v in book] for book in books]
 
 
 @register("pq_codebook_quantization", _pq_oracle())
@@ -14925,18 +14700,10 @@ def pq_codebook_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode-once/search-many PQ code table (vec_id, label, code_0..3,
-    recon_err), materialized behind the same fingerprint-keyed atomic
-    publish as the other pair/state artifacts: the codes ARE the
-    compressed index a deployment builds once per corpus snapshot and
-    then serves every ADC query from."""
-    import hashlib
-    import os
-
-    from aws_pandas_etl_spark.operators.clustering import (
-        _dist_structs,
-        read_knn_graph,
-        write_knn_graph,
-    )
+    recon_err), memoized like the other pair/state artifacts: the
+    codes ARE the compressed index a deployment builds once per corpus
+    snapshot and then serves every ADC query from."""
+    from aws_pandas_etl_spark.operators.clustering import _dist_structs
 
     def _build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -14961,19 +14728,11 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    src_id = source_ident(src)
-    if src_id is None:
-        return _build()
-    ident = (
-        f"{src_id}"
-        f"|pqcodes-v1|s={PQ_SUBSPACES}|d={PQ_SUBDIM}"
+    dials = (
+        f"pqcodes-v1|s={PQ_SUBSPACES}|d={PQ_SUBDIM}"
         f"|kk={KMEANS_K}|kd={KMEANS_DIV}|ki={KMEANS_ITERS}"
     )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:16]
-    path = artifact_path(f"pq_codes_{tag}")
-    if not os.path.isdir(path):
-        write_knn_graph(_build(), path)  # generic atomic parquet publish
-    return read_knn_graph(spark, path)
+    return parquet_memo(spark, "pq_codes", src, dials, _build)
 
 
 STUMP_ORACLE = """

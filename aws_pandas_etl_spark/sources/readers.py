@@ -17,6 +17,8 @@ import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_pandas_etl_spark.artifacts import source_ident
+
 TABLES = (
     "region",
     "nation",
@@ -59,34 +61,12 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     return sorted(ns_names)
 
 
-def _path_fingerprint(path: str):
-    """Cheap change-detection key for a parquet file or directory:
-    (mtime_ns, size) of the file, plus the (relpath, mtime_ns, size)
-    of every file under it for a directory-shaped table — recursive,
-    so a rewrite two levels deep (partition=X/part-*.parquet) changes
-    the fingerprint even though the table dir's own mtime does not
-    (r15 ADVICE).  Any rewrite of the data invalidates the metadata
-    cache below — the cache can never serve a stale schema for
-    regenerated fixtures."""
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    children = []
-    for root, dirs, files in os.walk(path):
-        dirs.sort()
-        rel = os.path.relpath(root, path)
-        for fn in sorted(files):
-            try:
-                cst = os.stat(os.path.join(root, fn))
-            except OSError:
-                continue
-            children.append((os.path.join(rel, fn), cst.st_mtime_ns, cst.st_size))
-    return (st.st_mtime_ns, tuple(children))
-
-
-# path -> (fingerprint, ns_cols, raw inferred schema).  METADATA only
-# (schema + nanos-column detection) — never rows or results; the
-# parquet data is re-scanned by every query.  Rationale (r15
+# path -> (fingerprint, ns_cols, raw inferred schema), the fingerprint
+# being ``source_ident(path)``: any rewrite of the data, however deep
+# in a partitioned table, changes it, so the cache can never serve a
+# stale schema for regenerated fixtures.  METADATA only (schema +
+# nanos-column detection) — never rows or results; the parquet data
+# is re-scanned by every query.  Rationale (r15
 # measurement, tools/build_vs_exec.json): schema inference inside
 # ``spark.read.parquet`` costs 70-98 ms per call vs 12 ms with an
 # explicit schema, and load_table runs 2-4x per query x 297 queries,
@@ -140,13 +120,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     plan construction, measured).  Only metadata is cached — every
     query still scans the parquet data."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        fp = _path_fingerprint(path)
-    except OSError:
-        # missing table: skip the cache and let spark.read raise its
-        # usual AnalysisException ("Path does not exist") — callers
-        # that catch Spark errors keep working (r15 ADVICE)
-        fp = None
+    # None = missing table: skip the cache and let spark.read raise its
+    # usual AnalysisException ("Path does not exist") — callers that
+    # catch Spark errors keep working (r15 ADVICE)
+    fp = source_ident(path)
     if fp is not None:
         hit = _DF_CACHE.get(path)
         if hit is not None and hit[0] == fp and hit[1] is spark:

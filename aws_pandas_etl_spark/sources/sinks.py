@@ -489,7 +489,8 @@ def merge_load_partitioned(
     would be invisible to the pruned read yet still overwritten by the
     dynamic-partition commit — a silent row-loss mode, converted here
     into an error.  Per-batch cost is ∝ touched-partition bytes, not
-    target bytes (measured: tools/merge_probe.py, BASELINE.md r12).
+    target bytes (measured: BASELINE.md r12 "CDC merge
+    partition-pruning economics", docs/merge_probe_r12.json).
 
     LAYOUT STAMP: the per-batch guard proves the CONTRACT for each
     batch, and induction extends it to the target — but the induction

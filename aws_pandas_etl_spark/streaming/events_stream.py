@@ -533,7 +533,8 @@ def run_foreach_batch_merge(
     each batch to ``sinks.merge_load_partitioned`` — per-batch cost
     becomes ∝ the partitions the batch's keys touch instead of the
     whole target, the shape that survives a 100 TB target (r11 verdict
-    #4; economics measured in tools/merge_probe.py / BASELINE.md r12).
+    #4; economics recorded in BASELINE.md r12 "CDC merge
+    partition-pruning economics" and docs/merge_probe_r12.json).
     Final state is identical either way — same keys, same ordering."""
     from aws_pandas_etl_spark.sources.readers import load_table
     from aws_pandas_etl_spark.sources.sinks import (

@@ -1012,23 +1012,20 @@ def test_knn_graph_artifact_built_once_and_reused(spark):
     assert _inner_state(paths[0]) == inner
 
 
-def test_write_knn_graph_atomic_publish_race(spark, tmp_path):
+def test_publish_parquet_artifact_atomic_publish_race(spark, tmp_path):
     """A builder that loses the publish race discards its copy and the
     winner's artifact survives untouched."""
     from pyspark.sql import Row
 
-    from aws_pandas_etl_spark.operators.clustering import (
-        read_knn_graph,
-        write_knn_graph,
-    )
+    from aws_pandas_etl_spark.artifacts import publish_parquet_artifact
 
     winner = spark.createDataFrame([Row(a=1, b=2, cosine_sim=0.9)])
     loser = spark.createDataFrame([Row(a=9, b=8, cosine_sim=0.1)])
     path = str(tmp_path / "knn")
-    write_knn_graph(winner, path)
+    publish_parquet_artifact(winner, path)
     # second publish to the same live path = the lost race
-    write_knn_graph(loser, path)
-    got = [tuple(r) for r in read_knn_graph(spark, path).collect()]
+    publish_parquet_artifact(loser, path)
+    got = [tuple(r) for r in spark.read.parquet(path).collect()]
     assert got == [(1, 2, 0.9)]
     # no tmp siblings left behind
     leftovers = [p for p in tmp_path.iterdir() if p.name.startswith(".knn.")]
@@ -1264,11 +1261,12 @@ def test_artifact_sweep_removes_stale_file_artifacts(tmp_path, monkeypatch):
 
 
 def test_pair_and_state_artifacts_reuse_and_invalidate(spark, tmp_path):
-    """The round-8 pair/state artifacts (_minhash_pairs, _bpe_state,
-    _semdedup_pairs) honor the same build-once contract as _knn_edges:
-    one artifact per corpus fingerprint, reused across calls, rebuilt
-    (under a new key, with identical deterministic results) when the
-    source identity changes."""
+    """The pair/state artifacts (_minhash_pairs, _bpe_state,
+    _kmeans_cents' JSON fit, _semdedup_pairs) honor the same build-once
+    contract as _knn_edges: one artifact per corpus fingerprint, reused
+    across calls with the value a fresh build returned, rebuilt (under
+    a new key, with identical deterministic results) when the source
+    identity changes."""
     import glob
     import os
     import shutil
@@ -1284,30 +1282,41 @@ def test_pair_and_state_artifacts_reuse_and_invalidate(spark, tmp_path):
             os.path.join(sf_dir, f"{t}.parquet"),
         )
 
+    def _rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    # _kmeans_cents runs before semantic_dedup_pairs, whose build fits
+    # (and caches) the same centroids
     cases = [
         ("mh_pairs_*", "documents.parquet",
-         lambda: Q._minhash_pairs(spark, sf_dir)),
+         lambda: _rows(Q._minhash_pairs(spark, sf_dir))),
         ("bpe_vocab_*", "documents.parquet",
-         lambda: Q._bpe_state(spark, sf_dir)[1]),
+         lambda: _rows(Q._bpe_state(spark, sf_dir)[1])),
+        ("kmeans_cents_*.json", "embeddings.parquet",
+         lambda: Q._kmeans_cents(spark, sf_dir)),
         ("semdedup_pairs_*", "embeddings.parquet",
-         lambda: Q.QUERIES["semantic_dedup_pairs"](spark, sf_dir)),
+         lambda: _rows(Q.QUERIES["semantic_dedup_pairs"](spark, sf_dir))),
     ]
     for pattern, src_name, run in cases:
         pat = artifact_path(pattern)
         src = os.path.join(sf_dir, src_name)
         before = set(glob.glob(pat))
-        first = sorted(tuple(r) for r in run().collect())
-        run().collect()  # second call must NOT build another artifact
+        first = run()  # fresh build
+        hit = run()  # second call must NOT build another artifact
+        assert hit == first, pattern  # a hit returns what the build did
         mid = set(glob.glob(pat))
         assert len(mid - before) == 1, pattern
         st = os.stat(src)
         os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-        second = sorted(tuple(r) for r in run().collect())
+        second = run()
         after = set(glob.glob(pat))
         assert len(after - mid) == 1, pattern  # rebuilt under a new key
         assert second == first, pattern  # deterministic build
         for p in after - before:
-            shutil.rmtree(p, ignore_errors=True)
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.unlink(p)
 
 
 def test_ols_betas_match_numpy_lstsq(spark):

@@ -11,16 +11,16 @@ the offending rows.
 
 from __future__ import annotations
 
-import datetime as dt
-import decimal
-import math
+import os
+import sys
 
 import pytest
 
-import os
-
 import __spark_entry__ as entrymod
 from tests.conftest import SF_SMOKE, duck_con
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
+from oracle_sweep import _canon  # noqa: E402  (the oracle sweep's row canon)
 
 # SPARK_GRAFT_TEST_SF=/root/testdata/sf0.01 runs the parity suite at the
 # driver's correctness scale (default: sf0.001 for speed)
@@ -28,28 +28,6 @@ TEST_SF = os.environ.get("SPARK_GRAFT_TEST_SF", SF_SMOKE)
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
-
-
-def _normalize(v):
-    if isinstance(v, decimal.Decimal):
-        return ("dec", str(v.normalize()))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("f", "nan")
-        return ("f", repr(v))
-    if isinstance(v, dt.datetime):
-        return ("ts", v.replace(tzinfo=None).isoformat())
-    if isinstance(v, dt.date):
-        return ("d", v.isoformat())
-    return v
-
-
-def _canon(rows, columns):
-    """Sort columns by name (like the driver), then sort rows."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = [tuple(_normalize(r[i]) for i in order) for r in rows]
-    out.sort(key=repr)
-    return out
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

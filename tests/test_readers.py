@@ -539,6 +539,7 @@ def test_fingerprint_invalidates_on_nested_rewrite(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from aws_pandas_etl_spark.artifacts import source_ident
     from aws_pandas_etl_spark.sources import readers
 
     sf_dir = str(tmp_path)
@@ -585,7 +586,7 @@ def test_fingerprint_invalidates_on_nested_rewrite(spark, tmp_path):
     for p, st in stats.items():
         os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
 
-    fp2 = readers._path_fingerprint(path)
+    fp2 = source_ident(path)
     assert fp2 != fp1  # recursive walk sees the leaf rewrite
     load_table(spark, sf_dir, "p")  # re-infers (cache miss), no stale serve
     assert readers._META_CACHE[path][0] == fp2  # entry re-keyed, not stale

@@ -13,8 +13,8 @@ Arms:
   --base nopin            base    = same code with every
                           DataFrame.localCheckpoint() monkeypatched to
                           a no-op (isolates exactly the pin's effect)
-  --base-fn mod:fn        base    = an explicit callable (old
-                          implementation kept in tools/ab_variants.py
+  --base-fn mod:fn        base    = an explicit callable (e.g. an
+                          old implementation kept in a side module
                           for restructuring A/Bs)
   --variant-fn mod:fn     override the variant arm the same way
 
