@@ -118,7 +118,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached process-wide; subsequent reads pass the cached schema
     explicitly, skipping the JVM footer/inference pass (~8x cheaper
     plan construction, measured).  Only metadata is cached — every
-    query still scans the parquet data."""
+    query still scans the parquet data.
+
+    Repeated calls for the same table (same content, same session)
+    return the SAME DataFrame object.  A query that loads a table twice
+    and joins the copies must alias both sides and join on qualified
+    references (``a.alias("n1")``, ``F.col("n1.n_regionkey")``); the
+    unaliased column-object form (``a["k"] == b["k"]``) is ambiguous
+    and Spark rejects it loudly."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     # None = missing table: skip the cache and let spark.read raise its
     # usual AnalysisException ("Path does not exist") — callers that

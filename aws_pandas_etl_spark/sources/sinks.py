@@ -4,9 +4,14 @@ K1 (parquet to S3 time-partitioned prefix, /root/reference/main.py:52-65
 + s3_operations.py:49-61) and K2 (Redshift TRUNCATE+COPY,
 redshift_operations.py:121-167) re-expressed as Spark distributed
 writes: executors write part-files directly to the object store (no
-driver-funneled bytes), and the TRUNCATE+COPY full refresh becomes
-``mode("overwrite")`` with a post-write count reconciliation
-(PG_LAST_COPY_COUNT parity, redshift_operations.py:154-155).
+driver-funneled bytes), and the TRUNCATE+COPY full refresh becomes a
+swap-published overwrite + read-back count (PG_LAST_COPY_COUNT parity,
+redshift_operations.py:154-155).
+
+Every sink that rewrites a whole target (``overwrite_load``,
+``merge_load``, ``delete_load``, each ``compact_table`` swap) commits
+through the one crash-safe ``_SwapTarget``, and every Hadoop
+FileSystem operation resolves its filesystem through ``_hadoop_fs``.
 """
 
 from __future__ import annotations
@@ -20,8 +25,8 @@ ROWS_PER_FILE = 1_000_000
 
 # Compaction in-progress marker (underscore prefix: hidden from Spark's
 # file listing, like _SUCCESS / _layout.json).  compact_table creates it
-# before scanning and removes it only on SUCCESS; every incremental
-# writer checks it and refuses loudly, which excludes the
+# before scanning and removes it only on SUCCESS; every writer checks
+# it (after crash recovery) and refuses loudly, which excludes the
 # scan-vs-late-append race (a batch landing between compaction's
 # snapshot and its keep-aside swap would otherwise be deleted with the
 # old directory — silent row loss).  A marker left behind by a CRASHED
@@ -29,14 +34,42 @@ ROWS_PER_FILE = 1_000_000
 # operator inspects the target and calls clear_compaction_marker().
 _COMPACTING_MARKER = "_COMPACTING"
 
+# Names of the entries a compaction rewrote, staged into its new copy
+# and deleted after the stray rescue: a run that dies mid-rescue leaves
+# it behind, and the next compact_table finishes the rescue from it.
+_SNAPSHOT_MANIFEST = "_compaction_snapshot"
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``: the one place the sinks
+    resolve a Hadoop filesystem, so every metadata operation (exists,
+    rename, delete, create) goes through this seam — tests wrap the
+    returned ``fs`` to inject a failure at any step."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _write_text(fs, jpath, text: str) -> None:
+    stream = fs.create(jpath, True)
+    try:
+        stream.write(text.encode("utf-8"))
+    finally:
+        stream.close()
+
+
+def _read_text(spark: SparkSession, fs, jpath) -> str:
+    stream = fs.open(jpath)
+    try:
+        # commons-io rides on Spark's classpath; a py4j bytearray read
+        # would NOT round-trip (Java-side writes into a passed byte[]
+        # never propagate back to Python)
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
 
 def _compacting_marker_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/" + _COMPACTING_MARKER
-    )
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
+    return _hadoop_fs(spark, path.rstrip("/") + "/" + _COMPACTING_MARKER)
 
 
 def compaction_in_progress(spark: SparkSession, path: str) -> bool:
@@ -49,17 +82,48 @@ def clear_compaction_marker(spark: SparkSession, path: str) -> bool:
     """Remove a stale ``_COMPACTING`` marker left by a crashed
     compaction — the explicit operator action after inspecting the
     target (compact_table's keep-aside swap means every crash point
-    leaves a complete copy: either the live dir or the hidden
-    ``._compact_old`` sibling).  Returns whether a marker existed."""
+    leaves a complete copy, and opening the target restores it from
+    the hidden ``._merge_old`` sibling).  Re-run ``compact_table``
+    before any other writer: it finishes a stray rescue the crash cut
+    short.  Returns whether a marker existed."""
     fs, jpath = _compacting_marker_path(spark, path)
     return bool(fs.delete(jpath, False))
 
 
-def _refuse_if_compacting(spark: SparkSession, path: str) -> None:
-    """Single-writer guard: incremental writers refuse while a
-    compaction holds the target (one FS exists() RPC, ~ms).  Without
-    this, rows appended between compact_table's snapshot and its
-    directory swap are silently deleted with the superseded copy."""
+def _merge_side_paths(path: str) -> tuple[str, str]:
+    """Dot-prefixed tmp/old sibling paths for ``_SwapTarget``.
+    The dot prefix matters: Spark's file index skips paths starting
+    with ``.`` or ``_``, so a parent-directory glob reader never picks
+    up an in-flight tmp write or the kept-aside previous copy."""
+    base = path.rstrip("/")
+    head, _, tail = base.rpartition("/")
+    prefix = f"{head}/" if head else ""
+    return f"{prefix}.{tail}._merge_tmp", f"{prefix}.{tail}._merge_old"
+
+
+def _recover(spark: SparkSession, path: str) -> None:
+    """Crash recovery: if a swap died between its two renames (live
+    target missing, kept-aside copy complete), rename the copy back.
+    Touches nothing when the live target exists."""
+    _, old_path = _merge_side_paths(path)
+    fs, jfinal = _hadoop_fs(spark, path)
+    _, jold = _hadoop_fs(spark, old_path)
+    if not fs.exists(jfinal) and fs.exists(jold):
+        if not fs.rename(jold, jfinal):
+            raise IOError(f"swap: crash recovery {old_path} -> {path} failed")
+
+
+def _open_for_write(spark: SparkSession, path: str) -> None:
+    """Every writer's first step: crash recovery, then the single-writer
+    guard — refuse while a compaction holds the target (one FS
+    exists() RPC, ~ms).  Without the guard, rows appended between
+    compact_table's snapshot and its directory swap are silently
+    deleted with the superseded copy.  Recovery comes FIRST: a
+    compaction that died between its two renames took its marker aside
+    with the live directory, and only the restore puts it back where
+    the guard sees it.  Nothing else may run before the guard: a
+    refused writer must leave a live compaction's staged copy alone."""
+    _recover(spark, path)
     if compaction_in_progress(spark, path):
         raise IOError(
             f"target {path!r} is being compacted (found "
@@ -67,6 +131,48 @@ def _refuse_if_compacting(spark: SparkSession, path: str) -> None:
             f"compact_table to finish; if the compaction crashed, "
             f"inspect the target and call clear_compaction_marker()"
         )
+
+
+class _SwapTarget:
+    """The one crash-safe commit for every sink that rewrites a whole
+    parquet target (overwrite_load, merge_load, delete_load and each
+    compact_table swap).  The caller stages the new copy at
+    ``tmp_path`` (``.<name>._merge_tmp``); ``commit`` renames the live
+    target ASIDE to ``old_path`` (``.<name>._merge_old``) and the tmp
+    in; ``drop_old`` deletes the kept-aside copy; ``publish`` is the
+    three steps for a plain DataFrame write.
+
+    Opening the target is ``_open_for_write`` (crash recovery, then the
+    compaction guard) followed by deleting a leftover tmp from a failed
+    write.  Every crash point therefore leaves the pre-call or the
+    post-call target on disk.  Rename is still non-atomic on object
+    stores — production swaps ``commit`` for a transactional table
+    commit (Delta/Iceberg), keeping the same plan."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        _open_for_write(spark, path)
+        self.path = path
+        self.tmp_path, self.old_path = _merge_side_paths(path)
+        self.fs, self.jfinal = _hadoop_fs(spark, path)
+        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+        self.jtmp, self.jold = jvm_path(self.tmp_path), jvm_path(self.old_path)
+        self.fs.delete(self.jtmp, True)  # leftover tmp from a failed write
+
+    def commit(self) -> None:
+        fs = self.fs
+        fs.delete(self.jold, True)  # stale kept-aside copy from an old success
+        if fs.exists(self.jfinal) and not fs.rename(self.jfinal, self.jold):
+            raise IOError(f"swap: keep-aside {self.path} -> {self.old_path} failed")
+        if not fs.rename(self.jtmp, self.jfinal):
+            raise IOError(f"swap: rename {self.tmp_path} -> {self.path} failed")
+
+    def drop_old(self) -> None:
+        self.fs.delete(self.jold, True)
+
+    def publish(self, df: DataFrame) -> None:
+        write_parquet_sink(df, self.tmp_path, mode="overwrite")
+        self.commit()
+        self.drop_old()
 
 
 def landing_path(base: str, table: str, ts: _dt.datetime | None = None) -> str:
@@ -96,12 +202,14 @@ def write_parquet_sink(
 
 
 def overwrite_load(df: DataFrame, path: str) -> int:
-    """K2 — full-refresh load (TRUNCATE+COPY parity): overwrite the
+    """K2 — full-refresh load (TRUNCATE+COPY parity): replace the
     target and return the loaded row count read back from the target
     (reconciliation reads what actually landed, like
-    PG_LAST_COPY_COUNT)."""
-    df.write.mode("overwrite").option("maxRecordsPerFile", str(ROWS_PER_FILE)).parquet(path)
+    PG_LAST_COPY_COUNT).  The load is swap-published: a failed or
+    interrupted refresh leaves the previous load in place, where
+    Spark's own overwrite mode deletes the target before the job runs."""
     spark = df.sparkSession
+    _SwapTarget(spark, path).publish(df)
     return spark.read.parquet(path).count()
 
 
@@ -117,7 +225,7 @@ def append_load(df: DataFrame, path: str) -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    _refuse_if_compacting(df.sparkSession, path)
+    _open_for_write(df.sparkSession, path)
     obs = Observation()
     write_parquet_sink(
         df.observe(obs, F.count(F.lit(1)).alias("n")), path, mode="append"
@@ -199,58 +307,6 @@ def jdbc_overwrite_load(
     return int(reader.load().collect()[0][0])
 
 
-def _merge_side_paths(path: str) -> tuple[str, str]:
-    """Dot-prefixed tmp/old sibling paths for ``merge_load``'s swap.
-    The dot prefix matters: Spark's file index skips paths starting
-    with ``.`` or ``_``, so a parent-directory glob reader never picks
-    up an in-flight tmp write or the kept-aside previous copy."""
-    base = path.rstrip("/")
-    head, _, tail = base.rpartition("/")
-    prefix = f"{head}/" if head else ""
-    return f"{prefix}.{tail}._merge_tmp", f"{prefix}.{tail}._merge_old"
-
-
-class _SwapTarget:
-    """Crash-safe rewrite of a live parquet target via hidden siblings:
-    write to ``.<name>._merge_tmp``, rename the live target ASIDE to
-    ``.<name>._merge_old``, rename the tmp in, drop the old copy.
-    Every crash point leaves a full copy on disk; ``recover()`` (run
-    BEFORE reading the existing target) restores the kept-aside copy
-    if a previous run died between the two renames.  Rename is still
-    non-atomic on object stores — production swaps ``publish`` for a
-    transactional table commit (Delta/Iceberg), keeping the same plan.
-    Shared by merge_load (CDC upsert) and delete_load (key scrub)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.tmp_path, self.old_path = _merge_side_paths(path)
-        jvm = spark._jvm
-        self.jtmp = jvm.org.apache.hadoop.fs.Path(self.tmp_path)
-        self.jold = jvm.org.apache.hadoop.fs.Path(self.old_path)
-        self.jfinal = jvm.org.apache.hadoop.fs.Path(path)
-        self.fs = self.jfinal.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def recover(self) -> None:
-        fs = self.fs
-        if not fs.exists(self.jfinal) and fs.exists(self.jold):
-            if not fs.rename(self.jold, self.jfinal):
-                raise IOError(
-                    f"swap: crash recovery {self.old_path} -> {self.path} failed"
-                )
-        fs.delete(self.jtmp, True)  # leftover tmp from a failed write
-
-    def publish(self, df: DataFrame) -> None:
-        fs = self.fs
-        write_parquet_sink(df, self.tmp_path, mode="overwrite")
-        fs.delete(self.jold, True)  # stale kept-aside copy from an old success
-        if fs.exists(self.jfinal) and not fs.rename(self.jfinal, self.jold):
-            raise IOError(f"swap: keep-aside {self.path} -> {self.old_path} failed")
-        if not fs.rename(self.jtmp, self.jfinal):
-            raise IOError(f"swap: rename {self.tmp_path} -> {self.path} failed")
-        fs.delete(self.jold, True)
-
-
 def delete_load(spark: SparkSession, path: str, keys_df: DataFrame, keys: list[str]) -> int:
     """GDPR-style hard delete: remove every row of the live parquet
     target whose key tuple appears in ``keys_df`` — the
@@ -267,9 +323,7 @@ def delete_load(spark: SparkSession, path: str, keys_df: DataFrame, keys: list[s
     the rewrite cost is the price of immutable files, amortized by
     batching requests — production on Delta/Iceberg swaps the publish
     for DELETE WHERE with the identical anti-join plan."""
-    _refuse_if_compacting(spark, path)
     swap = _SwapTarget(spark, path)
-    swap.recover()
     existing = spark.read.parquet(path)  # missing target must raise
     remaining = existing.join(
         keys_df.select(*keys).distinct(), keys, "left_anti"
@@ -294,25 +348,41 @@ def merge_load(
     Returns the target row count after the merge.
 
     Without a transactional table format the merged result is written
-    to a hidden temp sibling and swapped in with metadata ops only:
-    the live target is first renamed ASIDE (to ``.<name>._merge_old``),
-    then the tmp renamed in, then the old copy dropped.  Every crash
-    point leaves a full copy of the data on disk: a write failure
-    leaves the target untouched; a crash between the two renames leaves
+    to a hidden temp sibling and swapped in by ``_SwapTarget`` (live
+    target renamed aside, tmp renamed in, old copy dropped): the full
+    distributed write never touches the live target, so a failed write
+    leaves it untouched, and a crash between the two renames leaves
     the ``._merge_old`` copy, which the next run restores before
-    merging (see the recovery step below).  Rename is still non-atomic
-    on object stores — production swaps the final step for
-    Delta/Iceberg MERGE INTO, keeping the identical dedup plan.  The
-    compaction is one shuffle on the merge keys."""
+    merging.  No localCheckpoint is needed: the target is only read,
+    not overwritten, during the write.  Production swaps the commit
+    for Delta/Iceberg MERGE INTO, keeping the identical dedup plan.
+    The compaction is one shuffle on the merge keys."""
+    spark = df.sparkSession
+    _SwapTarget(spark, path).publish(
+        _latest_per_key(df, path, keys, order_col, tiebreak_col)
+    )
+    return spark.read.parquet(path).count()
+
+
+def _latest_per_key(
+    df: DataFrame,
+    path: str,
+    keys: list[str],
+    order_col: str,
+    tiebreak_col: str | None,
+    prune=None,
+) -> DataFrame:
+    """The merge core shared by ``merge_load`` and
+    ``merge_load_partitioned``: union ``df`` with the existing target
+    (rows matching ``prune`` only, when given) and keep one row per key
+    — ``order_col`` descending, ties to the incoming batch, then to the
+    largest ``tiebreak_col``.  A missing or data-less target is a first
+    load; any other read failure propagates."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from pyspark.errors import AnalysisException
 
-    spark = df.sparkSession
-    _refuse_if_compacting(spark, path)
-    swap = _SwapTarget(spark, path)
-    swap.recover()
     # helper columns must not collide with user columns — pick names
     # that are guaranteed absent (a "_src" column in the data would
     # otherwise be clobbered and then dropped)
@@ -322,15 +392,19 @@ def merge_load(
     while rn_col in df.columns:
         rn_col = "_" + rn_col
     try:
-        existing = spark.read.parquet(path).withColumn(src_col, F.lit(0))
+        existing = df.sparkSession.read.parquet(path)
+        if prune is not None:
+            existing = existing.filter(prune)
+        existing = existing.withColumn(src_col, F.lit(0))
     except AnalysisException as exc:
         # ONLY absence means "first load" — a missing path, or an
-        # existing directory holding no parquet (mkdir'ed target,
-        # metadata-only: UNABLE_TO_INFER_SCHEMA) — there is no history
-        # to destroy in either.  Any other read failure (transient FS
-        # error, corrupt footer, permissions) must propagate: falling
-        # through would overwrite the target with just this batch and
-        # silently destroy merged history
+        # existing directory holding no parquet (mkdir'ed target, or
+        # metadata-only such as a stamp-before-data crash:
+        # UNABLE_TO_INFER_SCHEMA) — there is no history to destroy in
+        # either.  Any other read failure (transient FS error, corrupt
+        # footer, permissions) must propagate: falling through would
+        # overwrite the target with just this batch and silently
+        # destroy merged history
         if "PATH_NOT_FOUND" not in str(exc) and (
             "UNABLE_TO_INFER_SCHEMA" not in str(exc)
         ):
@@ -342,27 +416,18 @@ def merge_load(
     if tiebreak_col is not None:
         order.append(F.col(tiebreak_col).desc())
     w = Window.partitionBy(*keys).orderBy(*order)
-    merged = (
+    return (
         allrows.withColumn(rn_col, F.row_number().over(w))
         .filter(F.col(rn_col) == 1)
         .drop(rn_col, src_col)
     )
-    # Write to the hidden temp sibling, then swap: the full distributed
-    # write (the risky, long part) never touches the live target; no
-    # localCheckpoint materialization needed since the target is only
-    # read, not overwritten, during the write.
-    swap.publish(merged)
-    return spark.read.parquet(path).count()
 
 
 _LAYOUT_MARKER = "_layout.json"
 
 
 def _layout_marker_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _LAYOUT_MARKER)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
+    return _hadoop_fs(spark, path.rstrip("/") + "/" + _LAYOUT_MARKER)
 
 
 def read_layout_marker(spark: SparkSession, path: str) -> dict | None:
@@ -376,37 +441,21 @@ def read_layout_marker(spark: SparkSession, path: str) -> dict | None:
     fs, jpath = _layout_marker_path(spark, path)
     if not fs.exists(jpath):
         return None
-    stream = fs.open(jpath)
-    try:
-        # commons-io rides on Spark's classpath; a py4j bytearray read
-        # would NOT round-trip (Java-side writes into a passed byte[]
-        # never propagate back to Python)
-        data = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(data)
+    return json.loads(_read_text(spark, fs, jpath))
 
 
 def _write_layout_marker(spark: SparkSession, path: str, spec: dict) -> None:
     import json
 
     fs, jpath = _layout_marker_path(spark, path)
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(json.dumps(spec, sort_keys=True).encode("utf-8"))
-    finally:
-        stream.close()
+    _write_text(fs, jpath, json.dumps(spec, sort_keys=True))
 
 
 def _target_has_data(spark: SparkSession, path: str) -> bool:
     """True iff the target directory exists and holds anything besides
     hidden/metadata entries (``_layout.json``, ``_SUCCESS``, dotfiles).
     One FileSystem listStatus RPC — no data read."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return False
     for st in fs.listStatus(jpath):
@@ -526,13 +575,10 @@ def merge_load_partitioned(
     in Delta/Iceberg MERGE INTO for the commit, keeping this identical
     pruned plan.  Returns the post-merge row count of the TOUCHED
     partitions (the untouched remainder was provably not modified)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from pyspark.errors import AnalysisException
-
     spark = df.sparkSession
-    _refuse_if_compacting(spark, path)
+    _open_for_write(spark, path)
     # layout stamp: refuse a target whose recorded key→partition layout
     # differs from this call's — the silent-resurrection mode the
     # per-batch guard's induction can't see (see docstring).
@@ -641,37 +687,9 @@ def merge_load_partitioned(
     touched = list(stats["_touched"])
     if not touched:
         return 0
-    src_col, rn_col = "_merge_src", "_merge_rn"
-    while src_col in df.columns:
-        src_col = "_" + src_col
-    while rn_col in df.columns:
-        rn_col = "_" + rn_col
-    try:
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(partition_col).isin(touched))
-            .withColumn(src_col, F.lit(0))
-        )
-    except AnalysisException as exc:
-        # absence is benign in two spellings: no path at all, or a
-        # path holding only metadata (the stamp-before-data crash
-        # window below leaves _layout.json with no parquet yet, which
-        # reads as UNABLE_TO_INFER_SCHEMA)
-        if "PATH_NOT_FOUND" not in str(exc) and (
-            "UNABLE_TO_INFER_SCHEMA" not in str(exc)
-        ):
-            raise  # same posture as merge_load: only absence is benign
-        existing = None
-    incoming = df.withColumn(src_col, F.lit(1))
-    allrows = incoming if existing is None else existing.unionByName(incoming)
-    order = [F.col(order_col).desc(), F.col(src_col).desc()]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col).desc())
-    w = Window.partitionBy(*keys).orderBy(*order)
-    merged = (
-        allrows.withColumn(rn_col, F.row_number().over(w))
-        .filter(F.col(rn_col) == 1)
-        .drop(rn_col, src_col)
+    merged = _latest_per_key(
+        df, path, keys, order_col, tiebreak_col,
+        prune=F.col(partition_col).isin(touched),
     ).localCheckpoint(eager=True)
     if stamped is None:
         # first write, explicit adopt_layout migration, or a
@@ -680,8 +698,8 @@ def merge_load_partitioned(
         # — data landed, stamp pending — that the unstamped-target
         # refusal above would turn into a hard error on the retry; a
         # stamp-without-data crash instead reads back as an empty
-        # existing side (UNABLE_TO_INFER_SCHEMA handled above) and the
-        # retry heals it.
+        # existing side (UNABLE_TO_INFER_SCHEMA, see _latest_per_key) and
+        # the retry heals it.
         _write_layout_marker(spark, path, layout)
     (
         merged.write.mode("overwrite")
@@ -714,16 +732,6 @@ def _batch_subdirs(fs, jpath) -> list:
     return out
 
 
-def _compact_side_paths(path: str) -> tuple[str, str]:
-    """Dot-prefixed tmp/old siblings for the batched-target compaction
-    swap (distinct from ``_merge_side_paths`` so a compaction crash
-    can never be confused with a merge crash during recovery)."""
-    base = path.rstrip("/")
-    head, _, tail = base.rpartition("/")
-    prefix = f"{head}/" if head else ""
-    return f"{prefix}.{tail}._compact_tmp", f"{prefix}.{tail}._compact_old"
-
-
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -745,9 +753,10 @@ def compact_table(
     the resulting per-file open/footer overhead dominates scans long
     before data volume does.  The rewrite is one job per compacted
     directory — scan, round-robin ``repartition`` to the target file
-    count, write to the hidden ``merge_load`` tmp sibling,
-    metadata-swap in (same crash-safe keep-aside dance, so a failed
-    compaction never damages the live target).
+    count, write to the swap's hidden tmp sibling, commit through
+    ``_SwapTarget`` (the same crash-safe keep-aside swap as every
+    rewriting sink, so a failed compaction never damages the live
+    target).
 
     PARTITIONED targets (Hive-style ``col=value`` subdirectories) are
     compacted PER LEAF PARTITION, preserving the layout: each leaf
@@ -781,7 +790,7 @@ def compact_table(
     skipped them and the top-level ``part-*`` glob saw nothing.
 
     WRITER EXCLUSION: the whole call holds a ``_COMPACTING`` marker at
-    the target root that every incremental writer (append_load,
+    the target root that every writer (overwrite_load, append_load,
     idempotent_append_load, merge_load, merge_load_partitioned,
     delete_load, overwrite_partitions_load) checks and refuses on —
     without it, rows landing between this call's snapshot and its
@@ -789,106 +798,113 @@ def compact_table(
     defense in depth each swap also reads its SNAPSHOT file list
     explicitly (never the directory) and, after the swap, RESCUES any
     stray file/batch-dir that an already-in-flight writer landed after
-    the snapshot by moving it into the new copy.  The marker is
-    removed only on success; after a crash it keeps writers refusing
+    the snapshot by moving it into the new copy.  The new copy carries
+    the live copy's marker, so it stands at every crash point; it is
+    removed only on success.  After a crash it keeps writers refusing
     (the safe direction) until the operator inspects the target and
-    calls ``clear_compaction_marker`` — re-running compact_table then
-    restores any kept-aside copy before proceeding.
+    calls ``clear_compaction_marker``; opening the target (any writer,
+    or a re-run of compact_table) first restores a kept-aside copy,
+    marker included.  The new copy also carries a manifest of the
+    snapshot (``_compaction_snapshot``), deleted after the rescue: a
+    re-run finds it after a crash mid-rescue and moves the remaining
+    strays in before it drops the kept-aside copy.
     """
     import math
 
-    jvm = spark._jvm
-    jfinal = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jfinal.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _jpath(s: str):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    # recovery from a previous compaction that died between its two
-    # top-level renames: live dir missing, keep-aside complete — restore
-    # before any listing (leaf-level crashes recover inside _compact_flat)
-    for side_tmp, side_old in (_merge_side_paths(path), _compact_side_paths(path)):
-        jold_prev = _jpath(side_old)
-        if not fs.exists(jfinal) and fs.exists(jold_prev):
-            if not fs.rename(jold_prev, jfinal):
-                raise IOError(
-                    f"compact_table: crash recovery {side_old} -> {path} failed"
-                )
-        fs.delete(_jpath(side_tmp), True)  # leftover tmp from a dead run
-
+    # opening the root swap restores a copy a previous compaction left
+    # aside between its two renames and refuses a target that carries
+    # the marker (live or crashed compaction), before it deletes anything
+    root = _SwapTarget(spark, path)
+    fs, jfinal = root.fs, root.jfinal
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     if not fs.exists(jfinal):
         raise IOError(f"compact_table: target {path!r} does not exist")
 
     def _part_files(p) -> list:
         # FileStatus of part-files only (not _SUCCESS / hidden)
-        hits = fs.globStatus(_jpath(p.toString() + "/part-*"))
+        hits = fs.globStatus(jvm_path(p.toString() + "/part-*"))
         return [] if hits is None else list(hits)
+
+    def _flat_entries(j) -> list:
+        return [st.getPath() for st in _part_files(j)]
 
     def _n_out(total_bytes: int) -> int:
         return max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
 
-    def _compact_flat(jdir) -> tuple[int, int]:
-        dir_path = jdir.toString()
-        tmp_path, old_path = _merge_side_paths(dir_path)
-        jtmp, jold = _jpath(tmp_path), _jpath(old_path)
-        if not fs.exists(jdir) and fs.exists(jold):  # leaf crash recovery
-            if not fs.rename(jold, jdir):
-                raise IOError(
-                    f"compact_table: crash recovery {old_path} -> {dir_path} failed"
-                )
-        snapshot = _part_files(jdir)
+    def _in(p: str, name: str):
+        return jvm_path(f"{p.rstrip('/')}/{name}")
+
+    def _rescue(swap: _SwapTarget, entries, snapped) -> None:
+        # stray rescue: an in-flight writer may have landed entries after
+        # the snapshot; they rode aside with the old copy — move them in
+        # instead of deleting them.  The manifest goes last, so a run
+        # that dies in here is finished by the next one (_resume).
+        if fs.exists(swap.jold):
+            for jp in entries(swap.jold):
+                name = jp.getName()
+                if name not in snapped and not fs.rename(jp, _in(swap.path, name)):
+                    raise IOError(
+                        f"compact_table: stray rescue of {name} into "
+                        f"{swap.path} failed"
+                    )
+        swap.drop_old()
+        fs.delete(_in(swap.path, _SNAPSHOT_MANIFEST), False)
+
+    def _resume(swap: _SwapTarget, entries) -> None:
+        # a compaction that died after its commit left the snapshot
+        # manifest in the live copy: finish its stray rescue first
+        jman = _in(swap.path, _SNAPSHOT_MANIFEST)
+        if fs.exists(jman):
+            _rescue(swap, entries, set(_read_text(spark, fs, jman).splitlines()))
+
+    def _commit(swap: _SwapTarget, entries, snapped) -> None:
+        # the new copy carries the live copy's marker, so it guards
+        # writers at every crash point until _done, and the manifest of
+        # what the rewrite consumed, so a cut-short rescue can resume
+        if fs.exists(_in(swap.path, _COMPACTING_MARKER)):
+            fs.create(_in(swap.tmp_path, _COMPACTING_MARKER), False).close()
+        _write_text(
+            fs, _in(swap.tmp_path, _SNAPSHOT_MANIFEST), "\n".join(sorted(snapped))
+        )
+        swap.commit()
+        _rescue(swap, entries, snapped)
+
+    def _compact_flat(swap: _SwapTarget) -> tuple[int, int]:
+        _resume(swap, _flat_entries)
+        snapshot = _part_files(swap.jfinal)
         if _after_snapshot is not None:
             _after_snapshot()
         files_before = len(snapshot)
         n_out = _n_out(sum(st.getLen() for st in snapshot))
-        if files_before <= n_out:
-            return files_before, files_before  # already compact: no rewrite
+        if files_before <= n_out:  # already compact: no rewrite
+            swap.drop_old()  # superseded copy of a swap that died after commit
+            return files_before, files_before
         # read the SNAPSHOT explicitly, not the directory: a file landing
         # after this listing is never double-read, so the stray rescue
-        # below can move it into the new copy without duplicating rows
-        df = spark.read.parquet(
+        # can move it into the new copy without duplicating rows
+        spark.read.parquet(
             *[st.getPath().toString() for st in snapshot]
-        ).repartition(n_out)
-        fs.delete(jtmp, True)
-        df.write.mode("overwrite").parquet(tmp_path)
-        fs.delete(jold, True)
-        if not fs.rename(jdir, jold):
-            raise IOError(
-                f"compact_table: keep-aside {dir_path} -> {old_path} failed"
-            )
-        if not fs.rename(jtmp, jdir):
-            raise IOError(
-                f"compact_table: rename {tmp_path} -> {dir_path} failed"
-            )
-        # stray rescue: an append already in flight when the marker
-        # appeared may have landed files after the snapshot; they rode
-        # aside with the old copy — move them in instead of deleting
-        snap_names = {st.getPath().getName() for st in snapshot}
-        for st in _part_files(jold):
-            name = st.getPath().getName()
-            if name not in snap_names:
-                if not fs.rename(st.getPath(), _jpath(dir_path + "/" + name)):
-                    raise IOError(
-                        f"compact_table: stray rescue of {name} into "
-                        f"{dir_path} failed"
-                    )
-        fs.delete(jold, True)
-        return files_before, len(_part_files(jdir))
+        ).repartition(n_out).write.mode("overwrite").parquet(swap.tmp_path)
+        _commit(swap, _flat_entries, {st.getPath().getName() for st in snapshot})
+        return files_before, len(_part_files(swap.jfinal))
 
-    def _compact_batched(batch_dirs) -> tuple[int, int]:
+    def _batch_entries(j) -> list:
+        return _batch_subdirs(fs, j)
+
+    def _compact_batched() -> tuple[int, int]:
         import uuid as _uuid
 
-        snap = {d.getName(): _part_files(d) for d in batch_dirs}
+        _resume(root, _batch_entries)
+        snap = {d.getName(): _part_files(d) for d in _batch_subdirs(fs, jfinal)}
         if _after_snapshot is not None:
             _after_snapshot()
         files_before = sum(len(v) for v in snap.values())
         n_out = _n_out(sum(st.getLen() for v in snap.values() for st in v))
         if files_before <= n_out:
+            root.drop_old()
             return files_before, files_before
         compact_name = f"batch-compacted-{_uuid.uuid4().hex[:12]}"
-        tmp_path, old_path = _compact_side_paths(path)
-        jtmp, jold = _jpath(tmp_path), _jpath(old_path)
-        fs.delete(jtmp, True)
+        tmp_path = root.tmp_path
         merged = spark.read.parquet(
             *[st.getPath().toString() for v in snap.values() for st in v]
         ).repartition(n_out)
@@ -896,37 +912,13 @@ def compact_table(
         # tombstones: every superseded batch id keeps its directory so
         # idempotent_append_load's exists() check still sees it applied
         for name in snap:
-            fs.mkdirs(_jpath(tmp_path + "/" + name))
+            fs.mkdirs(jvm_path(tmp_path + "/" + name))
             fs.create(
-                _jpath(f"{tmp_path}/{name}/_compacted_into_{compact_name}"),
+                jvm_path(f"{tmp_path}/{name}/_compacted_into_{compact_name}"),
                 True,
             ).close()
-        fs.delete(jold, True)
-        if not fs.rename(jfinal, jold):
-            raise IOError(
-                f"compact_table: keep-aside {path} -> {old_path} failed"
-            )
-        if not fs.rename(jtmp, jfinal):
-            raise IOError(
-                f"compact_table: rename {tmp_path} -> {path} failed"
-            )
-        # stray rescue: a batch dir published after the snapshot by an
-        # in-flight writer rode aside with the old copy — move it in
-        base = path.rstrip("/")
-        for st in fs.listStatus(jold):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and name.startswith("batch-")
-                and name not in snap
-            ):
-                if not fs.rename(st.getPath(), _jpath(base + "/" + name)):
-                    raise IOError(
-                        f"compact_table: stray rescue of batch dir {name} "
-                        f"into {path} failed"
-                    )
-        fs.delete(jold, True)
-        after = fs.globStatus(_jpath(base + "/batch-*/part-*"))
+        _commit(root, _batch_entries, snap)
+        after = fs.globStatus(jvm_path(path.rstrip("/") + "/batch-*/part-*"))
         return files_before, 0 if after is None else len(after)
 
     def _leaf_dirs(jdir) -> list:
@@ -961,26 +953,23 @@ def compact_table(
             "target layout first"
         )
     _, jmarker = _compacting_marker_path(spark, path)
-    if fs.exists(jmarker):
-        raise IOError(
-            f"compact_table: target {path!r} already carries "
-            f"{_COMPACTING_MARKER!r} (another compaction live, or a "
-            f"crashed one) — inspect and clear_compaction_marker() first"
-        )
     fs.create(jmarker, False).close()  # no-overwrite: loses races loudly
     if batch_dirs:
-        return _done(_compact_batched(batch_dirs))
+        return _done(_compact_batched())
     if not part_dirs:
-        return _done(_compact_flat(jfinal))
+        return _done(_compact_flat(root))
     from concurrent.futures import ThreadPoolExecutor
+
+    def _compact_leaf(jleaf) -> tuple[int, int]:
+        return _compact_flat(_SwapTarget(spark, jleaf.toString()))
 
     leaves = _leaf_dirs(jfinal)
     workers = max(1, min(parallelism, len(leaves)))
     if workers == 1:
-        results = [_compact_flat(leaf) for leaf in leaves]
+        results = [_compact_leaf(leaf) for leaf in leaves]
     else:
         with ThreadPoolExecutor(max_workers=workers) as pool:
-            results = list(pool.map(_compact_flat, leaves))
+            results = list(pool.map(_compact_leaf, leaves))
     return _done(
         (
             sum(b for b, _ in results),
@@ -1006,7 +995,7 @@ def overwrite_partitions_load(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    _refuse_if_compacting(df.sparkSession, path)
+    _open_for_write(df.sparkSession, path)
     obs = Observation()
     (
         df.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -1035,16 +1024,14 @@ def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int
     import uuid as _uuid
 
     spark = df.sparkSession
-    _refuse_if_compacting(spark, path)
-    jvm = spark._jvm
+    _open_for_write(spark, path)
     dest = path.rstrip("/") + f"/batch-{batch_id}"
-    jdest = jvm.org.apache.hadoop.fs.Path(dest)
-    fs = jdest.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jdest = _hadoop_fs(spark, dest)
     applied = False
     if not fs.exists(jdest):
         tmp = path.rstrip("/") + f"/.batch-{batch_id}.__tmp_{_uuid.uuid4().hex[:8]}"
         write_parquet_sink(df, tmp, mode="overwrite")
-        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+        _, jtmp = _hadoop_fs(spark, tmp)
         if fs.rename(jtmp, jdest):
             applied = True
         else:  # lost the race to a concurrent retry — its commit stands

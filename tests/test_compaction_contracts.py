@@ -18,6 +18,7 @@ from aws_pandas_etl_spark.sources.sinks import (
     delete_load,
     idempotent_append_load,
     merge_load,
+    overwrite_load,
     overwrite_partitions_load,
     read_batched_target,
 )
@@ -90,6 +91,8 @@ def test_compacting_marker_refuses_writers(spark, tmp_path):
         delete_load(spark, p, df.select("id").limit(1), ["id"])
     with pytest.raises(IOError, match="_COMPACTING"):
         overwrite_partitions_load(df, p, ["v"])
+    with pytest.raises(IOError, match="_COMPACTING"):
+        overwrite_load(df, p)
     # a second compactor also refuses (one compaction at a time)
     with pytest.raises(IOError, match="clear_compaction_marker"):
         compact_table(spark, p)
@@ -173,15 +176,25 @@ def test_batched_stray_rescue_saves_inflight_batch(spark, tmp_path):
     assert applied is False and total == 2100
 
 
-def test_compaction_crash_recovery_restores_keepaside(spark, tmp_path):
-    """Crash between the two top-level renames: live dir missing, the
-    keep-aside complete, marker gone aside with it.  Re-running
-    compact_table restores the copy before proceeding."""
+def test_writer_refuses_after_compaction_crash_between_renames(
+    spark, tmp_path, fault_fs
+):
+    """A compaction that dies between its two renames takes the live
+    directory, marker included, aside.  The next writer's recovery
+    restores both before its guard runs, so it refuses instead of
+    publishing over a target whose marker it never saw."""
     p = str(tmp_path / "t")
-    spark.range(1000).repartition(16).write.parquet(p)
-    # stage the crash state by hand
-    os.rename(p, str(tmp_path / ".t._compact_old"))
-    before, after = compact_table(spark, p, target_file_mb=512)
-    assert before == 16 and after == 1
+    spark.range(1000).selectExpr("id", "id % 3 AS v").repartition(16).write.parquet(p)
+
+    def rename_in(op, args, n):
+        return op == "rename" and args[0].toString().endswith("._merge_tmp")
+
+    with fault_fs(rename_in) as plan:
+        with pytest.raises(Exception, match="injected fault"):
+            compact_table(spark, p, target_file_mb=512)
+    assert plan.injected and not os.path.exists(p)
+    df = spark.range(100).selectExpr("id", "id % 3 AS v")
+    with pytest.raises(IOError, match="_COMPACTING"):
+        merge_load(df, p, keys=["id"], order_col="v")
+    assert compaction_in_progress(spark, p)
     assert spark.read.parquet(p).count() == 1000
-    assert not compaction_in_progress(spark, p)

@@ -604,6 +604,31 @@ def test_merge_load_failed_write_preserves_target(spark, tmp_path):
     assert merge_load(good, p, ["k"], "v") == 3
 
 
+def test_overwrite_load_failed_refresh_keeps_previous_load(spark, tmp_path):
+    """A full refresh whose job fails must leave the previous load in
+    place: the swap publishes only a completed write.  (Spark's own
+    overwrite mode deletes the target before the job runs, leaving an
+    empty directory that reads as UNABLE_TO_INFER_SCHEMA.)"""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from aws_pandas_etl_spark.sources.sinks import overwrite_load
+
+    p = str(tmp_path / "t")
+    assert overwrite_load(spark.range(100), p) == 100
+
+    def boom(i):
+        if i == 50:
+            raise RuntimeError("boom at row 50")
+        return i
+
+    bad = spark.range(100).select(F.udf(boom, "long")("id").alias("id"))
+    with pytest.raises(Exception, match="boom at row 50"):
+        overwrite_load(bad, p)
+    back = spark.read.parquet(p)
+    assert sorted(r["id"] for r in back.collect()) == list(range(100))
+
+
 def test_merge_load_sibling_paths_are_hidden(tmp_path):
     """Swap siblings are dot-prefixed so Spark's file index (which skips
     names starting with '.' or '_') never surfaces an in-flight tmp or
@@ -616,28 +641,6 @@ def test_merge_load_sibling_paths_are_hidden(tmp_path):
     # relative single-segment path doesn't gain a leading slash
     tmp2, _ = _merge_side_paths("t")
     assert tmp2 == ".t._merge_tmp"
-
-
-def test_merge_load_recovers_from_crash_between_renames(spark, tmp_path):
-    """Crash window: target renamed aside but tmp not yet renamed in —
-    no live target, full copy at ._merge_old.  The next merge_load must
-    restore that copy BEFORE merging, so history survives."""
-    import os
-
-    from aws_pandas_etl_spark.sources.sinks import _merge_side_paths, merge_load
-
-    p = str(tmp_path / "t")
-    seed = spark.createDataFrame([(1, "keep", 1), (2, "b", 1)], "k long, v string, ver long")
-    assert merge_load(seed, p, ["k"], "ver") == 2
-    # simulate the crash state: live target moved aside, nothing live
-    _, old = _merge_side_paths(p)
-    os.rename(p, old)
-    assert not os.path.exists(p)
-    nxt = spark.createDataFrame([(2, "b2", 2)], "k long, v string, ver long")
-    assert merge_load(nxt, p, ["k"], "ver") == 2
-    got = {r["k"]: r["v"] for r in spark.read.parquet(p).collect()}
-    assert got == {1: "keep", 2: "b2"}  # k=1 recovered from the aside copy
-    assert not os.path.exists(old)  # aside copy dropped after the swap
 
 
 def test_delete_load_scrubs_keys_and_keeps_bystanders(spark, tmp_path):
@@ -669,29 +672,6 @@ def test_delete_load_missing_target_raises(spark, tmp_path):
     keys = spark.createDataFrame([Row(k=1)])
     with pytest.raises(Exception):
         delete_load(spark, str(tmp_path / "nope"), keys, keys=["k"])
-
-
-def test_delete_load_recovers_from_crash_between_renames(spark, tmp_path):
-    """Same crash model as merge_load: target renamed aside but tmp
-    not yet renamed in — the next delete_load restores and proceeds."""
-    import os
-
-    from pyspark.sql import Row
-
-    from aws_pandas_etl_spark.sources.sinks import (
-        _merge_side_paths,
-        delete_load,
-        overwrite_load,
-    )
-
-    p = str(tmp_path / "t")
-    df = spark.createDataFrame([Row(k=1, v="a"), Row(k=2, v="b")])
-    overwrite_load(df, p)
-    _, old = _merge_side_paths(p)
-    os.rename(p, old)  # simulate the crash window
-    keys = spark.createDataFrame([Row(k=2)])
-    assert delete_load(spark, p, keys, keys=["k"]) == 1
-    assert [r["k"] for r in spark.read.parquet(p).collect()] == [1]
 
 
 def test_idempotent_append_retry_is_noop(spark, tmp_path):

@@ -518,6 +518,36 @@ def test_load_table_metadata_cache_and_invalidation(spark, tmp_path):
     assert "extra" in df3.columns and df3.count() == 3
 
 
+def test_load_table_same_object_self_join(spark):
+    """Repeated load_table calls return the SAME DataFrame object, so a
+    self-join must go through aliases and qualified column references;
+    that form resolves correctly, and the unaliased column-object form
+    fails loudly instead of joining the wrong columns."""
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    a = load_table(spark, SF, "nation")
+    b = load_table(spark, SF, "nation")
+    assert a is b
+    rows = a.select("n_nationkey", "n_regionkey").collect()
+    want = sorted(
+        (x["n_nationkey"], y["n_nationkey"])
+        for x in rows
+        for y in rows
+        if x["n_regionkey"] == y["n_nationkey"]
+    )
+    n1, n2 = a.alias("n1"), b.alias("n2")
+    got = n1.join(n2, F.col("n1.n_regionkey") == F.col("n2.n_nationkey")).select(
+        F.col("n1.n_nationkey"), F.col("n2.n_nationkey")
+    )
+    assert sorted(tuple(r) for r in got.collect()) == want
+    with pytest.raises(AnalysisException, match="ambiguous"):
+        a.join(b, a["n_regionkey"] == b["n_nationkey"]).select(
+            a["n_nationkey"], b["n_nationkey"]
+        ).collect()
+
+
 def test_load_table_missing_path_raises_spark_error(spark, tmp_path):
     """A missing table surfaces Spark's usual AnalysisException (the
     pre-cache contract), not a FileNotFoundError from the fingerprint
