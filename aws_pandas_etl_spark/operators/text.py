@@ -48,36 +48,45 @@ def token_count_bpe(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(F.coalesce(c, F.lit("")), F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-def stopword_hits(col: Column | str, lang: str) -> Column:
-    """Number of tokens that are stopwords of ``lang``."""
-    toks = tokens(col)
-    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-
-
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    return {lang: stopword_hits(col, lang) for lang in LANG_STOPWORDS}
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` bound once per row: a one-element
+    ``transform`` whose lambda variable stands for ``value``.  Catalyst
+    inlines a projected alias into every predicate pushed past it, and
+    higher-order functions are neither codegen'd nor CSE'd, so an
+    expression that names a tokenization several times re-tokenizes
+    each time; a lambda variable is never inlined."""
+    return F.transform(F.array(value), body)[0]
 
 
 def predict_lang(col: Column | str) -> Column:
     """argmax of per-language stopword hit counts; ties broken by
     language code order; all-zero -> 'unk'.  Expressed as a CASE
-    cascade so the oracle SQL is literally the same expression."""
-    scores = lang_scores(col)
+    cascade so the oracle SQL is literally the same expression; the
+    tokens and the score array are each bound once per row."""
     langs = sorted(LANG_STOPWORDS)  # deterministic tie order
-    best = F.greatest(*[scores[lang] for lang in langs])
-    expr = F.lit("unk")
-    for lang in reversed(langs):
-        expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
-    return F.when(best == 0, F.lit("unk")).otherwise(expr)
+
+    def hits(toks: Column, lang: str) -> Column:
+        sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
+        return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
+
+    def argmax(scores: Column) -> Column:
+        best = F.array_max(scores)
+        expr = F.lit("unk")
+        for i in reversed(range(len(langs))):
+            expr = F.when(scores[i] == best, F.lit(langs[i])).otherwise(expr)
+        return F.when(best == 0, F.lit("unk")).otherwise(expr)
+
+    return _let(
+        tokens(col),
+        lambda toks: _let(F.array(*[hits(toks, lang) for lang in langs]), argmax),
+    )
 
 
 def lang_score_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Materialize tokenization and the per-language stopword-hit
-    scores as named columns ``_toks`` / ``_s_<lang>`` — the staged
-    evaluation both the argmax predictor and the mixed-language
-    detector build on (each interpreted higher-order filter runs once
-    per row; CollapseProject keeps multiply-referenced aliases)."""
+    scores as named columns ``_toks`` / ``_s_<lang>`` (the
+    mixed-language detector's inputs; CollapseProject keeps
+    multiply-referenced aliases)."""
     staged = df.withColumn("_toks", tokens(text_col))
 
     def _hits(lang: str) -> Column:
@@ -92,30 +101,8 @@ def lang_score_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
 def predict_lang_staged(
     df: DataFrame, text_col: str = "text", out_col: str = "predicted"
 ) -> DataFrame:
-    """``predict_lang`` with staged evaluation: tokenization and each
-    language's stopword filter are materialized as named projection
-    columns, so every interpreted higher-order filter runs ONCE per
-    row.  The single-Column cascade references each score ~3x (in
-    greatest() and in the CASE arms) and higher-order functions are
-    neither codegen'd nor CSE'd, so it re-tokenizes ~15x per row —
-    measured 3x slower on the confusion-matrix query (3.7 s vs 1.2 s
-    steady-state at sf0.1).  Catalyst's
-    CollapseProject keeps the staging (multiply-referenced aliases are
-    not inlined).  Same argmax/tie/unk semantics, same oracle."""
-    langs = sorted(LANG_STOPWORDS)
-    staged = lang_score_columns(df, text_col)
-    staged = staged.withColumn(
-        "_best", F.greatest(*[F.col(f"_s_{lang}") for lang in langs])
-    )
-    expr = F.lit("unk")
-    for lang in reversed(langs):
-        expr = F.when(F.col(f"_s_{lang}") == F.col("_best"), F.lit(lang)).otherwise(
-            expr
-        )
-    pred = F.when(F.col("_best") == 0, F.lit("unk")).otherwise(expr)
-    return staged.withColumn(out_col, pred).drop(
-        "_toks", "_best", *[f"_s_{lang}" for lang in langs]
-    )
+    """``df`` with ``predict_lang(text_col)`` as ``out_col``."""
+    return df.withColumn(out_col, predict_lang(text_col))
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -141,16 +128,22 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 def quality_score(col: Column | str) -> Column:
     """Deterministic quality heuristic in [0,1]:
     0.4 * min(1, tokens/50) + 0.3 * distinct_ratio + 0.3 * alpha_ratio.
-    Fixed IEEE op order so Spark and the oracle agree bitwise."""
+    Fixed IEEE op order so Spark and the oracle agree bitwise; the
+    tokens are bound once per row."""
     c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    toks = tokens(c)
-    n_tok = F.size(toks)
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / F.greatest(n_tok, F.lit(1))
+
+    def token_terms(toks: Column) -> Column:
+        n_tok = F.size(toks)
+        distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / F.greatest(
+            n_tok, F.lit(1)
+        )
+        cap = F.least(F.lit(1.0), n_tok.cast("double") / F.lit(50.0))
+        return F.lit(0.4) * cap + F.lit(0.3) * distinct_ratio
+
     alpha_ratio = F.length(F.regexp_replace(c, "[^a-zA-Z]", "")).cast("double") / F.greatest(
         F.length(c), F.lit(1)
     )
-    cap = F.least(F.lit(1.0), n_tok.cast("double") / F.lit(50.0))
-    return F.lit(0.4) * cap + F.lit(0.3) * distinct_ratio + F.lit(0.3) * alpha_ratio
+    return _let(tokens(c), token_terms) + F.lit(0.3) * alpha_ratio
 
 
 def fingerprint(col: Column | str, n: int = 8) -> Column:
@@ -302,9 +295,9 @@ def lang_id_table(
 
     Same stopword-argmax semantics as ``predict_lang`` (Column twin):
     scores from LANG_STOPWORDS hits over pytext tokens, argmax with
-    language-code tie order, all-zero -> 'unk'.  Python path because
-    the Column version runs 5 interpreted list filters referenced
-    repeatedly by the argmax cascade."""
+    language-code tie order, all-zero -> 'unk'.  Python path: one set
+    lookup per token instead of the Column version's 5 interpreted
+    list filters."""
     import pandas as pd
     from pyspark.sql import types as T
 

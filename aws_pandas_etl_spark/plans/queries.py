@@ -764,7 +764,7 @@ def pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     query: F1 active-table gate (main.py:44) -> messy source column
     names -> P7 standardize (rdbms_operations.py:239-243) -> P1 bit and
     P2 tinyint casts (dataframe_operations.py:26-33) -> K1 distributed
-    parquet sink + K2 full-refresh load with read-back count
+    parquet sink + K2 full-refresh load with its loaded-count
     reconciliation (main.py:52-65, redshift_operations.py:121-167).
 
     The aggregate runs over the READ-BACK table, so a wrong write
@@ -803,7 +803,8 @@ def pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cast_bit_columns(df, ["isodd"])  # P1: boolean -> smallint
     df = cast_tinyint_columns(df, ["tiny_mod"])  # P2: tinyint -> smallint
     # K1/K2: land to a per-sf temp target, full-refresh overwrite, count
-    # read back from what actually landed (PG_LAST_COPY_COUNT parity).
+    # from the load itself, checked against what landed
+    # (PG_LAST_COPY_COUNT parity).
     # The temp dir must outlive this function: the returned DataFrame
     # lazily re-scans the target.  The path carries the process pid so
     # two concurrent runs against the same sf_dir can't race each
@@ -1430,10 +1431,10 @@ ORDER BY actual, predicted
 def lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID evaluation: the (actual, predicted) confusion
     matrix of the stopword classifier against the corpus labels — the
-    quality report every lang-ID stage ships with.  Uses the staged
-    Column twin (zero Python) of the Arrow lang_id_table path —
-    tokenization and each stopword filter evaluate once per row (see
-    predict_lang_staged); one shuffle over |langs|^2 groups."""
+    quality report every lang-ID stage ships with.  Uses the Column
+    twin (zero Python) of the Arrow lang_id_table path — tokenization
+    and each stopword filter evaluate once per row (see
+    TX.predict_lang); one shuffle over |langs|^2 groups."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         TX.predict_lang_staged(
@@ -1480,10 +1481,9 @@ def mixed_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     score nearly as high on a SECOND language (second*2 >= top, pure
     integer arithmetic — no float ratio) — the curation signal for
     code-switched or boilerplate-contaminated documents that a
-    single-argmax lang-ID silently misfiles.  Shares the staged
-    score-column evaluation with the predictor (each stopword filter
-    runs once per row); top/second come from one descending sort of
-    the |langs| score array."""
+    single-argmax lang-ID silently misfiles.  Staged score columns
+    (each stopword filter runs once per row); top/second come from one
+    descending sort of the |langs| score array."""
     langs = sorted(TX.LANG_STOPWORDS)
     sc = TX.lang_score_columns(
         load_table(spark, sf_dir, "documents").select("lang", "text"), "text"

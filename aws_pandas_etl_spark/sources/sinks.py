@@ -5,8 +5,11 @@ K1 (parquet to S3 time-partitioned prefix, /root/reference/main.py:52-65
 redshift_operations.py:121-167) re-expressed as Spark distributed
 writes: executors write part-files directly to the object store (no
 driver-funneled bytes), and the TRUNCATE+COPY full refresh becomes a
-swap-published overwrite + read-back count (PG_LAST_COPY_COUNT parity,
-redshift_operations.py:154-155).
+swap-published overwrite.  Its loaded row count is the COPY's own
+(PG_LAST_COPY_COUNT parity, redshift_operations.py:154-155): an
+``observe()`` count on the write job itself, checked against the
+parquet-footer row counts of the staged files before the commit, so a
+mismatch fails the load with the previous one still live.
 
 Every sink that rewrites a whole target (``overwrite_load``,
 ``merge_load``, ``delete_load``, each ``compact_table`` swap) commits
@@ -66,6 +69,39 @@ def _read_text(spark: SparkSession, fs, jpath) -> str:
         return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
+
+
+def _with_count(df: DataFrame):
+    """``(df', count)``: ``df'`` observes its row count on whatever job
+    writes it, and ``count()`` returns that count once the job ran — no
+    second job executes the upstream plan again."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), lambda: int(obs.get["n"])
+
+
+def _footer_rows(spark: SparkSession, path: str) -> int:
+    """Sum of the parquet-footer row counts of the data files directly
+    under ``path`` (``_``/``.``-prefixed entries skipped, as Spark's
+    file index skips them).  Driver-side metadata reads, one footer per
+    file; no Spark job."""
+    fs, jpath = _hadoop_fs(spark, path)
+    parquet = spark._jvm.org.apache.parquet.hadoop
+    conf = spark._jsc.hadoopConfiguration()
+    total = 0
+    for st in fs.listStatus(jpath):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromStatus(st, conf)
+        )
+        try:
+            total += reader.getRecordCount()
+        finally:
+            reader.close()
+    return total
 
 
 def _compacting_marker_path(spark: SparkSession, path: str):
@@ -140,7 +176,7 @@ class _SwapTarget:
     ``tmp_path`` (``.<name>._merge_tmp``); ``commit`` renames the live
     target ASIDE to ``old_path`` (``.<name>._merge_old``) and the tmp
     in; ``drop_old`` deletes the kept-aside copy; ``publish`` is the
-    three steps for a plain DataFrame write.
+    three steps for a plain DataFrame write, and returns its row count.
 
     Opening the target is ``_open_for_write`` (crash recovery, then the
     compaction guard) followed by deleting a leftover tmp from a failed
@@ -151,7 +187,7 @@ class _SwapTarget:
 
     def __init__(self, spark: SparkSession, path: str):
         _open_for_write(spark, path)
-        self.path = path
+        self.spark, self.path = spark, path
         self.tmp_path, self.old_path = _merge_side_paths(path)
         self.fs, self.jfinal = _hadoop_fs(spark, path)
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path
@@ -169,10 +205,24 @@ class _SwapTarget:
     def drop_old(self) -> None:
         self.fs.delete(self.jold, True)
 
-    def publish(self, df: DataFrame) -> None:
-        write_parquet_sink(df, self.tmp_path, mode="overwrite")
+    def publish(self, df: DataFrame) -> int:
+        """Stage ``df``, check it, swap it in; returns the loaded row
+        count.  The count rides the write job (``observe``); before the
+        commit it must equal the footer row counts of the staged files,
+        or the call raises with the live target untouched (the rejected
+        copy stays at ``tmp_path`` until the next writer opens the
+        target)."""
+        counted, count = _with_count(df)
+        write_parquet_sink(counted, self.tmp_path, mode="overwrite")
+        written, landed = count(), _footer_rows(self.spark, self.tmp_path)
+        if written != landed:
+            raise IOError(
+                f"swap: the write job counted {written} rows but the staged "
+                f"copy {self.tmp_path} holds {landed}; {self.path} left as it was"
+            )
         self.commit()
         self.drop_old()
+        return written
 
 
 def landing_path(base: str, table: str, ts: _dt.datetime | None = None) -> str:
@@ -203,14 +253,15 @@ def write_parquet_sink(
 
 def overwrite_load(df: DataFrame, path: str) -> int:
     """K2 — full-refresh load (TRUNCATE+COPY parity): replace the
-    target and return the loaded row count read back from the target
-    (reconciliation reads what actually landed, like
-    PG_LAST_COPY_COUNT).  The load is swap-published: a failed or
-    interrupted refresh leaves the previous load in place, where
-    Spark's own overwrite mode deletes the target before the job runs."""
-    spark = df.sparkSession
-    _SwapTarget(spark, path).publish(df)
-    return spark.read.parquet(path).count()
+    target and return the loaded row count.  Like PG_LAST_COPY_COUNT
+    it is the load's own count: the write job counts its rows
+    (``observe``), and the count must match the row counts in the
+    staged files' parquet footers before the swap, so a copy that does
+    not hold what the job wrote is never published.  One Spark job in
+    all.  The load is swap-published: a failed, interrupted or
+    mismatched refresh leaves the previous load in place, where Spark's
+    own overwrite mode deletes the target before the job runs."""
+    return _SwapTarget(df.sparkSession, path).publish(df)
 
 
 def read_back(spark: SparkSession, path: str) -> DataFrame:
@@ -222,15 +273,10 @@ def append_load(df: DataFrame, path: str) -> int:
     surface): add this batch's rows to the target, return the batch
     row count.  The count rides the write job itself via observe() —
     a separate count() would execute the whole upstream plan twice."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     _open_for_write(df.sparkSession, path)
-    obs = Observation()
-    write_parquet_sink(
-        df.observe(obs, F.count(F.lit(1)).alias("n")), path, mode="append"
-    )
-    return int(obs.get["n"])
+    counted, count = _with_count(df)
+    write_parquet_sink(counted, path, mode="append")
+    return count()
 
 
 def jdbc_overwrite_load(
@@ -316,7 +362,8 @@ def delete_load(spark: SparkSession, path: str, keys_df: DataFrame, keys: list[s
     the same crash-safe sibling swap as merge_load; deleting from a
     missing target is an error, not a no-op (a typo'd path silently
     "succeeding" would mask an unexecuted legal request).  Returns the
-    surviving row count.
+    surviving row count, counted by the rewrite job and checked against
+    the staged footers like ``overwrite_load``'s.
 
     Scale shape: the anti join shuffles on the keys (AQE broadcasts
     the key set while it measures small — a deletion list usually is);
@@ -328,8 +375,7 @@ def delete_load(spark: SparkSession, path: str, keys_df: DataFrame, keys: list[s
     remaining = existing.join(
         keys_df.select(*keys).distinct(), keys, "left_anti"
     )
-    swap.publish(remaining)
-    return spark.read.parquet(path).count()
+    return swap.publish(remaining)
 
 
 def merge_load(
@@ -345,7 +391,9 @@ def merge_load(
     largest ``tiebreak_col`` when given — without one, rows tied on
     (keys, order_col) INSIDE a single batch are kept arbitrarily, so
     callers with possible in-batch ties should always pass it).
-    Returns the target row count after the merge.
+    Returns the target row count after the merge, counted by the
+    rewrite job and checked against the staged footers like
+    ``overwrite_load``'s.
 
     Without a transactional table format the merged result is written
     to a hidden temp sibling and swapped in by ``_SwapTarget`` (live
@@ -357,11 +405,9 @@ def merge_load(
     not overwritten, during the write.  Production swaps the commit
     for Delta/Iceberg MERGE INTO, keeping the identical dedup plan.
     The compaction is one shuffle on the merge keys."""
-    spark = df.sparkSession
-    _SwapTarget(spark, path).publish(
+    return _SwapTarget(df.sparkSession, path).publish(
         _latest_per_key(df, path, keys, order_col, tiebreak_col)
     )
-    return spark.read.parquet(path).count()
 
 
 def _latest_per_key(
@@ -721,6 +767,26 @@ def _partition_subdirs(fs, jpath) -> list:
     return out
 
 
+def _partition_leaves(spark: SparkSession, path: str) -> list[str]:
+    """The leaf directories of a Hive-partitioned target (``path``
+    itself when it has no ``col=value`` children), descending multi-
+    level partitioning.  A leaf whose compaction swap died between its
+    two renames exists only as its hidden ``.<leaf>._merge_old`` copy,
+    which the listing skips, so each level first restores such
+    children (``_recover``); otherwise their rows would stay
+    invisible."""
+    fs, jpath = _hadoop_fs(spark, path)
+    base = path.rstrip("/")
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if name.startswith(".") and name.endswith("._merge_old") and "=" in name:
+            _recover(spark, f"{base}/{name[1:-len('._merge_old')]}")
+    subs = _partition_subdirs(fs, jpath)
+    if not subs:
+        return [path]
+    return [leaf for sub in subs for leaf in _partition_leaves(spark, sub.toString())]
+
+
 def _batch_subdirs(fs, jpath) -> list:
     """``batch-<id>`` child directories of ``jpath`` — the marker of an
     ``idempotent_append_load`` (batched) target."""
@@ -776,7 +842,10 @@ def compact_table(
     thousands of partitions, and one-job-at-a-time leaves the cluster
     idle between tiny per-partition rewrites.  Each leaf keeps its own
     crash-safe hidden-sibling swap, so concurrency never widens the
-    blast radius of a failure past that leaf.
+    blast radius of a failure past that leaf.  Writers open only the
+    root, so a leaf left aside between its two renames is restored by
+    the next ``compact_table``, before it lists the layout (the root
+    marker keeps writers out until then).
 
     BATCHED targets (``idempotent_append_load``'s ``batch-<id>``
     subdirectories) are compacted manifest-aware: the snapshot batch
@@ -921,21 +990,13 @@ def compact_table(
         after = fs.globStatus(jvm_path(path.rstrip("/") + "/batch-*/part-*"))
         return files_before, 0 if after is None else len(after)
 
-    def _leaf_dirs(jdir) -> list:
-        # multi-level partitioning: descend until a dir has no
-        # col=value children
-        subs = _partition_subdirs(fs, jdir)
-        if not subs:
-            return [jdir]
-        leaves = []
-        for s in subs:
-            leaves.extend(_leaf_dirs(s))
-        return leaves
-
     def _done(result: tuple[int, int]) -> tuple[int, int]:
         fs.delete(jmarker, False)  # success: release the writer guard
         return result
 
+    # restores partition leaves a crashed compaction left aside, before
+    # anything below lists the layout
+    leaves = _partition_leaves(spark, path)
     part_dirs = _partition_subdirs(fs, jfinal)
     batch_dirs = _batch_subdirs(fs, jfinal)
     top_files = len(_part_files(jfinal))
@@ -960,10 +1021,9 @@ def compact_table(
         return _done(_compact_flat(root))
     from concurrent.futures import ThreadPoolExecutor
 
-    def _compact_leaf(jleaf) -> tuple[int, int]:
-        return _compact_flat(_SwapTarget(spark, jleaf.toString()))
+    def _compact_leaf(leaf: str) -> tuple[int, int]:
+        return _compact_flat(_SwapTarget(spark, leaf))
 
-    leaves = _leaf_dirs(jfinal)
     workers = max(1, min(parallelism, len(leaves)))
     if workers == 1:
         results = [_compact_leaf(leaf) for leaf in leaves]
@@ -992,20 +1052,16 @@ def overwrite_partitions_load(
     session-global set/restore races with concurrent writers on the
     same SparkSession (another thread restoring "static" mid-flight
     would make this overwrite delete EVERY partition)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     _open_for_write(df.sparkSession, path)
-    obs = Observation()
+    counted, count = _with_count(df)
     (
-        df.observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
+        counted.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", str(ROWS_PER_FILE))
         .partitionBy(*partition_by)
         .parquet(path)
     )
-    return int(obs.get["n"])
+    return count()
 
 
 def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int, bool]:

@@ -629,6 +629,49 @@ def test_overwrite_load_failed_refresh_keeps_previous_load(spark, tmp_path):
     assert sorted(r["id"] for r in back.collect()) == list(range(100))
 
 
+def test_overwrite_load_refuses_staged_copy_that_lost_a_file(
+    spark, tmp_path, monkeypatch
+):
+    """The write job's own row count is checked against the footers of
+    the staged files before the swap: a staged copy that lost a part
+    file is never published, and the previous load stays live."""
+    import glob
+    import os
+
+    import pytest
+
+    from aws_pandas_etl_spark.sources import sinks
+
+    p = str(tmp_path / "t")
+    assert sinks.overwrite_load(spark.range(100), p) == 100
+    real = sinks.write_parquet_sink
+
+    def write_then_lose_a_file(df, path, *args, **kwargs):
+        real(df, path, *args, **kwargs)
+        os.remove(sorted(glob.glob(os.path.join(path, "part-*")))[0])
+
+    monkeypatch.setattr(sinks, "write_parquet_sink", write_then_lose_a_file)
+    with pytest.raises(IOError, match="write job counted 200 rows"):
+        sinks.overwrite_load(spark.range(100, 300).repartition(2), p)
+    monkeypatch.undo()
+    back = spark.read.parquet(p)
+    assert sorted(r["id"] for r in back.collect()) == list(range(100))
+
+
+def test_overwrite_load_runs_one_spark_job(spark, tmp_path):
+    """A full refresh costs its write job and nothing else: the loaded
+    row count comes from that job and the staged footers, not from a
+    read-back of the target."""
+    from aws_pandas_etl_spark.sources.sinks import overwrite_load
+
+    p = str(tmp_path / "t")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for _ in range(2):  # a first load, then a refresh of it
+        first = scheduler.nextJobId()
+        assert overwrite_load(spark.range(100), p) == 100
+        assert scheduler.nextJobId() - first == 1
+
+
 def test_merge_load_sibling_paths_are_hidden(tmp_path):
     """Swap siblings are dot-prefixed so Spark's file index (which skips
     names starting with '.' or '_') never surfaces an in-flight tmp or

@@ -517,3 +517,24 @@ def test_time_decayed_scores_single_scan_no_join(spark):
     plan = _plan(QUERIES["time_decayed_event_type_scores"](spark, SF))
     assert "Join" not in plan, plan
     assert plan.count("FileScan parquet") == 1, plan
+
+
+def test_text_feature_filter_tokenizes_each_document_once_per_feature(spark):
+    """A filter on the quality score and the predicted language, staged
+    as projected columns first (the curation shape), must tokenize each
+    document once per feature.  Predicate pushdown copies projected
+    aliases into the Filter condition, so any feature that names its
+    tokens more than once would re-tokenize for every mention."""
+    from aws_pandas_etl_spark.operators import text
+
+    docs = load_table(spark, SF, "documents")
+    scored = text.predict_lang_staged(
+        docs.withColumn("_quality", F.round(text.quality_score("text"), 4)),
+        out_col="_lang",
+    )
+    kept = scored.filter(
+        (F.col("_quality") >= 0.5) & F.col("_lang").isin("en", "de")
+    ).drop("_quality", "_lang")
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    # text.tokens is the one tokenizer: split(normalize_text(...), " ")
+    assert plan.count("split(") <= 2, plan

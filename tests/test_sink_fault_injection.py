@@ -4,8 +4,9 @@ Each case runs once without faults for reference, then once per k with
 the k-th Hadoop ``rename``/``delete`` raising instead of running (the
 ``fault_fs`` fixture wraps ``sinks._hadoop_fs``), for every k until a
 call completes with nothing injected.  After each failure, opening (a
-copy of) the target, which runs the writers' crash recovery, must show
-the full pre-call rows or the full post-call rows; a compaction's
+copy of) the target, which runs its crash recovery (the writers' one,
+or for a partitioned compaction compact_table's recovery of its
+leaves), must show the full pre-call rows or the full post-call rows; a compaction's
 marker must keep blocking writers until it is cleared; and a re-run
 without faults, on the crash state itself, must give the full post-call
 rows, leave no hidden siblings, and return what the crash point calls
@@ -42,18 +43,26 @@ class Case:
     call: Callable  # (spark, path) -> result of the sink under test
     expect: object  # fault-free result of ``call``
     batched: bool = False  # read back with read_batched_target
-    # result of the re-run that follows a fault, given whether the
-    # faulted call's swap committed (its tmp was renamed in) and whether
-    # its stray landed; None: the fault-free result either way
+    # result of the re-run that follows a fault, given how many of the
+    # faulted call's swaps committed (their tmp was renamed in) and
+    # whether its stray landed; None: the fault-free result either way
     rerun: Callable | None = None
     compaction: bool = False
+    # the crash recovery that opening the target runs
+    recover: Callable = sinks._recover
 
-    def rerun_expect(self, committed: bool, landed: bool):
+    def rerun_expect(self, committed: int, landed: bool):
         return self.expect if self.rerun is None else self.rerun(committed, landed)
 
 
 def _flat_small_files(spark, p):
     spark.range(1000).repartition(16).write.parquet(p)
+
+
+def _partitioned_small_files(spark, p):
+    spark.range(1000).selectExpr("id", "id % 2 AS part").repartition(8).write.partitionBy(
+        "part"
+    ).parquet(p)
 
 
 def _batched_small_files(spark, p):
@@ -121,6 +130,16 @@ CASES = {
         rerun=lambda committed, landed: (1, 1) if committed else (16, 1),
         compaction=True,
     ),
+    # one leaf at a time, so that the k-th step is the same in every run;
+    # a re-run compacts the leaves whose swap had not committed
+    "compact_table_partitioned": Case(
+        setup=_partitioned_small_files,
+        call=lambda spark, p: compact_table(spark, p, target_file_mb=512, parallelism=1),
+        expect=(16, 2),
+        rerun=lambda committed, landed: (committed + 8 * (2 - committed), 2),
+        compaction=True,
+        recover=lambda spark, p: sinks._partition_leaves(spark, p),
+    ),
     "compact_table_batched": Case(
         setup=_batched_small_files,
         call=lambda spark, p: compact_table(spark, p, target_file_mb=512),
@@ -161,7 +180,13 @@ def _rows(spark, p, batched: bool) -> list:
 
 
 def _hidden_siblings(p: str) -> list[str]:
-    return [n for n in os.listdir(os.path.dirname(p)) if n.startswith(".")]
+    """Dot-prefixed entries beside ``p``, and swap siblings inside it."""
+    inside = [n for _, dirs, _ in os.walk(p) for n in dirs if "._merge_" in n]
+    return [n for n in os.listdir(os.path.dirname(p)) if n.startswith(".")] + inside
+
+
+def _renamed_in(src: str, dst: str) -> bool:
+    return os.path.basename(src) == f".{os.path.basename(dst)}._merge_tmp"
 
 
 @pytest.mark.parametrize("name", list(CASES))
@@ -187,15 +212,12 @@ def test_every_swap_fault_leaves_pre_or_post_target(spark, tmp_path, fault_fs, n
             assert _rows(spark, p, case.batched) == post
             assert _hidden_siblings(p) == []
             break
-        committed = any(
-            src.endswith("/.t._merge_tmp") and dst.endswith("/t")
-            for src, dst in plan.renamed
-        )
+        committed = sum(_renamed_in(src, dst) for src, dst in plan.renamed)
         landed = p in _LANDED
         # inspect a copy, so that the calls below meet the crash state
         seen = str(tmp_path / f"k{k}-seen" / "t")
         shutil.copytree(os.path.dirname(p), os.path.dirname(seen))
-        sinks._recover(spark, seen)  # what every writer runs first
+        case.recover(spark, seen)
         assert _rows(spark, seen, case.batched) in (pre, post), f"fault #{k}"
         marked = any(c.endswith("/_COMPACTING") for c in plan.created)
         assert compaction_in_progress(spark, seen) is marked, f"fault #{k}"
