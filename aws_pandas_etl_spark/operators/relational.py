@@ -17,6 +17,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def tolerance_bin(ts: str, tolerance_us: int) -> F.Column:
+    """Exact integer index of the ``tolerance_us``-wide bin holding
+    timestamp column ``ts``: (x - x%tol)/tol — the subtraction makes
+    the dividend an exact multiple, so the double division is exact
+    (plain x/tol can round across the bin edge at 2^53-scale µs).  Two
+    instants within ``tolerance_us`` of each other always sit in the
+    same or adjacent bins — the batch and streaming range joins both
+    meet on it."""
+    ux = F.unix_micros(F.col(ts))
+    return ((ux - F.pmod(ux, F.lit(tolerance_us))) / F.lit(tolerance_us)).cast(
+        "bigint"
+    )
+
+
 def range_join_binned(
     left: DataFrame,
     right: DataFrame,
@@ -35,18 +49,8 @@ def range_join_binned(
     locality, not n·m.  ``extra_on`` adds equi-keys (e.g. user_id) to
     the bin join when present."""
     extra_on = extra_on or []
-
-    def _bin(ts: str) -> F.Column:
-        # exact integer bin: (x - x%tol)/tol — the subtraction makes the
-        # dividend an exact multiple, so the double division is exact
-        # (plain x/tol can round across the bin edge at 2^53-scale µs)
-        ux = F.unix_micros(F.col(ts))
-        return ((ux - F.pmod(ux, F.lit(tolerance_us))) / F.lit(tolerance_us)).cast(
-            "bigint"
-        )
-
-    lbin = _bin(left_ts)
-    rbin = _bin(right_ts)
+    lbin = tolerance_bin(left_ts, tolerance_us)
+    rbin = tolerance_bin(right_ts, tolerance_us)
     l = left.withColumn(
         "_bin", F.explode(F.array(lbin - 1, lbin, lbin + 1))
     )

@@ -8,6 +8,8 @@ partitions sized to the cluster (see ``for_scale`` notes).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -77,3 +79,25 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set runtime ``confs`` for the duration of a block, then put each
+    back: a key that was set before gets its prior value, a key that was
+    not is unset again (so it falls back to Spark's default).
+
+    Session confs are shared by every thread on the session; the window
+    is meant for plan construction or one availableNow run, not for
+    concurrent readers."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -11,13 +11,18 @@ pulling every byte.
 
 from __future__ import annotations
 
+import glob as _glob
 import os
+from typing import NamedTuple
 
+import pyarrow as pa
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aws_pandas_etl_spark.artifacts import source_ident
+from aws_pandas_etl_spark.session import scoped_conf
 
 TABLES = (
     "region",
@@ -33,32 +38,169 @@ TABLES = (
 )
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Column names stored as parquet INT64 TIMESTAMP(NANOS), which
-    Spark 4 refuses by default (PARQUET_TYPE_ILLEGAL).  Footer-only
-    read — cheap even for huge datasets.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
-    Physical-type check matters: pyarrow reports legacy INT96
-    timestamps (Spark's own historical default output type) as
-    ``timestamp[ns]`` too, but Spark decodes INT96 natively — routing
-    them through the nanosAsLong path would fail the scan.  Only
-    INT64-backed nanos columns need the long+div-1000 treatment."""
+
+class TimestampProbe(NamedTuple):
+    path: str  # the first match (scheme-qualified on the Hadoop route)
+    is_dir: bool  # the match is a directory of part files
+    kinds: dict[str, str]  # timestamp column -> 'ns' | 'tz' | 'ntz'
+
+
+class _HadoopFooterFile:
+    """Minimal seekable read-only file over the Hadoop FileSystem API,
+    enough for pyarrow's footer reads on any scheme the cluster speaks
+    (``s3a://``, ``hdfs://``, ``file://``).  Range reads go through
+    ``IOUtils.toByteArray`` so py4j hands back Python bytes directly;
+    footers are KB-sized, so the py4j hop is noise."""
+
+    def __init__(self, jvm, fs, jpath, length: int):
+        self._jvm = jvm
+        self._in = fs.open(jpath)
+        self._len = int(length)
+        self._pos = 0
+        self.closed = False
+
+    def readable(self):
+        return True
+
+    def seekable(self):
+        return True
+
+    def writable(self):
+        return False
+
+    def tell(self) -> int:
+        return self._pos
+
+    def seek(self, offset: int, whence: int = 0) -> int:
+        base = (0, self._pos, self._len)[whence]
+        self._pos = max(0, min(base + offset, self._len))
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        if n is None or n < 0:
+            n = self._len - self._pos
+        n = min(n, self._len - self._pos)
+        if n <= 0:
+            return b""
+        self._in.seek(self._pos)
+        data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(self._in, n)
+        self._pos += n
+        return bytes(data)
+
+    def close(self) -> None:
+        if not self.closed:
+            self._in.close()
+            self.closed = True
+
+
+def _ts_kinds(pf: _pq.ParquetFile) -> dict[str, str]:
+    """Classify every top-level timestamp column of an open pyarrow
+    ParquetFile: 'ns' (INT64 TIMESTAMP(NANOS), which Spark 4 refuses by
+    default), 'tz' (Spark reads it as TimestampType) or 'ntz' (Spark
+    infers TIMESTAMP_NTZ).
+
+    Legacy INT96 timestamps (Spark's historical default output type)
+    surface as ``timestamp[ns]`` in the arrow schema, but Spark decodes
+    them natively as TimestampType — so the physical type decides, and
+    only INT64-backed nanos columns take the nanosAsLong path."""
+    int96 = {
+        pf.schema.column(i).path
+        for i in range(len(pf.schema))
+        if pf.schema.column(i).physical_type == "INT96"
+    }
+    kinds = {}
+    for f in pf.schema_arrow:
+        if not pa.types.is_timestamp(f.type):
+            continue
+        if f.type.unit == "ns" and f.name not in int96:
+            kinds[f.name] = "ns"
+        else:
+            kinds[f.name] = "tz" if f.type.tz is not None or f.name in int96 else "ntz"
+    return kinds
+
+
+def _by_name(entries) -> tuple | None:
+    """The (name, is_dir, handle) entry with the smallest name."""
+    return min(entries, key=lambda e: e[0], default=None)
+
+
+def _first_data_file(match: tuple, children) -> object | None:
+    """Handle of the file a probe reads for ``match`` (name, is_dir,
+    handle): the match itself, or for a directory — the realistic
+    at-scale layout, any distributed writer's output, possibly
+    partitioned — its first non-hidden ``.parquet`` file, descending
+    through subdirectories in name order.  None when there is none."""
+    while match is not None and match[1]:
+        match = _by_name(
+            c
+            for c in children(match[2])
+            if not c[0].startswith(("_", ".")) and (c[1] or c[0].endswith(".parquet"))
+        )
+    return None if match is None else match[2]
+
+
+def probe_timestamps(spark: SparkSession, pattern: str) -> TimestampProbe | None:
+    """Resolve ``pattern`` (a parquet file, a directory of part files,
+    or a glob) and classify the timestamp columns in the footer of its
+    first match (by name); None when nothing matches.
+
+    A directory stands for its first data file: a table or a file
+    stream has one fixed schema anyway, so a mixed-unit directory fails
+    loudly in the scan whichever file wins.  A bare path that exists
+    locally is listed with ``os`` and its footer read by pyarrow (a
+    fraction of a millisecond — this runs on every ``load_table`` cache
+    miss); anything else — a scheme-qualified path, or a bare one on a
+    non-local default filesystem — goes through the session's Hadoop
+    FileSystem API, footer included (``_HadoopFooterFile``), so every
+    scheme the cluster speaks works."""
+    local = [] if "://" in pattern or pattern.startswith("file:") else _glob.glob(pattern)
+    if local:
+        match = _by_name((os.path.basename(p), os.path.isdir(p), p) for p in local)
+        path = _first_data_file(
+            match, lambda d: [(e.name, e.is_dir(), e.path) for e in os.scandir(d)]
+        )
+        if path is None:
+            return None
+        return TimestampProbe(match[2], match[1], _ts_kinds(_pq.ParquetFile(path)))
+    jvm = spark.sparkContext._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    statuses = fs.globStatus(jpath)
+    if not statuses:
+        return None
+    match = _by_name((s.getPath().getName(), s.isDirectory(), s) for s in statuses)
+    st = _first_data_file(
+        match,
+        lambda d: [
+            (c.getPath().getName(), c.isDirectory(), c) for c in fs.listStatus(d.getPath())
+        ],
+    )
+    if st is None:
+        return None
+    f = _HadoopFooterFile(jvm, fs, st.getPath(), st.getLen())
     try:
-        pf = _pq.ParquetFile(path)
-    except Exception:
-        return []
-    schema = pf.schema_arrow
-    ns_names = {f.name for f in schema if str(f.type).startswith("timestamp[ns")}
-    if not ns_names:
-        return []
-    md = pf.metadata
-    if md.num_row_groups > 0:
-        rg = md.row_group(0)
-        for ci in range(rg.num_columns):
-            col = rg.column(ci)
-            if col.path_in_schema in ns_names and col.physical_type == "INT96":
-                ns_names.discard(col.path_in_schema)
-    return sorted(ns_names)
+        kinds = _ts_kinds(_pq.ParquetFile(f))
+    finally:
+        f.close()
+    return TimestampProbe(match[2].getPath().toString(), match[1], kinds)
+
+
+def to_timestamps(
+    df: DataFrame, ns_cols: list[str], ntz_cols: list[str]
+) -> DataFrame:
+    """Normalize to TimestampType: raw TIMESTAMP(NANOS) longs by exact
+    integer division (``div 1000`` — float division would lose
+    precision above 2^53 ns), TIMESTAMP_NTZ columns by a cast (the same
+    instant under the UTC session tz)."""
+    conv = {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
+    conv.update({c: F.col(c).cast("timestamp") for c in ntz_cols})
+    return df.withColumns(conv) if conv else df
+
+
+def _ntz_cols(schema: T.StructType) -> list[str]:
+    return [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
 
 
 # path -> (fingerprint, ns_cols, raw inferred schema), the fingerprint
@@ -109,16 +251,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     - TIMESTAMP(NANOS) (Spark 4 refuses by default) is read via
       ``spark.sql.legacy.parquet.nanosAsLong`` and converted with exact
-      integer division (``div 1000`` — float division would lose
-      precision above 2^53 ns);
+      integer division (see ``to_timestamps``);
     - TIMESTAMP(µs/ms) without tz infers as TIMESTAMP_NTZ and is cast
       to TimestampType (same instant under the UTC session tz).
 
-    Schema inference runs once per (path, content fingerprint) and is
-    cached process-wide; subsequent reads pass the cached schema
-    explicitly, skipping the JVM footer/inference pass (~8x cheaper
-    plan construction, measured).  Only metadata is cached — every
-    query still scans the parquet data.
+    The nanos columns come from ``probe_timestamps`` — the same footer
+    probe the event stream uses — so a file and a directory of part
+    files read alike.  The probe and schema inference run once per
+    (path, content fingerprint) and are cached process-wide; later
+    reads pass the cached schema explicitly, skipping the JVM
+    footer/inference pass (~8x cheaper plan construction, measured).
+    Only metadata is cached — every query still scans the parquet data.
 
     Repeated calls for the same table (same content, same session)
     return the SAME DataFrame object.  A query that loads a table twice
@@ -127,58 +270,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     unaliased column-object form (``a["k"] == b["k"]``) is ambiguous
     and Spark rejects it loudly."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # None = missing table: skip the cache and let spark.read raise its
-    # usual AnalysisException ("Path does not exist") — callers that
-    # catch Spark errors keep working (r15 ADVICE)
+    # None = missing table: no memo, and spark.read raises its usual
+    # AnalysisException ("Path does not exist") — callers that catch
+    # Spark errors keep working (r15 ADVICE)
     fp = source_ident(path)
-    if fp is not None:
-        hit = _DF_CACHE.get(path)
-        if hit is not None and hit[0] == fp and hit[1] is spark:
-            return hit[2]
-    cached = _META_CACHE.get(path) if fp is not None else None
-    ns_cols: list[str] | None = None
-    if cached is not None and cached[0] == fp:
-        _, ns_cols, raw_schema = cached
-        if not ns_cols:
-            df = spark.read.schema(raw_schema).parquet(path)
-            out = _normalize_with_schema(df, raw_schema)
-            _DF_CACHE[path] = (fp, spark, out)
-            return out
-        # nanos tables keep the conf-scoped inference path: the
-        # nanosAsLong footer-acceptance check happens again at scan
-        # planning, so an explicit schema alone is not sufficient —
-        # but the cached ns_cols list skips the pyarrow footer re-read
-    if ns_cols is None:
-        ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        df = spark.read.parquet(path)
-        raw_schema = df.schema
-        out = _normalize_with_schema(df, raw_schema)
+    hit = _DF_CACHE.get(path)
+    if fp is not None and hit is not None and hit[0] == fp and hit[1] is spark:
+        return hit[2]
+    meta = _META_CACHE.get(path)
+    if fp is None or meta is None or meta[0] != fp:
+        probe = probe_timestamps(spark, path)
+        kinds = probe.kinds if probe is not None else {}
+        meta = (fp, [c for c, k in kinds.items() if k == "ns"], None)
+    _, ns_cols, schema = meta
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    # nanosAsLong is scoped to plan construction: the returned
+    # DataFrame keeps decoding the raw longs after the restore, while a
+    # session-wide set would make every other nanos read in the
+    # session silently yield longs instead of failing loudly
+    with scoped_conf(spark, {NANOS_AS_LONG: "true"} if ns_cols else {}):
+        df = reader.parquet(path)
+    if schema is None:
+        schema = df.schema
         if fp is not None:
-            _META_CACHE[path] = (fp, ns_cols, raw_schema)
-            _DF_CACHE[path] = (fp, spark, out)
-        return out
+            _META_CACHE[path] = (fp, ns_cols, schema)
+    out = to_timestamps(df, ns_cols, _ntz_cols(schema))
     if fp is not None:
-        _META_CACHE[path] = (fp, ns_cols, None)
-    df = _read_parquet_nanos(spark, path)
-    df = df.withColumns(
-        {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols}
-    )
-    # a table can mix TIMESTAMP(NANOS) and µs/ms NTZ columns — normalize
-    # the non-nanos ones too, honoring the contract above
-    return normalize_ntz_timestamps(df)
-
-
-def _normalize_with_schema(df: DataFrame, schema) -> DataFrame:
-    """normalize_ntz_timestamps, but deciding from an already-known
-    schema instead of ``df.schema`` (avoids a py4j schema fetch on the
-    hot load_table path)."""
-    from pyspark.sql import types as T
-
-    ntz = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
-    if not ntz:
-        return df
-    return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+        _DF_CACHE[path] = (fp, spark, out)
+    return out
 
 
 def normalize_ntz_timestamps(df: DataFrame) -> DataFrame:
@@ -186,32 +305,7 @@ def normalize_ntz_timestamps(df: DataFrame) -> DataFrame:
     session tz pinned to UTC (session.py) this is instant-preserving;
     it keeps one timestamp flavor flowing through the engine regardless
     of how a parquet producer annotated its columns."""
-    from pyspark.sql import types as T
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
-    if not ntz:
-        return df
-    return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
-
-
-def _read_parquet_nanos(spark: SparkSession, path: str) -> DataFrame:
-    """Read parquet containing TIMESTAMP(NANOS) columns (as raw longs).
-
-    ``spark.sql.legacy.parquet.nanosAsLong`` is scoped to this read:
-    set, schema-capture (``spark.read.parquet`` resolves the schema
-    eagerly; later execution of the returned lazy DataFrame does not
-    re-consult the conf — verified behavior), restore.  A session-wide
-    set would make every OTHER nanos-parquet read in the session
-    silently yield longs instead of failing loudly.  Not safe against
-    a concurrent reader thread on the same session mid-window — the
-    window is schema-resolution only (footer read, milliseconds)."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(key)  # conf has a defined default ("false")
-    spark.conf.set(key, "true")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        spark.conf.set(key, prior)
+    return to_timestamps(df, [], _ntz_cols(df.schema))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:

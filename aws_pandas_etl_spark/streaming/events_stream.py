@@ -10,6 +10,18 @@ Scale posture: in production the source is Kafka/files-on-S3 with a
 watermark bounding state; ``availableNow`` processes the backlog as an
 incremental batch job.  State store is RocksDB-backed on a real
 cluster for large keyspaces.
+
+Every runner here shares one scaffold:
+
+- ``open_events_stream`` declares the stream's schema from
+  ``readers.probe_timestamps`` — the footer probe ``load_table`` uses —
+  so batch and stream agree on every fixture layout;
+- ``scratch_dir`` owns each run's per-call directory and removes it on
+  every exit path;
+- ``run_available_now`` starts, bounds, stops and times out each query;
+- ``_ordered_split_source`` is the file-per-trigger source of the
+  multi-batch runners;
+- ``stream_stream_range_join`` is the one interval-join plan.
 """
 
 from __future__ import annotations
@@ -20,11 +32,23 @@ import shutil
 import tempfile
 import time
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from aws_pandas_etl_spark.operators.relational import tolerance_bin
+from aws_pandas_etl_spark.session import scoped_conf
+from aws_pandas_etl_spark.sources.readers import (
+    NANOS_AS_LONG,
+    load_table,
+    probe_timestamps,
+    to_timestamps,
+)
 
 EVENTS_LONG_TS_SCHEMA = T.StructType(
     [
@@ -71,138 +95,6 @@ def duration_seconds(spec: str) -> float:
     return total
 
 
-def _events_schema_with_ts(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(f.name, ts_type if f.name == "ts" else f.dataType)
-            for f in EVENTS_LONG_TS_SCHEMA.fields
-        ]
-    )
-
-
-class _HadoopFooterFile:
-    """Minimal seekable read-only file over the Hadoop FileSystem API,
-    enough for pyarrow's footer reads (``read_schema``) on any scheme
-    the cluster speaks (``s3a://``, ``hdfs://``, ``file://``).  Range
-    reads go through ``IOUtils.toByteArray`` so py4j hands back Python
-    bytes directly; footers are KB-sized, so the py4j hop is noise."""
-
-    def __init__(self, jvm, fs, jpath, length: int):
-        self._jvm = jvm
-        self._in = fs.open(jpath)
-        self._len = int(length)
-        self._pos = 0
-        self.closed = False
-
-    def readable(self):
-        return True
-
-    def seekable(self):
-        return True
-
-    def writable(self):
-        return False
-
-    def tell(self) -> int:
-        return self._pos
-
-    def seek(self, offset: int, whence: int = 0) -> int:
-        base = (0, self._pos, self._len)[whence]
-        self._pos = max(0, min(base + offset, self._len))
-        return self._pos
-
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            n = self._len - self._pos
-        n = min(n, self._len - self._pos)
-        if n <= 0:
-            return b""
-        self._in.seek(self._pos)
-        data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(self._in, n)
-        self._pos += n
-        return bytes(data)
-
-    def close(self) -> None:
-        if not self.closed:
-            self._in.close()
-            self.closed = True
-
-
-def _probe_ts_type(spark: SparkSession, directory: str, glob: str) -> str:
-    """Physical parquet type of ``ts`` in the first file matching
-    ``glob`` under ``directory`` (footer-only read, cheap at any
-    scale): 'ns' | 'tz' | 'ntz'.
-
-    The batch reader got per-file probing in round 4
-    (sources/readers.py::load_table) when the fixtures moved from
-    TIMESTAMP(NANOS) to TIMESTAMP(µs); this is the streaming twin —
-    the stream's schema must be declared up front, so the probe
-    decides between the long+``div 1000`` nanos path and a native
-    timestamp schema.  One footer stands in for the directory: a file
-    stream requires a single fixed schema anyway, so mixed-unit
-    directories are unsupported either way (the first file wins, and
-    a mismatched later file fails loudly in the scan).
-
-    Listing and footer reads go through the Hadoop FileSystem API of
-    the active session (like ``plans.config.load_config_from_url``),
-    so the stream source works on any scheme the cluster speaks, not
-    just local directories; plain local paths take a direct pyarrow
-    fast path."""
-    import pyarrow.parquet as _pq
-
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(directory.rstrip("/") + "/" + glob)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(jpath)
-    if statuses is None or len(statuses) == 0:
-        raise FileNotFoundError(f"no parquet matching {glob!r} in {directory}")
-    st = min(statuses, key=lambda s: s.getPath().getName())
-    if st.isDirectory():
-        # the realistic at-scale layout: events.parquet is a DIRECTORY
-        # of part files (any distributed writer's output) — probe the
-        # first part file's footer instead of the directory entry
-        parts = [
-            s
-            for s in fs.listStatus(st.getPath())
-            if s.isFile() and s.getPath().getName().endswith(".parquet")
-        ]
-        if not parts:
-            raise FileNotFoundError(
-                f"no part files inside {st.getPath().toString()}"
-            )
-        st = min(parts, key=lambda s: s.getPath().getName())
-    p = st.getPath()
-    scheme = p.toUri().getScheme()
-    if scheme in (None, "file"):
-        pf = _pq.ParquetFile(p.toUri().getPath())
-        return _ts_kind(pf)
-    f = _HadoopFooterFile(jvm, fs, p, st.getLen())
-    try:
-        return _ts_kind(_pq.ParquetFile(f))
-    finally:
-        f.close()
-
-
-def _ts_kind(pf) -> str:
-    """Classify the ``ts`` column of an open pyarrow ParquetFile:
-    'ns' | 'tz' | 'ntz'.  Legacy INT96 timestamps (Spark's historical
-    default output type) surface as ``timestamp[ns]`` in the arrow
-    schema but Spark decodes them natively — they must take the plain
-    TimestampType path, never nanosAsLong (which only INT64-backed
-    TIMESTAMP(NANOS) needs)."""
-    ts_type = str(next(f.type for f in pf.schema_arrow if f.name == "ts"))
-    if ts_type.startswith("timestamp[ns"):
-        md = pf.metadata
-        if md.num_row_groups > 0:
-            rg = md.row_group(0)
-            for ci in range(rg.num_columns):
-                col = rg.column(ci)
-                if col.path_in_schema == "ts" and col.physical_type == "INT96":
-                    return "tz"
-        return "ns"
-    return "tz" if "tz=" in ts_type else "ntz"
-
-
 def open_events_stream(
     spark: SparkSession,
     directory: str,
@@ -210,8 +102,10 @@ def open_events_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over event parquet files, normalized to
-    TimestampType ``ts`` whatever the files store (the streaming twin
-    of readers.load_table's contract):
+    TimestampType ``ts`` whatever the files store — the streaming twin
+    of readers.load_table's contract, decided by the same footer probe
+    (``readers.probe_timestamps``).  The stream's schema must be
+    declared up front, so the probe picks it:
 
     - TIMESTAMP(NANOS): read as long under ``nanosAsLong`` (conf
       scoped to stream construction — the plan captures it; verified
@@ -219,8 +113,11 @@ def open_events_stream(
       correctly), converted with exact integer ``div 1000``;
     - TIMESTAMP(µs/ms) without tz: TIMESTAMP_NTZ schema, cast to
       TimestampType (instant-preserving under the UTC session tz);
-    - TIMESTAMP with tz: TimestampType schema directly."""
-    kind = _probe_ts_type(spark, directory, glob)
+    - TIMESTAMP with tz (or legacy INT96): TimestampType directly."""
+    probe = probe_timestamps(spark, directory.rstrip("/") + "/" + glob)
+    if probe is None:
+        raise FileNotFoundError(f"no parquet matching {glob!r} in {directory}")
+    kind = probe.kinds["ts"]
     # pathGlobFilter matches LEAF FILE names: when the glob target is a
     # DIRECTORY of part files (any distributed writer's output —
     # events.parquet/ holding part-*.parquet), filtering the parent
@@ -229,37 +126,27 @@ def open_events_stream(
     # whose streaming numbers came back BELOW the machinery floor).
     # Resolve the directory case to stream the subdirectory itself.
     src_dir, path_filter = directory, glob
-    if not any(ch in glob for ch in "*?[]"):
-        jvm = spark.sparkContext._jvm
-        jtarget = jvm.org.apache.hadoop.fs.Path(
-            directory.rstrip("/") + "/" + glob
-        )
-        fs = jtarget.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if fs.exists(jtarget) and fs.getFileStatus(jtarget).isDirectory():
-            src_dir, path_filter = jtarget.toString(), "*.parquet"
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(key)  # conf has a defined default ("false")
-    if kind == "ns":
-        schema = EVENTS_LONG_TS_SCHEMA
-        spark.conf.set(key, "true")
-    elif kind == "tz":
-        schema = _events_schema_with_ts(T.TimestampType())
-    else:
-        schema = _events_schema_with_ts(T.TimestampNTZType())
-    try:
-        reader = spark.readStream.schema(schema).option(
-            "pathGlobFilter", path_filter
-        )
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if probe.is_dir and not any(ch in glob for ch in "*?[]{"):
+        src_dir, path_filter = probe.path, "*.parquet"
+    ts_type = {
+        "ns": T.LongType(),
+        "tz": T.TimestampType(),
+        "ntz": T.TimestampNTZType(),
+    }[kind]
+    schema = T.StructType(
+        [
+            T.StructField(f.name, ts_type if f.name == "ts" else f.dataType)
+            for f in EVENTS_LONG_TS_SCHEMA.fields
+        ]
+    )
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", path_filter)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    with scoped_conf(spark, {NANOS_AS_LONG: "true"} if kind == "ns" else {}):
         stream = reader.parquet(src_dir)
-    finally:
-        spark.conf.set(key, prior)
-    if kind == "ns":
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if kind == "ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return to_timestamps(
+        stream, ["ts"] if kind == "ns" else [], ["ts"] if kind == "ntz" else []
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str, with_watermark: str | None = "2 hours") -> DataFrame:
@@ -285,6 +172,62 @@ def tumbling_window_agg(events: DataFrame, window: str = "1 hour") -> DataFrame:
     )
 
 
+@contextmanager
+def scratch_dir(prefix: str, keep: tuple[str, ...] = ()) -> Iterator[str]:
+    """Per-call scratch directory ``<tempdir>/<prefix>_<hex>`` for one
+    streaming run (``tempfile.gettempdir()`` is read at call time).
+
+    If the block raises — a failed batch, a timeout, an interrupt — or
+    nothing is kept, the whole directory goes when the block ends.
+    Otherwise every entry but ``keep`` goes (the checkpoint and the
+    split source are dead once the run finished), and the kept ones,
+    which the caller's lazy result reads, are removed at interpreter
+    exit."""
+    base = os.path.join(tempfile.gettempdir(), f"{prefix}_{uuid.uuid4().hex[:8]}")
+    os.makedirs(base)
+    try:
+        yield base
+    except BaseException:
+        shutil.rmtree(base, ignore_errors=True)
+        raise
+    if not keep:
+        shutil.rmtree(base, ignore_errors=True)
+        return
+    for n in os.listdir(base):
+        if n not in keep:
+            shutil.rmtree(os.path.join(base, n), ignore_errors=True)
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+
+
+def run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, base: str, timeout_sec: float
+) -> None:
+    """The one execution scaffold of every streaming run: start
+    ``writer`` under the availableNow trigger with its checkpoint at
+    ``<base>/ckpt``, wait up to ``timeout_sec``, always stop it, and
+    raise TimeoutError (never partial results) if it did not finish.
+
+    Shuffle partitions are lowered to 8 for the run: each shuffle
+    partition materializes a state-store instance per micro-batch,
+    which dominates small/bounded backlogs.  (On a real cluster with
+    large state you'd size this UP, not down.)"""
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        q = (
+            writer.option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            finished = q.awaitTermination(timeout_sec)
+        finally:
+            q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"streaming run {os.path.basename(base)} did not finish within "
+            f"{timeout_sec}s — partial results discarded"
+        )
+
+
 def _run_to_parquet_sink(
     spark: SparkSession,
     df: DataFrame,
@@ -303,49 +246,26 @@ def _run_to_parquet_sink(
     bench when the memory sink collected ~647 MB to the driver.  This
     is also the 100 TB shape: streaming results land on distributed
     storage, and downstream consumption is another scan."""
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    out = os.path.join(tempfile.gettempdir(), f"out_{name}")
-    checkpoint = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    with scratch_dir(name_prefix, keep=("out",)) as base:
+        out = os.path.join(base, "out")
+        writer = df.writeStream.format("parquet").option("path", out).outputMode("append")
+        run_available_now(spark, writer, base, timeout_sec)
+        meta = os.path.join(out, "_spark_metadata")
+        committed = os.path.isdir(meta) and any(
+            not n.startswith(".") for n in os.listdir(meta)
         )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-        finally:
-            q.stop()
-        if not finished:
-            raise TimeoutError(
-                f"streaming query {name} did not finish within {timeout_sec}s "
-                "— partial results discarded"
-            )
-    # per-call throwaway dirs: the checkpoint is dead once the query
-    # finished; the output dir must outlive this call (the returned
-    # DataFrame reads it lazily), so it is registered for interpreter-
-    # exit cleanup instead of accumulating across bench/test runs
-    shutil.rmtree(checkpoint, ignore_errors=True)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    meta = os.path.join(out, "_spark_metadata")
-    committed = os.path.isdir(meta) and any(
-        not n.startswith(".") for n in os.listdir(meta)
-    )
-    if not committed:
-        # zero micro-batches committed — genuinely empty result
-        return spark.createDataFrame([], df.schema)
-    try:
-        return spark.read.parquet(out)
-    except AnalysisException as exc:
-        # a committed batch can contain zero rows -> no data files to
-        # infer from; anything else (corrupt files, schema mismatch)
-        # must propagate, not masquerade as an empty result
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "Unable to infer schema" in str(exc):
+        if not committed:
+            # zero micro-batches committed — genuinely empty result
             return spark.createDataFrame([], df.schema)
-        raise
+        try:
+            return spark.read.parquet(out)
+        except AnalysisException as exc:
+            # a committed batch can contain zero rows -> no data files
+            # to infer from; anything else (corrupt files, schema
+            # mismatch) must propagate, not masquerade as an empty result
+            if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "Unable to infer schema" in str(exc):
+                return spark.createDataFrame([], df.schema)
+            raise
 
 
 def _run_to_memory_sink(
@@ -355,37 +275,14 @@ def _run_to_memory_sink(
     name_prefix: str,
     timeout_sec: int,
 ) -> DataFrame:
-    """Shared execution scaffold: availableNow trigger -> memory sink,
-    bounded wait, stop-on-exit, error (never partial results) on
-    timeout.
-
-    Memory sinks collect results to the driver — reserved for
-    complete-mode aggregates whose output is bounded by the grouping
-    cardinality.  Unbounded append-mode results go through
-    ``_run_to_parquet_sink`` instead."""
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-        finally:
-            q.stop()
-        if not finished:
-            raise TimeoutError(
-                f"streaming query {name} did not finish within {timeout_sec}s "
-                "— partial results discarded"
-            )
-    # memory-sink results live in the driver; the per-call checkpoint
-    # dir is dead once the query finished
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    """availableNow run into a memory sink.  Memory sinks collect
+    results to the driver — reserved for complete-mode aggregates whose
+    output is bounded by the grouping cardinality.  Unbounded
+    append-mode results go through ``_run_to_parquet_sink`` instead."""
+    with scratch_dir(name_prefix) as base:
+        name = os.path.basename(base)
+        writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+        run_available_now(spark, writer, base, timeout_sec)
     return spark.table(name)
 
 
@@ -400,23 +297,6 @@ def run_tumbling_agg_stream(
     by the DuckDB oracle."""
     agg = tumbling_window_agg(events_stream(spark, sf_dir, with_watermark=None), window)
     return _run_to_memory_sink(spark, agg, "complete", "tumbling", timeout_sec)
-
-
-class _scoped_shuffle_partitions:
-    """Temporarily lower shuffle partitions for a streaming run: each
-    shuffle partition materializes a state-store instance per
-    micro-batch, which dominates small/bounded backlogs.  (On a real
-    cluster with large state you'd size this UP, not down.)"""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
 def run_streaming_dedup(
@@ -438,37 +318,53 @@ def run_streaming_dedup(
     return _run_to_parquet_sink(spark, stream.dropDuplicates(keys), "dedup", timeout_sec)
 
 
-def _write_ordered_splits(
-    df: DataFrame, order_cols: list[str], n_splits: int, base: str, src_dir: str
-) -> None:
-    """Arriving-batch scaffolding shared by the foreachBatch runners:
-    split ``df`` into ``n_splits`` time-ordered parquet files under
-    ``src_dir`` (batch_i.parquet) in ONE pass — ntile over the given
-    order, a single partitionBy write (the previous per-split filtered
-    writes re-scanned and re-sorted the frame n times), then renames
-    with explicitly ascending mtimes so the file stream delivers
-    batches in order regardless of filesystem timestamp granularity.
-    The ntile window's single partition only ever runs over the
-    harness fixture; it also guarantees exactly one file per split."""
+def _ordered_split_source(
+    spark: SparkSession,
+    df: DataFrame,
+    order_cols: list[str],
+    n_splits: int,
+    base: str,
+    tail: DataFrame | None = None,
+) -> DataFrame:
+    """Arriving-batch scaffolding for the multi-batch runners: a
+    file-per-trigger stream over ``<base>/src/batch_i.parquet``, one
+    file per micro-batch, in order.
+
+    Unless ``src`` already exists (a resumed run), ``df`` is split into
+    ``n_splits`` ordered files in ONE pass — ntile over ``order_cols``,
+    a single partitionBy write — and ``tail`` (if given) becomes one
+    more file after them.  The files get explicitly ascending mtimes so
+    the stream delivers them in order regardless of filesystem
+    timestamp granularity.  The ntile window's single partition only
+    ever runs over the harness fixture; it also guarantees exactly one
+    file per split."""
     from pyspark.sql import Window
 
-    splits = os.path.join(base, "splits")
-    q = df.withColumn(
-        "_q", F.ntile(n_splits).over(Window.orderBy(*order_cols))
+    src_dir = os.path.join(base, "src")
+    if not os.path.isdir(src_dir):
+        splits = os.path.join(base, "splits")
+        q = df.withColumn("_q", F.ntile(n_splits).over(Window.orderBy(*order_cols)))
+        if tail is not None:
+            q = q.unionByName(tail.coalesce(1).withColumn("_q", F.lit(n_splits + 1)))
+        q.write.partitionBy("_q").parquet(splits)
+        os.makedirs(src_dir)
+        now = time.time()
+        for i in range(1, n_splits + 1 + (tail is not None)):
+            part = os.path.join(splits, f"_q={i}")
+            files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+            if len(files) != 1:
+                raise RuntimeError(
+                    f"expected exactly one file per split, got {files} in {part}"
+                )
+            dst = os.path.join(src_dir, f"batch_{i}.parquet")
+            os.rename(os.path.join(part, files[0]), dst)
+            os.utime(dst, (now + i, now + i))
+        shutil.rmtree(splits, ignore_errors=True)
+    return (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
     )
-    q.write.partitionBy("_q").parquet(splits)
-    now = time.time()
-    for i in range(1, n_splits + 1):
-        part = os.path.join(splits, f"_q={i}")
-        files = [f for f in os.listdir(part) if f.endswith(".parquet")]
-        if len(files) != 1:
-            raise RuntimeError(
-                f"expected exactly one file per split, got {files} in {part}"
-            )
-        dst = os.path.join(src_dir, f"batch_{i}.parquet")
-        os.rename(os.path.join(part, files[0]), dst)
-        os.utime(dst, (now + i, now + i))
-    shutil.rmtree(splits, ignore_errors=True)
 
 
 _SPLITS_MARKER = "_splits_marker.json"
@@ -536,30 +432,14 @@ def run_foreach_batch_merge(
     #4; economics recorded in BASELINE.md r12 "CDC merge
     partition-pruning economics" and docs/merge_probe_r12.json).
     Final state is identical either way — same keys, same ordering."""
-    from aws_pandas_etl_spark.sources.readers import load_table
     from aws_pandas_etl_spark.sources.sinks import (
         merge_load,
         merge_load_partitioned,
         read_back,
     )
 
-    name = f"fbmerge_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), name)
-    src_dir = os.path.join(base, "src")
-    target = os.path.join(base, "target")
-    checkpoint = os.path.join(base, "ckpt")
-    os.makedirs(src_dir)
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts", "props"
-    )
-    # time-ordered split into n files = the arriving batch sequence
-    _write_ordered_splits(ev, ["ts", "event_id"], n_splits, base, src_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
     )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -598,26 +478,14 @@ def run_foreach_batch_merge(
                 tiebreak_col="event_id",
             )
 
-    with _scoped_shuffle_partitions(spark, 8):
-        sq = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = sq.awaitTermination(timeout_sec)
-        finally:
-            sq.stop()
-    if not finished:
-        raise TimeoutError(f"foreachBatch merge did not finish within {timeout_sec}s")
-    out = read_back(spark, target)
-    # src/ckpt are dead once the run finished; the target must outlive
-    # this call (the returned DataFrame reads it lazily)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return out
+    # the target must outlive this call (the returned DataFrame reads
+    # it lazily); the splits and the checkpoint are dead once it ends
+    with scratch_dir("fbmerge", keep=("target",)) as base:
+        target = os.path.join(base, "target")
+        # time-ordered split into n files = the arriving batch sequence
+        stream = _ordered_split_source(spark, ev, ["ts", "event_id"], n_splits, base)
+        run_available_now(spark, stream.writeStream.foreachBatch(_apply), base, timeout_sec)
+        return read_back(spark, target)
 
 
 def run_streaming_linear_count(
@@ -698,7 +566,6 @@ def run_streaming_psi_drift(
     same bounded grid (bins seen by only one half surface with a
     zero)."""
     from aws_pandas_etl_spark.operators.timeseries import psi_clamped_bins
-    from aws_pandas_etl_spark.sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events")
     with_mid = psi_clamped_bins(ev, nbins)
@@ -712,21 +579,12 @@ def run_streaming_psi_drift(
         "event_type", "bin", "ts", "event_id"
     )
 
-    name = f"psidrift_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), name)
-    src_dir = os.path.join(base, "src")
-    os.makedirs(src_dir)
-    _write_ordered_splits(second, ["ts", "event_id"], n_splits, base, src_dir)
-    stream = (
-        spark.readStream.schema(second.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    counts = stream.groupBy("event_type", "bin").agg(
-        F.count("*").cast("bigint").alias("nb")
-    )
-    back = _run_to_memory_sink(spark, counts, "complete", "psidrift", timeout_sec)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    with scratch_dir("psidrift") as base:
+        stream = _ordered_split_source(spark, second, ["ts", "event_id"], n_splits, base)
+        counts = stream.groupBy("event_type", "bin").agg(
+            F.count("*").cast("bigint").alias("nb")
+        )
+        back = _run_to_memory_sink(spark, counts, "complete", "psidrift", timeout_sec)
     return ref.join(back, ["event_type", "bin"], "full_outer").select(
         "event_type",
         "bin",
@@ -811,15 +669,15 @@ def run_stream_stream_range_join(
     range predicate between two streams is unplannable — so this reuses
     the batch range join's binning trick (operators/relational.py::
     range_join_binned): bucket event-time into tolerance-wide bins,
-    explode the left side to {b-1, b, b+1}, join on bin equality, keep
-    the exact interval predicate.  The same construction that turns the
-    batch plan from a nested loop into an equi-join is what makes the
-    streaming join EXIST at all.
+    explode one side to {b-1, b, b+1}, join on bin equality, keep the
+    exact interval predicate (``stream_stream_range_join``).  The same
+    construction that turns the batch plan from a nested loop into an
+    equi-join is what makes the streaming join EXIST at all.
 
     Both sides carry watermarks and the join condition bounds c_ts to
     [e_ts - tol, e_ts + tol], so state for bins older than the
     watermark horizon is evicted — bounded state on unbounded streams.
-    Append-mode memory sink under availableNow; results are identical
+    Append-mode parquet sink under availableNow; results are identical
     to the batch `range_join_clicks_near_errors` (same DuckDB oracle).
     """
     left = events_stream(spark, sf_dir, with_watermark=None)
@@ -833,40 +691,42 @@ def stream_stream_range_join(
     right_events: DataFrame,
     tolerance_us: int = 300_000_000,
     watermark: str = "10 minutes",
+    join_type: str = "inner",
 ) -> DataFrame:
-    """Build the (error, click) interval-join plan over two event
-    streams (see ``run_stream_stream_range_join``; split out so tests
-    can feed file-per-trigger streams and prove pairs form across
-    micro-batch boundaries)."""
+    """The one (error, click) interval-join plan over two event streams
+    — inner, leftOuter and fullOuter alike (split out so tests can feed
+    file-per-trigger streams and prove pairs form across micro-batch
+    boundaries).
+
+    Spark's streaming symmetric hash join needs an equi-key, so the
+    join meets on the tolerance-wide bin (``relational.tolerance_bin``)
+    and keeps the exact interval in the condition.  The CLICK side is
+    exploded to bins {b-1, b, b+1}: every true pair still meets on
+    exactly one bin (bins are tolerance-wide, so a pair's error bin is
+    always within ±1 of the click bin), and each error stays a SINGLE
+    state row — so a left-outer join emits exactly one NULL completion
+    per unmatched error, where exploding the error side would emit
+    three."""
     tol_sec = tolerance_us // 1_000_000
-
-    def _bin(ts_col: str) -> F.Column:
-        # exact integer bin — same arithmetic as range_join_binned
-        ux = F.unix_micros(F.col(ts_col))
-        return ((ux - F.pmod(ux, F.lit(tolerance_us))) / F.lit(tolerance_us)).cast(
-            "bigint"
-        )
-
     errors = (
         left_events.filter(F.col("event_type") == "error")
         .select(F.col("event_id").alias("error_id"), F.col("ts").alias("e_ts"))
         .withWatermark("e_ts", watermark)
-        .withColumn(
-            "e_bin", F.explode(F.array(_bin("e_ts") - 1, _bin("e_ts"), _bin("e_ts") + 1))
-        )
+        .withColumn("e_bin", tolerance_bin("e_ts", tolerance_us))
     )
+    c_bin = tolerance_bin("c_ts", tolerance_us)
     clicks = (
         right_events.filter(F.col("event_type") == "click")
         .select(F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts"))
         .withWatermark("c_ts", watermark)
-        .withColumn("c_bin", _bin("c_ts"))
+        .withColumn("c_bin", F.explode(F.array(c_bin - 1, c_bin, c_bin + 1)))
     )
     cond = (
         (F.col("e_bin") == F.col("c_bin"))
         & (F.col("c_ts") >= F.col("e_ts") - F.expr(f"INTERVAL {tol_sec} SECONDS"))
         & (F.col("c_ts") <= F.col("e_ts") + F.expr(f"INTERVAL {tol_sec} SECONDS"))
     )
-    return errors.join(clicks, cond, "inner").select(
+    return errors.join(clicks, cond, join_type).select(
         "error_id",
         "click_id",
         (F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
@@ -961,7 +821,6 @@ def run_streaming_heavy_hitters(
         misra_gries_sketch,
         tokens,
     )
-    from aws_pandas_etl_spark.sources.readers import load_table
 
     if counters + 1 < 1.0 / phi:
         raise ValueError(
@@ -971,26 +830,19 @@ def run_streaming_heavy_hitters(
         tempfile.gettempdir(), f"hhstream_{uuid.uuid4().hex[:8]}"
     )
     src_dir = os.path.join(base, "src")
-    checkpoint = os.path.join(base, "ckpt")
-    state_dir = os.path.join(checkpoint, "mg_state")
+    state_dir = os.path.join(base, "ckpt", "mg_state")
     os.makedirs(state_dir, exist_ok=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # reused base_dir (crash-resume path): refuse a mismatched corpus
+    resumed = os.path.isdir(src_dir)
+    if resumed:
+        _check_splits(src_dir, sf_dir=sf_dir, n_splits=n_splits)
     # doc_id-ordered split into n files = the arriving batch sequence
     # (harness scaffolding standing in for a Kafka topic)
-    if not os.path.isdir(src_dir):
-        os.makedirs(src_dir)
-        _write_ordered_splits(docs, ["doc_id"], n_splits, base, src_dir)
+    stream = _ordered_split_source(spark, docs, ["doc_id"], n_splits, base)
+    if not resumed:
         _stamp_splits(src_dir, sf_dir=sf_dir, n_splits=n_splits)
-    else:
-        # reused base_dir (crash-resume path): refuse a mismatched corpus
-        _check_splits(src_dir, sf_dir=sf_dir, n_splits=n_splits)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         store = _mg_load_snapshot(state_dir, batch_id - 1)
@@ -1016,25 +868,12 @@ def run_streaming_heavy_hitters(
                 f"injected crash after snapshot {batch_id}"
             )
 
-    with _scoped_shuffle_partitions(spark, 8):
-        sq = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = sq.awaitTermination(timeout_sec)
-        finally:
-            sq.stop()
-    store = _mg_load_snapshot(
-        state_dir, _mg_latest_snapshot_id(state_dir)
-    )
-    if not finished:
-        # leave checkpoint + mg_state snapshots on disk even when the
-        # caller asked for cleanup: they are exactly the crash-recoverable
-        # state a retried run resumes from
-        raise TimeoutError(f"heavy-hitter stream did not finish in {timeout_sec}s")
+    # no scratch_dir here: on failure or timeout the checkpoint and the
+    # mg_state snapshots stay on disk even when the caller asked for
+    # cleanup — they are exactly the crash-recoverable state a retried
+    # run resumes from
+    run_available_now(spark, stream.writeStream.foreachBatch(_apply), base, timeout_sec)
+    store = _mg_load_snapshot(state_dir, _mg_latest_snapshot_id(state_dir))
     if cleanup:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1135,14 +974,12 @@ def run_stream_stream_outer_range_join(
     Three mechanics make the outer form correct AND cheap where naive
     constructions are not:
 
-    1. The bin explosion moves to the RIGHT side.  The inner join
-       explodes the LEFT side to {b-1, b, b+1}; a left-outer join over
-       that would emit up to three NULL completions per unmatched
-       error (one per exploded bin).  Exploding the clicks instead
-       keeps each error a SINGLE state row — exactly one NULL
-       completion — while every true pair still meets on exactly one
-       bin (bins are tolerance-wide, so a pair's error bin is always
-       within ±1 of the click bin).
+    1. The bin explosion is on the CLICK side
+       (``stream_stream_range_join``, shared with the inner join).
+       Exploding the errors to {b-1, b, b+1} would emit up to three
+       NULL completions per unmatched error (one per exploded bin);
+       exploding the clicks keeps each error a SINGLE state row —
+       exactly one NULL completion.
 
     2. A watermark-flush SENTINEL makes the null-completions COMPLETE
        under availableNow.  An unmatched left row only emits once the
@@ -1179,8 +1016,6 @@ def run_stream_stream_outer_range_join(
     sound."""
     import datetime as _dt
 
-    from aws_pandas_etl_spark.sources.readers import load_table
-
     tol_sec = tolerance_us // 1_000_000
     # parsed for real (not a substring guess): an under-sized sentinel
     # lands at-or-below the last error's eviction threshold and its
@@ -1197,65 +1032,19 @@ def run_stream_stream_outer_range_join(
         schema=ev.schema,
     )
 
-    name = f"ssouter_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), name)
-    src_dir = os.path.join(base, "src")
-    if n_splits <= 1:
-        os.makedirs(base)
-        ev.unionByName(sent).write.parquet(src_dir)
-        stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-    else:
-        os.makedirs(src_dir)
-        _write_ordered_splits(ev, ["ts", "event_id"], n_splits, base, src_dir)
-        sent.coalesce(1).write.parquet(os.path.join(base, "sent"))
-        d = os.path.join(base, "sent")
-        f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-        dst = os.path.join(src_dir, f"batch_{n_splits + 1}.parquet")
-        os.rename(os.path.join(d, f), dst)
-        os.utime(dst, (time.time() + n_splits + 1,) * 2)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+    with scratch_dir("ssouter") as base:
+        if n_splits <= 1:
+            src_dir = os.path.join(base, "src")
+            ev.unionByName(sent).write.parquet(src_dir)
+            stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+        else:
+            stream = _ordered_split_source(
+                spark, ev, ["ts", "event_id"], n_splits, base, tail=sent
+            )
+        joined = stream_stream_range_join(
+            stream, stream, tolerance_us, watermark, join_type
         )
-
-    def _bin(ts_col: str) -> F.Column:
-        ux = F.unix_micros(F.col(ts_col))
-        return (
-            (ux - F.pmod(ux, F.lit(tolerance_us))) / F.lit(tolerance_us)
-        ).cast("bigint")
-
-    errors = (
-        stream.filter(F.col("event_type") == "error")
-        .select(F.col("event_id").alias("error_id"), F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", watermark)
-        .withColumn("e_bin", _bin("e_ts"))
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", watermark)
-        .withColumn(
-            "c_bin",
-            F.explode(
-                F.array(_bin("c_ts") - 1, _bin("c_ts"), _bin("c_ts") + 1)
-            ),
-        )
-    )
-    cond = (
-        (F.col("e_bin") == F.col("c_bin"))
-        & (F.col("c_ts") >= F.col("e_ts") - F.expr(f"INTERVAL {tol_sec} SECONDS"))
-        & (F.col("c_ts") <= F.col("e_ts") + F.expr(f"INTERVAL {tol_sec} SECONDS"))
-    )
-    joined = errors.join(clicks, cond, join_type).select(
-        "error_id",
-        "click_id",
-        (F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("c_ts"))).alias(
-            "gap_us"
-        ),
-    )
-    out = _run_to_parquet_sink(spark, joined, "ssouter", timeout_sec)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
+        out = _run_to_parquet_sink(spark, joined, "ssouter", timeout_sec)
     # sentinels: the pair they form with each other, and (fullOuter
     # only) any null-completions of their never-matching exploded
     # copies — all carry a -1 id on the side that emitted them
@@ -1300,61 +1089,41 @@ def run_streaming_quarantine_split(
     codegen'd CASE — no shuffle, no state; both sinks are distributed
     parquet appends.  Returns the quarantined rows
     (event_id, event_type, value, reason)."""
-    name = f"quarantine_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), name)
-    main_dir = os.path.join(base, "main")
-    quar_dir = os.path.join(base, "quarantine")
-    checkpoint = os.path.join(base, "ckpt")
-    os.makedirs(base)
-
     stream = events_stream(spark, sf_dir, with_watermark=None).withColumn(
         "reason", quarantine_reason()
     )
 
-    def _split(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch subdirectory + overwrite makes a foreachBatch RETRY
-        # idempotent: a replayed batch rewrites its own directory
-        # instead of double-appending, so the count reconciliation
-        # below stays a true LEAK detector (a plain append would turn
-        # any transient executor failure into a hard RuntimeError)
-        batch_df.filter(F.col("reason").isNull()).drop("reason").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(main_dir, f"batch_{batch_id}"))
-        batch_df.filter(F.col("reason").isNotNull()).select(
-            "event_id", "event_type", "value", "reason"
-        ).write.mode("overwrite").parquet(
-            os.path.join(quar_dir, f"batch_{batch_id}")
-        )
+    # the quarantine outlives this call (the returned DataFrame reads it
+    # lazily); the main sink and the checkpoint are dead once it ends
+    with scratch_dir("quarantine", keep=("quarantine",)) as base:
+        main_glob = os.path.join(base, "main", "batch_*")
+        quar_glob = os.path.join(base, "quarantine", "batch_*")
 
-    sq = (
-        stream.writeStream.foreachBatch(_split)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = sq.awaitTermination(timeout_sec)
-    finally:
-        sq.stop()
-    if not finished:
-        raise TimeoutError(f"quarantine split did not finish within {timeout_sec}s")
+        def _split(batch_df: DataFrame, batch_id: int) -> None:
+            # per-batch subdirectory + overwrite makes a foreachBatch
+            # RETRY idempotent: a replayed batch rewrites its own
+            # directory instead of double-appending, so the count
+            # reconciliation below stays a true LEAK detector (a plain
+            # append would turn any transient executor failure into a
+            # hard RuntimeError)
+            leaf = f"batch_{batch_id}"
+            batch_df.filter(F.col("reason").isNull()).drop("reason").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(base, "main", leaf))
+            batch_df.filter(F.col("reason").isNotNull()).select(
+                "event_id", "event_type", "value", "reason"
+            ).write.mode("overwrite").parquet(os.path.join(base, "quarantine", leaf))
 
-    from aws_pandas_etl_spark.sources.readers import load_table
-
-    n_src = load_table(spark, sf_dir, "events").count()
-    main_glob = os.path.join(main_dir, "batch_*")
-    quar_glob = os.path.join(quar_dir, "batch_*")
-    n_main = spark.read.parquet(main_glob).count()
-    n_quar = spark.read.parquet(quar_glob).count()
-    if n_main + n_quar != n_src:
-        raise RuntimeError(
-            f"quarantine split leaked rows: main {n_main} + quarantine "
-            f"{n_quar} != source {n_src}"
-        )
-    out = spark.read.parquet(quar_glob)
-    shutil.rmtree(checkpoint, ignore_errors=True)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return out
+        run_available_now(spark, stream.writeStream.foreachBatch(_split), base, timeout_sec)
+        n_src = load_table(spark, sf_dir, "events").count()
+        n_main = spark.read.parquet(main_glob).count()
+        n_quar = spark.read.parquet(quar_glob).count()
+        if n_main + n_quar != n_src:
+            raise RuntimeError(
+                f"quarantine split leaked rows: main {n_main} + quarantine "
+                f"{n_quar} != source {n_src}"
+            )
+        return spark.read.parquet(quar_glob)
 
 
 def run_stream_stream_full_outer_range_join(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from aws_pandas_etl_spark.session import scoped_conf
 from aws_pandas_etl_spark.streaming.events_stream import events_stream
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, ewma double"
@@ -169,35 +170,18 @@ def ewma_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _scoped_rocksdb:
-    """Set/restore the RocksDB state-store provider around a
-    transformWithState run (the API is built on RocksDB column
-    families; the conf is read at query START, so a session-scoped
-    set works for availableNow runs that start and finish inside the
-    scope).  The engine's other stateful queries keep the HDFS-backed
-    default that measured faster at harness state sizes (BASELINE.md
-    r12 A/B)."""
-
-    _KEY = "spark.sql.streaming.stateStore.providerClass"
-    _PROVIDER = (
+# transformWithState is built on RocksDB column families, so its runs
+# need the RocksDB state-store provider.  The conf is read at query
+# START, so scoping it (session.scoped_conf) around an availableNow run
+# that starts and finishes inside the scope works; the engine's other
+# stateful queries keep the HDFS-backed default that measured faster at
+# harness state sizes (BASELINE.md r12 A/B).
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self._KEY, None)
-        self.spark.conf.set(self._KEY, self._PROVIDER)
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self._KEY)
-        else:
-            self.spark.conf.set(self._KEY, self.prev)
-        return False
+}
 
 
 def run_ewma_stream_tws(
@@ -207,7 +191,7 @@ def run_ewma_stream_tws(
     ``run_ewma_stream``; RocksDB provider scoped to the run."""
     from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
 
-    with _scoped_rocksdb(spark):
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         frags = _run_to_parquet_sink(
             spark, ewma_stream_tws(spark, sf_dir), "ewma_tws", timeout_sec
         )

@@ -195,9 +195,10 @@ def run_sessionize_stream_tws(
     stateful queries keep the HDFS-backed default that measured faster
     at harness state sizes — BASELINE.md r12 A/B)."""
     from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
-    from aws_pandas_etl_spark.streaming.ewma_stream import _scoped_rocksdb
+    from aws_pandas_etl_spark.session import scoped_conf
+    from aws_pandas_etl_spark.streaming.ewma_stream import ROCKSDB_STATE_STORE
 
-    with _scoped_rocksdb(spark):
+    with scoped_conf(spark, ROCKSDB_STATE_STORE):
         return _run_to_parquet_sink(
             spark, sessionize_stream_tws(spark, sf_dir), "sessions_tws",
             timeout_sec,

@@ -198,11 +198,8 @@ def test_legacy_int96_timestamps_read_natively(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_pandas_etl_spark.sources.readers import load_table
-    from aws_pandas_etl_spark.streaming.events_stream import (
-        _probe_ts_type,
-        open_events_stream,
-    )
+    from aws_pandas_etl_spark.sources.readers import load_table, probe_timestamps
+    from aws_pandas_etl_spark.streaming.events_stream import open_events_stream
 
     src = load_table(spark, "/root/testdata/sf0.001", "events")
     d = tmp_path / "int96"
@@ -215,7 +212,7 @@ def test_legacy_int96_timestamps_read_natively(spark, tmp_path):
     [part] = [f for f in os.listdir(d / "w") if f.endswith(".parquet")]
     _sh.move(str(d / "w" / part), str(d / "events.parquet"))
 
-    assert _probe_ts_type(spark, str(d), "events.parquet") == "tz"
+    assert probe_timestamps(spark, f"{d}/events.parquet").kinds["ts"] == "tz"
     [want] = src.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx")).collect()
     got = load_table(spark, str(d), "events")
     [b] = got.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx")).collect()
@@ -241,24 +238,27 @@ def test_legacy_int96_timestamps_read_natively(spark, tmp_path):
 
 
 def test_stream_probe_speaks_hadoop_fs_schemes(spark):
-    """The streaming footer probe must go through the Hadoop
-    FileSystem API (like load_config_from_url), not os.listdir — an
-    s3a:// or hdfs:// stream source would otherwise fail at the probe.
-    Proven two ways: (a) the probe resolves a scheme-qualified
-    file:// directory; (b) the _HadoopFooterFile range-read wrapper
-    feeds pyarrow the same schema a direct local read yields (the
-    exact path a remote scheme takes)."""
+    """A scheme-qualified path must go through the Hadoop FileSystem
+    API (like load_config_from_url), not os.listdir — an s3a:// or
+    hdfs:// source would otherwise fail at the probe.  Proven two ways:
+    (a) a file:// path, which takes the Hadoop listing and footer
+    route, probes exactly like the plain path, which takes the local
+    os + pyarrow route; (b) the _HadoopFooterFile range-read wrapper
+    feeds pyarrow the same schema a direct local read yields (the exact
+    path a remote scheme takes)."""
     import pyarrow.parquet as pq
 
-    from aws_pandas_etl_spark.streaming.events_stream import (
+    from aws_pandas_etl_spark.sources.readers import (
         _HadoopFooterFile,
-        _probe_ts_type,
+        probe_timestamps,
     )
 
     sf = "/root/testdata/sf0.001"
-    assert _probe_ts_type(spark, f"file://{sf}", "events.parquet") == _probe_ts_type(
-        spark, sf, "events.parquet"
-    )
+    qualified = probe_timestamps(spark, f"file://{sf}/events.parquet")
+    plain = probe_timestamps(spark, f"{sf}/events.parquet")
+    assert qualified.path.startswith("file:") and not plain.path.startswith("file:")
+    assert qualified.kinds == plain.kinds and "ts" in plain.kinds
+    assert qualified.is_dir == plain.is_dir
 
     jvm = spark.sparkContext._jvm
     local = f"{sf}/events.parquet"
@@ -272,13 +272,14 @@ def test_stream_probe_speaks_hadoop_fs_schemes(spark):
         f.close()
 
 
-def test_parquet_sink_scaffold_cleans_checkpoint_and_reports_real_errors(spark):
+def test_parquet_sink_scaffold_cleans_checkpoint_and_reports_real_errors(
+    spark, tmp_path, monkeypatch
+):
     """_run_to_parquet_sink must (a) delete its per-call checkpoint
-    dir (they accumulated in /tmp across bench and test runs), and
-    (b) return empty ONLY for genuinely-uncommitted output — a
-    read-back failure on committed files must propagate, not
-    masquerade as zero rows."""
-    import glob as globmod
+    dir (they accumulated in /tmp across bench and test runs) while
+    keeping the output its result reads, and (b) return empty ONLY for
+    genuinely-uncommitted output — a read-back failure on committed
+    files must propagate, not masquerade as zero rows."""
     import os
     import tempfile
 
@@ -287,15 +288,20 @@ def test_parquet_sink_scaffold_cleans_checkpoint_and_reports_real_errors(spark):
         events_stream,
     )
 
-    tmp = tempfile.gettempdir()
-    before = set(globmod.glob(os.path.join(tmp, "ckpt_probe6_*")))
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     stream = events_stream(spark, "/root/testdata/sf0.001").select(
         "event_id", "ts", "event_type"
     )
     out = _run_to_parquet_sink(spark, stream, "probe6", 120)
     assert out.count() > 0
-    after = set(globmod.glob(os.path.join(tmp, "ckpt_probe6_*")))
-    assert after == before, f"leaked checkpoint dirs: {after - before}"
+    empty = _run_to_parquet_sink(spark, stream.filter(F.lit(False)), "probe6", 120)
+    assert empty.count() == 0 and empty.columns == stream.columns
+    bases = os.listdir(tmp_path)
+    assert len(bases) == 2 and all(b.startswith("probe6_") for b in bases)
+    for b in bases:
+        assert os.listdir(tmp_path / b) == ["out"], "leaked checkpoint dir"
 
 
 def test_jdbc_scan_executes_against_embedded_derby(spark, tmp_path):
@@ -441,22 +447,21 @@ def test_schema_evolution_merge_on_read(spark, tmp_path):
 
 
 def test_hadoop_footer_file_drives_remote_probe_branch(spark, tmp_path):
-    """The non-local branch of the streaming ts probe (events_stream.py::
-    _probe_ts_type) reads parquet footers through a py4j file-like over
-    the Hadoop FileSystem API.  No remote scheme exists in the harness,
-    so drive the SAME machinery over a Hadoop ``file:`` path directly:
-    _HadoopFooterFile must satisfy pyarrow's seek/read footer protocol
-    and _ts_kind must classify the column identically to the fast path
-    (the Derby treatment of the JDBC claim, applied to streaming)."""
+    """The non-local branch of the footer probe (readers.py::
+    probe_timestamps) reads parquet footers through a py4j file-like
+    over the Hadoop FileSystem API.  No remote scheme exists in the
+    harness, so drive the SAME machinery over a Hadoop ``file:`` path
+    directly: _HadoopFooterFile must satisfy pyarrow's seek/read footer
+    protocol and _ts_kinds must classify the columns identically to the
+    fast path (the Derby treatment of the JDBC claim, applied to the
+    probe)."""
     import pyarrow.parquet as pq
 
-    from aws_pandas_etl_spark.streaming.events_stream import (
-        _HadoopFooterFile,
-        _ts_kind,
-    )
+    from aws_pandas_etl_spark.sources.readers import _HadoopFooterFile, _ts_kinds
 
     src = "/root/testdata/sf0.001/events.parquet"
-    fast = _ts_kind(pq.ParquetFile(src))
+    fast = _ts_kinds(pq.ParquetFile(src))
+    assert "ts" in fast
 
     jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(f"file://{src}")
@@ -473,7 +478,7 @@ def test_hadoop_footer_file_drives_remote_probe_branch(spark, tmp_path):
         f.seek(-4, 2)
         assert f.read(4) == b"PAR1"         # parquet tail magic
         f.seek(0)
-        assert _ts_kind(pq.ParquetFile(f)) == fast
+        assert _ts_kinds(pq.ParquetFile(f)) == fast
     finally:
         f.close()
     assert f.closed
@@ -620,3 +625,74 @@ def test_fingerprint_invalidates_on_nested_rewrite(spark, tmp_path):
     assert fp2 != fp1  # recursive walk sees the leaf rewrite
     load_table(spark, sf_dir, "p")  # re-infers (cache miss), no stale serve
     assert readers._META_CACHE[path][0] == fp2  # entry re-keyed, not stale
+
+
+def _nanos_events(tmp_path):
+    """The sf0.001 events table rewritten by pyarrow with INT64
+    TIMESTAMP(NANOS) ``ts`` (Spark 4 refuses the type by default), as a
+    single file and as a directory of part files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t["ts"].cast(pa.timestamp("ns")))
+    single, directory = tmp_path / "single", tmp_path / "dir"
+    single.mkdir()
+    (directory / "events.parquet").mkdir(parents=True)
+    pq.write_table(t, single / "events.parquet")
+    pq.write_table(t, directory / "events.parquet" / "part-0.parquet")
+    return str(single), str(directory)
+
+
+def test_load_table_reads_directory_shaped_nanos_table(spark, tmp_path):
+    """A directory of part files with TIMESTAMP(NANOS) ``ts`` loads
+    exactly like its single-file twin (the batch probe once only opened
+    single files, so the directory failed with PARQUET_TYPE_ILLEGAL),
+    and the event stream over the same directory agrees on the
+    instants."""
+    from pyspark.sql import functions as F
+
+    from aws_pandas_etl_spark.streaming.events_stream import (
+        _run_to_memory_sink,
+        open_events_stream,
+    )
+
+    from aws_pandas_etl_spark.sources.readers import probe_timestamps
+
+    single, directory = _nanos_events(tmp_path)
+    for route in ("", "file://"):  # local and Hadoop listing
+        probe = probe_timestamps(spark, f"{route}{directory}/events.parquet")
+        assert probe.is_dir and probe.kinds == {"ts": "ns"}
+    want = load_table(spark, single, "events")
+    got = load_table(spark, directory, "events")
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    span = [F.min("ts").alias("mn"), F.max("ts").alias("mx")]
+    [b] = got.agg(*span).collect()
+    stream = open_events_stream(spark, directory).agg(*span)
+    [s] = _run_to_memory_sink(spark, stream, "complete", "nanosdir", 120).collect()
+    assert (s["mn"], s["mx"]) == (b["mn"], b["mx"])
+
+
+def test_load_table_memoizes_nanos_table(spark, tmp_path, monkeypatch):
+    """A nanos table is memoized like any other: the second load_table
+    call returns the same DataFrame and does not read the footer
+    again."""
+    import pyarrow.parquet as pq
+
+    single, _ = _nanos_events(tmp_path)
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(*a, **kw):
+        opened.append(a[0])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    a = load_table(spark, single, "events")
+    b = load_table(spark, single, "events")
+    assert a is b
+    assert len(opened) == 1
+    assert a.agg({"ts": "max"}).collect()[0][0] is not None

@@ -854,3 +854,20 @@ def test_tws_entries_record_resolved_state_api(spark):
         vals = {r["state_api"] for r in df.select("state_api").distinct().collect()}
         assert vals == {expected}, (name, vals)
         assert f"'{expected}' AS state_api" in ORACLES[name], name
+
+
+def test_foreach_batch_merge_failure_leaves_no_scratch(spark, tmp_path, monkeypatch):
+    """A CDC run whose merge fails must not leave its per-call scratch
+    (``fbmerge_<hex>/{src,ckpt,target}``) in the temp dir: the runner
+    removes it on every exit path, not only after a clean finish."""
+    from aws_pandas_etl_spark.sources import sinks
+    from aws_pandas_etl_spark.streaming.events_stream import run_foreach_batch_merge
+
+    def failing_merge(*a, **kw):
+        raise RuntimeError("injected merge failure")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(sinks, "merge_load", failing_merge)
+    with pytest.raises(Exception, match="injected merge failure"):
+        run_foreach_batch_merge(spark, SF, n_splits=2, timeout_sec=120)
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("fbmerge_")]

@@ -36,9 +36,7 @@ import json
 import os
 import shutil
 import sys
-import tempfile
 import time
-import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -46,9 +44,13 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
-from aws_pandas_etl_spark.session import get_spark  # noqa: E402
+from aws_pandas_etl_spark.session import get_spark, scoped_conf  # noqa: E402
 from aws_pandas_etl_spark.streaming.events_stream import (  # noqa: E402
-    _scoped_shuffle_partitions,
+    run_available_now,
+    scratch_dir,
+)
+from aws_pandas_etl_spark.streaming.ewma_stream import (  # noqa: E402
+    ROCKSDB_STATE_STORE,
 )
 
 SCHEMA = T.StructType(
@@ -60,8 +62,7 @@ SCHEMA = T.StructType(
 )
 
 
-def _mk_src(spark, n_files: int, rows_per_file: int) -> str:
-    src = os.path.join(tempfile.gettempdir(), f"floor_{uuid.uuid4().hex[:8]}")
+def _mk_src(spark, src: str, n_files: int, rows_per_file: int) -> str:
     os.makedirs(src)
     base = time.time()
     for i in range(max(n_files, 1)):
@@ -85,71 +86,46 @@ def _mk_src(spark, n_files: int, rows_per_file: int) -> str:
     return src
 
 
-def _timed_run(spark, build_and_start, timeout_sec: int = 120) -> float:
+def _timed_run(spark, writer, base: str) -> float:
+    """Wall time of the package's availableNow runner over ``writer``
+    — the scaffold every streaming query runs."""
     t0 = time.monotonic()
-    q = build_and_start()
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
-    if not finished:
-        raise TimeoutError("floor stream did not finish")
+    run_available_now(spark, writer, base, 120)
     return time.monotonic() - t0
 
 
 def floor_empty_sink(spark) -> float:
-    src = _mk_src(spark, 1, 0)
-    out = src + "_out"
-    ckpt = src + "_ckpt"
-
-    def _start():
-        return (
+    with scratch_dir("floor") as base:
+        src = _mk_src(spark, os.path.join(base, "src"), 1, 0)
+        writer = (
             spark.readStream.schema(SCHEMA)
             .parquet(src)
             .writeStream.format("parquet")
-            .option("path", out)
+            .option("path", os.path.join(base, "out"))
             .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-
-    with _scoped_shuffle_partitions(spark, 8):
-        sec = _timed_run(spark, _start)
-    for d in (src, out, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return sec
+        return _timed_run(spark, writer, base)
 
 
 def floor_foreach_noop(spark, n_batches: int = 4) -> float:
-    src = _mk_src(spark, n_batches, 1)
-    ckpt = src + "_ckpt"
-
     def _apply(batch_df, batch_id):
         batch_df.count()  # materialize the batch, do nothing with it
 
-    def _start():
-        return (
+    with scratch_dir("floor") as base:
+        src = _mk_src(spark, os.path.join(base, "src"), n_batches, 1)
+        writer = (
             spark.readStream.schema(SCHEMA)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
             .writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-
-    with _scoped_shuffle_partitions(spark, 8):
-        sec = _timed_run(spark, _start)
-    for d in (src, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return sec
+        return _timed_run(spark, writer, base)
 
 
 def floor_stateful(spark, n_batches: int = 4) -> float:
     import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    src = _mk_src(spark, n_batches, 1)
     out_schema = "k bigint, n bigint"
     state_schema = "n bigint"
 
@@ -160,12 +136,9 @@ def floor_stateful(spark, n_batches: int = 4) -> float:
         state.update((n,))
         yield pd.DataFrame({"k": [key[0]], "n": [n]})
 
-    ckpt = src + "_ckpt"
-
-    def _start():
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        return (
+    with scratch_dir("floor") as base:
+        src = _mk_src(spark, os.path.join(base, "src"), n_batches, 1)
+        writer = (
             spark.readStream.schema(SCHEMA)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
@@ -178,26 +151,13 @@ def floor_stateful(spark, n_batches: int = 4) -> float:
                 GroupStateTimeout.NoTimeout,
             )
             .writeStream.format("memory")
-            .queryName(f"floor_{uuid.uuid4().hex[:8]}")
+            .queryName(os.path.basename(base))
             .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-
-    with _scoped_shuffle_partitions(spark, 8):
-        sec = _timed_run(spark, _start)
-    for d in (src, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return sec
+        return _timed_run(spark, writer, base)
 
 
 def floor_join_sink(spark) -> float:
-    src_l = _mk_src(spark, 1, 1)
-    src_r = _mk_src(spark, 1, 1)
-    out = src_l + "_out"
-    ckpt = src_l + "_ckpt"
-
     def _side(src, kk, tt):
         return (
             spark.readStream.schema(SCHEMA)
@@ -206,29 +166,21 @@ def floor_join_sink(spark) -> float:
             .withWatermark(tt, "10 minutes")
         )
 
-    def _start():
-        left = _side(src_l, "lk", "lts")
-        right = _side(src_r, "rk", "rts")
+    with scratch_dir("floor") as base:
+        left = _side(_mk_src(spark, os.path.join(base, "l"), 1, 1), "lk", "lts")
+        right = _side(_mk_src(spark, os.path.join(base, "r"), 1, 1), "rk", "rts")
         joined = left.join(
             right,
             (F.col("lk") == F.col("rk"))
             & (F.col("rts") >= F.col("lts") - F.expr("interval 5 minutes"))
             & (F.col("rts") <= F.col("lts") + F.expr("interval 5 minutes")),
         )
-        return (
+        writer = (
             joined.writeStream.format("parquet")
-            .option("path", out)
+            .option("path", os.path.join(base, "out"))
             .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-
-    with _scoped_shuffle_partitions(spark, 8):
-        sec = _timed_run(spark, _start)
-    for d in (src_l, src_r, out, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return sec
+        return _timed_run(spark, writer, base)
 
 
 # which floor scaffold each slow streaming query's machinery matches
@@ -239,38 +191,6 @@ DECOMPOSE = {
     "streaming_heavy_hitters": "foreach_noop_4",           # 4 foreachBatch rounds + checkpoint
     "streaming_sessionize_stateful": "stateful_1",         # state store, single availableNow batch
 }
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-class _scoped_state_store:
-    """Set/restore the state-store provider around a streaming run —
-    the conf is read at query START, so a session-scoped set works for
-    availableNow runs that start and finish inside the scope."""
-
-    def __init__(self, spark, provider: str | None):
-        self.spark = spark
-        self.provider = provider
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(_PROVIDER_KEY)
-        except Exception:
-            self.prev = None
-        if self.provider:
-            self.spark.conf.set(_PROVIDER_KEY, self.provider)
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(_PROVIDER_KEY)
-        else:
-            self.spark.conf.set(_PROVIDER_KEY, self.prev)
 
 
 def main() -> None:
@@ -315,8 +235,8 @@ def main() -> None:
         from aws_pandas_etl_spark.plans import queries as Q
 
         ab = {}
-        for label, provider in (("hdfs_default", None), ("rocksdb", ROCKSDB_PROVIDER)):
-            with _scoped_state_store(spark, provider):
+        for label, confs in (("hdfs_default", {}), ("rocksdb", ROCKSDB_STATE_STORE)):
+            with scoped_conf(spark, confs):
                 row = {}
                 for name, fn in (
                     ("stateful_4", floor_stateful),
