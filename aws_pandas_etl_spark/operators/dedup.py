@@ -17,7 +17,7 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,6 +28,7 @@ from aws_pandas_etl_spark.functions.hashing import (
     normalize_text,
     shingles,
 )
+from aws_pandas_etl_spark.functions.literals import lit_array
 
 # Default MinHash geometry: 16 hashes = 4 bands x 4 rows.
 # P(candidate | jaccard=j) = 1 - (1 - j^4)^4  ->  ~0.5 at j~0.66.
@@ -373,7 +374,7 @@ def simhash64(text_col: str, num_bits: int = 32) -> "F.Column":
             lambda x, y: x + y.cast("long"),
         ),
     )
-    powers = F.array(*[F.lit(1 << i).cast("long") for i in range(num_bits)])
+    powers = lit_array([1 << i for i in range(num_bits)], "bigint")
     return F.aggregate(
         F.zip_with(
             counts,
@@ -619,11 +620,12 @@ def decontaminate_bloom(
         )
     )
 
-    # ONE array Literal (constant object in codegen) — F.array(*lits)
-    # would be a CreateArray re-evaluated per row: num_bits/64 element
-    # allocations x corpus grams
+    # the optimizer folds the bitmap to ONE array Literal (a constant
+    # object in codegen, not num_bits/64 allocations per gram);
+    # lit_array builds it in one py4j call where F.lit(words) makes one
+    # per word
     corpus = _grams(df.filter(F.col(id_col) >= benchmark_max_id)).withColumn(
-        "_bm", F.lit(words)
+        "_bm", lit_array(words, "bigint")
     )
     for i in range(num_hashes):
         corpus = corpus.withColumn(f"_p{i}", _bloom_pos(F.col("h"), i, num_bits))
@@ -653,15 +655,19 @@ def connected_components(
     Algorithm: iterative min-label propagation.  Each round is ONE
     shuffle join (labels re-keyed by neighbor) + a min-aggregate;
     rounds needed = graph diameter, which for dedup graphs is tiny
-    (duplicate clusters are near-cliques).  Two scale guards: (a) each
-    round's labels are eagerly localCheckpoint'ed — iterative plans
-    otherwise grow lineage linearly and replanning starts to dominate;
-    (b) convergence is a 1-row sum(comp) probe on the checkpointed
-    result (labels only ever decrease, so the sum is monotone and
-    stabilizes exactly at the fixpoint) — no compare-join.  At billions
-    of edges the same loop holds (each round is linear); if diameters
-    grow pathological, the large-star/small-star variant halves
-    rounds — same primitive, not needed for dedup workloads.
+    (duplicate clusters are near-cliques).  The first round needs no
+    join: a node's label after it is the least of itself and its
+    neighbors, one aggregate over the edges.  Two scale guards: (a)
+    each round's labels are eagerly localCheckpoint'ed — iterative
+    plans otherwise grow lineage linearly and replanning starts to
+    dominate; (b) convergence is the round's label sum, observed
+    (``DataFrame.observe``) on the checkpoint job itself, so it costs
+    no job of its own — labels only ever decrease, so the sum is
+    monotone and stabilizes exactly at the fixpoint; no compare-join.
+    At billions of edges the same loop holds (each round is linear);
+    if diameters grow pathological, the large-star/small-star variant
+    (Kiveris et al., SoCC 2014) cuts rounds — same primitive, not
+    needed for dedup workloads.
 
     Returns (doc_id, component_id) for every node that appears in
     ``edges``.
@@ -670,36 +676,29 @@ def connected_components(
     e = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct().localCheckpoint()
-    labels = (
-        e.select("u").distinct().select(F.col("u"), F.col("u").alias("comp"))
-        .localCheckpoint()
-    )
+    labels = e.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("comp"))
     prev_sum = None
-    converged = False
-    for _ in range(max_iter):
-        neigh = e.alias("e").join(
-            labels.alias("l"), F.col("e.v") == F.col("l.u")
-        ).select(F.col("e.u").alias("u"), F.col("l.comp").alias("comp"))
-        labels = (
-            labels.unionByName(neigh)
-            .groupBy("u")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint()
-        )
+    for i in range(max_iter):
+        if i:
+            neigh = e.alias("e").join(
+                labels.alias("l"), F.col("e.v") == F.col("l.u")
+            ).select(F.col("e.u").alias("u"), F.col("l.comp").alias("comp"))
+            labels = labels.unionByName(neigh).groupBy("u").agg(F.min("comp").alias("comp"))
         # decimal(38,0) sum: node ids may be 60-bit hashes; a bigint sum
         # of ~2^59 labels overflows (ANSI mode would abort the job)
-        s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
+        obs = Observation()
+        labels = labels.observe(
+            obs, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint()
+        s = obs.get["s"]
         if s == prev_sum:
-            converged = True
-            break
+            return labels.select(F.col("u").alias("doc_id"), F.col("comp").alias("component_id"))
         prev_sum = s
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter) — labels would be wrong; "
-            "raise max_iter"
-        )
-    return labels.select(F.col("u").alias("doc_id"), F.col("comp").alias("component_id"))
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(graph diameter exceeds max_iter) — labels would be wrong; "
+        "raise max_iter"
+    )
 
 
 def exact_span_duplicates(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_pandas_etl_spark.functions.literals import lit_array
+
 #: bits per dimension; 2 dims x 16 bits = 32-bit z-values in a long
 DEFAULT_BITS = 16
 
@@ -29,9 +31,7 @@ def _bucket(col: Column, bounds: list[float], bits: int) -> Column:
     """Rank-normalize a column to [0, 2^bits) via precomputed quantile
     boundaries: bucket = #boundaries <= x (codegen ``filter``+``size``
     over a literal array — no join, no window, no second shuffle)."""
-    from aws_pandas_etl_spark.operators.similarity import _lit_array
-
-    arr = _lit_array(bounds)  # one parsed expr, not len(bounds) py4j lits
+    arr = lit_array(bounds)
     n = F.size(F.filter(arr, lambda b: b <= col.cast("double")))
     return F.least(n, F.lit((1 << bits) - 1)).cast("bigint")
 

@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_pandas_etl_spark.functions.literals import lit_array
+
 
 def hyperplane(plane: int, dims: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-1, 1]^dims.
@@ -52,26 +54,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
-def _lit_array(vals: list[float]) -> Column:
-    """Array-of-double literal built as ONE parsed expression instead
-    of len(vals) py4j ``lit()`` round trips (r16 driver profile: the
-    per-element path cost ~1-2 s of pure driver time per k x dim
-    centroid table — guide §5, the driver should do almost no work;
-    ~6000 socket round trips collapse to one).  ``repr`` is Python's
-    shortest-round-trip float formatting and the JVM parses double
-    literals exactly, so every element is the identical IEEE double
-    the ``lit()`` path produced.  Non-finite values have no SQL
-    literal form and fall back to the per-element path."""
-    fv = [float(v) for v in vals]
-    if not fv or any(v != v or v in (_INF, _NINF) for v in fv):
-        return F.array(*[F.lit(v) for v in fv])
-    return F.expr("array(" + ",".join(repr(v) + "D" for v in fv) + ")")
-
-
-_INF = float("inf")
-_NINF = float("-inf")
-
-
 def topk_bruteforce(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -86,7 +68,7 @@ def topk_bruteforce(
     TakeOrderedAndProject(k) — no shuffle of the data, only k rows to
     the driver side of the sort.  Scales linearly with a 100 TB scan.
     """
-    q = _lit_array(query_vec)
+    q = lit_array(query_vec)
     sim = F.round(cosine(F.col(vec_col), q), round_digits)
     return (
         embeddings.select(F.col(id_col), sim.alias("cosine_sim"))
@@ -98,7 +80,7 @@ def topk_bruteforce(
 def lsh_sketch(vec_col: Column, planes: list[list[float]]) -> Column:
     """Sign-bit sketch: bit p set iff dot(vec, plane_p) >= 0."""
     bits = [
-        F.when(dot(vec_col, _lit_array(p)) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+        F.when(dot(vec_col, lit_array(p)) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
         for i, p in enumerate(planes)
     ]
     out = F.lit(0)
@@ -134,7 +116,7 @@ def topk_lsh(
     for i, p in enumerate(planes):
         if sum(a * b for a, b in zip(p, query_vec)) >= 0:
             qsketch |= 1 << i
-    q = _lit_array(query_vec)
+    q = lit_array(query_vec)
     sim = F.round(cosine(F.col(vec_col), q), round_digits)
     sketch = lsh_sketch(F.col(vec_col), planes)
     if hamming_probe <= 0:
@@ -246,7 +228,7 @@ def topk_ivf(
             acc = acc + d * d
         ranked.append((acc, cid))
     probe = [cid for _, cid in sorted(ranked)[:nprobe]]
-    qlit = _lit_array(query_vec)
+    qlit = lit_array(query_vec)
     sim = F.round(cosine(F.col(vec_col), qlit), round_digits)
     return (
         _assign(embeddings, vec_col, cents)
@@ -343,7 +325,7 @@ def jl_project(
     planes = [hyperplane(1000 + p, ndims) for p in range(out_dims)]
     projected = F.array(
         *[
-            F.round(dot(F.col(vec_col), _lit_array(pl)), round_digits)
+            F.round(dot(F.col(vec_col), lit_array(pl)), round_digits)
             for pl in planes
         ]
     )

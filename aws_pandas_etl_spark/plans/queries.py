@@ -34,6 +34,8 @@ from aws_pandas_etl_spark.artifacts import (
     parquet_memo,
     publish_parquet_artifact,
 )
+from aws_pandas_etl_spark.functions.hashing import normalize_text
+from aws_pandas_etl_spark.functions.literals import lit_array
 from aws_pandas_etl_spark.operators import dedup as D
 from aws_pandas_etl_spark.operators import multimodal as MM
 from aws_pandas_etl_spark.operators import similarity as SIM
@@ -3097,18 +3099,7 @@ def winnowing_fingerprint_density(spark: SparkSession, sf_dir: str) -> DataFrame
     PQ."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(
-        F.split(
-            F.trim(
-                F.lower(
-                    F.regexp_replace(
-                        F.coalesce(F.col("text"), F.lit("")),
-                        r"[^a-zA-Z0-9]+",
-                        " ",
-                    )
-                )
-            ),
-            " ",
-        ),
+        F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " "),
         lambda t: t != "",
     )
     grams = docs.select(
@@ -7351,8 +7342,8 @@ def pca_projection_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     mean, v = _pca_fit_cached(spark, sf_dir)
-    mean_lit = SIM._lit_array(mean)
-    vlit = SIM._lit_array(v)
+    mean_lit = lit_array(mean)
+    vlit = lit_array(v)
     xc = F.zip_with(F.col("embedding"), mean_lit, lambda x, m: x.cast("double") - m)
     proj = F.round(_dot(xc, vlit), 6)
     return (
@@ -15069,7 +15060,7 @@ def _pq_adc_expr(
                 d = x - float(c)
                 acc = acc + d * d
             lut[cid] = acc
-        lut_lit = SIM._lit_array(lut)  # one parsed expr (r16)
+        lut_lit = lit_array(lut)
         terms.append(F.element_at(lut_lit, F.col(f"code_{s}") + 1))
     return ((terms[0] + terms[1]) + terms[2]) + terms[3]
 
@@ -17890,10 +17881,7 @@ def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-fold lesson).  Windows partition by query id over probed
     subsets."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
-    from aws_pandas_etl_spark.operators.similarity import (
-        _lit_array,
-        l2sq,
-    )
+    from aws_pandas_etl_spark.operators.similarity import l2sq
 
     emb = load_table(spark, sf_dir, "embeddings")
     k, cents = _kmeans_cents(spark, sf_dir)
@@ -17914,7 +17902,7 @@ def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(int(cid)).alias("cid"),
-                        _lit_array(cv).alias("cvec"),
+                        lit_array(cv).alias("cvec"),
                     )
                     for cid, cv in cents
                 ]
@@ -19330,7 +19318,7 @@ def pq_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PQ_ADC_TOP)
         .select("vec_id")
     )
-    qlit = SIM._lit_array(qvec)  # one parsed expr (r16)
+    qlit = lit_array(qvec)
     bf = (
         emb.filter(F.col("vec_id") != PQ_QUERY_VEC)
         .select(
@@ -19583,7 +19571,7 @@ def time_decayed_event_type_scores(
         "event_type", F.to_date("ts").alias("d")
     )
     ref = ev.agg(F.max("d")).first()[0]
-    warr = SIM._lit_array(_DECAY_WEIGHTS)  # one parsed expr (r16)
+    warr = lit_array(_DECAY_WEIGHTS)
     age = F.datediff(F.lit(ref), F.col("d"))
     return (
         ev.select("event_type", age.alias("age"))

@@ -445,6 +445,41 @@ def test_connected_components_raises_when_unconverged(spark):
         D.connected_components(edges, max_iter=3)
 
 
+#: jobs connected_components may run on the chain+clique graph: the
+#: edge pin plus one pinned aggregate per round (4 rounds), with no
+#: probe jobs of its own
+CC_JOB_BUDGET = 19
+
+
+def test_connected_components_convergence_rides_the_round_jobs(spark):
+    """The label-sum convergence check is observed on each round's
+    checkpoint job: within the job budget, and no job comes from a
+    first()/take() probe."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (11, 12), (20, 21)],
+        "a long, b long",
+    )
+    group = "cc-job-budget"
+    sc.setJobGroup(group, "connected_components rounds")
+    try:
+        comps = D.connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(tracker.getJobIdsForGroup(group))
+    stage_names = [
+        tracker.getStageInfo(st).name
+        for j in jobs
+        for st in tracker.getJobInfo(j).stageIds
+    ]
+    assert 0 < len(jobs) <= CC_JOB_BUDGET, len(jobs)
+    probes = [n for n in stage_names if n.startswith(("first at", "take at", "head at"))]
+    assert probes == []
+    out = {r["doc_id"]: r["component_id"] for r in comps.collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+
 def test_pack_sequences_respects_custom_id_col(spark):
     df = spark.createDataFrame(
         [(1, "a b c"), (2, "d e f g")], "my_id long, text string"
@@ -1845,31 +1880,104 @@ def test_winnowing_beyond_packed_bound_fingerprints_correctly(spark):
         ), (fp, pos_of_big[fp])
 
 
+LONG_MIN = -(1 << 63)
+
+
 def test_lit_array_expr_path_bit_exact(spark):
-    """The r16 fast literal-array builder (one parsed expression
-    instead of len(vals) py4j lit() calls) must produce bit-identical
-    doubles to the per-element lit() path — repr() is shortest
-    round-trip and the JVM double parser is exact; non-finite values
-    take the lit() fallback."""
+    """The fast literal-array builder (one parsed expression instead
+    of len(vals) py4j lit() calls) must produce bit-identical doubles
+    to the per-element lit() path — repr() is shortest round-trip and
+    the JVM double parser is exact — including the hyperplane values
+    the similarity operators pass, and the same bigints at both ends of
+    the range (Long.MIN_VALUE has no SQL literal of its own);
+    non-finite values take the lit() fallback."""
     import math
     import struct
 
     from pyspark.sql import functions as F
 
-    from aws_pandas_etl_spark.operators.similarity import _lit_array
+    from aws_pandas_etl_spark.functions.literals import lit_array
 
     tricky = [
         0.0, -0.0, 1.0, -1.5, 1e-7, -1e-7, 1e300, -1e300, 5e-324,
         2.2250738585072014e-308, 0.1, 1 / 3, math.pi, -math.pi,
         123456789.123456789, 9.869604401089358,
-    ]
-    slow = F.array(*[F.lit(float(v)) for v in tricky])
-    fast = _lit_array(tricky)
-    row = spark.range(1).select(slow.alias("s"), fast.alias("f")).first()
+    ] + [x for p in range(3) for x in SIM.hyperplane(p, 8)]
+    longs = [LONG_MIN, -1, 0, (1 << 63) - 1]
+    row = spark.range(1).select(
+        F.array(*[F.lit(float(v)) for v in tricky]).alias("s"),
+        lit_array(tricky).alias("f"),
+        F.lit(longs).alias("ls"),
+        lit_array(longs, "bigint").alias("lf"),
+    ).first()
     bits = lambda xs: [struct.pack("<d", x) for x in xs]
     assert bits(row["s"]) == bits(row["f"])
+    assert row["ls"] == row["lf"] == longs
 
     # non-finite fallback still works (lit path handles inf/nan)
-    nf = _lit_array([1.0, float("inf")])
+    nf = lit_array([1.0, float("inf")])
     got = spark.range(1).select(nf.alias("x")).first()["x"]
     assert got[0] == 1.0 and math.isinf(got[1])
+
+
+def _bloom_docs(spark):
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi".split()
+    rows = [(10 + i, " ".join(words[i:] + words[:i])) for i in range(8)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_decontaminate_bloom_hand_built_bitmap_matches_per_element_literal(spark, monkeypatch):
+    """A hand-built bitmap holding Long.MIN_VALUE (bit 63 only) and -1
+    (all bits) flags the same grams through the one-call literal as
+    through ``F.lit(words)``, and both match the bits computed here."""
+    from aws_pandas_etl_spark.functions import pytext
+
+    num_bits, n = 256, 3
+    w = [-1, LONG_MIN, -1, LONG_MIN]
+    docs = _bloom_docs(spark)
+    kw = dict(benchmark_max_id=5, shingle_n=n, num_bits=num_bits, bitmap_words=w)
+    fast = {tuple(r) for r in D.decontaminate_bloom(docs, **kw).collect()}
+    monkeypatch.setattr(D, "lit_array", lambda vals, _t: F.lit(list(vals)))
+    slow = {tuple(r) for r in D.decontaminate_bloom(docs, **kw).collect()}
+
+    def flagged(h):
+        pos = [(h * m) % num_bits for m in D._BLOOM_MULT]
+        return all((w[p // 64] >> (p % 64)) & 1 for p in pos)
+
+    want = set()
+    for doc_id, text in docs.collect():
+        hs = {pytext.md5_int(g, 7) for g in pytext.shingles(pytext.tokens(text), n)}
+        k = sum(flagged(h) for h in hs)
+        if k:
+            want.add((doc_id, k))
+    assert fast == slow == want
+    assert want  # the bitmap flags something
+
+
+def test_decontaminate_bloom_bitmap_is_one_literal(spark):
+    """The optimizer folds ``_bm`` to a single array Literal per use
+    (no CreateArray left to rebuild per row)."""
+    import json
+
+    words = [LONG_MIN, -1, 0, 5]
+    df = D.decontaminate_bloom(
+        _bloom_docs(spark), benchmark_max_id=5, shingle_n=3, num_bits=256, bitmap_words=words
+    )
+    nodes = []
+
+    def walk(x):
+        if isinstance(x, dict):
+            nodes.append(x)
+            x = list(x.values())
+        if isinstance(x, list):
+            for v in x:
+                walk(v)
+
+    walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+    classes = [str(nd.get("class", "")) for nd in nodes]
+    assert not any(c.endswith(".CreateArray") for c in classes)
+    lits = [
+        nd for nd in nodes
+        if str(nd.get("class", "")).endswith(".Literal") and "array" in json.dumps(nd.get("dataType"))
+    ]
+    assert lits and all(str(nd["value"]).count(",") == len(words) - 1 for nd in lits)

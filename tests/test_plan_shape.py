@@ -538,3 +538,71 @@ def test_text_feature_filter_tokenizes_each_document_once_per_feature(spark):
     plan = kept._jdf.queryExecution().optimizedPlan().toString()
     # text.tokens is the one tokenizer: split(normalize_text(...), " ")
     assert plan.count("split(") <= 2, plan
+
+
+def test_package_uses_no_icu_case_mapping():
+    """``lower``/``upper``/``initcap`` load the JVM's ICU case mapping
+    (over a second on first use in a session); the package only ever folds
+    ASCII case (``normalize_text``), so none of them appears."""
+    import pathlib
+    import re
+
+    import aws_pandas_etl_spark
+
+    root = pathlib.Path(aws_pandas_etl_spark.__file__).parent
+    pat = re.compile(r"\bF\.(lower|upper|initcap)\(")
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if pat.search(line)
+    ]
+    assert hits == []
+
+
+def test_normalize_text_plan_has_no_lower(spark):
+    from aws_pandas_etl_spark.functions.hashing import normalize_text
+
+    df = spark.range(1).select(F.col("id").cast("string").alias("t")).select(
+        normalize_text("t").alias("n")
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "translate(" in plan
+    assert "lower(" not in plan
+
+
+def test_normalize_text_agrees_with_python_and_duckdb_twins(spark):
+    """The Spark normalizer, its Python twin (Arrow stages) and the
+    DuckDB oracle's twin give the same string on non-ASCII input."""
+    import duckdb
+
+    from aws_pandas_etl_spark.functions import pytext
+    from aws_pandas_etl_spark.functions.hashing import normalize_text
+    from aws_pandas_etl_spark.plans.queries import _dk_norm
+
+    texts = [
+        "İstanbul",
+        "STRASSE Straße",
+        "ΣΊΣΥΦΟΣ",
+        "\uff21\uff22\uff23 abc",  # full-width ABC
+        "Cafe\u0301 e\u0300COLE",  # combining marks
+        "a\u00a0B\u00a0c",  # no-break spaces
+        "hi 👋 THERE 🇩🇪x",
+        "",
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = {
+        r["i"]: r["n"]
+        for r in df.select("i", normalize_text(F.coalesce("t", F.lit(""))).alias("n")).collect()
+    }
+    con = duckdb.connect()
+    duck = {
+        i: con.execute(f"SELECT {_dk_norm('CAST(? AS VARCHAR)')}", [t]).fetchone()[0]
+        for i, t in enumerate(texts)
+    }
+    con.close()
+    py = {i: pytext.normalized(t) for i, t in enumerate(texts)}
+    assert got == duck == py
+    assert got[1] == "strasse stra e" and got[2] == "" and got[4] == "cafe e cole"
+    assert got[5] == "a b c" and got[7] == got[8] == ""
