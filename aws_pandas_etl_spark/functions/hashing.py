@@ -18,8 +18,11 @@ from pyspark.sql import functions as F
 MD5_HEX_DIGITS = 15
 
 
-def md5_bigint(col: Column | str, seed: int = 0) -> Column:
-    """Deterministic 60-bit integer hash of a string column.
+def md5_bigint(
+    col: Column | str, seed: int = 0, hex_digits: int = MD5_HEX_DIGITS
+) -> Column:
+    """Deterministic integer hash of a string column: its md5's first
+    ``hex_digits`` hex digits (60 bits by default).
 
     Engine-portable (Spark `conv` == DuckDB hex cast), unlike
     ``xxhash64``/``hash`` whose implementations differ per engine.
@@ -27,7 +30,7 @@ def md5_bigint(col: Column | str, seed: int = 0) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     salted = F.concat(F.lit(f"{seed}|"), c) if seed else c
-    return F.conv(F.substring(F.md5(salted), 1, MD5_HEX_DIGITS), 16, 10).cast("bigint")
+    return F.conv(F.substring(F.md5(salted), 1, hex_digits), 16, 10).cast("bigint")
 
 
 def row_hash(cols: list[str], out: str = "row_hash_code") -> Column:
@@ -66,19 +69,20 @@ def normalize_text(col: Column | str) -> Column:
 
 
 def shingles(col: Column | str, n: int = 5) -> Column:
-    """Word n-gram shingle array from a text column (for MinHash /
-    Jaccard).  Tokenizes on whitespace, emits distinct n-grams joined
-    by a single space.  Pure Column expression: split -> transform over
-    index range -> slice+join -> distinct."""
+    """Distinct word ``n``-grams of a text column, first-occurrence
+    order (for MinHash / Jaccard; twin of ``pytext.shingles``).
+
+    One ``regexp_extract_all`` over ``normalize_text(col)``, whose
+    tokens are single-space separated with no outer spaces: at every
+    token start a lookahead captures the next ``n`` tokens, so the
+    grams overlap while the match itself consumes only the boundary.
+    No per-gram array building and no lambda.  NULL text is read as
+    ``""``, so it gives ``[]``; ``array_distinct`` keeps first
+    occurrences in order."""
     c = F.col(col) if isinstance(col, str) else col
-    toks = F.filter(F.split(normalize_text(c), " "), lambda t: t != "")
-    k = F.size(toks) - F.lit(n - 1)
-    # sequence(1, 0) would yield [1, 0] (negative step inference) — guard
-    idx = F.when(k >= 1, F.sequence(F.lit(1), k)).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    return F.array_distinct(grams)
+    pattern = f"(?:^| )(?=([a-z0-9]+(?: [a-z0-9]+){{{n - 1}}})(?: |$))"
+    text = normalize_text(F.coalesce(c, F.lit("")))
+    return F.array_distinct(F.regexp_extract_all(text, F.lit(pattern), 1))
 
 
 # Universal-hash family for MinHash: h_i(x) = (a_i*x + b_i) mod P over a
@@ -100,9 +104,7 @@ def minhash_params(i: int) -> tuple[int, int]:
 
 def base_hash(col: Column) -> Column:
     """28-bit md5-derived base hash of a string column (engine-portable)."""
-    return F.conv(F.substring(F.md5(col), 1, BASE_HASH_HEX_DIGITS), 16, 10).cast(
-        "bigint"
-    )
+    return md5_bigint(col, hex_digits=BASE_HASH_HEX_DIGITS)
 
 
 def minhash_signature(hash_col: Column, num_hashes: int = 32) -> Column:

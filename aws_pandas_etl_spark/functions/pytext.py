@@ -1,11 +1,19 @@
-"""Plain-Python text/hash helpers executed inside Arrow-batched pandas
-UDFs (the sanctioned fast path when Catalyst higher-order functions
-interpret per-element lambdas too slowly).
+"""Plain-Python text/hash helpers: the Python twin of
+``functions/hashing.py``.
+
+Who still runs them: the Arrow-batched pandas stages that have no
+Column twin fast enough yet (``dedup.simhash_table``,
+``dedup.winnow_fingerprints``, ``text.fingerprint_features``,
+``text.lang_id_table``), and in ``plans/queries.py`` the char-trigram
+UDTF and the plan-time consistent-hash ring.  Shingling itself is a JVM expression
+(``hashing.shingles`` / ``dedup.shingle_hash_table``); here it is the
+reference the tests check that expression against.
 
 CRITICAL INVARIANT: these functions compute byte-identical results to
 both the Column expressions in ``functions/hashing.py`` and the DuckDB
 oracle SQL — same normalize regex, same md5-prefix integer hashes.
-Parity is pinned by tests/test_queries_oracle.py.
+Parity is pinned by tests/test_parity_property.py and
+tests/test_queries_oracle.py.
 """
 
 from __future__ import annotations
@@ -30,7 +38,7 @@ def tokens(text: str | None) -> list[str]:
 
 def shingles(toks: list[str], n: int) -> list[str]:
     """Distinct word n-grams, first-occurrence order (twin of
-    hashing.shingles)."""
+    hashing.shingles and the reference its tests compare against)."""
     out: list[str] = []
     seen: set[str] = set()
     for i in range(len(toks) - n + 1):

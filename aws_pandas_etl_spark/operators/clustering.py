@@ -60,9 +60,10 @@ def _dist_structs(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Colum
 def _assign(df: DataFrame, vec_col: str, cents: list[tuple[int, list[float]]]) -> DataFrame:
     """argmin_c l2sq(vec, centroid_c), ties -> smallest cid.
 
-    Arrow-batched numpy twin of the Column fold (the shingle_hash_table
-    precedent applied to assignment): per centroid, the squared
-    distance accumulates ONE DIMENSION AT A TIME in float64 —
+    Arrow-batched numpy twin of the Column fold (vectorized across a
+    batch's rows instead of interpreted per element): per centroid,
+    the squared distance accumulates ONE DIMENSION AT A TIME in
+    float64 —
     ``acc = acc + (x_i - c_i)^2`` vectorized across the batch's rows —
     which is the identical IEEE left fold the interpreted
     ``aggregate(zip_with(...))`` Column and the oracle's ``list_sum``

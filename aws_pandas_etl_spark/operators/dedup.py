@@ -62,48 +62,26 @@ def shingle_hash_table(
     shingle_n: int = 3,
     hex_digits: int = 7,
 ) -> DataFrame:
-    """doc_id -> (shingle set, base-hash array) via Arrow-batched
-    ``mapInPandas``.
+    """doc_id -> (distinct shingles, their distinct md5-prefix hashes),
+    both in first-occurrence order.
 
-    Why Python here: Catalyst higher-order functions interpret their
-    lambdas per element — building ~80 n-grams/doc via slice+join cost
-    ~10µs each, dominating the MinHash pipeline.  The pandas path is
-    ~10× faster and computes byte-identical values (same normalize
-    regex, same md5-prefix hashes — see functions/pytext.py invariant).
-    Output is id + strings + ints: no payload amplification, so the
-    Arrow boundary stays cheap at 100 TB too."""
-    import pandas as pd
-
-    from aws_pandas_etl_spark.functions import pytext
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("shingles", T.ArrayType(T.StringType())),
-            T.StructField("hashes", T.ArrayType(T.LongType())),
-        ]
+    JVM expressions only: ``hashing.shingles`` is a single regex
+    extraction, and each gram is hashed once (``hex_digits`` hex
+    digits of its md5, the ``pytext.md5_int`` twin).  Hashes are made
+    distinct again because prefixes can collide inside a document, and
+    a set element must not repeat.  No Python worker starts, so the
+    MinHash, bloom and decontamination passes pay no Arrow boundary."""
+    return df.select(
+        F.col(id_col).cast("bigint").alias("doc_id"),
+        shingles(F.col(text_col), shingle_n).alias("shingles"),
+    ).withColumn(
+        # reads the projected column: the optimizer keeps the two
+        # projections apart, so each document's regex runs once
+        "hashes",
+        F.array_distinct(
+            F.transform("shingles", lambda g: md5_bigint(g, hex_digits=hex_digits))
+        ),
     )
-
-    def _extract(batches):
-        for pdf in batches:
-            sh = [
-                pytext.shingles(pytext.tokens(t), shingle_n)
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "shingles": sh,
-                    # distinct (dict.fromkeys): 28-bit collisions inside a
-                    # doc must not produce duplicate set elements
-                    "hashes": [
-                        list(dict.fromkeys(pytext.md5_int(g, hex_digits) for g in gs))
-                        for gs in sh
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(_extract, schema=out_schema)
 
 
 def minhash_signatures(
@@ -115,10 +93,10 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc shingle set + MinHash signature.
 
-    Shingle/base-hash extraction is the pandas stage above,
-    materialized once via lazy ``localCheckpoint``: it feeds banding
-    AND both sides of the re-score join with DIFFERENT downstream
-    shapes, so exchange reuse cannot dedup it — the standard
+    Shingle/base-hash extraction is ``shingle_hash_table`` (a JVM
+    projection), materialized once via lazy ``localCheckpoint``: it
+    feeds banding AND both sides of the re-score join with DIFFERENT
+    downstream shapes, so exchange reuse cannot dedup it — the standard
     materialized "signature table" of a MinHash pipeline.  Checkpoint
     blocks are reference-counted (freed by the ContextCleaner when the
     frame is garbage-collected), so repeated invocation in a long-lived
@@ -282,9 +260,9 @@ def dedup_near_minhash(
     LSH-blocked.  Returns (a, b, jaccard), a < b."""
     # Signatures feed three consumers (banding + both sides of the
     # re-score join) whose subtrees differ, so exchange reuse cannot
-    # dedup them; minhash_signatures already checkpoints the Arrow
-    # shingle stage (auto-released on GC), and the 16-hash affine
-    # projection above it is cheap to recompute per consumer.  At
+    # dedup them; minhash_signatures already checkpoints the shingle
+    # table (auto-released on GC), and the 16-hash affine projection
+    # above it is cheap to recompute per consumer.  At
     # 100 TB this materialization is the standard "signature table"
     # stage of a MinHash pipeline (tiny vs the corpus: ids + hashes).
     sigs = minhash_signatures(df, id_col, text_col, shingle_n)
@@ -457,13 +435,11 @@ def decontaminate(
     table).  The standard guard against test-set leakage into
     training data.
 
-    Plan shape: split benchmark/corpus BEFORE shingle extraction (the
-    mapInPandas stage is a pushdown barrier — filtering its output
-    would shingle the whole table once per side; filtering its input
-    pushes each side's predicate into the parquet scan, so the tiny
-    benchmark pass reads only benchmark rows and the corpus is
-    shingled exactly once), broadcast the (small) benchmark hash set,
-    semi-style inner join + per-doc distinct count.  Never compares
+    Plan shape: split benchmark/corpus BEFORE shingle extraction
+    (filtering its input pushes each side's predicate into the parquet
+    scan, so the tiny benchmark pass reads only benchmark rows and the
+    corpus is shingled exactly once), broadcast the (small) benchmark
+    hash set, semi-style inner join + per-doc distinct count.  Never compares
     documents pairwise — cost is O(total shingles)."""
 
     def _grams(side: DataFrame) -> DataFrame:
@@ -491,7 +467,7 @@ _BLOOM_MULT = (2654435761, 2246822519, 3266489917)
 def _bloom_pos(h: F.Column, seed: int, num_bits: int) -> F.Column:
     """Probe position ``seed`` for a gram's 28-bit hash: one integer
     multiply + modulo (no per-probe md5 — the gram hash was already
-    computed once in the Arrow shingle stage; plans/queries.py
+    computed once in the shingle table; plans/queries.py
     BLOOM_DECON_ORACLE replays the identical arithmetic)."""
     return F.pmod(h * F.lit(_BLOOM_MULT[seed]), F.lit(num_bits))
 
@@ -571,8 +547,8 @@ def decontaminate_bloom(
 
     A gram is flagged when all ``num_hashes`` probe bits are set in
     the ``num_bits``-wide bitmap built from the benchmark side.  The
-    probes are multiplicative hashes of the 28-bit gram hash the Arrow
-    shingle stage already computed — no further hashing of gram text.
+    probes are multiplicative hashes of the 28-bit gram hash the
+    shingle table already computed — no further hashing of gram text.
     No false negatives relative to the exact variant by construction
     (the exact variant matches on the same 28-bit hashes, and every
     benchmark hash set its own bits); false positives are
@@ -598,9 +574,9 @@ def decontaminate_bloom(
         raise ValueError(f"num_hashes capped at {len(_BLOOM_MULT)}")
 
     def _grams(side: DataFrame) -> DataFrame:
-        # split BEFORE the mapInPandas stage: filters push into the
-        # scan instead of shingling the whole table per side; probe on
-        # the precomputed per-doc-distinct gram hashes, not gram text
+        # split BEFORE shingling: filters push into the scan instead
+        # of shingling the whole table per side; probe on the
+        # precomputed per-doc-distinct gram hashes, not gram text
         return shingle_hash_table(side, id_col, text_col, shingle_n=shingle_n).select(
             F.col("doc_id"), F.explode("hashes").alias("h")
         )

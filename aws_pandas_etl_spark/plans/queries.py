@@ -1058,9 +1058,10 @@ def _shingle3_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents parquet identity — the _minhash_pairs contract one level
     EARLIER in the pipeline: four registry queries (ngram_jaccard_pairs,
     containment_pairs, rare_token_blocked_pairs, hybrid_retrieval_rrf)
-    each re-ran the identical Arrow tokenize+shingle+hash pass (~2 s at
-    sf0.1) before this; a deployment shingles a corpus snapshot once
-    and every blocking/rescoring strategy reads the columnar result.
+    each re-ran the identical tokenize+shingle+hash pass (~2 s at sf0.1
+    on the former Arrow path) before this; a deployment shingles a
+    corpus snapshot once and every blocking/rescoring strategy reads
+    the columnar result.
     The extraction is deterministic (pytext md5-prefix invariant), so
     cached and fresh tables are value-identical and DuckDB oracle
     parity is untouched."""
@@ -1132,7 +1133,7 @@ def lsh_band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate instead of discovering it as a hung shuffle.  Same hash
     family and banding as dedup_minhash_lsh, so the numbers ARE that
     pipeline's.  Rides the shared _shingle3_table artifact (r13: this
-    query re-ran the Arrow shingle pass its four sibling queries
+    query re-ran the shingle pass its four sibling queries
     already read from parquet; the signature derivation from the
     hashes column is pure JVM integer math — 1.92 -> 1.46 s at sf0.1,
     values identical)."""
@@ -2051,7 +2052,7 @@ def _ngram_jaccard_pairs_blocked(
     """Exact word-3-gram Jaccard over (lang, source) attribute blocks
     with a degenerate-block guard (same shape as dedup.py MAX_BUCKET).
     ``shingle_table`` lets callers pass the build-once _shingle3_table
-    artifact instead of re-running the Arrow extraction pass."""
+    artifact instead of re-running the shingle extraction."""
     from aws_pandas_etl_spark.operators.dedup import shingle_hash_table
 
     base = (
@@ -9131,10 +9132,9 @@ def rare_token_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     share their #1 rarest and the audit silently returned 0 rows —
     rare-set blocking keeps the same asymptotics with real recall.)
 
-    Scale shape: shingle extraction rides the Arrow-batched hashed
-    table the LSH pipeline already proved ~10x faster than the
-    interpreted Column path (measured again here: the Column-shingle
-    draft cost 63 s at sf0.1, this one ~3 s), served from the shared
+    Scale shape: shingle extraction is the LSH pipeline's hashed
+    table (a draft that built grams with per-gram slice+join lambdas
+    cost 63 s at sf0.1, this one ~3 s), served from the shared
     _shingle3_table parquet artifact because four plan branches here —
     and three sibling queries — reuse the identical extraction; and
     8-byte gram hashes shuffle ~3x lighter than gram text.  Bucket
@@ -11037,19 +11037,18 @@ def ngram_novelty_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     no 8-gram with any earlier doc).  Docs shorter than 8 tokens have
     no shingles and drop out (novelty undefined).
 
-    Shingles travel as 60-bit md5 hashes, not strings: extraction
-    rides the Arrow pandas path (shingle_hash_table — the measured
-    ~10x over interpreted higher-order lambdas), and the
-    first-occurrence shuffle moves 8 bytes per gram instead of ~50
-    (bench: 21.7 s -> ~2 s at sf0.1).  The oracle hashes the same
-    grams with the same md5 prefix, so parity is exact even at the
-    negligible 60-bit collision rate.
+    Shingles travel as 60-bit md5 hashes, not strings: extraction is
+    shingle_hash_table (one regex per document, no per-gram array
+    building), and the first-occurrence shuffle moves 8 bytes per
+    gram instead of ~50 (bench: 21.7 s -> ~2 s at sf0.1).  The oracle
+    hashes the same grams with the same md5 prefix, so parity is exact
+    even at the negligible 60-bit collision rate.
 
     Scale shape: one shingle explode (distinct per doc, so bounded by
     token count), one groupBy hash for first-occurrence, one
     hash-keyed join back, one groupBy doc — localCheckpoint-pinned to
-    ONE evaluation of the Arrow shingle pass (r13: the groupBy branch
-    and the probe branch each re-ran it; exchange reuse does NOT dedup
+    ONE evaluation of the shingle pass (r13: the groupBy branch and
+    the probe branch each re-ran it; exchange reuse does NOT dedup
     them because the agg side's partial aggregation sits below its
     exchange — measured 2.67 s -> 1.80 s at sf0.1).  Never pairwise;
     cost is O(total shingles), the decontamination posture."""

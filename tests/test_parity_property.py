@@ -1,8 +1,9 @@
 """Property-based pinning of the cross-engine twin invariant:
-functions/pytext.py (Python, used in pandas stages) must compute the
-same tokens/shingles/hashes as the Column expressions in
-functions/hashing.py (JVM) and the DuckDB SQL fragments the oracles
-are generated from — for arbitrary text, not just the fixtures.
+functions/pytext.py (Python, used in pandas stages and as the
+reference here) must compute the same tokens/shingles/hashes as the
+Column expressions in functions/hashing.py (JVM) and the DuckDB SQL
+fragments the oracles are generated from — for arbitrary text, not
+just the fixtures.
 """
 
 from __future__ import annotations
@@ -99,8 +100,47 @@ def test_tokens_python_vs_spark_on_fixtures(spark):
         sh_py = pytext.shingles(pytext.tokens(r["text"]), 3)
         h_py = [pytext.md5_int(g, 7) for g in sh_py]
         jr = next(x for x in jvm if x["doc_id"] == r["doc_id"])
-        assert sorted(jr["sh"]) == sorted(sh_py)
-        assert sorted(jr["h"]) == sorted(h_py)
+        assert jr["sh"] == sh_py
+        assert jr["h"] == h_py
+
+
+# Texts the shingle table must treat like its Python twin: the edge
+# cases ride along in every drawn batch.
+_SHINGLE_EDGE_TEXTS = [None, "", "   ", "\t\n ", "!!!", "one", "one two", "a b a b a b a b a b"]
+_words = st.lists(st.sampled_from(["a", "b", "Cc", "d9"]), max_size=12).map(" ".join)
+shingle_batch_strategy = st.lists(
+    st.one_of(
+        text_strategy,
+        unicode_strategy,
+        _words,
+        _words.map(lambda t: (t + " ") * 3),  # repeated grams
+        st.text(alphabet=" \t\n\u00a0", max_size=5),  # whitespace only
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@pytest.mark.parametrize("hex_digits", [7, 15])
+@pytest.mark.parametrize("n", [1, 3, 8])
+@given(texts=shingle_batch_strategy)
+@settings(max_examples=15, deadline=None)
+def test_shingle_hash_table_python_vs_spark(spark, n, hex_digits, texts):
+    """The JVM shingle table equals its Python twin element for element
+    and in order: distinct grams in first-occurrence order, and their
+    distinct md5-prefix hashes in the same order."""
+    from aws_pandas_etl_spark.operators.dedup import shingle_hash_table
+
+    texts = _SHINGLE_EDGE_TEXTS + texts
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    got = {
+        r["doc_id"]: (r["shingles"], r["hashes"])
+        for r in shingle_hash_table(df, shingle_n=n, hex_digits=hex_digits).collect()
+    }
+    for i, t in enumerate(texts):
+        sh = pytext.shingles(pytext.tokens(t), n)
+        hs = list(dict.fromkeys(pytext.md5_int(g, hex_digits) for g in sh))
+        assert got[i] == (sh, hs), (t, n, hex_digits)
 
 
 def test_minhash_affine_python_vs_spark(spark):

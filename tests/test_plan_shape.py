@@ -606,3 +606,21 @@ def test_normalize_text_agrees_with_python_and_duckdb_twins(spark):
     assert got == duck == py
     assert got[1] == "strasse stra e" and got[2] == "" and got[4] == "cafe e cole"
     assert got[5] == "a b c" and got[7] == got[8] == ""
+
+
+def test_shingling_and_bloom_decontamination_plan_no_python(spark):
+    """Shingling is a JVM expression: neither the shingle table nor the
+    bloom decontamination built on it starts a Python worker."""
+    from aws_pandas_etl_spark.operators.dedup import (
+        decontaminate_bloom,
+        shingle_hash_table,
+    )
+
+    docs = load_table(spark, SF, "documents")
+    for df in (
+        shingle_hash_table(docs, shingle_n=8),
+        decontaminate_bloom(docs, benchmark_max_id=50),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (node, plan[:2000])
