@@ -498,7 +498,7 @@ def psi_clamped_bins(ev: DataFrame, nbins: int = PSI_NBINS) -> DataFrame:
         # two consumers; localCheckpoint pins them to one evaluation so
         # the batch callers stop re-scanning the stream per branch
         # (r16: psi_value_drift's unpinned plan scanned events 4x,
-        # plans/r16/psi_value_drift_before.txt).  Guarded on
+        # a786da4:plans/r16/psi_value_drift_before.txt).  Guarded on
         # isStreaming: checkpointing is a batch-only operation.
         bounds = bounds.localCheckpoint(eager=False)
     w = u.join(F.broadcast(bounds), "event_type")

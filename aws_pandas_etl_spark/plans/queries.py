@@ -3955,7 +3955,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per_part feeds the HAVING threshold and the final filter —
     # localCheckpoint pins the lineitem groupBy + supplier join to one
     # evaluation (r15: 2x lineitem/supplier scans before,
-    # plans/r15/q11_important_stock_before.txt; 0.93-0.97x across two
+    # a786da4:plans/r15/q11_important_stock_before.txt; 0.93-0.97x across two
     # interleaved min-of-5 sessions); the pinned frame is |parts| rows
     per_part = g.groupBy("l_partkey").agg(
         F.sum("val").alias("val_d")
@@ -5446,7 +5446,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode+aggregation (r15: exchange reuse did NOT dedup the two
     # branches — partial agg sits below each exchange — so the corpus
     # tokenize ran twice, 6 parquet scans in
-    # plans/r15/tfidf_top_terms_before.txt; pinned 1.096 s -> 0.819 s
+    # a786da4:plans/r15/tfidf_top_terms_before.txt; pinned 1.096 s -> 0.819 s
     # at sf0.1, interleaved min-of-5).  tf is post-aggregation — one
     # row per (doc, term) — the smallest frame that cuts the second
     # pass, so the pinned bytes are bounded by the tf result itself
@@ -6160,7 +6160,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a 1-row cross join.  The 25-row per-nation frame feeds
     both the total and the final projection, so it is localCheckpoint-
     pinned (r16: the unpinned plan ran the 4-table join+aggregate
-    twice — 6 fact scans, plans/r16/nation_revenue_share_before.txt;
+    twice — 6 fact scans, a786da4:plans/r16/nation_revenue_share_before.txt;
     locally flat at sf0.1, shipped on work-reduction grounds — the
     duplicate is a full lineitem⋈orders⋈customer pass at scale)."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -6582,8 +6582,7 @@ def pipeline_compact_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract survives compaction), so the read-back aggregate equals
     plain events exactly.  A compactor that dropped rows, double-kept
     a batch, or broke the manifest (so redelivery re-applied) breaks
-    the oracle match.  Also asserts the ``_COMPACTING`` writer guard
-    is released after success.
+    the oracle match.
 
     Scale shape: compaction reads the snapshot file list once and
     rewrites ceil(bytes/target) files in one job — cost ∝ landing-zone
@@ -6595,7 +6594,6 @@ def pipeline_compact_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from aws_pandas_etl_spark.sources.sinks import (
         compact_table,
-        compaction_in_progress,
         idempotent_append_load,
         read_batched_target,
     )
@@ -6617,8 +6615,6 @@ def pipeline_compact_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     before, after = compact_table(spark, path, target_file_mb=512)
     if not (before == 12 and after < before):
         raise AssertionError(f"compaction shape wrong: {before} -> {after}")
-    if compaction_in_progress(spark, path):
-        raise AssertionError("_COMPACTING marker not released on success")
     _, redelivered = idempotent_append_load(batches[1], path, "b1")
     if redelivered:
         raise AssertionError(
@@ -6788,7 +6784,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(corpus) frame is unrecoverable on executor loss at scale — the
     r15 ADVICE item; the unpinned r14 plan re-ran tokenize+explode
     per branch, 6 parquet scans,
-    plans/r15/unigram_logprob_quality_before.txt).  The scoring join
+    a786da4:plans/r15/unigram_logprob_quality_before.txt).  The scoring join
     also shrinks: tf-weighted per-(doc, term) rows instead of one row
     per token occurrence.  The join shape stays unforced
     (corpus-scaling vocab, AQE decides).
@@ -7657,7 +7653,7 @@ def mad_outliers_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream branches and are localCheckpoint-pinned to one
     evaluation apiece (r15: the unpinned plan re-ran the median
     window pass per consumer — 7 events scans,
-    plans/r15/mad_outliers_per_event_type_before.txt; pinned
+    a786da4:plans/r15/mad_outliers_per_event_type_before.txt; pinned
     0.66-0.74x across two interleaved min-of-5 sessions).  med and
     mad are |types|-row frames; d is the ONE row-level pin here — it
     cannot be pre-aggregated (the second median and the outlier
@@ -8910,7 +8906,7 @@ def pmi_bigrams_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     cliff on an O(corpus) frame; re-adjudicated interleaved vs both
     the r15 pin and the unpinned r14 shape).  The unpinned r14 plan
     carried 10 parquet scans of documents
-    (plans/r15/pmi_bigrams_top20_before.txt); this shape scans once."""
+    (a786da4:plans/r15/pmi_bigrams_top20_before.txt); this shape scans once."""
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(TX.tokens("text").alias("toks"))
     k = F.size("toks") - F.lit(1)
@@ -9043,7 +9039,7 @@ def inverted_index_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # e feeds the df aggregate and the posting-list window join —
     # localCheckpoint pins the tokenize+bigram explode+distinct to one
     # evaluation (r15: 3 documents scans before,
-    # plans/r15/inverted_index_terms_before.txt; 0.94x in both of two
+    # a786da4:plans/r15/inverted_index_terms_before.txt; 0.94x in both of two
     # interleaved min-of-5 sessions)
     e = (
         t.select("doc_id", F.explode(grams).alias("term"))
@@ -10481,7 +10477,7 @@ def join_size_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame feeds 2-4 consumers (row total + join arm(s)), so it is
     localCheckpoint-pinned to one evaluation (r16 census: the unpinned
     plan re-scanned the fact tables 12x,
-    plans/r16/join_size_forecast_before.txt); the pinned frames are
+    a786da4:plans/r16/join_size_forecast_before.txt); the pinned frames are
     POST-aggregation, distinct-key-sized — never the fact rows."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -10551,7 +10547,7 @@ def market_basket_part_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame feeds FOUR branches (order count, item counts, both
     self-join sides) and is localCheckpoint-pinned to one
     distinct-shuffle (r15: 5 lineitem scans in the unpinned plan,
-    plans/r15/market_basket_part_lift_before.txt; pinned 0.84-0.89x
+    a786da4:plans/r15/market_basket_part_lift_before.txt; pinned 0.84-0.89x
     across two interleaved min-of-5 sessions)."""
     li = load_table(spark, sf_dir, "lineitem")
     b = (
@@ -11175,7 +11171,7 @@ def vocab_growth_by_corpus_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row (min, max) frame feeds both slice assignments —
     # localCheckpoint-pinned so its scan runs once (r16: unpinned plan
     # scanned documents 4x,
-    # plans/r16/vocab_growth_by_corpus_slice_before.txt)
+    # a786da4:plans/r16/vocab_growth_by_corpus_slice_before.txt)
     b = docs.agg(
         F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi")
     ).localCheckpoint(eager=False)
@@ -12179,7 +12175,7 @@ def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-total frame feeds the total, the p frame, the z normalizer
     AND the final projection — localCheckpoint pins the tokenize-size
     aggregate to ONE corpus pass; r15: 4 documents scans unpinned,
-    plans/r15/temperature_mixture_weights_before.txt; pinned
+    a786da4:plans/r15/temperature_mixture_weights_before.txt; pinned
     0.58/0.60x, interleaved min-of-5 x2)."""
     docs = load_table(spark, sf_dir, "documents")
     n = docs.groupBy("lang").agg(
@@ -12460,7 +12456,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunks feeds the fingerprint-share aggregate AND the join back —
     # localCheckpoint pins the tokenize+boundary-window+fingerprint
     # chain to one evaluation (r15: ran twice before,
-    # plans/r15/cdc_chunk_dedup_before.txt; 0.76-0.88x across two
+    # a786da4:plans/r15/cdc_chunk_dedup_before.txt; 0.76-0.88x across two
     # interleaved min-of-5 sessions)
     chunks = TX.cdc_chunks(docs, "doc_id", "text", CDC_MASK).localCheckpoint(
         eager=False
@@ -13622,7 +13618,7 @@ def kmv_overlap_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair-sketch expansion AND the exact-intersection audit —
     # localCheckpoint-pinned to one evaluation (r16: the unpinned plan
     # re-ran the distinct over events 7x,
-    # plans/r16/kmv_overlap_event_types_before.txt; pinned frame is
+    # a786da4:plans/r16/kmv_overlap_event_types_before.txt; pinned frame is
     # the POST-distinct |types x users| table, not the event stream)
     d = ev.select(
         F.col("event_type").alias("t"),
@@ -13841,7 +13837,7 @@ def unigram_kl_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-occurrence frame ``occ``, whose truncated lineage on an
     O(corpus) frame is unrecoverable on executor loss at scale — the
     r15 ADVICE item; the unpinned r14 plan re-tokenized per branch,
-    10 parquet scans, plans/r15/unigram_kl_by_source_before.txt).
+    10 parquet scans, a786da4:plans/r15/unigram_kl_by_source_before.txt).
     Integer counts re-aggregate exactly: sum of per-(source, token)
     counts equals the direct occurrence counts in every branch."""
     docs = load_table(spark, sf_dir, "documents")
@@ -14153,7 +14149,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (QI x band) cell table feeds five branches (bands, class totals,
     global histogram, its total, and the spine's left join), so it is
     localCheckpoint-pinned to one evaluation (r16: the unpinned plan
-    re-scanned customer 5x, plans/r16/t_closeness_audit_before.txt;
+    re-scanned customer 5x, a786da4:plans/r16/t_closeness_audit_before.txt;
     the pinned frame is the bounded post-aggregation cell table)."""
     cust = load_table(spark, sf_dir, "customer")
     c = cust.groupBy(
@@ -14310,7 +14306,7 @@ def kaplan_meier_signup_to_purchase(
     (feeds the life table and its total) are localCheckpoint-pinned —
     both POST-aggregation, signup-user-sized (r16: unpinned, each
     consumer re-ran its groupBy over events — 6 scans,
-    plans/r16/kaplan_meier_signup_to_purchase_before.txt)."""
+    a786da4:plans/r16/kaplan_meier_signup_to_purchase_before.txt)."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.select("user_id", "event_type", F.unix_micros("ts").alias("t"))
     s = (
@@ -14480,7 +14476,7 @@ def daily_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell table feeds three consumers (pair self-join, n, ties) and
     the pair frame two (S/sen aggregates) — both localCheckpoint-
     pinned to one evaluation (r15: 6 events scans unpinned,
-    plans/r15/daily_trend_mann_kendall_before.txt; pinned 0.75x in
+    a786da4:plans/r15/daily_trend_mann_kendall_before.txt; pinned 0.75x in
     both of two interleaved min-of-5 sessions)."""
     ev = load_table(spark, sf_dir, "events")
     day = ev.groupBy(
@@ -15272,7 +15268,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localCheckpoint pins the ps derivation (a full lineitem
         # groupBy) and the supplier/part joins to ONE evaluation
         # (r15: 2x lineitem+supplier+part scans before,
-        # plans/r15/q2_min_cost_supplier_before.txt; pinned 0.87-0.96x
+        # a786da4:plans/r15/q2_min_cost_supplier_before.txt; pinned 0.87-0.96x
         # across two interleaved min-of-5 sessions); the pinned frame
         # is the part/type/size-pruned candidate set, not the corpus
         .localCheckpoint(eager=False)
@@ -15364,7 +15360,7 @@ def markov_stationary_event_types(spark: SparkSession, sf_dir: str) -> DataFrame
     frames feed every iteration plus the spine/total branches, so both
     are localCheckpoint-pinned (r16: the unpinned plan re-ran the
     lead-window pass over events 11x,
-    plans/r16/markov_stationary_event_types_before.txt — locally flat
+    a786da4:plans/r16/markov_stationary_event_types_before.txt — locally flat
     at sf0.1 where idle cores hide the duplicates, shipped on
     work-reduction grounds: each duplicate is a full corpus pass at
     scale; both pinned frames are |types|^2 post-aggregation rows)."""
@@ -16137,7 +16133,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row id-range frame feeds both slice assignments —
     # localCheckpoint-pinned so its min/max scan runs once (r16:
     # unpinned plan scanned documents 4x,
-    # plans/r16/heaps_law_fit_before.txt; the token-count and
+    # a786da4:plans/r16/heaps_law_fit_before.txt; the token-count and
     # first-occurrence arms keep their own documented scans)
     ids = docs.agg(
         F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
@@ -16579,7 +16575,7 @@ def exact_percentiles_histogram_refine(
     frame feeds the k targets, both binned-scan consumers and the
     final projection, so it is localCheckpoint-pinned (r16: unpinned,
     each consumer re-ran the min/max/count scan — 5 events scans,
-    plans/r16/exact_percentiles_histogram_refine_before.txt; pinned,
+    a786da4:plans/r16/exact_percentiles_histogram_refine_before.txt; pinned,
     the plan keeps exactly the two documented corpus scans)."""
     ev = load_table(spark, sf_dir, "events")
     g = ev.agg(
@@ -18488,7 +18484,7 @@ def exact_median_per_type_refine(
     |types|-row stats frame feeds both binned-scan consumers and the
     candidate probe, so it is localCheckpoint-pinned (r16: unpinned,
     each consumer re-ran the per-type min/max/count scan — 5 events
-    scans, plans/r16/exact_median_per_type_refine_before.txt; pinned,
+    scans, a786da4:plans/r16/exact_median_per_type_refine_before.txt; pinned,
     the plan keeps the two documented corpus scans)."""
     ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(
@@ -18610,7 +18606,7 @@ def fd_binwidth_recommendation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin-count division so both engines ceil the same double.  The
     1-row stats frame is localCheckpoint-pinned like the flagship's
     (r16: unpinned plan re-ran min/max/count per consumer — 6 events
-    scans, plans/r16/fd_binwidth_recommendation_before.txt)."""
+    scans, a786da4:plans/r16/fd_binwidth_recommendation_before.txt)."""
     ev = load_table(spark, sf_dir, "events")
     g = ev.agg(
         F.min("value").alias("mn"),
@@ -19096,7 +19092,8 @@ def unigram_entropy_effective_vocab(
 # binning), streaming_ewma_per_user_tws + streaming_sessionize_tws
 # (the state_api certification column — new output schema AND new
 # oracle), streaming_partitioned_merge + streaming_foreach_batch_merge
-# (their per-batch write path now runs the _COMPACTING writer guard).
+# (their per-batch write path then ran a compaction writer guard, since
+# replaced by the swap's commit check).
 # 6 more pipeline-family seats re-verify every other sinks.py write
 # entry point behind the same r15 compaction/marker hardening
 # (roundtrip, error isolation, merge, delete, idempotent append,
@@ -19648,7 +19645,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sigs joins twice (a-side and b-side) — localCheckpoint pins the
     # signature computation (NUM_HASHES affine ops per shingle) to one
     # evaluation (r15: computed per join side before,
-    # plans/r15/minhash_estimate_error_before.txt; 0.79-0.80x across
+    # a786da4:plans/r15/minhash_estimate_error_before.txt; 0.79-0.80x across
     # two interleaved min-of-5 sessions)
     sigs = _shingle3_table(spark, sf_dir).select(
         "doc_id",
@@ -19763,7 +19760,7 @@ def bitext_mining_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-label join — localCheckpoint-pinned so the codegen argmin
     # assignment and norm fold run once, not once per side (r16: the
     # unpinned plan scanned embeddings 8x,
-    # plans/r16/bitext_mining_margin_before.txt — the knn_graph_extend
+    # a786da4:plans/r16/bitext_mining_margin_before.txt — the knn_graph_extend
     # precedent).  Executor-storage trade, same as that pin: the
     # pinned frame is O(n_vectors) with embeddings; its truncated
     # lineage is non-recoverable on executor loss — acceptable for a

@@ -13,8 +13,10 @@ mismatch fails the load with the previous one still live.
 
 Every sink that rewrites a whole target (``overwrite_load``,
 ``merge_load``, ``delete_load``, each ``compact_table`` swap) commits
-through the one crash-safe ``_SwapTarget``, and every Hadoop
-FileSystem operation resolves its filesystem through ``_hadoop_fs``.
+through the one crash-safe ``_SwapTarget``, whose commit checks that
+the target still holds the files it read (``WriteConflict`` if not),
+and every Hadoop FileSystem operation resolves its filesystem through
+``_hadoop_fs``.
 """
 
 from __future__ import annotations
@@ -25,22 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Reference chunk size: 1M rows per parquet file (rdbms_operations.py:227).
 ROWS_PER_FILE = 1_000_000
-
-# Compaction in-progress marker (underscore prefix: hidden from Spark's
-# file listing, like _SUCCESS / _layout.json).  compact_table creates it
-# before scanning and removes it only on SUCCESS; every writer checks
-# it (after crash recovery) and refuses loudly, which excludes the
-# scan-vs-late-append race (a batch landing between compaction's
-# snapshot and its keep-aside swap would otherwise be deleted with the
-# old directory — silent row loss).  A marker left behind by a CRASHED
-# compaction keeps writers refusing (the safe direction) until the
-# operator inspects the target and calls clear_compaction_marker().
-_COMPACTING_MARKER = "_COMPACTING"
-
-# Names of the entries a compaction rewrote, staged into its new copy
-# and deleted after the stray rescue: a run that dies mid-rescue leaves
-# it behind, and the next compact_table finishes the rescue from it.
-_SNAPSHOT_MANIFEST = "_compaction_snapshot"
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -104,43 +90,66 @@ def _footer_rows(spark: SparkSession, path: str) -> int:
     return total
 
 
-def _compacting_marker_path(spark: SparkSession, path: str):
-    return _hadoop_fs(spark, path.rstrip("/") + "/" + _COMPACTING_MARKER)
+class WriteConflict(IOError):
+    """A rewriting sink's target changed between the moment the sink
+    opened it and its commit: another writer added, removed or
+    rewrote data files.  The live target was left as it was; re-run
+    the call, which reads the target again."""
 
 
-def compaction_in_progress(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` carries compact_table's in-progress marker."""
-    fs, jpath = _compacting_marker_path(spark, path)
-    return bool(fs.exists(jpath))
+def _visible_files(fs, jpath) -> dict | None:
+    """``{relative name: (length, mtime)}`` of the data files under
+    ``jpath``, recursive, skipping ``_``/``.``-prefixed entries at every
+    level as Spark's file index does; None when ``jpath`` is missing.
+    A directory that vanishes mid-listing contributes no files.  (The
+    ``exists`` probe costs one call; a failed ``listStatus`` costs tens
+    of milliseconds in PySpark's Java-exception conversion.)"""
+    from py4j.protocol import Py4JJavaError
 
-
-def clear_compaction_marker(spark: SparkSession, path: str) -> bool:
-    """Remove a stale ``_COMPACTING`` marker left by a crashed
-    compaction — the explicit operator action after inspecting the
-    target (compact_table's keep-aside swap means every crash point
-    leaves a complete copy, and opening the target restores it from
-    the hidden ``._merge_old`` sibling).  Re-run ``compact_table``
-    before any other writer: it finishes a stray rescue the crash cut
-    short.  Returns whether a marker existed."""
-    fs, jpath = _compacting_marker_path(spark, path)
-    return bool(fs.delete(jpath, False))
+    if not fs.exists(jpath):
+        return None
+    out, todo = {}, [(jpath, "")]
+    while todo:
+        jdir, rel = todo.pop()
+        try:
+            statuses = fs.listStatus(jdir)
+        except Py4JJavaError as exc:
+            if "FileNotFoundException" not in str(exc.java_exception):
+                raise
+            continue
+        for st in statuses:
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                todo.append((st.getPath(), f"{rel}{name}/"))
+            else:
+                out[rel + name] = (st.getLen(), st.getModificationTime())
+    return out
 
 
 def _merge_side_paths(path: str) -> tuple[str, str]:
-    """Dot-prefixed tmp/old sibling paths for ``_SwapTarget``.
-    The dot prefix matters: Spark's file index skips paths starting
-    with ``.`` or ``_``, so a parent-directory glob reader never picks
-    up an in-flight tmp write or the kept-aside previous copy."""
+    """Dot-prefixed sibling paths for ``_SwapTarget``: a fresh staging
+    path ``.<name>._merge_tmp.<token>`` and the kept-aside copy
+    ``.<name>._merge_old``.  The dot prefix matters: Spark's file index
+    skips paths starting with ``.`` or ``_``, so a parent-directory glob
+    reader never picks up an in-flight tmp write or the kept-aside
+    previous copy."""
+    import uuid
+
     base = path.rstrip("/")
     head, _, tail = base.rpartition("/")
-    prefix = f"{head}/" if head else ""
-    return f"{prefix}.{tail}._merge_tmp", f"{prefix}.{tail}._merge_old"
+    prefix = f"{head}/.{tail}" if head else f".{tail}"
+    return f"{prefix}._merge_tmp.{uuid.uuid4().hex[:12]}", f"{prefix}._merge_old"
 
 
 def _recover(spark: SparkSession, path: str) -> None:
-    """Crash recovery: if a swap died between its two renames (live
-    target missing, kept-aside copy complete), rename the copy back.
-    Touches nothing when the live target exists."""
+    """Crash recovery, every writer's first step: if a swap died
+    between its two renames (live target missing, kept-aside copy
+    complete), rename the copy back.  Touches nothing when the live
+    target exists.  Without it, an append after such a crash would
+    write a fresh directory beside the kept-aside copy, which the next
+    swap would then delete."""
     _, old_path = _merge_side_paths(path)
     fs, jfinal = _hadoop_fs(spark, path)
     _, jold = _hadoop_fs(spark, old_path)
@@ -149,55 +158,65 @@ def _recover(spark: SparkSession, path: str) -> None:
             raise IOError(f"swap: crash recovery {old_path} -> {path} failed")
 
 
-def _open_for_write(spark: SparkSession, path: str) -> None:
-    """Every writer's first step: crash recovery, then the single-writer
-    guard — refuse while a compaction holds the target (one FS
-    exists() RPC, ~ms).  Without the guard, rows appended between
-    compact_table's snapshot and its directory swap are silently
-    deleted with the superseded copy.  Recovery comes FIRST: a
-    compaction that died between its two renames took its marker aside
-    with the live directory, and only the restore puts it back where
-    the guard sees it.  Nothing else may run before the guard: a
-    refused writer must leave a live compaction's staged copy alone."""
-    _recover(spark, path)
-    if compaction_in_progress(spark, path):
-        raise IOError(
-            f"target {path!r} is being compacted (found "
-            f"{_COMPACTING_MARKER!r} marker): writers must wait for "
-            f"compact_table to finish; if the compaction crashed, "
-            f"inspect the target and call clear_compaction_marker()"
-        )
-
-
 class _SwapTarget:
     """The one crash-safe commit for every sink that rewrites a whole
     parquet target (overwrite_load, merge_load, delete_load and each
-    compact_table swap).  The caller stages the new copy at
-    ``tmp_path`` (``.<name>._merge_tmp``); ``commit`` renames the live
-    target ASIDE to ``old_path`` (``.<name>._merge_old``) and the tmp
-    in; ``drop_old`` deletes the kept-aside copy; ``publish`` is the
-    three steps for a plain DataFrame write, and returns its row count.
+    compact_table swap), with one rule for what may land meanwhile.
 
-    Opening the target is ``_open_for_write`` (crash recovery, then the
-    compaction guard) followed by deleting a leftover tmp from a failed
-    write.  Every crash point therefore leaves the pre-call or the
-    post-call target on disk.  Rename is still non-atomic on object
-    stores — production swaps ``commit`` for a transactional table
-    commit (Delta/Iceberg), keeping the same plan."""
+    Opening runs crash recovery (``_recover``) and records ``seen``:
+    the visible data files under the target (``_visible_files``; None
+    if it is missing).  Callers open the swap before they build their
+    read of the target.  The caller stages the new copy at its own
+    ``tmp_path`` (``.<name>._merge_tmp.<token>``).  ``commit`` lists
+    the target again and, if the listing differs from ``seen``, raises
+    ``WriteConflict`` naming the files, with the live target untouched
+    (the validation step of optimistic concurrency control).  Otherwise
+    it deletes every other ``._merge_tmp*`` sibling, then renames the
+    live target ASIDE to ``old_path`` (``.<name>._merge_old``) and the
+    tmp in, so no staging outlives a successful commit.  That is safe:
+    a swap that opened before this commit fails its own check, and one
+    whose staging is gone fails its footer check or its rename.
+    ``drop_old`` deletes the kept-aside copy; ``publish`` is the whole
+    sequence for a DataFrame write, and returns its row count.
+
+    The trade: no writer waits for or is refused by a rewrite.  A file
+    that lands while a merge, delete, refresh or compaction runs stays
+    live, and the rewrite raises instead; its caller re-runs it.  Every
+    crash point leaves the pre-call or the post-call target on disk.
+    Two gaps remain.  A writer that lands between the second listing
+    and the keep-aside rename is still moved aside and deleted with the
+    old copy.  And rename is not atomic on object stores; production
+    swaps ``commit`` for a transactional table commit (Delta/Iceberg),
+    keeping the same plan."""
 
     def __init__(self, spark: SparkSession, path: str):
-        _open_for_write(spark, path)
+        _recover(spark, path)
         self.spark, self.path = spark, path
         self.tmp_path, self.old_path = _merge_side_paths(path)
         self.fs, self.jfinal = _hadoop_fs(spark, path)
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path
         self.jtmp, self.jold = jvm_path(self.tmp_path), jvm_path(self.old_path)
-        self.fs.delete(self.jtmp, True)  # leftover tmp from a failed write
+        self.seen = _visible_files(self.fs, self.jfinal)
 
     def commit(self) -> None:
         fs = self.fs
+        now = _visible_files(fs, self.jfinal)
+        if now != self.seen:
+            seen, now = self.seen or {}, now or {}
+            raise WriteConflict(
+                f"swap: {self.path} changed after this write read it (added "
+                f"{sorted(n for n in now if now[n] != seen.get(n))}, removed "
+                f"{sorted(n for n in seen if seen[n] != now.get(n))}); "
+                f"left as it was, re-run to read it again"
+            )
         fs.delete(self.jold, True)  # stale kept-aside copy from an old success
-        if fs.exists(self.jfinal) and not fs.rename(self.jfinal, self.jold):
+        mine = self.jtmp.getName()
+        staging = mine.rpartition(".")[0]  # .<name>._merge_tmp
+        for st in fs.listStatus(self.jtmp.getParent()):
+            name = st.getPath().getName()
+            if name != mine and name.startswith(staging):
+                fs.delete(st.getPath(), True)
+        if self.seen is not None and not fs.rename(self.jfinal, self.jold):
             raise IOError(f"swap: keep-aside {self.path} -> {self.old_path} failed")
         if not fs.rename(self.jtmp, self.jfinal):
             raise IOError(f"swap: rename {self.tmp_path} -> {self.path} failed")
@@ -205,20 +224,23 @@ class _SwapTarget:
     def drop_old(self) -> None:
         self.fs.delete(self.jold, True)
 
-    def publish(self, df: DataFrame) -> int:
-        """Stage ``df``, check it, swap it in; returns the loaded row
-        count.  The count rides the write job (``observe``); before the
-        commit it must equal the footer row counts of the staged files,
-        or the call raises with the live target untouched (the rejected
-        copy stays at ``tmp_path`` until the next writer opens the
-        target)."""
+    def publish(
+        self, df: DataFrame, into: str = "", rows_per_file: int = ROWS_PER_FILE
+    ) -> int:
+        """Stage ``df`` (at ``tmp_path``, or its ``into`` subdirectory),
+        check it, swap it in; returns the loaded row count.  The count
+        rides the write job (``observe``); before the commit it must
+        equal the footer row counts of the staged files, or the call
+        raises with the live target untouched (the rejected copy stays
+        at ``tmp_path`` until the next successful commit)."""
+        staged = f"{self.tmp_path}/{into}" if into else self.tmp_path
         counted, count = _with_count(df)
-        write_parquet_sink(counted, self.tmp_path, mode="overwrite")
-        written, landed = count(), _footer_rows(self.spark, self.tmp_path)
+        write_parquet_sink(counted, staged, mode="overwrite", rows_per_file=rows_per_file)
+        written, landed = count(), _footer_rows(self.spark, staged)
         if written != landed:
             raise IOError(
                 f"swap: the write job counted {written} rows but the staged "
-                f"copy {self.tmp_path} holds {landed}; {self.path} left as it was"
+                f"copy {staged} holds {landed}; {self.path} left as it was"
             )
         self.commit()
         self.drop_old()
@@ -273,7 +295,7 @@ def append_load(df: DataFrame, path: str) -> int:
     surface): add this batch's rows to the target, return the batch
     row count.  The count rides the write job itself via observe() —
     a separate count() would execute the whole upstream plan twice."""
-    _open_for_write(df.sparkSession, path)
+    _recover(df.sparkSession, path)
     counted, count = _with_count(df)
     write_parquet_sink(counted, path, mode="append")
     return count()
@@ -624,7 +646,7 @@ def merge_load_partitioned(
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    _open_for_write(spark, path)
+    _recover(spark, path)
     # layout stamp: refuse a target whose recorded key→partition layout
     # differs from this call's — the silent-resurrection mode the
     # per-batch guard's induction can't see (see docstring).
@@ -803,26 +825,22 @@ def compact_table(
     path: str,
     target_file_mb: int = 512,
     parallelism: int = 4,
-    _after_snapshot=None,
 ) -> tuple[int, int]:
     """Small-files compaction: rewrite a parquet target into
     ``ceil(bytes / target_file_mb)`` files.
-
-    (``_after_snapshot`` is a test-only seam: called once right after
-    each swap's snapshot listing so tests can deterministically land an
-    in-flight write in the snapshot-to-swap window and verify the
-    stray rescue — the race itself is excluded for real writers by the
-    marker, and cannot be staged reliably with threads.)
 
     Every incremental pattern (append_load batches, streaming sinks,
     dynamic partition re-loads) accretes small files, and at 100 TB
     the resulting per-file open/footer overhead dominates scans long
     before data volume does.  The rewrite is one job per compacted
-    directory — scan, round-robin ``repartition`` to the target file
-    count, write to the swap's hidden tmp sibling, commit through
-    ``_SwapTarget`` (the same crash-safe keep-aside swap as every
+    directory: scan the files the swap's opening listing saw (its
+    ``seen``, the one snapshot), round-robin ``repartition`` to the
+    target file count, and ``publish`` through ``_SwapTarget`` (the
+    same crash-safe, conflict-checked keep-aside swap as every
     rewriting sink, so a failed compaction never damages the live
-    target).
+    target).  Writers are never blocked: if one lands while the rewrite
+    runs, the commit raises ``WriteConflict``, the landed rows stay
+    live, and the caller re-runs the compaction.
 
     PARTITIONED targets (Hive-style ``col=value`` subdirectories) are
     compacted PER LEAF PARTITION, preserving the layout: each leaf
@@ -844,8 +862,7 @@ def compact_table(
     crash-safe hidden-sibling swap, so concurrency never widens the
     blast radius of a failure past that leaf.  Writers open only the
     root, so a leaf left aside between its two renames is restored by
-    the next ``compact_table``, before it lists the layout (the root
-    marker keeps writers out until then).
+    the next ``compact_table``, before it lists the layout.
 
     BATCHED targets (``idempotent_append_load``'s ``batch-<id>``
     subdirectories) are compacted manifest-aware: the snapshot batch
@@ -857,151 +874,60 @@ def compact_table(
     Earlier versions silently reported a batched target "already
     compact" (0, 0) — batch dirs carry no ``=`` so the partition walk
     skipped them and the top-level ``part-*`` glob saw nothing.
-
-    WRITER EXCLUSION: the whole call holds a ``_COMPACTING`` marker at
-    the target root that every writer (overwrite_load, append_load,
-    idempotent_append_load, merge_load, merge_load_partitioned,
-    delete_load, overwrite_partitions_load) checks and refuses on —
-    without it, rows landing between this call's snapshot and its
-    directory swap would be deleted with the superseded copy.  As
-    defense in depth each swap also reads its SNAPSHOT file list
-    explicitly (never the directory) and, after the swap, RESCUES any
-    stray file/batch-dir that an already-in-flight writer landed after
-    the snapshot by moving it into the new copy.  The new copy carries
-    the live copy's marker, so it stands at every crash point; it is
-    removed only on success.  After a crash it keeps writers refusing
-    (the safe direction) until the operator inspects the target and
-    calls ``clear_compaction_marker``; opening the target (any writer,
-    or a re-run of compact_table) first restores a kept-aside copy,
-    marker included.  The new copy also carries a manifest of the
-    snapshot (``_compaction_snapshot``), deleted after the rescue: a
-    re-run finds it after a crash mid-rescue and moves the remaining
-    strays in before it drops the kept-aside copy.
     """
     import math
+    import uuid as _uuid
 
     # opening the root swap restores a copy a previous compaction left
-    # aside between its two renames and refuses a target that carries
-    # the marker (live or crashed compaction), before it deletes anything
+    # aside between its two renames and lists the snapshot
     root = _SwapTarget(spark, path)
+    if root.seen is None:
+        raise IOError(f"compact_table: target {path!r} does not exist")
     fs, jfinal = root.fs, root.jfinal
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(jfinal):
-        raise IOError(f"compact_table: target {path!r} does not exist")
 
-    def _part_files(p) -> list:
-        # FileStatus of part-files only (not _SUCCESS / hidden)
-        hits = fs.globStatus(jvm_path(p.toString() + "/part-*"))
-        return [] if hits is None else list(hits)
+    def _n_out(snapshot: dict) -> int:
+        total = sum(size for size, _ in snapshot.values())
+        return max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
 
-    def _flat_entries(j) -> list:
-        return [st.getPath() for st in _part_files(j)]
-
-    def _n_out(total_bytes: int) -> int:
-        return max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-
-    def _in(p: str, name: str):
-        return jvm_path(f"{p.rstrip('/')}/{name}")
-
-    def _rescue(swap: _SwapTarget, entries, snapped) -> None:
-        # stray rescue: an in-flight writer may have landed entries after
-        # the snapshot; they rode aside with the old copy — move them in
-        # instead of deleting them.  The manifest goes last, so a run
-        # that dies in here is finished by the next one (_resume).
-        if fs.exists(swap.jold):
-            for jp in entries(swap.jold):
-                name = jp.getName()
-                if name not in snapped and not fs.rename(jp, _in(swap.path, name)):
-                    raise IOError(
-                        f"compact_table: stray rescue of {name} into "
-                        f"{swap.path} failed"
-                    )
-        swap.drop_old()
-        fs.delete(_in(swap.path, _SNAPSHOT_MANIFEST), False)
-
-    def _resume(swap: _SwapTarget, entries) -> None:
-        # a compaction that died after its commit left the snapshot
-        # manifest in the live copy: finish its stray rescue first
-        jman = _in(swap.path, _SNAPSHOT_MANIFEST)
-        if fs.exists(jman):
-            _rescue(swap, entries, set(_read_text(spark, fs, jman).splitlines()))
-
-    def _commit(swap: _SwapTarget, entries, snapped) -> None:
-        # the new copy carries the live copy's marker, so it guards
-        # writers at every crash point until _done, and the manifest of
-        # what the rewrite consumed, so a cut-short rescue can resume
-        if fs.exists(_in(swap.path, _COMPACTING_MARKER)):
-            fs.create(_in(swap.tmp_path, _COMPACTING_MARKER), False).close()
-        _write_text(
-            fs, _in(swap.tmp_path, _SNAPSHOT_MANIFEST), "\n".join(sorted(snapped))
-        )
-        swap.commit()
-        _rescue(swap, entries, snapped)
+    def _scan(swap: _SwapTarget, snapshot: dict, n_out: int) -> DataFrame:
+        # the snapshot's files, named explicitly, never the directory
+        base = swap.path.rstrip("/")
+        return spark.read.parquet(*[f"{base}/{n}" for n in snapshot]).repartition(n_out)
 
     def _compact_flat(swap: _SwapTarget) -> tuple[int, int]:
-        _resume(swap, _flat_entries)
-        snapshot = _part_files(swap.jfinal)
-        if _after_snapshot is not None:
-            _after_snapshot()
-        files_before = len(snapshot)
-        n_out = _n_out(sum(st.getLen() for st in snapshot))
-        if files_before <= n_out:  # already compact: no rewrite
+        snapshot = {n: v for n, v in (swap.seen or {}).items() if "/" not in n}
+        n_out = _n_out(snapshot)
+        if len(snapshot) <= n_out:  # already compact: no rewrite
             swap.drop_old()  # superseded copy of a swap that died after commit
-            return files_before, files_before
-        # read the SNAPSHOT explicitly, not the directory: a file landing
-        # after this listing is never double-read, so the stray rescue
-        # can move it into the new copy without duplicating rows
-        spark.read.parquet(
-            *[st.getPath().toString() for st in snapshot]
-        ).repartition(n_out).write.mode("overwrite").parquet(swap.tmp_path)
-        _commit(swap, _flat_entries, {st.getPath().getName() for st in snapshot})
-        return files_before, len(_part_files(swap.jfinal))
-
-    def _batch_entries(j) -> list:
-        return _batch_subdirs(fs, j)
+            return len(snapshot), len(snapshot)
+        swap.publish(_scan(swap, snapshot, n_out), rows_per_file=0)
+        return len(snapshot), len(_visible_files(fs, swap.jfinal) or {})
 
     def _compact_batched() -> tuple[int, int]:
-        import uuid as _uuid
-
-        _resume(root, _batch_entries)
-        snap = {d.getName(): _part_files(d) for d in _batch_subdirs(fs, jfinal)}
-        if _after_snapshot is not None:
-            _after_snapshot()
-        files_before = sum(len(v) for v in snap.values())
-        n_out = _n_out(sum(st.getLen() for v in snap.values() for st in v))
-        if files_before <= n_out:
+        snapshot = {n: v for n, v in root.seen.items() if n.startswith("batch-")}
+        n_out = _n_out(snapshot)
+        if len(snapshot) <= n_out:
             root.drop_old()
-            return files_before, files_before
+            return len(snapshot), len(snapshot)
         compact_name = f"batch-compacted-{_uuid.uuid4().hex[:12]}"
-        tmp_path = root.tmp_path
-        merged = spark.read.parquet(
-            *[st.getPath().toString() for v in snap.values() for st in v]
-        ).repartition(n_out)
-        merged.write.mode("overwrite").parquet(tmp_path + "/" + compact_name)
         # tombstones: every superseded batch id keeps its directory so
         # idempotent_append_load's exists() check still sees it applied
-        for name in snap:
-            fs.mkdirs(jvm_path(tmp_path + "/" + name))
-            fs.create(
-                jvm_path(f"{tmp_path}/{name}/_compacted_into_{compact_name}"),
-                True,
-            ).close()
-        _commit(root, _batch_entries, snap)
+        for d in batch_dirs:
+            tomb = f"{root.tmp_path}/{d.getName()}"
+            fs.mkdirs(jvm_path(tomb))
+            fs.create(jvm_path(f"{tomb}/_compacted_into_{compact_name}"), True).close()
+        root.publish(_scan(root, snapshot, n_out), into=compact_name, rows_per_file=0)
         after = fs.globStatus(jvm_path(path.rstrip("/") + "/batch-*/part-*"))
-        return files_before, 0 if after is None else len(after)
-
-    def _done(result: tuple[int, int]) -> tuple[int, int]:
-        fs.delete(jmarker, False)  # success: release the writer guard
-        return result
+        return len(snapshot), 0 if after is None else len(after)
 
     # restores partition leaves a crashed compaction left aside, before
     # anything below lists the layout
     leaves = _partition_leaves(spark, path)
     part_dirs = _partition_subdirs(fs, jfinal)
     batch_dirs = _batch_subdirs(fs, jfinal)
-    top_files = len(_part_files(jfinal))
     kinds = {
-        "top-level part-files": top_files,
+        "top-level part-files": sum("/" not in n for n in root.seen),
         "col=value partition subdirectories": len(part_dirs),
         "batch-<id> subdirectories": len(batch_dirs),
     }
@@ -1013,12 +939,10 @@ def compact_table(
             + " — no single rewrite preserves both layouts; repair the "
             "target layout first"
         )
-    _, jmarker = _compacting_marker_path(spark, path)
-    fs.create(jmarker, False).close()  # no-overwrite: loses races loudly
     if batch_dirs:
-        return _done(_compact_batched())
+        return _compact_batched()
     if not part_dirs:
-        return _done(_compact_flat(root))
+        return _compact_flat(root)
     from concurrent.futures import ThreadPoolExecutor
 
     def _compact_leaf(leaf: str) -> tuple[int, int]:
@@ -1030,12 +954,7 @@ def compact_table(
     else:
         with ThreadPoolExecutor(max_workers=workers) as pool:
             results = list(pool.map(_compact_leaf, leaves))
-    return _done(
-        (
-            sum(b for b, _ in results),
-            sum(a for _, a in results),
-        )
-    )
+    return sum(b for b, _ in results), sum(a for _, a in results)
 
 
 def overwrite_partitions_load(
@@ -1052,7 +971,7 @@ def overwrite_partitions_load(
     session-global set/restore races with concurrent writers on the
     same SparkSession (another thread restoring "static" mid-flight
     would make this overwrite delete EVERY partition)."""
-    _open_for_write(df.sparkSession, path)
+    _recover(df.sparkSession, path)
     counted, count = _with_count(df)
     (
         counted.write.mode("overwrite")
@@ -1080,7 +999,7 @@ def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int
     import uuid as _uuid
 
     spark = df.sparkSession
-    _open_for_write(spark, path)
+    _recover(spark, path)
     dest = path.rstrip("/") + f"/batch-{batch_id}"
     fs, jdest = _hadoop_fs(spark, dest)
     applied = False

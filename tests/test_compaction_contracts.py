@@ -1,7 +1,8 @@
-"""Compaction contracts (r15): batched-layout compaction preserves the
-idempotent-append manifest, the _COMPACTING marker excludes concurrent
-writers, and the stray rescue saves in-flight rows instead of silently
-deleting them with the superseded copy."""
+"""Compaction contracts: batched-layout compaction preserves the
+idempotent-append manifest, rows that land while a compaction runs stay
+live (the compaction raises WriteConflict instead of deleting them with
+the superseded copy), and a writer after a crashed compaction restores
+the kept-aside copy before it loads."""
 
 from __future__ import annotations
 
@@ -10,16 +11,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from aws_pandas_etl_spark.sources import sinks
 from aws_pandas_etl_spark.sources.sinks import (
+    WriteConflict,
     append_load,
-    clear_compaction_marker,
     compact_table,
-    compaction_in_progress,
-    delete_load,
     idempotent_append_load,
     merge_load,
-    overwrite_load,
-    overwrite_partitions_load,
     read_batched_target,
 )
 
@@ -72,62 +70,33 @@ def test_batched_compaction_preserves_redelivery_noop(spark, tmp_path):
     assert read_batched_target(spark, p).count() == 3500
 
 
-def test_compacting_marker_refuses_writers(spark, tmp_path):
-    """Single-writer contract: every incremental writer refuses loudly
-    while the _COMPACTING marker stands, and clear_compaction_marker
-    is the explicit operator escape."""
-    p = str(tmp_path / "t")
-    df = spark.range(100).selectExpr("id", "id % 3 AS v")
-    df.write.parquet(p)
-    open(os.path.join(p, "_COMPACTING"), "w").close()
-    assert compaction_in_progress(spark, p)
-    with pytest.raises(IOError, match="_COMPACTING"):
-        append_load(df, p)
-    with pytest.raises(IOError, match="_COMPACTING"):
-        idempotent_append_load(df, p, "b0")
-    with pytest.raises(IOError, match="_COMPACTING"):
-        merge_load(df, p, keys=["id"], order_col="v")
-    with pytest.raises(IOError, match="_COMPACTING"):
-        delete_load(spark, p, df.select("id").limit(1), ["id"])
-    with pytest.raises(IOError, match="_COMPACTING"):
-        overwrite_partitions_load(df, p, ["v"])
-    with pytest.raises(IOError, match="_COMPACTING"):
-        overwrite_load(df, p)
-    # a second compactor also refuses (one compaction at a time)
-    with pytest.raises(IOError, match="clear_compaction_marker"):
-        compact_table(spark, p)
-    assert clear_compaction_marker(spark, p) is True
-    assert not compaction_in_progress(spark, p)
-    append_load(df, p)  # writers proceed once released
-    assert spark.read.parquet(p).count() == 200
+def _land_once(monkeypatch, land):
+    """Run ``land()`` once, right after the first staged copy's footer
+    check: after a compaction's write job, before its commit."""
+    real = sinks._footer_rows
+    fired = []
+
+    def hooked(spark, staged):
+        n = real(spark, staged)
+        if not fired:
+            fired.append(staged)
+            land()
+        return n
+
+    monkeypatch.setattr(sinks, "_footer_rows", hooked)
+    return fired
 
 
-def test_marker_released_on_success(spark, tmp_path):
-    p = str(tmp_path / "t")
-    spark.range(1000).repartition(16).write.parquet(p)
-    compact_table(spark, p, target_file_mb=512)
-    assert not compaction_in_progress(spark, p)
-    # mixed-layout refusal also leaves no marker behind
-    os.makedirs(os.path.join(p, "bkt=0"), exist_ok=True)
-    import shutil
-
-    part = next(f for f in os.listdir(p) if f.startswith("part-"))
-    shutil.copy(os.path.join(p, part), os.path.join(p, "bkt=0", part))
-    with pytest.raises(ValueError, match="mixes"):
-        compact_table(spark, p)
-    assert not compaction_in_progress(spark, p)
-
-
-def test_flat_stray_rescue_saves_inflight_rows(spark, tmp_path):
-    """A file landed between the snapshot and the swap (in-flight
-    writer that cleared the marker check before the marker appeared)
-    must survive the compaction, not ride into the deleted copy."""
+def test_flat_stray_rescue_saves_inflight_rows(spark, tmp_path, monkeypatch):
+    """A file that lands while a flat compaction runs stays live: the
+    compaction raises instead of deleting it with the superseded copy,
+    and a re-run compacts it with the rest."""
     p = str(tmp_path / "t")
     spark.range(1000).selectExpr("id").repartition(16).write.parquet(p)
 
     def land_stray():
-        # simulate the in-flight append: a new part-file appears after
-        # the snapshot listing (write to a sibling, move files in)
+        # an in-flight append: a new part-file appears after the
+        # compaction listed the target
         side = str(tmp_path / "side")
         spark.range(5000, 5010).selectExpr("id").coalesce(1).write.parquet(side)
         for f in os.listdir(side):
@@ -136,65 +105,73 @@ def test_flat_stray_rescue_saves_inflight_rows(spark, tmp_path):
                     os.path.join(side, f), os.path.join(p, "part-stray-" + f)
                 )
 
-    before, after = compact_table(
-        spark, p, target_file_mb=512, _after_snapshot=land_stray
-    )
-    assert before == 16
+    fired = _land_once(monkeypatch, land_stray)
+    with pytest.raises(WriteConflict, match="part-stray-"):
+        compact_table(spark, p, target_file_mb=512)
+    assert fired
     back = spark.read.parquet(p)
-    assert back.count() == 1010  # 1000 compacted + 10 rescued
+    assert back.count() == 1010  # 1000 untouched + 10 landed
     assert back.filter(F.col("id") >= 5000).count() == 10
+    assert compact_table(spark, p, target_file_mb=512) == (17, 1)
+    assert spark.read.parquet(p).count() == 1010
 
 
-def test_batched_stray_rescue_saves_inflight_batch(spark, tmp_path):
-    """A batch dir published after the snapshot survives the swap."""
+def test_batched_stray_rescue_saves_inflight_batch(spark, tmp_path, monkeypatch):
+    """A batch dir published while a batched compaction runs stays
+    live, its redelivery stays a no-op, and a re-run folds it in."""
     p = str(tmp_path / "t")
     _mkbatched(spark, p, n_batches=2)
 
-    state = {"done": False}
-
     def land_stray():
-        if state["done"]:  # seam fires once
-            return
-        state["done"] = True
         side = str(tmp_path / "sideb")
         spark.range(9000, 9100).selectExpr("id", "id % 5 AS v").coalesce(
             1
         ).write.parquet(side)
         os.rename(side, os.path.join(p, "batch-late"))
 
-    before, after = compact_table(
-        spark, p, target_file_mb=512, _after_snapshot=land_stray
-    )
-    assert before == 16
-    back = read_batched_target(spark, p)
-    assert back.count() == 2100  # 2000 compacted + 100 rescued
+    fired = _land_once(monkeypatch, land_stray)
+    with pytest.raises(WriteConflict, match="batch-late/"):
+        compact_table(spark, p, target_file_mb=512)
+    assert fired
+    assert read_batched_target(spark, p).count() == 2100  # 2000 + 100 landed
     assert os.path.isdir(os.path.join(p, "batch-late"))
-    # the rescued batch id is now part of the manifest: redelivery no-op
+    total, applied = idempotent_append_load(
+        spark.range(9000, 9100).selectExpr("id", "id % 5 AS v"), p, "late"
+    )
+    assert applied is False and total == 2100
+    assert compact_table(spark, p, target_file_mb=512) == (17, 1)
     total, applied = idempotent_append_load(
         spark.range(9000, 9100).selectExpr("id", "id % 5 AS v"), p, "late"
     )
     assert applied is False and total == 2100
 
 
-def test_writer_refuses_after_compaction_crash_between_renames(
+def test_writer_after_compaction_crash_between_renames_restores_and_loads(
     spark, tmp_path, fault_fs
 ):
-    """A compaction that dies between its two renames takes the live
-    directory, marker included, aside.  The next writer's recovery
-    restores both before its guard runs, so it refuses instead of
-    publishing over a target whose marker it never saw."""
-    p = str(tmp_path / "t")
-    spark.range(1000).selectExpr("id", "id % 3 AS v").repartition(16).write.parquet(p)
-
+    """A compaction that dies between its two renames leaves the live
+    directory aside.  The next writer, whether it rewrites the target
+    or appends to it, first restores that copy and then loads on top
+    of it; the rewriter's commit also removes the dead compaction's
+    staging."""
     def rename_in(op, args, n):
-        return op == "rename" and args[0].toString().endswith("._merge_tmp")
+        return op == "rename" and "._merge_tmp." in args[0].toString()
 
-    with fault_fs(rename_in) as plan:
-        with pytest.raises(Exception, match="injected fault"):
-            compact_table(spark, p, target_file_mb=512)
-    assert plan.injected and not os.path.exists(p)
-    df = spark.range(100).selectExpr("id", "id % 3 AS v")
-    with pytest.raises(IOError, match="_COMPACTING"):
-        merge_load(df, p, keys=["id"], order_col="v")
-    assert compaction_in_progress(spark, p)
-    assert spark.read.parquet(p).count() == 1000
+    df = spark.range(100).selectExpr("id + 1000 AS id", "id % 3 AS v")
+    for name, write, rows in (
+        ("merge", lambda p: merge_load(df, p, keys=["id"], order_col="v"), 1100),
+        ("append", lambda p: append_load(df, p), 100),
+    ):
+        p = str(tmp_path / name / "t")
+        spark.range(1000).selectExpr("id", "id % 3 AS v").repartition(16).write.parquet(p)
+        with fault_fs(rename_in) as plan:
+            with pytest.raises(Exception, match="injected fault"):
+                compact_table(spark, p, target_file_mb=512)
+        assert plan.injected and not os.path.exists(p)
+        assert write(p) == rows
+        assert spark.read.parquet(p).count() == 1100
+        siblings = sorted(os.listdir(os.path.dirname(p)))
+        if name == "merge":
+            assert siblings == ["t"]
+        else:  # an append commits no swap: the staging waits for one
+            assert siblings[1:] == ["t"] and "._merge_tmp." in siblings[0]

@@ -1976,8 +1976,13 @@ def test_decontaminate_bloom_bitmap_is_one_literal(spark):
     walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
     classes = [str(nd.get("class", "")) for nd in nodes]
     assert not any(c.endswith(".CreateArray") for c in classes)
-    lits = [
+    # the bitmap is the array<bigint> literal; other array literals in
+    # the plan are not the bitmap
+    bitmaps = [
         nd for nd in nodes
-        if str(nd.get("class", "")).endswith(".Literal") and "array" in json.dumps(nd.get("dataType"))
+        if str(nd.get("class", "")).endswith(".Literal")
+        and isinstance(nd.get("dataType"), dict)
+        and nd["dataType"].get("type") == "array"
+        and nd["dataType"].get("elementType") == "long"
     ]
-    assert lits and all(str(nd["value"]).count(",") == len(words) - 1 for nd in lits)
+    assert bitmaps and all(str(nd["value"]).count(",") == len(words) - 1 for nd in bitmaps)

@@ -563,6 +563,47 @@ def test_unknown_load_mode_fails_table_not_overwrites(spark, tmp_path):
     assert spark.read.parquet(f"{d}/t").count() == 1
 
 
+def test_pipeline_run_reports_write_conflict_as_failed_table(spark, tmp_path, monkeypatch):
+    """A merge table whose target gains a file between the write job and
+    the commit fails with the conflict's file names; the other tables
+    still load, and a retry re-reads the target and loads."""
+    import os
+    import shutil
+
+    from aws_pandas_etl_spark.plans.pipeline import TableSpec, run
+    from aws_pandas_etl_spark.sources import sinks
+
+    d = str(tmp_path)
+    spec = {
+        "m": TableSpec("m", load_mode="merge", merge_keys=["id"], order_col="ver"),
+        "o": TableSpec("o"),
+        "a": TableSpec("a", load_mode="append"),
+    }
+
+    def source(s, n):
+        return s.range(20).selectExpr("id", "1L AS ver")
+
+    assert [r.status for r in run(spark, spec, source, d)] == ["loaded"] * 3
+    real = sinks._footer_rows
+
+    def land_a_file(spark_, staged):
+        if os.path.basename(staged).startswith(".m._merge_tmp."):
+            part = sorted(f for f in os.listdir(f"{d}/m") if f.startswith("part-"))[0]
+            shutil.copy(f"{d}/m/{part}", f"{d}/m/part-landed.parquet")
+        return real(spark_, staged)
+
+    monkeypatch.setattr(sinks, "_footer_rows", land_a_file)
+    res = {r.table: r for r in run(spark, spec, source, d)}
+    assert res["m"].status == "failed" and "changed after this write" in res["m"].error
+    assert "part-landed.parquet" in res["m"].error
+    assert res["o"].status == "loaded" and res["o"].rows == 20
+    assert res["a"].status == "loaded" and res["a"].rows == 20
+    assert os.path.exists(f"{d}/m/part-landed.parquet")
+    monkeypatch.undo()
+    (retry,) = run(spark, {"m": spec["m"]}, source, d)
+    assert retry.status == "loaded" and retry.rows == 20
+
+
 def test_merge_load_preserves_user_src_column(spark, tmp_path):
     from pyspark.sql import Row
 
@@ -679,11 +720,13 @@ def test_merge_load_sibling_paths_are_hidden(tmp_path):
     from aws_pandas_etl_spark.sources.sinks import _merge_side_paths
 
     tmp, old = _merge_side_paths(str(tmp_path / "warehouse" / "t"))
-    assert tmp.rsplit("/", 1)[1] == ".t._merge_tmp"
+    assert tmp.rsplit("/", 1)[1].startswith(".t._merge_tmp.")
     assert old.rsplit("/", 1)[1] == ".t._merge_old"
+    # every swap stages at its own path
+    assert _merge_side_paths(str(tmp_path / "warehouse" / "t"))[0] != tmp
     # relative single-segment path doesn't gain a leading slash
     tmp2, _ = _merge_side_paths("t")
-    assert tmp2 == ".t._merge_tmp"
+    assert tmp2.startswith(".t._merge_tmp.")
 
 
 def test_delete_load_scrubs_keys_and_keeps_bystanders(spark, tmp_path):

@@ -6,12 +6,11 @@ the k-th Hadoop ``rename``/``delete`` raising instead of running (the
 call completes with nothing injected.  After each failure, opening (a
 copy of) the target, which runs its crash recovery (the writers' one,
 or for a partitioned compaction compact_table's recovery of its
-leaves), must show the full pre-call rows or the full post-call rows; a compaction's
-marker must keep blocking writers until it is cleared; and a re-run
-without faults, on the crash state itself, must give the full post-call
-rows, leave no hidden siblings, and return what the crash point calls
-for: the fault-free result, or for a compaction whose swap committed,
-the result of compacting its new copy."""
+leaves), must show the full pre-call rows or the full post-call rows;
+and a re-run without faults, on the crash state itself, must give the
+full post-call rows, leave no hidden siblings, and return what the
+crash point calls for: the fault-free result, or for a compaction
+whose swap committed, the result of compacting its new copy."""
 
 from __future__ import annotations
 
@@ -25,10 +24,9 @@ from pyspark.sql import Row
 
 from aws_pandas_etl_spark.sources import sinks
 from aws_pandas_etl_spark.sources.sinks import (
+    WriteConflict,
     append_load,
-    clear_compaction_marker,
     compact_table,
-    compaction_in_progress,
     delete_load,
     idempotent_append_load,
     merge_load,
@@ -44,15 +42,14 @@ class Case:
     expect: object  # fault-free result of ``call``
     batched: bool = False  # read back with read_batched_target
     # result of the re-run that follows a fault, given how many of the
-    # faulted call's swaps committed (their tmp was renamed in) and
-    # whether its stray landed; None: the fault-free result either way
+    # faulted call's swaps committed (their tmp was renamed in); None:
+    # the fault-free result either way
     rerun: Callable | None = None
-    compaction: bool = False
     # the crash recovery that opening the target runs
     recover: Callable = sinks._recover
 
-    def rerun_expect(self, committed: int, landed: bool):
-        return self.expect if self.rerun is None else self.rerun(committed, landed)
+    def rerun_expect(self, committed: int):
+        return self.expect if self.rerun is None else self.rerun(committed)
 
 
 def _flat_small_files(spark, p):
@@ -76,22 +73,29 @@ def _batched_small_files(spark, p):
 _LANDED: set[str] = set()
 
 
-def _compact_with_stray(spark, p):
-    """compact_table with an in-flight append that lands one part-file
-    after the snapshot, on the first call for ``p`` only, so that a
-    fault can cut the stray rescue short."""
+def _compact_after_conflict(spark, p):
+    """compact_table meets a part-file that an append lands after its
+    write job (on the first call for ``p`` only), so its commit raises
+    WriteConflict with the landed rows live; the caller re-runs it, and
+    a fault can cut that re-run short, including its removal of the
+    first attempt's staging."""
+    real = sinks._footer_rows
 
-    def land_stray():
-        if p in _LANDED:
-            return
-        _LANDED.add(p)
-        side = p + "-stray"
-        spark.range(5000, 5010).coalesce(1).write.parquet(side)
-        for f in os.listdir(side):
-            if f.startswith("part-"):
-                os.rename(os.path.join(side, f), os.path.join(p, "part-stray-" + f))
+    def land_stray(spark_, staged):
+        n = real(spark_, staged)
+        if p not in _LANDED:
+            _LANDED.add(p)
+            append_load(spark.range(5000, 5010).coalesce(1), p)
+        return n
 
-    return compact_table(spark, p, target_file_mb=512, _after_snapshot=land_stray)
+    sinks._footer_rows = land_stray
+    try:
+        return compact_table(spark, p, target_file_mb=512)
+    except WriteConflict:
+        pass
+    finally:
+        sinks._footer_rows = real
+    return compact_table(spark, p, target_file_mb=512)
 
 
 CASES = {
@@ -127,8 +131,7 @@ CASES = {
         setup=_flat_small_files,
         call=lambda spark, p: compact_table(spark, p, target_file_mb=512),
         expect=(16, 1),
-        rerun=lambda committed, landed: (1, 1) if committed else (16, 1),
-        compaction=True,
+        rerun=lambda committed: (1, 1) if committed else (16, 1),
     ),
     # one leaf at a time, so that the k-th step is the same in every run;
     # a re-run compacts the leaves whose swap had not committed
@@ -136,8 +139,7 @@ CASES = {
         setup=_partitioned_small_files,
         call=lambda spark, p: compact_table(spark, p, target_file_mb=512, parallelism=1),
         expect=(16, 2),
-        rerun=lambda committed, landed: (committed + 8 * (2 - committed), 2),
-        compaction=True,
+        rerun=lambda committed: (committed + 8 * (2 - committed), 2),
         recover=lambda spark, p: sinks._partition_leaves(spark, p),
     ),
     "compact_table_batched": Case(
@@ -145,31 +147,28 @@ CASES = {
         call=lambda spark, p: compact_table(spark, p, target_file_mb=512),
         expect=(24, 1),
         batched=True,
-        rerun=lambda committed, landed: (1, 1) if committed else (24, 1),
-        compaction=True,
+        rerun=lambda committed: (1, 1) if committed else (24, 1),
     ),
-    # the stray rides aside with the old copy and is rescued after the
-    # commit; a re-run compacts whatever part-files it then finds
+    # the stray stays live and the first attempt raises; the re-run
+    # compacts the stray with the rest
     "compact_table_flat_stray": Case(
         setup=_flat_small_files,
-        call=_compact_with_stray,
-        expect=(16, 2),
-        rerun=lambda committed, landed: (
-            (2, 1) if committed else (17, 1) if landed else (16, 2)
-        ),
-        compaction=True,
+        call=_compact_after_conflict,
+        expect=(17, 1),
+        rerun=lambda committed: (1, 1) if committed else (17, 1),
     ),
 }
 
-# every writer, each of which must refuse while a compaction runs
+# every writer, in an order that each layout accepts, each of which may
+# land while a compaction runs
 WRITERS = {
-    "append_load": lambda spark, p: append_load(spark.range(1), p),
     "idempotent_append_load": lambda spark, p: idempotent_append_load(
-        spark.range(1), p, batch_id="late"
+        spark.range(7000, 7010), p, batch_id="late"
     ),
-    "overwrite_load": lambda spark, p: overwrite_load(spark.range(1), p),
-    "merge_load": lambda spark, p: merge_load(spark.range(1), p, ["id"], "id"),
-    "delete_load": lambda spark, p: delete_load(spark, p, spark.range(1), ["id"]),
+    "overwrite_load": lambda spark, p: overwrite_load(spark.range(100), p),
+    "append_load": lambda spark, p: append_load(spark.range(100, 110), p),
+    "merge_load": lambda spark, p: merge_load(spark.range(105, 120), p, ["id"], "id"),
+    "delete_load": lambda spark, p: delete_load(spark, p, spark.range(5), ["id"]),
     "compact_table": lambda spark, p: compact_table(spark, p),
 }
 
@@ -186,7 +185,7 @@ def _hidden_siblings(p: str) -> list[str]:
 
 
 def _renamed_in(src: str, dst: str) -> bool:
-    return os.path.basename(src) == f".{os.path.basename(dst)}._merge_tmp"
+    return os.path.basename(src).startswith(f".{os.path.basename(dst)}._merge_tmp.")
 
 
 @pytest.mark.parametrize("name", list(CASES))
@@ -213,23 +212,14 @@ def test_every_swap_fault_leaves_pre_or_post_target(spark, tmp_path, fault_fs, n
             assert _hidden_siblings(p) == []
             break
         committed = sum(_renamed_in(src, dst) for src, dst in plan.renamed)
-        landed = p in _LANDED
         # inspect a copy, so that the calls below meet the crash state
         seen = str(tmp_path / f"k{k}-seen" / "t")
         shutil.copytree(os.path.dirname(p), os.path.dirname(seen))
         case.recover(spark, seen)
         assert _rows(spark, seen, case.batched) in (pre, post), f"fault #{k}"
-        marked = any(c.endswith("/_COMPACTING") for c in plan.created)
-        assert compaction_in_progress(spark, seen) is marked, f"fault #{k}"
-        if marked:
-            with pytest.raises(IOError, match="_COMPACTING"):
-                append_load(spark.range(1), p)
-            assert clear_compaction_marker(spark, p)
-        want = case.rerun_expect(committed, landed)
-        assert case.call(spark, p) == want, f"fault #{k}"
+        assert case.call(spark, p) == case.rerun_expect(committed), f"fault #{k}"
         assert _rows(spark, p, case.batched) == post, f"fault #{k}"
         assert _hidden_siblings(p) == [], f"fault #{k}"
-        assert not compaction_in_progress(spark, p)
     else:
         pytest.fail("no fault-free run within 29 rename/delete steps")
     # the matrix reached the commit: a keep-aside rename and a rename-in
@@ -238,32 +228,95 @@ def test_every_swap_fault_leaves_pre_or_post_target(spark, tmp_path, fault_fs, n
 
 @pytest.mark.parametrize("name", ["compact_table_flat", "compact_table_batched"])
 def test_writers_arriving_mid_compaction_leave_its_new_copy(
-    spark, tmp_path, fault_fs, name
+    spark, tmp_path, monkeypatch, name
 ):
-    """Every writer that arrives while a compaction stages its new copy
-    is refused before it touches anything, so the compaction still
-    publishes every row.  The writers run at the staging of the marker
-    into the new copy, after the rewrite job and before the commit."""
+    """Every writer that arrives while a compaction runs, after its
+    write job and before its commit, succeeds; the compaction then
+    raises WriteConflict without publishing its new copy, and the
+    target holds exactly what the writers alone make of it."""
     case = CASES[name]
-    p = str(tmp_path / "t")
+    ref, p = str(tmp_path / "ref" / "t"), str(tmp_path / "t")
+    case.setup(spark, ref)
+    for write in WRITERS.values():
+        write(spark, ref)
+    want = _rows(spark, ref, batched=True)
+
     case.setup(spark, p)
-    pre = _rows(spark, p, case.batched)
-    refused = []
+    landed = []
+    real = sinks._footer_rows
 
-    def writers_arrive(op, args, n):
-        if op == "create" and not refused and args[0].toString().endswith(
-            "/.t._merge_tmp/_COMPACTING"
-        ):
-            refused.append(None)
+    def writers_arrive(spark_, staged):
+        n = real(spark_, staged)
+        if not landed:
+            landed.append(None)
             for writer, write in WRITERS.items():
-                with pytest.raises(IOError, match="_COMPACTING"):
-                    write(spark, p)
-                refused.append(writer)
-        return False
+                write(spark, p)
+                landed.append(writer)
+        return n
 
-    with fault_fs(writers_arrive):
-        assert case.call(spark, p) == case.expect
-    assert refused[1:] == list(WRITERS)
-    assert _rows(spark, p, case.batched) == pre
-    assert not compaction_in_progress(spark, p)
+    monkeypatch.setattr(sinks, "_footer_rows", writers_arrive)
+    with pytest.raises(WriteConflict):
+        case.call(spark, p)
+    assert landed[1:] == list(WRITERS)
+    assert len(want) == 115 and _rows(spark, p, batched=True) == want
+    # the writers' commits removed the compaction's staging
     assert _hidden_siblings(p) == []
+
+
+def _source(spark, lo: int, hi: int, boom: int | None = None):
+    """Rows ``(id, bkt, ver)`` for ids ``lo..hi-1``; when ``boom`` is
+    given, the job that computes them raises at that id."""
+    from pyspark.sql import functions as F
+
+    def check(i):
+        if i == boom:
+            raise RuntimeError(f"source failed at row {i}")
+        return i
+
+    ids = F.col("id") if boom is None else F.udf(check, "long")("id")
+    return spark.range(lo, hi).select(ids.alias("id")).selectExpr(
+        "id", "id % 4 AS bkt", "1L AS ver"
+    )
+
+
+# the writers that do not rewrite the whole target: (write(df, path,
+# tag), read back with read_batched_target)
+PARTWAY = {
+    "append_load": (lambda df, p, tag: append_load(df, p), False),
+    "idempotent_append_load": (
+        lambda df, p, tag: idempotent_append_load(df, p, batch_id=tag),
+        True,
+    ),
+    "overwrite_partitions_load": (
+        lambda df, p, tag: sinks.overwrite_partitions_load(df, p, ["bkt"]),
+        False,
+    ),
+    "merge_load_partitioned": (
+        lambda df, p, tag: sinks.merge_load_partitioned(
+            df, p, ["id"], "ver", "bkt", layout_spec="pmod(id,4)"
+        ),
+        False,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(PARTWAY))
+def test_source_raising_partway_leaves_target_as_it_was(spark, tmp_path, name):
+    """A writer whose source raises partway through its job leaves the
+    target's rows and visible files as they were, no staging visible to
+    readers, and a clean re-run loads what a fault-free call loads."""
+    write, batched = PARTWAY[name]
+    ref, p = str(tmp_path / "ref" / "t"), str(tmp_path / "t")
+    for target in (ref, p):
+        write(_source(spark, 0, 100), target, "seed")
+    want = write(_source(spark, 50, 150), ref, "next")
+    post = _rows(spark, ref, batched)
+
+    fs, jp = sinks._hadoop_fs(spark, p)
+    pre, files = _rows(spark, p, batched), sinks._visible_files(fs, jp)
+    with pytest.raises(Exception, match="source failed at row 100"):
+        write(_source(spark, 50, 150, boom=100), p, "next")
+    assert _rows(spark, p, batched) == pre
+    assert sinks._visible_files(fs, jp) == files
+    assert write(_source(spark, 50, 150), p, "next") == want
+    assert _rows(spark, p, batched) == post
