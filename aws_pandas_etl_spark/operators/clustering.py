@@ -9,23 +9,25 @@ This variant pins every source of nondeterminism:
 - **Init**: centroids are the ``k`` vectors with the smallest ids
   (k-means|| would sample; deterministic-by-id is the reproducible
   stand-in and costs one bounded ``limit(k)`` collect).
-- **Distances**: per-row double left-folds over the vector array
-  (``similarity.l2sq``) — a PROJECTION, so deterministic under any
+- **Distances**: one nearest-centroid rule for every k-means, IVF and
+  PQ assignment.  ``_sq_dists`` folds each squared distance in
+  dimension order in float64 (numpy, vectorized across a batch's
+  rows) and ``_nearest`` takes the argmin with ties to the smaller
+  centroid id; ``nearest_centroid`` (a Column), ``_topp_assign``
+  (top-p rows) and ``nearest_cells`` (one vector on the driver) all
+  call them.  A per-row function, so deterministic under any
   partitioning; the DuckDB oracle mirrors the in-order fold with
-  ``list_sum(list_transform(list_zip(...)))``, the pattern the IVF /
-  LSH / cosine oracles already prove bit-identical.  (An earlier
-  draft summed decimal-rounded terms instead; the BigDecimal
-  allocation per element made the 50x probe 10x slower for a
-  determinism guarantee the projection already has.)  Ties in the
-  argmin break by centroid id.
+  ``list_sum(list_transform(list_zip(...)))`` and ``ORDER BY d2,
+  cid``, bit-identical.  ``_dist_structs`` is the same rule as an
+  interpreted Column (the reference the parity tests compare against).
 - **Centroid update**: the proven decimal-mean pattern (cast each
   component to DECIMAL(18,6), exact order-independent SUM, cast to
   DOUBLE, divide by count) — the ONLY aggregation in the loop whose
   accumulation order could vary, hence the only place decimals are
   needed.
 
-Scale shape: each Lloyd iteration is one broadcast of k*dim doubles
-(bounded by k, NOT by corpus size — a legitimate broadcast), one
+Scale shape: each Lloyd iteration ships k*dim doubles to the Python
+workers in the UDF's closure (bounded by k, NOT by corpus size), one
 narrow argmin projection over the vectors, and one shuffle of
 |clusters| x dim partial sums for the update.  The per-iteration
 driver collect moves k*dim values — plan-time metadata, not data.
@@ -35,6 +37,8 @@ join-based update).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,85 +61,96 @@ def _dist_structs(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Colum
     )
 
 
-def _assign(df: DataFrame, vec_col: str, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """argmin_c l2sq(vec, centroid_c), ties -> smallest cid.
-
-    Arrow-batched numpy twin of the Column fold (vectorized across a
-    batch's rows instead of interpreted per element): per centroid,
-    the squared distance accumulates ONE DIMENSION AT A TIME in
-    float64 —
-    ``acc = acc + (x_i - c_i)^2`` vectorized across the batch's rows —
-    which is the identical IEEE left fold the interpreted
-    ``aggregate(zip_with(...))`` Column and the oracle's ``list_sum``
-    compute, so assignments (and every tie) are bit-for-bit unchanged
-    (verified: 0 mismatches corpus-wide, and the oracle sweep is the
-    standing regression gate).  Strict ``<`` keeps the earlier
-    (smaller) cid on equal distances, mirroring the (d2, cid) struct
-    min.  Measured: 1.85 s -> 0.29 s for the sf0.1 assignment pass —
-    the interpreted higher-order fold was the whole cost.  The Column
-    variant remains in _dist_structs for the top-p (multi-probe)
-    path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+def _ordered(cents: list[tuple[int, list[float]]]) -> list[tuple[int, list[float]]]:
+    """Centroids as cid-ascending ``(int cid, float vector)`` pairs, the
+    order ``_nearest``'s tie-break relies on."""
     if not cents:
-        raise ValueError("_assign requires at least one centroid")
-    # replace (never duplicate) an existing 'cluster' field — the
-    # withColumn semantics this twin stands in for
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "cluster"]
-        + [T.StructField("cluster", T.IntegerType())]
+        raise ValueError("nearest-centroid assignment requires at least one centroid")
+    return sorted((int(cid), [float(x) for x in cv]) for cid, cv in cents)
+
+
+def _sq_dists(m, ordered: list[tuple[int, list[float]]]):
+    """(k, n) float64 squared distances from the n rows of ``m`` to the
+    k centroids of ``ordered``.  Each distance accumulates ONE
+    DIMENSION AT A TIME, ``acc = acc + (x_i - c_i)^2`` vectorized
+    across the rows: the identical IEEE left fold the interpreted
+    ``l2sq`` Column and the oracles' ``list_sum`` compute (never a
+    BLAS reduction, whose blocked summation reorders the adds)."""
+    out = np.empty((len(ordered), len(m)))
+    for j, (_, cv) in enumerate(ordered):
+        acc = np.zeros(len(m))
+        for i, ci in enumerate(cv):
+            d = m[:, i] - ci
+            acc = acc + d * d
+        out[j] = acc
+    return out
+
+
+def _nearest(m, ordered: list[tuple[int, list[float]]], p: int):
+    """(min(p, k), n) int32 cids: row r holds each vector's (r+1)-th
+    nearest centroid.  p rounds of ``argmin`` over the cid-ascending
+    axis, each masking its pick with inf; argmin returns the FIRST
+    minimum, so ties go to the smaller cid (the (d2, cid) struct order
+    of ``_dist_structs`` and the oracles' ``ORDER BY d2, cid``)."""
+    d = _sq_dists(m, ordered)
+    cids = np.array([cid for cid, _ in ordered], dtype=np.int32)
+    cols = np.arange(d.shape[1])
+    out = np.empty((min(p, len(ordered)), d.shape[1]), dtype=np.int32)
+    for r in range(len(out)):
+        j = np.argmin(d, axis=0)
+        out[r] = cids[j]
+        d[j, cols] = np.inf
+    return out
+
+
+def _valid_rows(vecs, dim: int):
+    """``(mask, m)``: which of ``vecs`` are non-null with ``dim``
+    elements, and those rows as an (n_valid, dim) float64 matrix."""
+    mask = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), dtype=bool, count=len(vecs)
     )
-    ordered = sorted((int(cid), [float(x) for x in cv]) for cid, cv in cents)
+    m = np.array([v for v, ok in zip(vecs, mask) if ok], dtype=np.float64)
+    return mask, m.reshape(-1, dim)
+
+
+def nearest_cells(
+    vec: list[float], cents: list[tuple[int, list[float]]], p: int
+) -> list[int]:
+    """The ``p`` nearest centroid ids of one vector, nearest first: the
+    driver-side probe choice of the IVF queries, by the same rule as
+    the distributed assignment."""
+    m = np.asarray([vec], dtype=np.float64)
+    return [int(c) for c in _nearest(m, _ordered(cents), p)[:, 0]]
+
+
+def nearest_centroid(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Column:
+    """int Column: argmin_c l2sq(vec, centroid_c), ties to the smaller
+    cid.  A scalar pandas UDF over Arrow batches, so the other columns
+    stay on the JVM; a null or ragged vector gets NULL (the Column
+    fold's behavior).  The numpy fold measured 0.29 s for the sf0.1
+    assignment pass against 1.85 s for the interpreted Column fold,
+    whose per-element higher-order lambda was the whole cost.
+
+    The UDF is marked nondeterministic although it is not: that keeps
+    the optimizer from copying it into a filter pushed below its
+    projection (a join's inferred ``IS NOT NULL``, a filter on the
+    cell), which would run the fold twice per row.  The price: no
+    filter moves below the assignment either, so callers filter their
+    input before assigning it."""
+    from pyspark.sql.functions import pandas_udf
+
+    ordered = _ordered(cents)
     dim = len(ordered[0][1])
 
-    def _map(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = pdf.drop(columns=["cluster"], errors="ignore")
-            if n == 0:
-                out["cluster"] = pd.Series(dtype="Int32")
-                yield out
-                continue
-            # null/ragged embeddings get a null cluster (the Column
-            # fold's behavior) instead of raising inside the batch
-            vals = list(pdf[vec_col])
-            valid = np.array(
-                [v is not None and len(v) == dim for v in vals],
-                dtype=bool,
-            )
-            cluster = pd.array([None] * n, dtype="Int32")
-            if valid.any():
-                m = np.array(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v, ok in zip(vals, valid)
-                        if ok
-                    ]
-                )
-                nv = int(valid.sum())
-                best_d = None
-                best_c = None
-                for cid, cv in ordered:
-                    acc = np.zeros(nv)
-                    for i, ci in enumerate(cv):
-                        d = m[:, i] - ci
-                        acc = acc + d * d
-                    if best_d is None:
-                        best_d = acc
-                        best_c = np.full(nv, cid, dtype=np.int32)
-                    else:
-                        better = acc < best_d
-                        best_d = np.where(better, acc, best_d)
-                        best_c = np.where(better, cid, best_c).astype(
-                            np.int32
-                        )
-                cluster[valid] = best_c
-            out["cluster"] = cluster
-            yield out
+    @pandas_udf("int")
+    def _cell(vecs: pd.Series) -> pd.Series:
+        mask, m = _valid_rows(vecs, dim)
+        out = pd.array([None] * len(vecs), dtype="Int32")
+        if mask.any():
+            out[mask] = _nearest(m, ordered, 1)[0]
+        return pd.Series(out)
 
-    return df.mapInPandas(_map, schema=out_schema)
+    return _cell.asNondeterministic()(F.col(vec_col))
 
 
 def _update(assigned: DataFrame, vec_col: str) -> list[tuple[int, list[float]]]:
@@ -144,8 +159,8 @@ def _update(assigned: DataFrame, vec_col: str) -> list[tuple[int, list[float]]]:
     rows = (
         assigned.select("cluster", F.posexplode(vec_col).alias("pos", "v"))
         # ragged (non-null, wrong-dim) vectors survive posexplode with a
-        # NULL cluster from _assign; drop them or sorted(by_cid) below
-        # compares None to int and the fit crashes
+        # NULL cluster from nearest_centroid; drop them or sorted(by_cid)
+        # below compares None to int and the fit crashes
         .filter(F.col("cluster").isNotNull())
         .groupBy("cluster", "pos")
         .agg(
@@ -180,7 +195,8 @@ def kmeans_fit(
     )
     cents = [(i, [float(v) for v in r[vec_col]]) for i, r in enumerate(init)]
     for _ in range(iters - 1):
-        cents = _update(_assign(embeddings, vec_col, cents), vec_col)
+        assigned = embeddings.withColumn("cluster", nearest_centroid(vec_col, cents))
+        cents = _update(assigned, vec_col)
     return cents
 
 
@@ -198,7 +214,7 @@ def kmeans_lloyd(
     (e.g. artifact-cached) clustering; None fits on the input."""
     if cents is None:
         cents = kmeans_fit(embeddings, k, iters, id_col, vec_col)
-    return _assign(embeddings, vec_col, cents).select(id_col, "cluster")
+    return embeddings.select(id_col, nearest_centroid(vec_col, cents).alias("cluster"))
 
 
 def semantic_dedup_pairs(
@@ -367,84 +383,28 @@ def _topp_assign(
     vec_col: str,
 ) -> DataFrame:
     """Top-p multi-probe cluster assignment: (id_col, cluster) rows,
-    ``assign_probes`` per vector, against literal centroids.
-
-    Arrow-batched numpy twin of the sorted-struct slice (the _assign
-    contract): per-cell distances accumulate one dimension at a time
-    in float64 (identical IEEE left fold), and p rounds of
-    ``np.argmin`` over the cid-ascending cell axis reproduce the
-    (d2, cid) struct sort's tie-breaks exactly (argmin returns the
-    FIRST minimum = smallest cid).  Values bit-identical to the
-    Column path; measured 3.1 s -> ~0.4 s for the sf0.1 top-2 pass."""
-    import numpy as np
-    import pandas as pd
+    ``assign_probes`` per vector (``_nearest`` over Arrow batches).
+    Null/ragged vectors are dropped from the probe output rather than
+    crashing the batch."""
     from pyspark.sql import types as T
 
-    if not cents:
-        raise ValueError("_topp_assign requires at least one centroid")
-    id_field = next(f for f in embeddings.schema.fields if f.name == id_col)
-    out_schema = T.StructType(
-        [id_field, T.StructField("cluster", T.IntegerType())]
-    )
-    ordered = sorted((int(cid), [float(x) for x in cv]) for cid, cv in cents)
-    p = min(assign_probes, len(ordered))
-    cid_arr = [cid for cid, _ in ordered]
+    ordered = _ordered(cents)
     dim = len(ordered[0][1])
+    id_field = next(f for f in embeddings.schema.fields if f.name == id_col)
+    out_schema = T.StructType([id_field, T.StructField("cluster", T.IntegerType())])
 
     def _map(batches):
-        import numpy as np
-
         for pdf in batches:
-            # precondition (documented): embeddings are non-null and
-            # fixed-dim; null/ragged rows are dropped from the probe
-            # output rather than crashing the Arrow batch
-            vals = list(pdf[vec_col])
-            keep = [
-                i
-                for i, v in enumerate(vals)
-                if v is not None and len(v) == dim
-            ]
-            if len(keep) != len(vals):
-                pdf = pdf.iloc[keep]
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cluster": pd.Series(dtype="int32"),
-                    }
-                )
-                continue
-            m = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            accs = np.empty((len(ordered), n))
-            for j, (_, cv) in enumerate(ordered):
-                acc = np.zeros(n)
-                for i, ci in enumerate(cv):
-                    d = m[:, i] - ci
-                    acc = acc + d * d
-                accs[j] = acc
-            ids = pdf[id_col].to_numpy()
-            out_id, out_c = [], []
-            masked = accs
-            rows = np.arange(n)
-            cvec = np.asarray(cid_arr, dtype=np.int32)
-            for _ in range(p):
-                jmin = np.argmin(masked, axis=0)
-                out_id.append(ids)
-                out_c.append(cvec[jmin])
-                masked[jmin, rows] = np.inf
+            mask, m = _valid_rows(pdf[vec_col], dim)
+            near = _nearest(m, ordered, assign_probes)
             yield pd.DataFrame(
                 {
-                    id_col: np.concatenate(out_id),
-                    "cluster": np.concatenate(out_c),
+                    id_col: np.tile(pdf[id_col].to_numpy()[mask], len(near)),
+                    "cluster": near.ravel(),
                 }
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        _map, schema=out_schema
-    )
+    return embeddings.select(id_col, vec_col).mapInPandas(_map, schema=out_schema)
 
 
 # neq per-label blocking is a win while distinct labels per cell stay
@@ -468,7 +428,7 @@ def cell_pair_cos(
     neq: tuple[str, str] | None = None,
 ) -> DataFrame:
     """All cross pairs within each cell with exact cosine, Arrow-batched
-    (the _assign/_topp_assign contract applied to PAIR scoring): per
+    (the ``_sq_dists`` contract applied to PAIR scoring): per
     dimension, the dot accumulates ONE outer product at a time in
     float64 — ``acc = acc + X[:,i] ⊗ Y[:,i]`` — which is element-wise
     the identical IEEE left fold the interpreted

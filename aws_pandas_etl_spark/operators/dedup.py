@@ -324,55 +324,22 @@ def dedup_incremental(
 
 def _check_simhash_bits(num_bits: int) -> None:
     """num_bits is capped at 63: bit 63's weight (1 << 63) overflows
-    signed 64-bit (both the ``F.lit`` long and numpy int64), and under
-    ANSI mode that's a runtime error, not a wrap.  63 bits of SimHash
+    signed 64-bit (numpy int64 and the ``bigint`` output column), and
+    under ANSI mode that's a runtime error, not a wrap.  63 bits of SimHash
     loses nothing material; packing the full 64 would need unsigned /
     two's-complement handling on both engines for zero gain."""
     if not 1 <= num_bits <= 63:
         raise ValueError(f"simhash num_bits must be in [1, 63], got {num_bits}")
 
 
-def simhash64(text_col: str, num_bits: int = 32) -> "F.Column":
-    """SimHash over whitespace tokens: bit i is set when the sum over
-    tokens of (bit_i(token_hash) ? +1 : -1) is positive.  Pure array
-    aggregate — no explode, no shuffle.  ``num_bits`` <= 63 (see
-    ``_check_simhash_bits``)."""
-    _check_simhash_bits(num_bits)
-    toks = F.filter(F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " "), lambda t: t != "")
-    hashed = F.transform(toks, lambda t: md5_bigint(t))
-    counts = F.aggregate(
-        hashed,
-        F.array_repeat(F.lit(0).cast("long"), num_bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bits - 1)),
-                lambda i: F.getbit(h, i) * 2 - 1,
-            ),
-            lambda x, y: x + y.cast("long"),
-        ),
-    )
-    powers = lit_array([1 << i for i in range(num_bits)], "bigint")
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            powers,
-            lambda cnt, p: F.when(cnt > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", num_bits: int = 32
 ) -> DataFrame:
-    """doc_id -> simhash via numpy-vectorized mapInPandas.
-
-    Same integer math as the Column version ``simhash64`` (15-hex-digit
-    md5 base hash, ±1 per bit, sign -> bit) but vectorized: the Column
-    version runs tokens×bits interpreted lambda steps per doc.  Docs
-    with zero tokens are dropped (matches the unnest-based oracle)."""
+    """doc_id -> simhash via numpy-vectorized mapInPandas: SimHash over
+    the normalized tokens, bit i set when the sum over tokens of
+    (bit_i(md5_15hex(token)) ? +1 : -1) is positive.  ``num_bits`` <= 63
+    (see ``_check_simhash_bits``).  Docs with zero tokens are dropped
+    (matches the unnest-based oracle)."""
     import numpy as np
     import pandas as pd
 

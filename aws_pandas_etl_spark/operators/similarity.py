@@ -159,31 +159,6 @@ def l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cid_col: str = "cid",
-    cvec_col: str = "cvec",
-) -> DataFrame:
-    """IVF coarse assignment: nearest centroid per vector (argmin L2,
-    ties broken by centroid id).  Broadcast cross-join with K centroids
-    + one window — O(n*K) distance evaluations, the standard IVF build
-    cost.  At scale the cell id becomes a partition/bucket column."""
-    from pyspark.sql import Window
-
-    d2 = l2sq(F.col(vec_col), F.col(cvec_col))
-    w = Window.partitionBy(id_col).orderBy(F.col("d2"), F.col(cid_col))
-    return (
-        embeddings.crossJoin(F.broadcast(centroids))
-        .withColumn("d2", d2)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, vec_col, F.col(cid_col).alias("cell"))
-    )
-
-
 def topk_ivf(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -204,34 +179,31 @@ def topk_ivf(
     None trains here with the same deterministic Lloyd's the
     clustering operators use (id-ordered init, exact-decimal updates —
     see operators/clustering.py for the determinism contract).  Probe
-    cells are chosen on the driver with the left-associated IEEE fold
-    over k*dim floats (plan-time metadata, the PQ-LUT precedent), so
-    the probed set is deterministic and cross-engine reproducible.
+    cells are the query's ``nprobe`` nearest (``nearest_cells``, on the
+    driver) and every vector's cell is ``nearest_centroid``: one
+    nearest-centroid rule, so the probed set is deterministic and
+    cross-engine reproducible.
 
     At 100 TB: assignment is precomputed and the table partitioned by
     cell, so a query scans nprobe/num_centroids of the data; here the
-    argmin is a codegen projection against k*dim broadcast literals —
+    argmin is a numpy fold over Arrow batches (a scalar pandas UDF) —
     no join, no shuffle before the final top-k."""
     # Lazy import: clustering imports l2sq/dot from this module.
-    from aws_pandas_etl_spark.operators.clustering import _assign, kmeans_fit
+    from aws_pandas_etl_spark.operators.clustering import (
+        kmeans_fit,
+        nearest_cells,
+        nearest_centroid,
+    )
 
     if cents is None:
         cents = kmeans_fit(
             embeddings, k=num_centroids, iters=iters, id_col=id_col, vec_col=vec_col
         )
-    qd = [float(x) for x in query_vec]
-    ranked = []
-    for cid, cv in cents:
-        acc = 0.0
-        for x, c in zip(qd, cv):
-            d = x - float(c)
-            acc = acc + d * d
-        ranked.append((acc, cid))
-    probe = [cid for _, cid in sorted(ranked)[:nprobe]]
+    probe = nearest_cells(query_vec, cents, nprobe)
     qlit = lit_array(query_vec)
     sim = F.round(cosine(F.col(vec_col), qlit), round_digits)
     return (
-        _assign(embeddings, vec_col, cents)
+        embeddings.withColumn("cluster", nearest_centroid(vec_col, cents))
         .filter(F.col("cluster").isin(probe))
         .select(F.col(id_col), sim.alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col))

@@ -7174,12 +7174,12 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     init, exact-decimal distances, decimal-mean updates, cid
     tie-breaks).
 
-    Plan per iteration: one bounded broadcast of k*dim doubles as
-    literals (independent of corpus size), argmin inside codegen, one
-    |k * dim|-row shuffle for the update.  The k-means building block
-    behind semantic dedup (SemDeDup), IVF training, and corpus
-    diversity analysis.  Centroids come from the shared fit-once
-    artifact (_kmeans_cents)."""
+    Plan per iteration: k*dim doubles shipped to the Python workers
+    (independent of corpus size), the numpy nearest-centroid fold over
+    Arrow batches, one |k * dim|-row shuffle for the update.  The
+    k-means building block behind semantic dedup (SemDeDup), IVF
+    training, and corpus diversity analysis.  Centroids come from the
+    shared fit-once artifact (_kmeans_cents)."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -7401,9 +7401,9 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell dominate query latency and the index needs more centroids or
     a re-train; the k ∝ corpus rule keeps expected share flat.
 
-    Scale shape: the argmin assignment is a codegen projection against
-    k·dim broadcast literals; the report is a k-row aggregate plus a
-    1-row total."""
+    Scale shape: the argmin assignment is the numpy nearest-centroid
+    fold over Arrow batches (``nearest_centroid``); the report is a
+    k-row aggregate plus a 1-row total."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -15039,22 +15039,22 @@ def _pq_adc_expr(
     books: list[list[tuple[int, list[float]]]], qvec: list[float]
 ) -> F.Column:
     """The ADC distance as a Column over code_0..3: per-subspace LUTs
-    built on the driver from the query vector (python float ops are
-    the same IEEE doubles in the same left-associated order as the
-    engine fold), looked up by code and summed in fixed order."""
+    built on the driver from the query vector (``_sq_dists``, the
+    engine fold's IEEE doubles in the same order), looked up by code
+    and summed in fixed order."""
+    import numpy as np
+
+    from aws_pandas_etl_spark.operators.clustering import _sq_dists
+
     terms = []
     for s, cents in enumerate(books):
-        qs = qvec[s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
+        qs = np.asarray([qvec[s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]], dtype=np.float64)
         # index the LUT by cid (empty clusters drop out of kmeans_fit,
         # so cids may be non-contiguous; unassigned slots are never
         # looked up — no code carries a dropped cid)
         lut = [0.0] * (max(cid for cid, _ in cents) + 1)
-        for cid, cent in cents:
-            acc = 0.0
-            for x, c in zip(qs, cent):
-                d = x - float(c)
-                acc = acc + d * d
-            lut[cid] = acc
+        for (cid, _), d2 in zip(cents, _sq_dists(qs, cents)[:, 0]):
+            lut[cid] = float(d2)
         lut_lit = lit_array(lut)
         terms.append(F.element_at(lut_lit, F.col(f"code_{s}") + 1))
     return ((terms[0] + terms[1]) + terms[2]) + terms[3]
@@ -15127,15 +15127,21 @@ def ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance (driver-built LUTs over the encode-once code artifact)
     ranks only the surviving candidates — cells bound the scan, codes
     bound the bytes, and stored vectors are never touched at query
-    time.  Probe cells are chosen on the driver with the identical
-    left-associated IEEE fold; ordering ties break by vec_id, so the
-    LIMIT is deterministic.  The oracle composes the PQ CTEs with the
-    IVF assignment CTEs and replays the same two-stage plan.
+    time.  Probe cells (``nearest_cells``, on the driver) and every
+    vector's cell (``nearest_centroid``) follow the one nearest-centroid
+    rule; ordering ties break by vec_id, so the LIMIT is
+    deterministic.  The oracle composes the PQ CTEs with the IVF
+    assignment CTEs and replays the same two-stage plan.
 
     Scale shape: the cell filter is a partition-pruning predicate at
-    scale (cell = bucket column); ADC scores ints against literal
-    LUTs; top-k is TakeOrderedAndProject over the probed cells only."""
-    from aws_pandas_etl_spark.operators import similarity as SIM
+    scale (cell = bucket column); assignment is a numpy fold over
+    Arrow batches against the 16 collected centroids, no join; ADC
+    scores ints against literal LUTs; top-k is TakeOrderedAndProject
+    over the probed cells only."""
+    from aws_pandas_etl_spark.operators.clustering import (
+        nearest_cells,
+        nearest_centroid,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = _pq_codebooks(spark, sf_dir)
@@ -15145,33 +15151,18 @@ def ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .first()["embedding"]
     ]
-    cents_rows = (
-        emb.filter(F.col("vec_id") < IVFPQ_CELLS)
+    cents = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.filter(F.col("vec_id") < IVFPQ_CELLS)
         .select("vec_id", "embedding")
         .collect()
-    )
-
-    def _d2(a: list[float], b: list) -> float:
-        acc = 0.0
-        for x, c in zip(a, b):
-            d = x - float(c)
-            acc = acc + d * d
-        return acc
-
-    probe = [
-        cid
-        for _, cid in sorted(
-            (_d2(qvec, r["embedding"]), r["vec_id"]) for r in cents_rows
-        )[:IVFPQ_NPROBE]
     ]
-    cents_df = emb.filter(F.col("vec_id") < IVFPQ_CELLS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    assigned = SIM.ivf_assign(emb, cents_df).select("vec_id", "cell")
+    probe = nearest_cells(qvec, cents, IVFPQ_NPROBE)
+    probed = emb.filter(nearest_centroid("embedding", cents).isin(probe))
     cand = (
         _pq_codes(spark, sf_dir)
         .filter(F.col("vec_id") != PQ_QUERY_VEC)
-        .join(assigned.filter(F.col("cell").isin(probe)), "vec_id")
+        .join(probed.select("vec_id"), "vec_id")
     )
     adc = _pq_adc_expr(books, qvec)
     return (
@@ -16857,8 +16848,8 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus grows: total pairs ≈ n·125, linear, not the fixed-k
     quadratic failure the SemDeDup r6 probe measured (10x data → 21x
     time at fixed k).  Verified: the 10x cloned-embeddings probe row
-    in BASELINE.md r10.  Assignment is a codegen argmin against k·dim
-    broadcast literals."""
+    in BASELINE.md r10.  Assignment is the numpy nearest-centroid fold
+    over Arrow batches (``nearest_centroid``)."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -17867,16 +17858,15 @@ def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only.  One plan serves the whole batch — the offline-inference /
     re-embedding-refresh workload.
 
-    Scale shape: corpus assignment is the shared codegen argmin
-    (k·dim broadcast literals, from the fit-once _kmeans_cents
-    artifact); query-side probe ranking explodes |queries|×k rows of
-    literal centroids — batch-sized, not corpus-sized; the retrieval
+    Scale shape: corpus assignment (``kmeans_lloyd``) and query-side
+    probe ranking (``_topp_assign``) are the one numpy nearest-centroid
+    fold over Arrow batches, against the fit-once _kmeans_cents
+    artifact; the probe side is batch-sized, not corpus-sized; the retrieval
     join hashes on cell id, so each query scores ~nprobe/k of the
     corpus; norms are computed once per vector (the hard-negative
     single-fold lesson).  Windows partition by query id over probed
     subsets."""
-    from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
-    from aws_pandas_etl_spark.operators.similarity import l2sq
+    from aws_pandas_etl_spark.operators.clustering import _topp_assign, kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
     k, cents = _kmeans_cents(spark, sf_dir)
@@ -17889,30 +17879,8 @@ def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(
         F.col("vec_id") % ANN_BATCH_MOD == ANN_BATCH_REM
     ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    centf = q.select(
-        "qid",
-        "qv",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(int(cid)).alias("cid"),
-                        lit_array(cv).alias("cvec"),
-                    )
-                    for cid, cv in cents
-                ]
-            )
-        ).alias("c"),
-    ).select(
-        "qid",
-        F.col("c.cid").alias("cid"),
-        l2sq(F.col("qv"), F.col("c.cvec")).alias("d2"),
-    )
-    wprobe = Window.partitionBy("qid").orderBy("d2", "cid")
-    probe = (
-        centf.withColumn("rn", F.row_number().over(wprobe))
-        .filter(F.col("rn") <= ANN_BATCH_NPROBE)
-        .select("qid", "cid")
+    probe = _topp_assign(q, cents, ANN_BATCH_NPROBE, "qid", "qv").select(
+        "qid", F.col("cluster").alias("cid")
     )
     scored = (
         probe.join(
@@ -19224,9 +19192,9 @@ def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the predicate composes with cell pruning — at 100 TB
     the table is partitioned by cell and row-group-sorted by label, so
     the scan touches (nprobe/k · label-selectivity) of the bytes;
-    assignment is the codegen argmin against k·dim literals, the
-    filter is scan-side, and only the probed cells' label-matching
-    rows reach the TakeOrdered(10)."""
+    assignment is the numpy nearest-centroid fold over Arrow batches
+    (``nearest_centroid``), the filter is scan-side, and only the
+    probed cells' label-matching rows reach the TakeOrdered(10)."""
     emb = load_table(spark, sf_dir, "embeddings")
     k, cents = _kmeans_cents(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -19750,14 +19718,14 @@ def bitext_mining_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     n·occupancy), one per-anchor rank window over those bounded
     groups, and a top-k-mean denominator accumulated in rounded
     DECIMAL (order-independent).  Assignment is the Arrow-batched
-    argmin against k·dim literals."""
+    numpy nearest-centroid fold (``nearest_centroid``)."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
     k, cents = _kmeans_cents(spark, sf_dir)
     assigned = kmeans_lloyd(emb, k=k, iters=KMEANS_ITERS, cents=cents)
     # the assigned+normed frame feeds BOTH sides of the cell-blocked
-    # cross-label join — localCheckpoint-pinned so the codegen argmin
+    # cross-label join — localCheckpoint-pinned so the Arrow-batched
     # assignment and norm fold run once, not once per side (r16: the
     # unpinned plan scanned embeddings 8x,
     # a786da4:plans/r16/bitext_mining_margin_before.txt — the knn_graph_extend

@@ -393,8 +393,9 @@ def delete_load(spark: SparkSession, path: str, keys_df: DataFrame, keys: list[s
     batching requests — production on Delta/Iceberg swaps the publish
     for DELETE WHERE with the identical anti-join plan."""
     swap = _SwapTarget(spark, path)
-    existing = spark.read.parquet(path)  # missing target must raise
-    remaining = existing.join(
+    if swap.seen is None:
+        raise IOError(f"delete_load: target {path} does not exist")
+    remaining = spark.read.parquet(path).join(
         keys_df.select(*keys).distinct(), keys, "left_anti"
     )
     return swap.publish(remaining)
@@ -426,30 +427,30 @@ def merge_load(
     merging.  No localCheckpoint is needed: the target is only read,
     not overwritten, during the write.  Production swaps the commit
     for Delta/Iceberg MERGE INTO, keeping the identical dedup plan.
-    The compaction is one shuffle on the merge keys."""
-    return _SwapTarget(df.sparkSession, path).publish(
-        _latest_per_key(df, path, keys, order_col, tiebreak_col)
-    )
+    The compaction is one shuffle on the merge keys.  A target whose
+    listing holds no data files (missing, or a bare directory) is a
+    first load."""
+    swap = _SwapTarget(df.sparkSession, path)
+    existing = df.sparkSession.read.parquet(path) if swap.seen else None
+    return swap.publish(_latest_per_key(df, existing, keys, order_col, tiebreak_col))
 
 
 def _latest_per_key(
     df: DataFrame,
-    path: str,
+    existing: DataFrame | None,
     keys: list[str],
     order_col: str,
     tiebreak_col: str | None,
-    prune=None,
 ) -> DataFrame:
     """The merge core shared by ``merge_load`` and
-    ``merge_load_partitioned``: union ``df`` with the existing target
-    (rows matching ``prune`` only, when given) and keep one row per key
-    — ``order_col`` descending, ties to the incoming batch, then to the
-    largest ``tiebreak_col``.  A missing or data-less target is a first
-    load; any other read failure propagates."""
+    ``merge_load_partitioned``: union ``df`` with ``existing`` (the
+    target's rows, None on a first load — the callers decide from the
+    target's listing, so a visible file that fails to read propagates
+    instead of passing for absence) and keep one row per key —
+    ``order_col`` descending, ties to the incoming batch, then to the
+    largest ``tiebreak_col``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from pyspark.errors import AnalysisException
 
     # helper columns must not collide with user columns — pick names
     # that are guaranteed absent (a "_src" column in the data would
@@ -459,27 +460,12 @@ def _latest_per_key(
         src_col = "_" + src_col
     while rn_col in df.columns:
         rn_col = "_" + rn_col
-    try:
-        existing = df.sparkSession.read.parquet(path)
-        if prune is not None:
-            existing = existing.filter(prune)
-        existing = existing.withColumn(src_col, F.lit(0))
-    except AnalysisException as exc:
-        # ONLY absence means "first load" — a missing path, or an
-        # existing directory holding no parquet (mkdir'ed target, or
-        # metadata-only such as a stamp-before-data crash:
-        # UNABLE_TO_INFER_SCHEMA) — there is no history to destroy in
-        # either.  Any other read failure (transient FS error, corrupt
-        # footer, permissions) must propagate: falling through would
-        # overwrite the target with just this batch and silently
-        # destroy merged history
-        if "PATH_NOT_FOUND" not in str(exc) and (
-            "UNABLE_TO_INFER_SCHEMA" not in str(exc)
-        ):
-            raise
-        existing = None
     incoming = df.withColumn(src_col, F.lit(1))
-    allrows = incoming if existing is None else existing.unionByName(incoming)
+    allrows = (
+        incoming
+        if existing is None
+        else existing.withColumn(src_col, F.lit(0)).unionByName(incoming)
+    )
     order = [F.col(order_col).desc(), F.col(src_col).desc()]
     if tiebreak_col is not None:
         order.append(F.col(tiebreak_col).desc())
@@ -517,20 +503,6 @@ def _write_layout_marker(spark: SparkSession, path: str, spec: dict) -> None:
 
     fs, jpath = _layout_marker_path(spark, path)
     _write_text(fs, jpath, json.dumps(spec, sort_keys=True))
-
-
-def _target_has_data(spark: SparkSession, path: str) -> bool:
-    """True iff the target directory exists and holds anything besides
-    hidden/metadata entries (``_layout.json``, ``_SUCCESS``, dotfiles).
-    One FileSystem listStatus RPC — no data read."""
-    fs, jpath = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return False
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            return True
-    return False
 
 
 def stamp_layout(
@@ -647,6 +619,7 @@ def merge_load_partitioned(
 
     spark = df.sparkSession
     _recover(spark, path)
+    has_data = bool(_visible_files(*_hadoop_fs(spark, path)))
     # layout stamp: refuse a target whose recorded key→partition layout
     # differs from this call's — the silent-resurrection mode the
     # per-batch guard's induction can't see (see docstring).
@@ -663,7 +636,7 @@ def merge_load_partitioned(
         # explicitly adopts — silent adoption would mean losing
         # _layout.json re-enables the exact cross-layout merge the
         # stamp refuses.
-        if not adopt_layout and _target_has_data(spark, path):
+        if not adopt_layout and has_data:
             raise ValueError(
                 f"merge_load_partitioned: target {path!r} holds data but "
                 f"no {_LAYOUT_MARKER} stamp — its key→partition mapping is "
@@ -755,9 +728,13 @@ def merge_load_partitioned(
     touched = list(stats["_touched"])
     if not touched:
         return 0
+    existing = (
+        spark.read.parquet(path).filter(F.col(partition_col).isin(touched))
+        if has_data
+        else None
+    )
     merged = _latest_per_key(
-        df, path, keys, order_col, tiebreak_col,
-        prune=F.col(partition_col).isin(touched),
+        df, existing, keys, order_col, tiebreak_col
     ).localCheckpoint(eager=True)
     if stamped is None:
         # first write, explicit adopt_layout migration, or a
@@ -765,9 +742,8 @@ def merge_load_partitioned(
         # the data write.  The other order (r13) left a crash window
         # — data landed, stamp pending — that the unstamped-target
         # refusal above would turn into a hard error on the retry; a
-        # stamp-without-data crash instead reads back as an empty
-        # existing side (UNABLE_TO_INFER_SCHEMA, see _latest_per_key) and
-        # the retry heals it.
+        # stamp-without-data crash instead lists no data files, so the
+        # retry is a first load and heals it.
         _write_layout_marker(spark, path, layout)
     (
         merged.write.mode("overwrite")
@@ -990,7 +966,8 @@ def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int
     duplicate — the at-least-once-delivery reality of every queue/
     scheduler, solved with a directory-per-batch manifest (the pattern
     foreachBatch sinks use with batchId; Delta/Iceberg replace the
-    rename with a txn-log commit carrying the same id).  A crash
+    rename with a txn-log commit carrying the same id).  A write job
+    that fails deletes its tmp before the error propagates; a crash
     mid-write leaves only a dot-prefixed tmp (invisible to readers —
     Spark's listing skips '.'/'_' paths) that the winner's publish or
     the next retry ignores.  Read the target back with
@@ -1005,8 +982,12 @@ def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int
     applied = False
     if not fs.exists(jdest):
         tmp = path.rstrip("/") + f"/.batch-{batch_id}.__tmp_{_uuid.uuid4().hex[:8]}"
-        write_parquet_sink(df, tmp, mode="overwrite")
         _, jtmp = _hadoop_fs(spark, tmp)
+        try:
+            write_parquet_sink(df, tmp, mode="overwrite")
+        except BaseException:
+            fs.delete(jtmp, True)  # a retry stages under a new name
+            raise
         if fs.rename(jtmp, jdest):
             applied = True
         else:  # lost the race to a concurrent retry — its commit stands

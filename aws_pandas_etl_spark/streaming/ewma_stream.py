@@ -34,24 +34,32 @@ STATE_SCHEMA = "s double, n bigint"
 ALPHA = 0.5  # power-of-two weights -> bit-reproducible recurrence
 
 
+def _fold_ewma(
+    user_id, pdfs: Iterator[pd.DataFrame], s: float | None, n: int
+) -> tuple[pd.DataFrame, float, int]:
+    """The per-key recurrence shared by BOTH stateful APIs: replay the
+    batch's events in (ts, event_id) order into s = alpha*x +
+    (1-alpha)*s, starting from the carried (s, n).  Returns (the
+    key's running row, carried s, carried n)."""
+    events = pd.concat(list(pdfs), ignore_index=True)
+    events = events.sort_values(["ts", "event_id"])
+    for x in events["value"].to_numpy():
+        x = float(x)
+        s = x if s is None else ALPHA * x + (1.0 - ALPHA) * s
+        n += 1
+    return pd.DataFrame({"user_id": [user_id], "n_events": [n], "ewma": [s]}), s, n
+
+
 def _ewma_group(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     (user_id,) = key
-    events = pd.concat(list(pdfs), ignore_index=True)
-    events = events.sort_values(["ts", "event_id"])
-    if state.exists:
-        s, n = state.get
-    else:
-        s, n = None, 0
-    for x in events["value"].to_numpy():
-        x = float(x)
-        s = x if s is None else ALPHA * x + (1.0 - ALPHA) * s
-        n += 1
+    carried = state.get if state.exists else (None, 0)
+    out, s, n = _fold_ewma(user_id, pdfs, *carried)
     state.update((s, n))
-    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "ewma": [s]})
+    yield out
 
 
 def ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,21 +75,11 @@ def ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_ewma_stream(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
-    """Execute via availableNow into a parquet sink, then compact
-    fragments to the final row per key (max n_events — n is strictly
-    increasing across a key's fragments, so the arg-max row IS the
-    final state)."""
-    from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
-
-    frags = _run_to_parquet_sink(
-        spark, ewma_stream(spark, sf_dir), "ewma", timeout_sec
-    )
-    # arg-max by struct ordering: n is strictly increasing across a
-    # key's fragments, so max(struct(n, ewma)) IS the final state —
-    # one aggregation, no self-join
+def _final_per_key(frags: DataFrame) -> DataFrame:
+    """Compact running fragments to the final row per key.  Arg-max by
+    struct ordering: n is strictly increasing across a key's fragments,
+    so max(struct(n, ewma)) IS the final state — one aggregation, no
+    self-join."""
     latest = frags.groupBy("user_id").agg(
         F.max(F.struct("n_events", "ewma")).alias("___m")
     )
@@ -92,41 +90,39 @@ def run_ewma_stream(
     )
 
 
+def run_ewma_stream(
+    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
+) -> DataFrame:
+    """Execute via availableNow into a parquet sink, then compact
+    fragments to the final row per key (``_final_per_key``)."""
+    from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
+
+    return _final_per_key(
+        _run_to_parquet_sink(spark, ewma_stream(spark, sf_dir), "ewma", timeout_sec)
+    )
+
+
 # ---------------------------------------------------------------------------
 # transformWithState twin — the Spark 4 arbitrary-state API
 # ---------------------------------------------------------------------------
 
-OUTPUT_STRUCT = (
-    "user_id bigint, n_events bigint, ewma double"
-)
-
-
 class _EwmaProcessor:
-    """``StatefulProcessor`` running the identical per-key recurrence
-    as ``_ewma_group`` — the migration target Spark 4 recommends over
-    ``applyInPandasWithState`` (typed state handles, timers, RocksDB-
-    only).  State is one ValueState of (s, n); the fold order (sort by
-    ts, event_id; sequential replay) is byte-identical to the GroupState
-    form, so both streaming twins and the batch operator share one
-    oracle at alpha = 1/2 (power-of-two weights, bit-reproducible)."""
+    """``StatefulProcessor`` running the per-key recurrence
+    (``_fold_ewma``, shared with ``_ewma_group``) — the migration target
+    Spark 4 recommends over ``applyInPandasWithState`` (typed state
+    handles, timers, RocksDB-only).  State is one ValueState of (s, n),
+    so both streaming twins and the batch operator share one oracle at
+    alpha = 1/2 (power-of-two weights, bit-reproducible)."""
 
     def init(self, handle) -> None:  # StatefulProcessorHandle
         self._state = handle.getValueState("ewma", STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
         (user_id,) = key
-        events = pd.concat(list(rows), ignore_index=True)
-        events = events.sort_values(["ts", "event_id"])
-        if self._state.exists():
-            s, n = self._state.get()
-        else:
-            s, n = None, 0
-        for x in events["value"].to_numpy():
-            x = float(x)
-            s = x if s is None else ALPHA * x + (1.0 - ALPHA) * s
-            n += 1
+        carried = self._state.get() if self._state.exists() else (None, 0)
+        out, s, n = _fold_ewma(user_id, rows, *carried)
         self._state.update((s, n))
-        yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "ewma": [s]})
+        yield out
 
     def close(self) -> None:
         pass
@@ -164,7 +160,7 @@ def ewma_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=proc,
-        outputStructType=OUTPUT_STRUCT,
+        outputStructType=OUTPUT_SCHEMA,
         outputMode="append",
         timeMode="none",
     )
@@ -195,11 +191,4 @@ def run_ewma_stream_tws(
         frags = _run_to_parquet_sink(
             spark, ewma_stream_tws(spark, sf_dir), "ewma_tws", timeout_sec
         )
-    latest = frags.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "ewma")).alias("___m")
-    )
-    return latest.select(
-        "user_id",
-        F.col("___m.n_events").alias("n_events"),
-        F.round(F.col("___m.ewma"), 6).alias("ewma"),
-    )
+    return _final_per_key(frags)

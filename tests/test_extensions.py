@@ -51,8 +51,8 @@ def test_simhash_similar_texts_close(spark):
          Row(doc_id=2, text="the quick brown fox jumps over the lazy cat"),
          Row(doc_id=3, text="zzz qqq vvv www kkk uuu mmm nnn ooo ppp")]
     )
-    rows = df.select("doc_id", D.simhash64("text", 32).alias("sh")).collect()
-    sh = {r["doc_id"]: r["sh"] for r in rows}
+    rows = D.simhash_table(df, num_bits=32).collect()
+    sh = {r["doc_id"]: r["simhash"] for r in rows}
     d12 = bin(sh[1] ^ sh[2]).count("1")
     d13 = bin(sh[1] ^ sh[3]).count("1")
     assert d12 < d13  # similar docs have closer fingerprints
@@ -1412,17 +1412,18 @@ def test_regression_stump_matches_bruteforce_split(spark):
 
 def test_numpy_assignment_twin_matches_column_fold(spark):
     """The Arrow-batched numpy k-means assignment (operators/
-    clustering.py::_assign) must agree with the interpreted Column
-    fold it replaced, VALUE FOR VALUE including ties — the parity
-    contract that lets the 6x-faster twin stand in for the fold the
-    DuckDB oracles replay.  Checks both argmin and top-p multi-probe
-    against the struct-sort Column path on the full sf0.001 table."""
+    clustering.py::nearest_centroid) must agree with the interpreted
+    Column fold it replaced, VALUE FOR VALUE including ties — the
+    parity contract that lets the 6x-faster twin stand in for the fold
+    the DuckDB oracles replay.  Checks both argmin and top-p
+    multi-probe against the struct-sort Column path on the full
+    sf0.001 table."""
     from pyspark.sql import functions as F
 
     from aws_pandas_etl_spark.operators.clustering import (
-        _assign,
         _dist_structs,
         _topp_assign,
+        nearest_centroid,
     )
     from aws_pandas_etl_spark.plans.queries import _kmeans_cents
     from aws_pandas_etl_spark.sources.readers import load_table
@@ -1435,7 +1436,9 @@ def test_numpy_assignment_twin_matches_column_fold(spark):
         "cluster",
         F.array_min(_dist_structs("embedding", cents)).getField("cid"),
     ).select("vec_id", "cluster")
-    np_argmin = _assign(emb, "embedding", cents).select("vec_id", "cluster")
+    np_argmin = emb.withColumn(
+        "cluster", nearest_centroid("embedding", cents)
+    ).select("vec_id", "cluster")
     assert (
         col_argmin.alias("x")
         .join(np_argmin.alias("y"), "vec_id")
@@ -1467,14 +1470,17 @@ def test_numpy_assignment_twin_matches_column_fold(spark):
 
 
 def test_assign_guards_null_ragged_and_existing_cluster_column(spark):
-    """ADVICE r9: the Arrow-batched assignment twin must (a) emit a
-    NULL cluster for null/ragged embeddings instead of raising inside
-    the batch (the Column fold's behavior), (b) replace — never
-    duplicate — a pre-existing 'cluster' column (withColumn
-    semantics), and (c) reject an empty centroid list loudly."""
+    """ADVICE r9: the Arrow-batched assignment (nearest_centroid) must
+    (a) emit a NULL cluster for null/ragged embeddings instead of
+    raising inside the batch (the Column fold's behavior), (b) replace
+    — never duplicate — a pre-existing 'cluster' column under
+    withColumn, and (c) reject an empty centroid list loudly."""
     import pytest as _pytest
 
-    from aws_pandas_etl_spark.operators.clustering import _assign
+    from aws_pandas_etl_spark.operators.clustering import nearest_centroid
+
+    def _assign(df, vec_col, cents):
+        return df.withColumn("cluster", nearest_centroid(vec_col, cents))
 
     rows = [
         Row(vec_id=0, embedding=[0.0, 0.0]),
@@ -1497,11 +1503,80 @@ def test_assign_guards_null_ragged_and_existing_cluster_column(spark):
         _assign(df, "embedding", [])
 
 
+def test_one_nearest_centroid_rule_on_every_path(spark):
+    """nearest_centroid, _topp_assign at p = 1, 2, 3 and the driver-side
+    nearest_cells all give the cids of the sorted _dist_structs Column
+    (the (d2, cid) struct order the oracles replay) on the sf0.001
+    embeddings; nearest_cells of a vector equals that vector's
+    distributed assignment; an exact tie goes to the smaller cid on
+    every path; null and ragged vectors get a NULL cell from
+    nearest_centroid and no probe rows from _topp_assign."""
+    from aws_pandas_etl_spark.operators.clustering import (
+        _dist_structs,
+        _topp_assign,
+        nearest_cells,
+        nearest_centroid,
+    )
+    from aws_pandas_etl_spark.plans.queries import _kmeans_cents
+
+    emb = load_table(spark, SF, "embeddings")
+    k, cents = _kmeans_cents(spark, SF)
+    ranked = {
+        r["vec_id"]: list(r["cs"])
+        for r in emb.select(
+            "vec_id",
+            F.transform(
+                F.array_sort(_dist_structs("embedding", cents)), lambda s: s["cid"]
+            ).alias("cs"),
+        ).collect()
+    }
+    assert len(ranked) > 0 and all(len(cs) == k for cs in ranked.values())
+    argmin = {
+        r["vec_id"]: r["c"]
+        for r in emb.select(
+            "vec_id", nearest_centroid("embedding", cents).alias("c")
+        ).collect()
+    }
+    assert argmin == {v: cs[0] for v, cs in ranked.items()}
+    for p in (1, 2, 3):
+        got: dict = {}
+        for r in _topp_assign(emb, cents, p, "vec_id", "embedding").collect():
+            got.setdefault(r["vec_id"], []).append(r["cluster"])
+        assert {v: sorted(cs) for v, cs in got.items()} == {
+            v: sorted(cs[:p]) for v, cs in ranked.items()
+        }
+    for r in emb.filter(F.col("vec_id") < 20).collect():
+        vec = [float(x) for x in r["embedding"]]
+        assert nearest_cells(vec, cents, 3) == ranked[r["vec_id"]][:3]
+        assert nearest_cells(vec, cents, k + 2) == ranked[r["vec_id"]]
+
+    # [0, 0] is exactly 1.0 from cids 3 and 7: the smaller cid wins
+    tie = [(7, [1.0, 0.0]), (5, [0.0, 3.0]), (3, [-1.0, 0.0])]
+    df = spark.createDataFrame(
+        [
+            Row(vec_id=0, embedding=[0.0, 0.0]),
+            Row(vec_id=1, embedding=None),
+            Row(vec_id=2, embedding=[1.0]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    col = df.filter("vec_id = 0").select(
+        F.array_min(_dist_structs("embedding", tie)).getField("cid")
+    )
+    assert col.first()[0] == 3
+    cells = df.select("vec_id", nearest_centroid("embedding", tie).alias("c"))
+    assert {r["vec_id"]: r["c"] for r in cells.collect()} == {0: 3, 1: None, 2: None}
+    for p, want in ((1, [(0, 3)]), (2, [(0, 3), (0, 7)])):
+        rows = _topp_assign(df, tie, p, "vec_id", "embedding").collect()
+        assert sorted((r["vec_id"], r["cluster"]) for r in rows) == want
+    assert nearest_cells([0.0, 0.0], tie, 3) == [3, 7, 5]
+
+
 def test_kmeans_fit_tolerates_ragged_vectors(spark):
     """ADVICE r10: _update must drop the NULL-cluster rows that ragged
     (non-null, wrong-dim) vectors produce — they survive posexplode,
     and sorted(by_cid.items()) would compare None to int and crash the
-    very fit path the null/ragged _assign tolerance feeds."""
+    very fit path the null/ragged nearest_centroid tolerance feeds."""
     from aws_pandas_etl_spark.operators.clustering import kmeans_fit
 
     rows = [
@@ -1509,7 +1584,7 @@ def test_kmeans_fit_tolerates_ragged_vectors(spark):
         Row(vec_id=1, embedding=[0.5, 0.5]),
         Row(vec_id=2, embedding=[10.0, 10.0]),
         Row(vec_id=3, embedding=[9.0, 9.0]),
-        Row(vec_id=4, embedding=[1.0]),  # ragged: NULL cluster in _assign
+        Row(vec_id=4, embedding=[1.0]),  # ragged: NULL cluster
         Row(vec_id=5, embedding=None),   # null: vanishes via posexplode
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")

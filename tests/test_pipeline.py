@@ -126,6 +126,47 @@ def test_merge_load_upserts_latest_per_key(spark, tmp_path):
     assert got == {1: "new", 2: "tie-incoming", 3: "ins"}
 
 
+def test_merge_first_load_is_decided_from_the_listing(spark, tmp_path):
+    """A target whose listing holds no data files (a bare directory) is
+    a first load for both merges; a target holding a visible file that
+    is not parquet is NOT: its read error propagates and the file stays,
+    instead of the merge overwriting it with just the batch."""
+    import os
+
+    import pytest
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from aws_pandas_etl_spark.sources.sinks import (
+        merge_load,
+        merge_load_partitioned,
+        stamp_layout,
+    )
+
+    batch = spark.createDataFrame([Row(k=1, v="a", ver=1), Row(k=2, v="b", ver=1)])
+    bare = tmp_path / "bare"
+    bare.mkdir()
+    assert merge_load(batch, str(bare), keys=["k"], order_col="ver") == 2
+
+    junk = tmp_path / "junk"
+    junk.mkdir()
+    (junk / "part-0.parquet").write_bytes(b"not parquet at all")
+    with pytest.raises(Exception):
+        merge_load(batch, str(junk), keys=["k"], order_col="ver")
+    assert sorted(os.listdir(junk)) == ["part-0.parquet"]
+
+    pjunk = tmp_path / "pjunk"
+    (pjunk / "bkt=0").mkdir(parents=True)
+    (pjunk / "bkt=0" / "part-0.parquet").write_bytes(b"not parquet at all")
+    stamp_layout(spark, str(pjunk), keys=["k"], order_col="ver", partition_col="bkt")
+    pbatch = batch.withColumn("bkt", (F.col("k") % 2).cast("int"))
+    with pytest.raises(Exception):
+        merge_load_partitioned(
+            pbatch, str(pjunk), keys=["k"], order_col="ver", partition_col="bkt"
+        )
+    assert os.listdir(pjunk / "bkt=0") == ["part-0.parquet"]
+
+
 def test_merge_load_tiebreak_col_resolves_in_batch_ties(spark, tmp_path):
     """Rows tied on (keys, order_col) INSIDE one batch are kept by the
     largest tiebreak_col, not partition luck."""

@@ -155,7 +155,6 @@ _SCALAR_CROSS_OK = {
     "knn_graph_triangles",           # three 1-row topology aggregates
     "markov_stationary_event_types",  # 1-row |types| uniform-start scalar
     "regression_stump_value_by_hour",  # 1-row grand totals x 24 thresholds
-    "ivfpq_adc_topk",                # corpus x 16-row broadcast centroids
     "zone_map_pruning_stats",        # |steps| x |days| aggregate cross
     "hll_cumulative_daily_distinct",  # |days| x |days*64| register prefix join
     "heaps_law_fit",                 # 1-row (min,max) doc_id bounds

@@ -304,7 +304,8 @@ PARTWAY = {
 def test_source_raising_partway_leaves_target_as_it_was(spark, tmp_path, name):
     """A writer whose source raises partway through its job leaves the
     target's rows and visible files as they were, no staging visible to
-    readers, and a clean re-run loads what a fault-free call loads."""
+    readers nor any hidden batch staging left in the target, and a
+    clean re-run loads what a fault-free call loads."""
     write, batched = PARTWAY[name]
     ref, p = str(tmp_path / "ref" / "t"), str(tmp_path / "t")
     for target in (ref, p):
@@ -318,5 +319,6 @@ def test_source_raising_partway_leaves_target_as_it_was(spark, tmp_path, name):
         write(_source(spark, 50, 150, boom=100), p, "next")
     assert _rows(spark, p, batched) == pre
     assert sinks._visible_files(fs, jp) == files
+    assert [n for n in os.listdir(p) if n.startswith(".batch-") and "__tmp_" in n] == []
     assert write(_source(spark, 50, 150), p, "next") == want
     assert _rows(spark, p, batched) == post

@@ -135,7 +135,7 @@ def test_columns_with_type(spark):
 
 
 def test_simhash_num_bits_guard(spark):
-    """1<<63 overflows signed 64-bit; both simhash paths must refuse
+    """1<<63 overflows signed 64-bit; simhash_table must refuse
     num_bits outside [1, 63] instead of erroring mid-job under ANSI."""
     import pytest
 
@@ -143,8 +143,6 @@ def test_simhash_num_bits_guard(spark):
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     for bad in (0, 64):
-        with pytest.raises(ValueError, match=r"\[1, 63\]"):
-            D.simhash64("text", num_bits=bad)
         with pytest.raises(ValueError, match=r"\[1, 63\]"):
             D.simhash_table(docs, num_bits=bad)
     # 63 is the documented max and must work end-to-end
