@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aws_pandas_etl_spark.functions.hashing import normalize_text, shingles
+from aws_pandas_etl_spark.functions.hashing import normalize_text
 
 # Tiny deterministic stopword lists for the n-gram/stopword language
 # heuristic.  (Real language ID would use fastText/CLD3 — not in this
@@ -342,10 +342,11 @@ def fingerprint_features(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 8
 ) -> DataFrame:
     """Per-doc fingerprints via Arrow-batched mapInPandas: whole-doc
-    content md5 + minimal ``n``-gram 60-bit rolling hash.  Byte-
-    identical to the Column versions below (shared normalize/md5 math,
-    functions/pytext.py) but ~10x faster — higher-order Column lambdas
-    interpret per element."""
+    content md5 (byte-identical to ``fingerprint`` above) + the minimal
+    60-bit md5 over word ``n``-gram shingles, both on the shared
+    normalize/md5 math of functions/pytext.py.  Arrow batches, because
+    a Column form of the min-gram hash interprets its higher-order
+    lambdas per element (~10x slower)."""
     import hashlib
 
     import pandas as pd
@@ -382,74 +383,40 @@ def fingerprint_features(
     return df.select(id_col, text_col).mapInPandas(_extract, schema=out_schema)
 
 
-def min_gram_fingerprint(col: Column | str, n: int = 8) -> Column:
-    """Rolling-hash fingerprint: minimum 60-bit hash over word
-    ``n``-gram shingles (winnowing-style witness; equal for documents
-    sharing their minimal n-gram)."""
-    from aws_pandas_etl_spark.functions.hashing import md5_bigint
-
-    grams = shingles(col, n=n)
-    hashed = F.transform(grams, lambda g: md5_bigint(g))
-    return F.coalesce(F.array_min(hashed), F.lit(-1).cast("bigint"))
-
-
 def misra_gries_candidates(
     df: DataFrame, token_col: str = "token", counters: int = 400
 ) -> DataFrame:
-    """Per-partition Misra-Gries frequency sketch over a one-token-per-
-    row frame; returns the union of surviving tokens (counts are lower
-    bounds and deliberately discarded — callers rescore exactly).
+    """The distinct tokens surviving ``misra_gries_sketch`` (counts are
+    lower bounds and deliberately discarded — callers rescore exactly).
 
     Guarantee (the reason this is safe as a candidate generator): MG
     with m counters undercounts by at most n_p/(m+1) per partition, so
     any token whose GLOBAL count exceeds N/(m+1) must survive in at
     least one partition — the candidate set is a superset of every
     token above that support, under ANY partitioning of the input.
-
-    Scale shape: the corpus streams once through Arrow batches with
-    O(m) state per partition; only |partitions| * m candidate rows
-    shuffle (bounded by design, independent of corpus size).  The
-    batch merge is vectorized: exact value_counts per batch folded
-    into the summary, then one decrement step — subtract the (m+1)-th
-    largest count from all and drop the non-positive — which is the
-    standard mergeable-summaries MG combine (Agarwal et al., PODS'12).
-    """
-    import pandas as pd
-
-    def _sketch(batches):
-        counts: dict[str, int] = {}
-        for pdf in batches:
-            for tok, c in pdf[token_col].value_counts().items():
-                counts[tok] = counts.get(tok, 0) + int(c)
-            if len(counts) > counters:
-                cut = sorted(counts.values(), reverse=True)[counters]
-                counts = {t: c - cut for t, c in counts.items() if c > cut}
-        yield pd.DataFrame({token_col: list(counts.keys())})
-
-    return df.select(token_col).mapInPandas(
-        _sketch, schema=f"{token_col} string"
-    ).distinct()
+    Only |partitions| * m candidate rows shuffle (bounded by design,
+    independent of corpus size)."""
+    return misra_gries_sketch(df, token_col, counters).select(token_col).distinct()
 
 
 def misra_gries_sketch(
     df: DataFrame, token_col: str = "token", counters: int = 400
 ) -> DataFrame:
-    """Count-preserving per-partition MG sketch: (token, cnt) rows
-    where cnt is the surviving LOWER BOUND — the mergeable form
-    (Agarwal et al., PODS'12) a hierarchical combine needs (the
-    streaming runner folds per-batch sketches into one store with the
-    same decrement step; misra_gries_candidates discards counts
-    because the single-level batch path rescores exactly anyway)."""
+    """Count-preserving per-partition Misra-Gries sketch: (token, cnt)
+    rows where cnt is the surviving LOWER BOUND — the mergeable form
+    (Agarwal et al., PODS'12) a hierarchical combine needs.  The corpus
+    streams once through Arrow batches with O(m) state per partition:
+    each batch's exact value_counts fold into the summary by
+    ``mg_combine``, the same step the streaming runner folds per-batch
+    sketches with."""
     import pandas as pd
 
     def _sketch(batches):
         counts: dict[str, int] = {}
         for pdf in batches:
-            for tok, c in pdf[token_col].value_counts().items():
-                counts[tok] = counts.get(tok, 0) + int(c)
-            if len(counts) > counters:
-                cut = sorted(counts.values(), reverse=True)[counters]
-                counts = {t: c - cut for t, c in counts.items() if c > cut}
+            counts = mg_combine(
+                counts, pdf[token_col].value_counts().items(), counters
+            )
         yield pd.DataFrame(
             {token_col: list(counts.keys()), "cnt": list(counts.values())}
         )
@@ -460,8 +427,9 @@ def misra_gries_sketch(
 
 
 def mg_combine(store: dict, sketch_rows, counters: int) -> dict:
-    """Driver-side mergeable-summaries combine: fold (token, cnt)
-    sketch rows into ``store``, then one decrement step caps it at
+    """The mergeable-summaries combine: fold (token, cnt) rows into
+    ``store``, then one decrement step — subtract the (counters+1)-th
+    largest count from all and drop the non-positive — caps it at
     ``counters`` entries.  Total undercount stays <= N/(counters+1)
     under any merge tree, so the store remains a superset of every
     phi-heavy token with counters + 1 >= 1/phi."""

@@ -39,6 +39,7 @@ from aws_pandas_etl_spark.functions.literals import lit_array
 from aws_pandas_etl_spark.operators import dedup as D
 from aws_pandas_etl_spark.operators import multimodal as MM
 from aws_pandas_etl_spark.operators import similarity as SIM
+from aws_pandas_etl_spark.operators import sketches as SK
 from aws_pandas_etl_spark.operators import text as TX
 from aws_pandas_etl_spark.operators.transforms import (
     add_audit_columns,
@@ -8514,64 +8515,73 @@ def seasonal_hour_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CHI2_ORACLE = """
-WITH o AS (
-  SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS observed
-  FROM documents GROUP BY lang, source
-), rt AS (
-  SELECT lang, CAST(SUM(observed) AS BIGINT) AS row_tot FROM o GROUP BY lang
-), ct AS (
-  SELECT source, CAST(SUM(observed) AS BIGINT) AS col_tot FROM o GROUP BY source
-), tt AS (
-  SELECT CAST(SUM(observed) AS BIGINT) AS total FROM o
-)
-SELECT o.lang, o.source, o.observed,
-       ROUND(CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total, 6) AS expected,
-       ROUND((o.observed - CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total)
-             * (o.observed - CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total)
-             / (CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total), 6)
-         AS chi2_contrib
-FROM o JOIN rt USING (lang) JOIN ct USING (source), tt
-"""
-
-
-@register("lang_source_chi2", CHI2_ORACLE)
-def lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square independence cells for the lang x source
-    contingency table: observed counts, expected under independence
-    (row_total x col_total / total), and each cell's (O-E)^2/E
-    contribution — the statistical test behind "is this source's
-    language mix drifting".  All inputs are exact integer counts; the
-    expected value and contribution are fixed-order double arithmetic
-    rounded once, and the caller sums contributions for the statistic
-    (dof = (|langs|-1)(|sources|-1)).
-
-    Scale shape: one groupBy on the (bounded) pair, two marginal
-    rollups of the CELL table (|cells| rows, not corpus rows), and a
-    1-row total."""
-    docs = load_table(spark, sf_dir, "documents")
-    o = docs.groupBy("lang", "source").agg(
-        F.count("*").cast("bigint").alias("observed")
-    )
-    rt = o.groupBy("lang").agg(F.sum("observed").cast("bigint").alias("row_tot"))
-    ct = o.groupBy("source").agg(
-        F.sum("observed").cast("bigint").alias("col_tot")
-    )
-    tt = o.agg(F.sum("observed").cast("bigint").alias("total"))
+def _chi2_cells(o: DataFrame, row: str, col: str, observed: str) -> DataFrame:
+    """Chi-square independence cells of the contingency table ``o``
+    (one row per (row, col) cell with its exact ``observed`` count):
+    expected = row_total x col_total / grand total under independence,
+    and each cell's (O-E)^2/E contribution, both fixed-order double
+    arithmetic rounded once to 6 digits; the caller sums contributions
+    for the statistic (dof = (|rows|-1)(|cols|-1)).  The marginals
+    roll up the CELL table (|cells| rows, not corpus rows) and the
+    1-row grand total broadcasts."""
+    rt = o.groupBy(row).agg(F.sum(observed).cast("bigint").alias("row_tot"))
+    ct = o.groupBy(col).agg(F.sum(observed).cast("bigint").alias("col_tot"))
+    tt = o.agg(F.sum(observed).cast("bigint").alias("total"))
     e = F.col("row_tot").cast("double") * F.col("col_tot") / F.col("total")
-    contrib = (F.col("observed") - e) * (F.col("observed") - e) / e
+    contrib = (F.col(observed) - e) * (F.col(observed) - e) / e
     return (
-        o.join(rt, "lang")
-        .join(ct, "source")
+        o.join(rt, row)
+        .join(ct, col)
         .crossJoin(F.broadcast(tt))
         .select(
-            "lang",
-            "source",
-            "observed",
+            row,
+            col,
+            observed,
             F.round(e, 6).alias("expected"),
             F.round(contrib, 6).alias("chi2_contrib"),
         )
     )
+
+
+def _chi2_cells_sql(row: str, col: str, observed: str) -> str:
+    """DuckDB twin of ``_chi2_cells`` over a CTE ``o`` defined before it:
+    the marginal CTEs and the final SELECT, to follow ``WITH o AS (…),``."""
+    e = "CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total"
+    return f"""rt AS (
+  SELECT {row}, CAST(SUM({observed}) AS BIGINT) AS row_tot FROM o GROUP BY {row}
+), ct AS (
+  SELECT {col}, CAST(SUM({observed}) AS BIGINT) AS col_tot FROM o GROUP BY {col}
+), tt AS (
+  SELECT CAST(SUM({observed}) AS BIGINT) AS total FROM o
+)
+SELECT o.{row}, o.{col}, o.{observed},
+       ROUND({e}, 6) AS expected,
+       ROUND((o.{observed} - {e}) * (o.{observed} - {e}) / ({e}), 6)
+         AS chi2_contrib
+FROM o JOIN rt USING ({row}) JOIN ct USING ({col}), tt
+"""
+
+
+CHI2_ORACLE = f"""
+WITH o AS (
+  SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS observed
+  FROM documents GROUP BY lang, source
+), {_chi2_cells_sql("lang", "source", "observed")}"""
+
+
+@register("lang_source_chi2", CHI2_ORACLE)
+def lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square independence cells (``_chi2_cells``) for the
+    lang x source contingency table — the statistical test behind "is
+    this source's language mix drifting".
+
+    Scale shape: one groupBy on the (bounded) pair, then the cell
+    helper's marginal rollups of the |cells|-row table."""
+    docs = load_table(spark, sf_dir, "documents")
+    o = docs.groupBy("lang", "source").agg(
+        F.count("*").cast("bigint").alias("observed")
+    )
+    return _chi2_cells(o, "lang", "source", "observed")
 
 
 MOMENTS_ORACLE = f"""
@@ -11498,57 +11508,23 @@ WITH s AS (
 ), o AS (
   SELECT split, lang, CAST(COUNT(*) AS BIGINT) AS n_docs
   FROM s GROUP BY split, lang
-), rt AS (
-  SELECT split, CAST(SUM(n_docs) AS BIGINT) AS row_tot FROM o GROUP BY split
-), ct AS (
-  SELECT lang, CAST(SUM(n_docs) AS BIGINT) AS col_tot FROM o GROUP BY lang
-), tt AS (
-  SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM o
-)
-SELECT o.split, o.lang, o.n_docs,
-       ROUND(CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total, 6) AS expected,
-       ROUND((o.n_docs - CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total)
-             * (o.n_docs - CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total)
-             / (CAST(rt.row_tot AS DOUBLE) * ct.col_tot / tt.total), 6)
-         AS chi2_contrib
-FROM o JOIN rt USING (split) JOIN ct USING (lang), tt
-"""
+), {_chi2_cells_sql("split", "lang", "n_docs")}"""
 
 
 @register("split_lang_independence_chi2", _split_chi2_oracle())
 def split_lang_independence_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-quality audit: chi-square independence cells for the
-    (train/val/test split x lang) contingency table.  A sound
-    hash-based split is independent of every document attribute; a
-    large summed chi2 here means the eval sets are language-skewed
-    and benchmark numbers won't transfer.  Same cell/marginal shape
-    as lang_source_chi2 — one bounded groupBy, marginal rollups of
-    the CELL table, a 1-row total broadcast."""
+    """Split-quality audit: chi-square independence cells
+    (``_chi2_cells``) for the (train/val/test split x lang)
+    contingency table.  A sound hash-based split is independent of
+    every document attribute; a large summed chi2 here means the eval
+    sets are language-skewed and benchmark numbers won't transfer."""
     docs = load_table(spark, sf_dir, "documents")
     o = docs.select(
         TX.assign_split("doc_id").alias("split"), "lang"
     ).groupBy("split", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
-    rt = o.groupBy("split").agg(
-        F.sum("n_docs").cast("bigint").alias("row_tot")
-    )
-    ct = o.groupBy("lang").agg(F.sum("n_docs").cast("bigint").alias("col_tot"))
-    tt = o.agg(F.sum("n_docs").cast("bigint").alias("total"))
-    e = F.col("row_tot").cast("double") * F.col("col_tot") / F.col("total")
-    contrib = (F.col("n_docs") - e) * (F.col("n_docs") - e) / e
-    return (
-        o.join(rt, "split")
-        .join(ct, "lang")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "split",
-            "lang",
-            "n_docs",
-            F.round(e, 6).alias("expected"),
-            F.round(contrib, 6).alias("chi2_contrib"),
-        )
-    )
+    return _chi2_cells(o, "split", "lang", "n_docs")
 
 
 MRL_PREFIXES = [8, 16, 32]
@@ -11867,39 +11843,20 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HLL_P = 6
-HLL_M = 1 << HLL_P  # 64 registers
-HLL_ALPHA = 0.709  # Flajolet et al. 2007, alpha_64
-
-HLL_ORACLE = f"""
+_HLL_EVENTS_SQL = f"""
 WITH h AS (
   SELECT event_type,
          {_dk_hex("'hll:'||CAST(user_id AS VARCHAR)")} AS h
   FROM events
 ), rr AS (
-  SELECT event_type, h % {HLL_M} AS reg,
-         55 - (CASE WHEN h // {HLL_M} = 0 THEN 0
-                    ELSE length(bin(h // {HLL_M})) END) AS rank
-  FROM h
+  {SK.hll_register_rank_sql("event_type", "h")}
 ), m AS (
   SELECT event_type, reg, MAX(rank) AS mr FROM rr GROUP BY event_type, reg
-), agg AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS registers_used,
-         CAST(SUM(CAST(ROUND(pow(2.0, -mr), 18) AS DECIMAL(38,18)))
-              AS DOUBLE) AS s_present
-  FROM m GROUP BY event_type
-), est AS (
-  SELECT event_type, registers_used,
-         {HLL_M} - registers_used AS v,
-         {HLL_ALPHA} * {HLL_M} * {HLL_M}
-           / (s_present + ({HLL_M} - registers_used)) AS e_raw
-  FROM agg
 ), fin AS (
-  SELECT event_type, registers_used,
-         CASE WHEN e_raw <= {2.5 * HLL_M} AND v > 0
-              THEN {HLL_M}.0 * ln({HLL_M}.0 / v) ELSE e_raw END AS est
-  FROM est
-), ex AS (
+  {SK.hll_estimate_sql("event_type", "m")}
+)"""
+
+HLL_ORACLE = f"""{_HLL_EVENTS_SQL}, ex AS (
   SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_distinct
   FROM events GROUP BY event_type
 )
@@ -11911,19 +11868,13 @@ FROM fin f JOIN ex USING (event_type)
 
 @register("hll_distinct_users", HLL_ORACLE)
 def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog (Flajolet, Fusy, Gandouet & Meunier 2007) per event
-    type, audited against the exact distinct count: each user hash is
-    routed to one of m=64 registers by its low 6 bits; the register
-    keeps the MAX rank (leading-zero count + 1) of the remaining
-    54-bit suffix; the estimate is the bias-corrected harmonic mean
-    alpha_m * m^2 / sum(2^-M_j), with the standard linear-counting
-    fallback when the estimate is small and empty registers remain.
-    Completes the sketch family: linear counting (register bitmap),
-    KMV (order statistics), and now HLL (rank registers) — the one
-    production systems actually ship, because 64 registers summarize
-    any cardinality and two sketches merge by element-wise register
-    MAX.  Rank via length(bin(w)) — integer-exact in both engines, no
-    float log2 boundary.
+    """HyperLogLog per event type (operators/sketches.py: m=64 rank
+    registers, bias-corrected harmonic mean with the linear-counting
+    fallback), audited against the exact distinct count.  Completes
+    the sketch family: linear counting (register bitmap), KMV (order
+    statistics), and HLL (rank registers) — the one production
+    systems actually ship, because 64 registers summarize any
+    cardinality and two sketches merge by element-wise register MAX.
 
     Scale shape: no DISTINCT pass at all (duplicate hashes cannot
     change a register MAX) — one groupBy (type, register) with
@@ -11936,40 +11887,17 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     h = md5_bigint(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
-    w = F.shiftright(F.col("h"), HLL_P)
-    rank = F.lit(55) - F.when(w == 0, 0).otherwise(F.length(F.bin(w)))
     rr = ev.select("event_type", h.alias("h")).select(
-        "event_type",
-        (F.col("h") % HLL_M).alias("reg"),
-        rank.alias("rank"),
+        "event_type", *SK.hll_register_rank(F.col("h"))
     )
     m = rr.groupBy("event_type", "reg").agg(F.max("rank").alias("mr"))
-    agg = m.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("registers_used"),
-        F.sum(
-            F.round(F.pow(F.lit(2.0), -F.col("mr")), 18).cast(
-                "decimal(38,18)"
-            )
-        )
-        .cast("double")
-        .alias("s_present"),
-    )
-    v = F.lit(HLL_M) - F.col("registers_used")
-    e_raw = (
-        F.lit(HLL_ALPHA * HLL_M * HLL_M)
-        / (F.col("s_present") + v.cast("double"))
-    )
-    est = F.when(
-        (e_raw <= F.lit(2.5 * HLL_M)) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-    ).otherwise(e_raw)
     ex = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").cast("bigint").alias("exact_distinct")
     )
-    return agg.join(ex, "event_type").select(
+    return SK.hll_fold(m, "event_type").join(ex, "event_type").select(
         "event_type",
         "registers_used",
-        F.round(est, 4).alias("est_distinct"),
+        F.round(SK.hll_estimate(), 4).alias("est_distinct"),
         "exact_distinct",
     )
 
@@ -13495,35 +13423,9 @@ def doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STREAM_HLL_ORACLE = f"""
-WITH h AS (
-  SELECT event_type,
-         {_dk_hex("'hll:'||CAST(user_id AS VARCHAR)")} AS h
-  FROM events
-), rr AS (
-  SELECT event_type, h % {HLL_M} AS reg,
-         55 - (CASE WHEN h // {HLL_M} = 0 THEN 0
-                    ELSE length(bin(h // {HLL_M})) END) AS rank
-  FROM h
-), m AS (
-  SELECT event_type, reg, MAX(rank) AS mr FROM rr GROUP BY event_type, reg
-), agg AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS registers_used,
-         CAST(SUM(CAST(ROUND(pow(2.0, -mr), 18) AS DECIMAL(38,18)))
-              AS DOUBLE) AS s_present
-  FROM m GROUP BY event_type
-), est AS (
-  SELECT event_type, registers_used,
-         {HLL_M} - registers_used AS v,
-         {HLL_ALPHA} * {HLL_M} * {HLL_M}
-           / (s_present + ({HLL_M} - registers_used)) AS e_raw
-  FROM agg
-)
-SELECT event_type, registers_used,
-       ROUND(CASE WHEN e_raw <= {2.5 * HLL_M} AND v > 0
-                  THEN {HLL_M}.0 * ln({HLL_M}.0 / v) ELSE e_raw END, 4)
-         AS est_distinct
-FROM est ORDER BY event_type
+STREAM_HLL_ORACLE = f"""{_HLL_EVENTS_SQL}
+SELECT event_type, registers_used, ROUND(est, 4) AS est_distinct
+FROM fin ORDER BY event_type
 """
 
 
@@ -13541,7 +13443,7 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_hll,
     )
 
-    return run_streaming_hll(spark, sf_dir, p=HLL_P)
+    return run_streaming_hll(spark, sf_dir)
 
 
 KMVX_ORACLE = f"""
@@ -15669,32 +15571,15 @@ WITH days AS (
          {_dk_hex("'hll:'||CAST(user_id AS VARCHAR)")} AS h
   FROM events
 ), rr AS (
-  SELECT d, h % {HLL_M} AS reg,
-         55 - (CASE WHEN h // {HLL_M} = 0 THEN 0
-                    ELSE length(bin(h // {HLL_M})) END) AS rank
-  FROM h
+  {SK.hll_register_rank_sql("d", "h")}
 ), m AS (
   SELECT d, reg, MAX(rank) AS mr FROM rr GROUP BY d, reg
 ), pref AS (
   SELECT days.d, m.reg, MAX(m.mr) AS mr
   FROM days JOIN m ON m.d <= days.d
   GROUP BY days.d, m.reg
-), agg AS (
-  SELECT d, CAST(COUNT(*) AS BIGINT) AS registers_used,
-         CAST(SUM(CAST(ROUND(pow(2.0, -mr), 18) AS DECIMAL(38,18)))
-              AS DOUBLE) AS s_present
-  FROM pref GROUP BY d
-), est AS (
-  SELECT d, registers_used,
-         {HLL_M} - registers_used AS v,
-         {HLL_ALPHA} * {HLL_M} * {HLL_M}
-           / (s_present + ({HLL_M} - registers_used)) AS e_raw
-  FROM agg
 ), fin AS (
-  SELECT d, registers_used,
-         CASE WHEN e_raw <= {2.5 * HLL_M} AND v > 0
-              THEN {HLL_M}.0 * ln({HLL_M}.0 / v) ELSE e_raw END AS est
-  FROM est
+  {SK.hll_estimate_sql("d", "pref")}
 ), fs AS (
   SELECT user_id, MIN(CAST(date_trunc('day', ts) AS DATE)) AS first_d
   FROM events GROUP BY user_id
@@ -15734,10 +15619,8 @@ def hll_cumulative_daily_distinct(
     ev = load_table(spark, sf_dir, "events")
     days = ev.select(F.to_date("ts").alias("d")).distinct()
     h = md5_bigint(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
-    w = F.shiftright(F.col("h"), HLL_P)
-    rank = F.lit(55) - F.when(w == 0, 0).otherwise(F.length(F.bin(w)))
     rr = ev.select(F.to_date("ts").alias("d"), h.alias("h")).select(
-        "d", (F.col("h") % HLL_M).alias("reg"), rank.alias("rank")
+        "d", *SK.hll_register_rank(F.col("h"))
     )
     m = rr.groupBy("d", "reg").agg(F.max("rank").alias("mr"))
     pref = (
@@ -15746,26 +15629,10 @@ def hll_cumulative_daily_distinct(
         .groupBy(F.col("g.d").alias("d"), "reg")
         .agg(F.max("mr").alias("mr"))
     )
-    agg = pref.groupBy("d").agg(
-        F.count(F.lit(1)).cast("bigint").alias("registers_used"),
-        F.sum(
-            F.round(F.pow(F.lit(2.0), -F.col("mr")), 18).cast(
-                "decimal(38,18)"
-            )
-        )
-        .cast("double")
-        .alias("s_present"),
-    )
-    v = F.lit(HLL_M) - F.col("registers_used")
-    e_raw = F.lit(HLL_ALPHA * HLL_M * HLL_M) / (
-        F.col("s_present") + v.cast("double")
-    )
-    est = F.when(
-        (e_raw <= F.lit(2.5 * HLL_M)) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-    ).otherwise(e_raw)
-    fin = agg.select(
-        "d", "registers_used", F.round(est, 4).alias("est_cum_distinct")
+    fin = SK.hll_fold(pref, "d").select(
+        "d",
+        "registers_used",
+        F.round(SK.hll_estimate(), 4).alias("est_cum_distinct"),
     )
     fs = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_d"))
     ex = (
@@ -16499,44 +16366,128 @@ def knn_graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EXACT_PCTS = (0.5, 0.95)
-PCT_BINS = 256
+ORDER_STAT_BINS = 256
 
-_PCT_BIN = (
-    f"CAST(CASE WHEN mx = mn THEN 0 ELSE least({PCT_BINS - 1}, "
-    f"CAST(floor((value - mn) / (mx - mn) * {PCT_BINS}) AS BIGINT)) END "
-    f"AS BIGINT)"
-)
+
+def _order_stats(
+    df: DataFrame, value_col: str, probs, keys=()
+) -> tuple[DataFrame, DataFrame]:
+    """EXACT order statistics WITHOUT a global sort — the two-phase
+    histogram-refinement selection every engine that has to rank 100 TB
+    uses (a total sort is the single most expensive distributed
+    primitive; selection is not sorting).  For every group of ``keys``
+    (one group when there are none) and every p in ``probs`` it picks
+    the k-th smallest ``value_col`` with k = floor((n - 1)·p) + 1
+    (n counts rows, so ``value_col`` must hold no NULL).
+
+    Phase 1 histograms each group into ORDER_STAT_BINS fixed-width bins
+    over its own [mn, mx] (a constant group is one bin), and an
+    exclusive cumsum over that BOUNDED aggregate locates the one
+    candidate bin holding rank k; phase 2 rescans only that bin's rows
+    (~n/ORDER_STAT_BINS per pick) and takes element (k - rows_before)
+    by an in-bin rank.  Ties are exact: the k-th smallest is the k-th
+    smallest whatever the distribution, which percentile_approx
+    explicitly is not.
+
+    Scale shape: two corpus scans, no global sort; the windows run over
+    the histogram and the candidate-bin subsets, each partitioned by
+    (keys, p) — at deeper scale you recurse another histogram level
+    instead of widening the window.  The stats frame (keys, mn, mx, n)
+    joins the scan side as a broadcast (a 1-row cross join without
+    keys) and feeds both binned scans and the k targets, so it is
+    localCheckpoint-pinned: unpinned, every consumer re-ran the
+    min/max/count scan (5-6 events scans instead of 2).
+
+    Returns the pinned stats frame and the picks (keys…, p, n, k,
+    value)."""
+    keys = list(keys)
+    g = (
+        df.groupBy(*keys)
+        .agg(
+            F.min(value_col).alias("mn"),
+            F.max(value_col).alias("mx"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    # a single p stays a literal: exploding a one-element array would
+    # add a Generate to the keyed plan for nothing
+    p_col = (
+        F.lit(probs[0])
+        if len(probs) == 1
+        else F.explode(F.array(*[F.lit(p) for p in probs]))
+    )
+    ks = g.select(*keys, "n", p_col.alias("p")).withColumn(
+        "k", (F.floor((F.col("n") - 1) * F.col("p")) + 1).cast("bigint")
+    )
+    binc = (
+        F.when(F.col("mx") == F.col("mn"), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(ORDER_STAT_BINS - 1),
+                F.floor(
+                    (F.col(value_col) - F.col("mn"))
+                    / (F.col("mx") - F.col("mn"))
+                    * ORDER_STAT_BINS
+                ).cast("bigint"),
+            )
+        )
+        .cast("bigint")
+    )
+    # without keys, join(…, None) is the unconditioned 1-row cross join
+    withbin = df.join(F.broadcast(g), keys or None).select(
+        *keys, F.col(value_col).alias("value"), binc.alias("bin")
+    )
+    h = withbin.groupBy(*keys, "bin").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
+    )
+    wcum = (
+        Window.partitionBy(*keys)
+        .orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = h.withColumn("before", F.coalesce(F.sum("c").over(wcum), F.lit(0)))
+    cand = (
+        ks.join(cum, keys or None)
+        .filter(
+            (F.col("k") > F.col("before"))
+            & (F.col("k") <= F.col("before") + F.col("c"))
+        )
+        .select(*keys, "p", "n", "k", "bin", "before")
+    )
+    wrank = Window.partitionBy(*keys, "p").orderBy("value")
+    picks = (
+        cand.join(withbin, [*keys, "bin"])
+        .withColumn("rn", F.row_number().over(wrank))
+        .filter(F.col("rn") == F.col("k") - F.col("before"))
+        .select(*keys, "p", "n", "k", "value")
+    )
+    return g, picks
+
+
+def _order_stats_sql(probs, keys=()) -> str:
+    """The oracle's definition of ``_order_stats``'s picks, independent
+    of its bins: rank every events.value within its group by
+    row_number() over the sorted values and keep rank k.  A SELECT of
+    (keys…, p, n, k, value)."""
+    part = f"PARTITION BY {', '.join(keys)} " if keys else ""
+    cols = "".join(f"{c}, " for c in keys)
+    return f"""SELECT {cols}ps.p, r.n, r.rn AS k, r.value
+  FROM (
+    SELECT {cols}value,
+           CAST(row_number() OVER ({part}ORDER BY value) AS BIGINT) AS rn,
+           CAST(COUNT(*) OVER ({part.strip()}) AS BIGINT) AS n
+    FROM events
+  ) r, (SELECT CAST(unnest({list(probs)}) AS DOUBLE) AS p) ps
+  WHERE r.rn = CAST(floor((r.n - 1) * ps.p) + 1 AS BIGINT)"""
+
 
 EXACT_PCT_ORACLE = f"""
-WITH g AS (
-  SELECT MIN(value) AS mn, MAX(value) AS mx,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events
-), ks AS (
-  SELECT CAST(p AS DOUBLE) AS p,
-         CAST(floor((n - 1) * CAST(p AS DOUBLE)) + 1 AS BIGINT) AS k
-  FROM g, (SELECT unnest({list(EXACT_PCTS)}) AS p)
-), b AS (
-  SELECT {_PCT_BIN} AS bin, CAST(COUNT(*) AS BIGINT) AS c
-  FROM events, g GROUP BY 1
-), cum AS (
-  SELECT bin, c,
-         COALESCE(SUM(c) OVER (ORDER BY bin
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-  FROM b
-), cand AS (
-  SELECT ks.p, ks.k, cum.bin, cum.before
-  FROM ks JOIN cum ON ks.k > cum.before AND ks.k <= cum.before + cum.c
-), ranked AS (
-  SELECT cand.p, cand.k, cand.before, e.value,
-         row_number() OVER (PARTITION BY cand.p ORDER BY e.value) AS rn
-  FROM cand JOIN (SELECT value, {_PCT_BIN} AS bin FROM events, g) e
-    ON e.bin = cand.bin
+WITH sel AS (
+  {_order_stats_sql(EXACT_PCTS)}
 )
-SELECT p, k AS order_stat,
-       ROUND(MAX(CASE WHEN rn = k - before THEN value END), 6)
-         AS exact_value
-FROM ranked GROUP BY p, k ORDER BY p
+SELECT p, k AS order_stat, ROUND(value, 6) AS exact_value
+FROM sel ORDER BY p
 """
 
 
@@ -16544,80 +16495,14 @@ FROM ranked GROUP BY p, k ORDER BY p
 def exact_percentiles_histogram_refine(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """EXACT global order statistics (p50/p95 of events.value) WITHOUT
-    a global sort — the two-phase histogram-refinement selection every
-    engine that has to rank 100 TB uses (a total sort is the single
-    most expensive distributed primitive; selection is not sorting):
-    phase 1 histograms the column into {PCT_BINS} fixed-width bins and
-    an exclusive cumsum over that BOUNDED aggregate locates, for each
-    requested percentile's order statistic k, the one candidate bin
-    holding it; phase 2 rescans only that bin's rows (~n/{PCT_BINS} of
-    the data per percentile) and picks element (k - rows_before) by an
-    in-bin rank.  Ties and duplicate values are handled exactly — the
-    k-th smallest is the k-th smallest whatever the distribution,
-    which percentile_approx explicitly is not.
-
-    Scale shape: two corpus scans, no global sort; the only windows
-    run over the {PCT_BINS}-row histogram and the per-percentile
-    candidate-bin subsets (each partitioned BY percentile, sized
-    ~n/{PCT_BINS} — at deeper scale you recurse another histogram
-    level instead of widening the window, same primitive).  The
-    1-row global stats broadcast to the scan side.  The 1-row stats
-    frame feeds the k targets, both binned-scan consumers and the
-    final projection, so it is localCheckpoint-pinned (r16: unpinned,
-    each consumer re-ran the min/max/count scan — 5 events scans,
-    a786da4:plans/r16/exact_percentiles_histogram_refine_before.txt; pinned,
-    the plan keeps exactly the two documented corpus scans)."""
+    """EXACT global p50/p95 of events.value by histogram-refinement
+    selection (``_order_stats`` with no keys: two corpus scans, no
+    global sort, the 1-row stats frame pinned and broadcast).  The
+    oracle ranks the sorted values directly, so a wrong bin, cumsum
+    or in-bin pick cannot agree with it."""
     ev = load_table(spark, sf_dir, "events")
-    g = ev.agg(
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    ).localCheckpoint(eager=False)
-    ks = g.select(
-        F.explode(F.array(*[F.lit(p) for p in EXACT_PCTS])).alias("p"), "n"
-    ).select(
-        "p",
-        (F.floor((F.col("n") - 1) * F.col("p")) + 1)
-        .cast("bigint")
-        .alias("k"),
-    )
-    binc = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(PCT_BINS - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn"))
-                    / (F.col("mx") - F.col("mn"))
-                    * PCT_BINS
-                ).cast("bigint"),
-            )
-        )
-        .cast("bigint")
-    )
-    withbin = ev.crossJoin(F.broadcast(g)).select(
-        "value", binc.alias("bin")
-    )
-    b = withbin.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    wcum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
-    cum = b.withColumn(
-        "before", F.coalesce(F.sum("c").over(wcum), F.lit(0))
-    )
-    cand = ks.join(
-        cum,
-        (F.col("k") > F.col("before"))
-        & (F.col("k") <= F.col("before") + F.col("c")),
-    ).select("p", "k", "bin", "before")
-    wrank = Window.partitionBy("p").orderBy("value")
-    ranked = (
-        cand.join(withbin, "bin")
-        .withColumn("rn", F.row_number().over(wrank))
-        .filter(F.col("rn") == F.col("k") - F.col("before"))
-    )
-    return ranked.select(
+    _, picks = _order_stats(ev, "value", EXACT_PCTS)
+    return picks.select(
         "p",
         F.col("k").alias("order_stat"),
         F.round("value", 6).alias("exact_value"),
@@ -18387,48 +18272,13 @@ def contrastive_positive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-GRP_PCT_BINS = 256
-
 GRP_MEDIAN_ORACLE = f"""
-WITH g AS (
-  SELECT event_type, MIN(value) AS mn, MAX(value) AS mx,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY event_type
-), ks AS (
-  SELECT event_type, mn, mx, n,
-         CAST(floor((n - 1) * 0.5) + 1 AS BIGINT) AS k
-  FROM g
-), wb AS (
-  SELECT e.event_type, e.value,
-         CAST(CASE WHEN ks.mx = ks.mn THEN 0
-              ELSE least({GRP_PCT_BINS - 1},
-                   CAST(floor((e.value - ks.mn) / (ks.mx - ks.mn)
-                              * {GRP_PCT_BINS}) AS BIGINT)) END AS BIGINT)
-           AS bin
-  FROM events e JOIN ks ON ks.event_type = e.event_type
-), h AS (
-  SELECT event_type, bin, CAST(COUNT(*) AS BIGINT) AS c
-  FROM wb GROUP BY event_type, bin
-), cum AS (
-  SELECT event_type, bin, c,
-         COALESCE(SUM(c) OVER (PARTITION BY event_type ORDER BY bin
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-  FROM h
-), cand AS (
-  SELECT ks.event_type, ks.k, ks.n, cum.bin, cum.before
-  FROM ks JOIN cum ON cum.event_type = ks.event_type
-   AND ks.k > cum.before AND ks.k <= cum.before + cum.c
-), ranked AS (
-  SELECT cand.event_type, cand.k, cand.n, cand.before, w.value,
-         row_number() OVER (PARTITION BY cand.event_type
-           ORDER BY w.value) AS rn
-  FROM cand JOIN wb w
-    ON w.event_type = cand.event_type AND w.bin = cand.bin
+WITH sel AS (
+  {_order_stats_sql((0.5,), ("event_type",))}
 )
 SELECT event_type, n AS n_rows, k AS order_stat,
-       ROUND(MAX(CASE WHEN rn = k - before THEN value END), 6)
-         AS exact_median
-FROM ranked GROUP BY event_type, n, k ORDER BY event_type
+       ROUND(value, 6) AS exact_median
+FROM sel ORDER BY event_type
 """
 
 
@@ -18436,81 +18286,20 @@ FROM ranked GROUP BY event_type, n, k ORDER BY event_type
 def exact_median_per_type_refine(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The histogram-refinement selection primitive GENERALIZED per
-    key: exact median of ``value`` for every event type, each group
-    getting its own min/max range, its own 256-bin histogram, and its
-    own candidate-bin rescan — still zero global sorts, and the
-    per-group windows only ever see 256-row histograms or single
-    candidate bins (~n_g/256 rows).  This is how per-tenant / per-
-    feature exact medians are computed at warehouse scale; the global
-    flagship (exact_percentiles_histogram_refine) is the degenerate
-    one-group case.
+    """Exact median of ``value`` for every event type — the
+    histogram-refinement selection (``_order_stats``) keyed by type:
+    each group gets its own min/max range, its own histogram and its
+    own candidate-bin rescan, still with zero global sorts.  This is
+    how per-tenant / per-feature exact medians are computed at
+    warehouse scale; the global exact_percentiles_histogram_refine is
+    the one-group case.
 
     Scale shape: two scans (histogram build, candidate-bin rank); the
-    group stats join back as a |types|-row broadcast; every exchange
-    is keyed by event_type so groups proceed in parallel.  The
-    |types|-row stats frame feeds both binned-scan consumers and the
-    candidate probe, so it is localCheckpoint-pinned (r16: unpinned,
-    each consumer re-ran the per-type min/max/count scan — 5 events
-    scans, a786da4:plans/r16/exact_median_per_type_refine_before.txt; pinned,
-    the plan keeps the two documented corpus scans)."""
+    pinned |types|-row stats frame joins back as a broadcast; every
+    exchange is keyed by event_type so groups proceed in parallel."""
     ev = load_table(spark, sf_dir, "events")
-    g = ev.groupBy("event_type").agg(
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
-    ks = g.select(
-        "event_type",
-        "mn",
-        "mx",
-        "n",
-        (F.floor((F.col("n") - 1) * F.lit(0.5)) + 1)
-        .cast("bigint")
-        .alias("k"),
-    ).localCheckpoint(eager=False)
-    binc = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(GRP_PCT_BINS - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn"))
-                    / (F.col("mx") - F.col("mn"))
-                    * GRP_PCT_BINS
-                ).cast("bigint"),
-            )
-        )
-        .cast("bigint")
-    )
-    wb = ev.join(F.broadcast(ks), "event_type").select(
-        "event_type", "value", binc.alias("bin")
-    )
-    h = wb.groupBy("event_type", "bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = h.withColumn(
-        "before", F.coalesce(F.sum("c").over(wcum), F.lit(0))
-    )
-    cand = ks.select("event_type", "k", "n").join(
-        cum,
-        ["event_type"],
-    ).filter(
-        (F.col("k") > F.col("before"))
-        & (F.col("k") <= F.col("before") + F.col("c"))
-    ).select("event_type", "k", "n", "bin", "before")
-    wrank = Window.partitionBy("event_type").orderBy("value")
-    ranked = (
-        cand.join(wb, ["event_type", "bin"])
-        .withColumn("rn", F.row_number().over(wrank))
-        .filter(F.col("rn") == F.col("k") - F.col("before"))
-    )
-    return ranked.select(
+    _, picks = _order_stats(ev, "value", (0.5,), keys=("event_type",))
+    return picks.select(
         "event_type",
         F.col("n").alias("n_rows"),
         F.col("k").alias("order_stat"),
@@ -18519,34 +18308,16 @@ def exact_median_per_type_refine(
 
 
 FD_BINS_ORACLE = f"""
-WITH g AS (
+WITH sel AS (
+  {_order_stats_sql((0.25, 0.75))}
+), g AS (
   SELECT MIN(value) AS mn, MAX(value) AS mx,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM events
-), ks AS (
-  SELECT CAST(p AS DOUBLE) AS p,
-         CAST(floor((n - 1) * CAST(p AS DOUBLE)) + 1 AS BIGINT) AS k
-  FROM g, (SELECT unnest([0.25, 0.75]) AS p)
-), b AS (
-  SELECT {_PCT_BIN} AS bin, CAST(COUNT(*) AS BIGINT) AS c
-  FROM events, g GROUP BY 1
-), cum AS (
-  SELECT bin, c,
-         COALESCE(SUM(c) OVER (ORDER BY bin
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-  FROM b
-), cand AS (
-  SELECT ks.p, ks.k, cum.bin, cum.before
-  FROM ks JOIN cum ON ks.k > cum.before AND ks.k <= cum.before + cum.c
-), ranked AS (
-  SELECT cand.p, cand.k, cand.before, e.value,
-         row_number() OVER (PARTITION BY cand.p ORDER BY e.value) AS rn
-  FROM cand JOIN (SELECT value, {_PCT_BIN} AS bin FROM events, g) e
-    ON e.bin = cand.bin
 ), qs AS (
-  SELECT MAX(CASE WHEN p = 0.25 AND rn = k - before THEN value END) AS q25,
-         MAX(CASE WHEN p = 0.75 AND rn = k - before THEN value END) AS q75
-  FROM ranked
+  SELECT MAX(CASE WHEN p = 0.25 THEN value END) AS q25,
+         MAX(CASE WHEN p = 0.75 THEN value END) AS q75
+  FROM sel
 )
 SELECT ROUND(q25, 6) AS q25, ROUND(q75, 6) AS q75,
        ROUND(q75 - q25, 6) AS iqr,
@@ -18561,64 +18332,19 @@ FROM qs, g
 @register("fd_binwidth_recommendation", FD_BINS_ORACLE)
 def fd_binwidth_recommendation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freedman-Diaconis histogram-bin advisor — the downstream
-    consumer of the selection primitive: EXACT q25/q75 via the same
-    two-phase histogram refinement (no global sort), then the FD rule
+    consumer of the selection primitive: EXACT q25/q75 via
+    ``_order_stats`` (no global sort), then the FD rule
     width = 2·IQR/∛n and the implied bin count for the observed range.
     This is the query a dashboarding/profiling layer runs before
-    building any value histogram at scale — and it exercises the
-    refinement machinery at a second pair of order statistics.
+    building any value histogram at scale.
 
-    Scale shape: identical to exact_percentiles_histogram_refine (two
-    scans, bounded histogram windows, per-percentile candidate-bin
-    rank); the FD arithmetic is one row.  Width is rounded BEFORE the
-    bin-count division so both engines ceil the same double.  The
-    1-row stats frame is localCheckpoint-pinned like the flagship's
-    (r16: unpinned plan re-ran min/max/count per consumer — 6 events
-    scans, a786da4:plans/r16/fd_binwidth_recommendation_before.txt)."""
+    Scale shape: identical to exact_percentiles_histogram_refine; the
+    FD arithmetic is one row over the picks and the pinned stats
+    frame.  Width is rounded BEFORE the bin-count division so both
+    engines ceil the same double."""
     ev = load_table(spark, sf_dir, "events")
-    g = ev.agg(
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    ).localCheckpoint(eager=False)
-    ks = g.select(
-        F.explode(F.array(F.lit(0.25), F.lit(0.75))).alias("p"), "n"
-    ).select(
-        "p",
-        (F.floor((F.col("n") - 1) * F.col("p")) + 1)
-        .cast("bigint")
-        .alias("k"),
-    )
-    binc = (
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(PCT_BINS - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn"))
-                    / (F.col("mx") - F.col("mn"))
-                    * PCT_BINS
-                ).cast("bigint"),
-            )
-        )
-        .cast("bigint")
-    )
-    withbin = ev.crossJoin(F.broadcast(g)).select("value", binc.alias("bin"))
-    b = withbin.groupBy("bin").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    wcum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
-    cum = b.withColumn("before", F.coalesce(F.sum("c").over(wcum), F.lit(0)))
-    cand = ks.join(
-        cum,
-        (F.col("k") > F.col("before"))
-        & (F.col("k") <= F.col("before") + F.col("c")),
-    ).select("p", "k", "bin", "before")
-    wrank = Window.partitionBy("p").orderBy("value")
-    ranked = (
-        cand.join(withbin, "bin")
-        .withColumn("rn", F.row_number().over(wrank))
-        .filter(F.col("rn") == F.col("k") - F.col("before"))
-    )
-    qs = ranked.agg(
+    g, picks = _order_stats(ev, "value", (0.25, 0.75))
+    qs = picks.agg(
         F.max(F.when(F.col("p") == 0.25, F.col("value"))).alias("q25"),
         F.max(F.when(F.col("p") == 0.75, F.col("value"))).alias("q75"),
     )
@@ -19074,7 +18800,7 @@ def unigram_entropy_effective_vocab(
 # survivors and the 26 oldest r8-seated (leaving 14 r8 seats for r16,
 # after which the floor is r9).  Every seat is
 # exact-value-green in the local sweep at sf0.01 (and the r15 10x
-# clone sweep, ORACLE_SWEEP_10X_r15.json) before seating.
+# clone sweep) before seating.
 _DRIVER_WINDOW = [
     # reworked this round (clamped PSI grid; TWS state_api audit
     # column; compaction writer guard on the merge write path)

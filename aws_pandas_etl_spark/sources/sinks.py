@@ -549,7 +549,6 @@ def merge_load_partitioned(
     partition_col: str,
     tiebreak_col: str | None = None,
     layout_spec: str | None = None,
-    adopt_layout: bool = False,
 ) -> int:
     """Partition-pruned incremental upsert — ``merge_load`` for targets
     that matter at 100 TB: the flat merge reads and REWRITES the whole
@@ -600,8 +599,7 @@ def merge_load_partitioned(
     mean that losing ``_layout.json`` (a copy that drops
     underscore-hidden files, a cleanup job) re-enables exactly the
     cross-layout merge the stamp exists to refuse.  Genuine pre-stamp
-    targets migrate explicitly — either pass ``adopt_layout=True`` on
-    the first merge after migration, or run the one-shot
+    targets migrate explicitly with the one-shot
     ``stamp_layout(path, ...)`` API.  A declaration-only upgrade
     (target stamped with ``layout_spec=None``, caller now declares
     one, everything else identical) proceeds and re-stamps with the
@@ -632,19 +630,18 @@ def merge_load_partitioned(
     stamped = read_layout_marker(spark, path)
     if stamped is None:
         # marker absent: only an EMPTY target is a first write.  A
-        # data-bearing unstamped target is refused unless the caller
-        # explicitly adopts — silent adoption would mean losing
-        # _layout.json re-enables the exact cross-layout merge the
-        # stamp refuses.
-        if not adopt_layout and has_data:
+        # data-bearing unstamped target is refused — silent adoption
+        # would mean losing _layout.json re-enables the exact
+        # cross-layout merge the stamp refuses.
+        if has_data:
             raise ValueError(
                 f"merge_load_partitioned: target {path!r} holds data but "
                 f"no {_LAYOUT_MARKER} stamp — its key→partition mapping is "
                 f"unknown, so merging could silently resurrect stale rows "
                 f"under a changed layout. If this is a genuine pre-stamp "
-                f"target whose mapping you KNOW matches this merge's, pass "
-                f"adopt_layout=True once (or run stamp_layout(path, ...)); "
-                f"otherwise rewrite the target under the declared layout."
+                f"target whose mapping you KNOW matches this merge's, run "
+                f"stamp_layout(path, ...) once; otherwise rewrite the "
+                f"target under the declared layout."
             )
     elif stamped != layout:
         upgrade = dict(stamped, layout_spec=layout_spec)
@@ -737,13 +734,12 @@ def merge_load_partitioned(
         df, existing, keys, order_col, tiebreak_col
     ).localCheckpoint(eager=True)
     if stamped is None:
-        # first write, explicit adopt_layout migration, or a
-        # declaration-only layout_spec upgrade: pin the layout BEFORE
-        # the data write.  The other order (r13) left a crash window
-        # — data landed, stamp pending — that the unstamped-target
-        # refusal above would turn into a hard error on the retry; a
-        # stamp-without-data crash instead lists no data files, so the
-        # retry is a first load and heals it.
+        # first write or a declaration-only layout_spec upgrade: pin
+        # the layout BEFORE the data write.  The other order (r13) left
+        # a crash window — data landed, stamp pending — that the
+        # unstamped-target refusal above would turn into a hard error
+        # on the retry; a stamp-without-data crash instead lists no
+        # data files, so the retry is a first load and heals it.
         _write_layout_marker(spark, path, layout)
     (
         merged.write.mode("overwrite")
@@ -970,7 +966,9 @@ def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int
     that fails deletes its tmp before the error propagates; a crash
     mid-write leaves only a dot-prefixed tmp (invisible to readers —
     Spark's listing skips '.'/'_' paths) that the winner's publish or
-    the next retry ignores.  Read the target back with
+    the next retry ignores; a retry that loses the publish race to a
+    concurrent one deletes its staged copy and reports not applied.
+    Read the target back with
     ``read_batched_target`` (recursive lookup).  Returns (total rows
     now live, whether THIS call applied the batch)."""
     import uuid as _uuid
@@ -981,19 +979,27 @@ def idempotent_append_load(df: DataFrame, path: str, batch_id: str) -> tuple[int
     fs, jdest = _hadoop_fs(spark, dest)
     applied = False
     if not fs.exists(jdest):
-        tmp = path.rstrip("/") + f"/.batch-{batch_id}.__tmp_{_uuid.uuid4().hex[:8]}"
+        staging = f".batch-{batch_id}.__tmp_{_uuid.uuid4().hex[:8]}"
+        tmp = path.rstrip("/") + "/" + staging
         _, jtmp = _hadoop_fs(spark, tmp)
+        _, jnested = _hadoop_fs(spark, dest + "/" + staging)
         try:
             write_parquet_sink(df, tmp, mode="overwrite")
         except BaseException:
             fs.delete(jtmp, True)  # a retry stages under a new name
             raise
-        if fs.rename(jtmp, jdest):
-            applied = True
-        else:  # lost the race to a concurrent retry — its commit stands
+        # Hadoop's rename onto an EXISTING directory moves the source
+        # into it and returns True, so a retry that lost the race after
+        # its exists() check shows up as the staging dir nested in the
+        # winner's batch, not as a False
+        if not fs.rename(jtmp, jdest):
             fs.delete(jtmp, True)
             if not fs.exists(jdest):
                 raise IOError(f"idempotent append: publish {dest} failed")
+        elif fs.exists(jnested):  # lost the race — the winner's commit stands
+            fs.delete(jnested, True)
+        else:
+            applied = True
     total = read_batched_target(spark, path).count()
     return total, applied
 

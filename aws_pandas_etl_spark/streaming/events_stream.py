@@ -35,12 +35,12 @@ import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
+from aws_pandas_etl_spark.operators import sketches as SK
 from aws_pandas_etl_spark.operators.relational import tolerance_bin
 from aws_pandas_etl_spark.session import scoped_conf
 from aws_pandas_etl_spark.sources.readers import (
@@ -250,22 +250,10 @@ def _run_to_parquet_sink(
         out = os.path.join(base, "out")
         writer = df.writeStream.format("parquet").option("path", out).outputMode("append")
         run_available_now(spark, writer, base, timeout_sec)
-        meta = os.path.join(out, "_spark_metadata")
-        committed = os.path.isdir(meta) and any(
-            not n.startswith(".") for n in os.listdir(meta)
-        )
-        if not committed:
-            # zero micro-batches committed — genuinely empty result
-            return spark.createDataFrame([], df.schema)
-        try:
-            return spark.read.parquet(out)
-        except AnalysisException as exc:
-            # a committed batch can contain zero rows -> no data files
-            # to infer from; anything else (corrupt files, schema
-            # mismatch) must propagate, not masquerade as an empty result
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "Unable to infer schema" in str(exc):
-                return spark.createDataFrame([], df.schema)
-            raise
+        # the declared schema, not inference: a committed zero-row batch
+        # leaves no data file to infer from, and neither does a run
+        # that committed no batch at all — both read back as 0 rows
+        return spark.read.schema(df.schema).parquet(out)
 
 
 def _run_to_memory_sink(
@@ -895,34 +883,25 @@ def run_streaming_heavy_hitters(
 def run_streaming_hll(
     spark: SparkSession,
     sf_dir: str,
-    p: int = 6,
     timeout_sec: int = 300,
 ) -> DataFrame:
-    """Streaming HyperLogLog with BOUNDED state by construction: each
-    user hash routes to one of m=2^p registers and the stream dedups
-    on (event_type, register, rank) — a domain of at most
-    |types| * m * 55 distinct triples, so the state store is bounded
-    for the LIFETIME of the stream with no watermark, and append mode
-    is exact (a triple is emitted once, ever).  The register MAX and
-    the bias-corrected harmonic-mean estimate run batch-side over the
+    """Streaming HyperLogLog (operators/sketches.py) with BOUNDED state
+    by construction: the stream dedups on (event_type, register, rank)
+    — a domain of at most |types| * 64 * 55 distinct triples, so the
+    state store is bounded for the LIFETIME of the stream with no
+    watermark, and append mode is exact (a triple is emitted once,
+    ever).  The register MAX and the estimate run batch-side over the
     sink output and must equal the batch sketch
     (plans/queries.py::hll_distinct_users) bit-for-bit, because
     max(rank) == max over the emitted distinct ranks — the HLL merge
     identity in streaming form.  The oracle replays the batch twin."""
     from aws_pandas_etl_spark.functions.hashing import md5_bigint
 
-    m = 1 << p
     h = md5_bigint(F.concat(F.lit("hll:"), F.col("user_id").cast("string")))
-    w = F.shiftright(F.col("h"), p)
-    rank = F.lit(55) - F.when(w == 0, 0).otherwise(F.length(F.bin(w)))
     stream = (
         events_stream(spark, sf_dir, with_watermark=None)
         .select("event_type", h.alias("h"))
-        .select(
-            "event_type",
-            (F.col("h") % m).alias("reg"),
-            rank.alias("rank"),
-        )
+        .select("event_type", *SK.hll_register_rank(F.col("h")))
     )
     back = _run_to_parquet_sink(
         spark,
@@ -931,27 +910,10 @@ def run_streaming_hll(
         timeout_sec,
     )
     regs = back.groupBy("event_type", "reg").agg(F.max("rank").alias("mr"))
-    agg = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("registers_used"),
-        F.sum(
-            F.round(F.pow(F.lit(2.0), -F.col("mr")), 18).cast(
-                "decimal(38,18)"
-            )
-        )
-        .cast("double")
-        .alias("s_present"),
-    )
-    alpha = 0.709  # alpha_64; callers changing p must supply alpha_m
-    v = F.lit(m) - F.col("registers_used")
-    e_raw = F.lit(alpha * m * m) / (F.col("s_present") + v.cast("double"))
-    est = F.when(
-        (e_raw <= F.lit(2.5 * m)) & (v > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double")),
-    ).otherwise(e_raw)
-    return agg.select(
+    return SK.hll_fold(regs, "event_type").select(
         "event_type",
         "registers_used",
-        F.round(est, 4).alias("est_distinct"),
+        F.round(SK.hll_estimate(), 4).alias("est_distinct"),
     )
 
 

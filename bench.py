@@ -8,8 +8,9 @@ The same JSON is also written to $SPARK_GRAFT_BENCH_OUT (default
 ``BENCH_LOCAL.json`` next to this script): the driver's per-round
 artifact preserves only a stdout tail, which truncated the per-query
 map both prior rounds — the committed file keeps the full timing
-distribution for round-over-round regression analysis (snapshots are
-committed as ``BENCH_LOCAL_r{N}.json``).
+distribution for round-over-round regression analysis (each run reads
+the previous one's file, or $SPARK_GRAFT_BENCH_PREV, before replacing
+it).
 """
 
 from __future__ import annotations
@@ -188,15 +189,12 @@ def main() -> None:
     # same session (quiet-host confirmation without a separate run).
     # A real regression survives the re-time; host contention doesn't.
     ratio_stats: dict = {}
-    prev_path = os.environ.get("SPARK_GRAFT_BENCH_PREV")
-    if prev_path is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-        snaps = sorted(
-            (f for f in os.listdir(here)
-             if re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", f)),
-            key=lambda f: int(re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", f).group(1)),
-        )
-        prev_path = os.path.join(here, snaps[-1]) if snaps else None
+    # the previous run's BENCH_LOCAL.json, read before this run
+    # overwrites it
+    prev_path = os.environ.get(
+        "SPARK_GRAFT_BENCH_PREV",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
+    )
     if prev_path and os.path.isfile(prev_path):
         try:
             with open(prev_path) as fh:

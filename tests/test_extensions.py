@@ -720,6 +720,51 @@ def test_misra_gries_candidates_cover_exact_heavy_hitters(spark):
     assert heavy <= cand
 
 
+def test_order_stats_is_exact_on_ties_constant_and_single_row_groups(spark):
+    """The histogram-refinement selection returns exactly
+    sorted(values)[k-1], k = floor((n-1)p)+1, for every p — on a group
+    of heavy ties spanning bin edges (min and max both repeated), a
+    constant group (mx = mn: one bin) and a one-row group; per group
+    and over the whole frame."""
+    import math
+    import random
+
+    from aws_pandas_etl_spark.plans.queries import _order_stats
+
+    rnd = random.Random(7)
+    groups = {
+        "ties": [1.0] * 40 + [2.0] * 30 + [3.0] * 5 + [-1.5] * 10
+        + [round(rnd.uniform(-1.5, 3.0), 2) for _ in range(300)],
+        "const": [7.25] * 13,
+        "one": [4.0],
+    }
+    rows = [(g, v) for g, vs in groups.items() for v in vs]
+    rnd.shuffle(rows)
+    df = spark.createDataFrame(rows, "g string, v double").repartition(3)
+    probs = (0.0, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95, 0.99, 1.0)
+
+    def expected(values):
+        vs, n = sorted(values), len(values)
+        return {
+            p: (n, math.floor((n - 1) * p) + 1, vs[math.floor((n - 1) * p)])
+            for p in probs
+        }
+
+    _, picks = _order_stats(df, "v", probs, keys=("g",))
+    got = {}
+    for r in picks.collect():
+        assert (r["g"], r["p"]) not in got
+        got[(r["g"], r["p"])] = (r["n"], r["k"], r["value"])
+    assert got == {
+        (g, p): e for g, vs in groups.items() for p, e in expected(vs).items()
+    }
+    _, picks = _order_stats(df, "v", probs)
+    assert {r["p"]: (r["n"], r["k"], r["value"]) for r in picks.collect()} == (
+        expected([v for _, v in rows])
+    )
+    assert picks.count() == len(probs)
+
+
 def test_kmeans_partitioning_independent_and_nontrivial(spark):
     from aws_pandas_etl_spark.operators.clustering import kmeans_lloyd
 

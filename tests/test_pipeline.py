@@ -404,9 +404,8 @@ def test_merge_load_partitioned_refuses_unstamped_target_by_default(
     """A data-bearing UNSTAMPED target (marker absent) must REFUSE by
     default (r13 verdict #2): silently adopting the current spec would
     mean losing _layout.json re-enables exactly the cross-layout merge
-    the stamp refuses.  Explicit migration paths both work: (a)
-    adopt_layout=True on the merge call, (b) the one-shot stamp_layout
-    API followed by a plain merge."""
+    the stamp refuses.  The explicit migration works: the one-shot
+    stamp_layout API followed by a plain merge."""
     import os
 
     import pytest
@@ -436,14 +435,7 @@ def test_merge_load_partitioned_refuses_unstamped_target_by_default(
             batch(1, "a2", 2), t, keys=["k"], order_col="ver",
             partition_col="bkt", layout_spec="pmod(k,2)",
         )
-    # path (a): explicit adopt_layout=True proceeds and re-stamps
-    assert merge_load_partitioned(
-        batch(1, "a2", 2), t, keys=["k"], order_col="ver",
-        partition_col="bkt", layout_spec="pmod(k,2)", adopt_layout=True,
-    ) == 1
-    assert read_layout_marker(spark, t)["layout_spec"] == "pmod(k,2)"
-    # path (b): lose the stamp again, migrate via stamp_layout
-    os.remove(os.path.join(t, "_layout.json"))
+    # migrate via stamp_layout, then merge
     stamp_layout(
         spark, t, keys=["k"], order_col="ver", partition_col="bkt",
         layout_spec="pmod(k,2)",
@@ -799,6 +791,40 @@ def test_delete_load_missing_target_raises(spark, tmp_path):
     keys = spark.createDataFrame([Row(k=1)])
     with pytest.raises(Exception):
         delete_load(spark, str(tmp_path / "nope"), keys, keys=["k"])
+
+
+def test_idempotent_append_retry_that_loses_the_publish_race(
+    spark, tmp_path, fault_fs
+):
+    """Two deliveries of one batch both find no ``batch-<id>`` and
+    stage; the other one publishes first.  Hadoop's rename of this
+    call's staging onto the now-existing directory moves it INSIDE and
+    returns True, so the call must find that nested copy, delete it,
+    and report the batch as not applied — one copy of the rows, no
+    hidden second copy under the winner's directory."""
+    import os
+
+    from aws_pandas_etl_spark.sources.sinks import (
+        idempotent_append_load,
+        read_batched_target,
+    )
+
+    p = str(tmp_path / "t")
+    df = spark.range(5).selectExpr("id", "id % 2 AS v")
+    dest = os.path.join(p, "batch-b1")
+
+    def winner_publishes_first(op, args, n):
+        if op == "rename" and ".batch-b1.__tmp_" in args[0].toString():
+            df.coalesce(1).write.parquet(dest)
+        return False
+
+    with fault_fs(winner_publishes_first) as plan:
+        assert idempotent_append_load(df, p, "b1") == (5, False)
+    assert len(plan.renamed) == 1
+    assert sorted(os.listdir(p)) == ["batch-b1"]
+    assert not [n for n in os.listdir(dest) if n.startswith(".batch-")]
+    assert read_batched_target(spark, p).count() == 5
+    assert idempotent_append_load(df, p, "b1") == (5, False)
 
 
 def test_idempotent_append_retry_is_noop(spark, tmp_path):

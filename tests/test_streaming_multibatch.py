@@ -871,3 +871,26 @@ def test_foreach_batch_merge_failure_leaves_no_scratch(spark, tmp_path, monkeypa
     with pytest.raises(Exception, match="injected merge failure"):
         run_foreach_batch_merge(spark, SF, n_splits=2, timeout_sec=120)
     assert not [n for n in os.listdir(tmp_path) if n.startswith("fbmerge_")]
+
+
+def test_parquet_sink_reads_back_empty_results_with_the_declared_schema(
+    spark, tmp_path
+):
+    """A streaming run whose committed batch holds zero rows, and one
+    whose source held no file at all, both read back as 0 rows with
+    the stream's own schema — not as a schema-inference error."""
+    from aws_pandas_etl_spark.streaming.events_stream import (
+        _run_to_parquet_sink,
+    )
+
+    none_kept = open_events_stream(spark, SF).filter(F.col("value") < -1e18)
+    back = _run_to_parquet_sink(spark, none_kept, "emptybatch", 120)
+    assert back.count() == 0
+    assert back.schema.fieldNames() == none_kept.schema.fieldNames()
+
+    src = tmp_path / "src"
+    src.mkdir()
+    no_files = spark.readStream.schema("k bigint, v string").parquet(str(src))
+    back = _run_to_parquet_sink(spark, no_files, "emptysrc", 120)
+    assert back.count() == 0
+    assert back.schema.simpleString() == "struct<k:bigint,v:string>"

@@ -3,8 +3,8 @@
 auditable, VERDICT r9 item 8): run EVERY ``queries()`` entry through
 Spark AND its DuckDB ``oracle_sql()`` twin on the same parquet —
 default sf0.1, the bench scale, one level above the driver's sf0.01
-gate — and write one JSON artifact with per-query rows/schema/values
-verdicts (the committed per-round snapshot is ``ORACLE_SWEEP_r{N}.json``).
+gate — and write one JSON artifact (``ORACLE_SWEEP.json``) with
+per-query rows/schema/values verdicts.
 
 Usage:
     python tools/oracle_sweep.py                       # sf0.1, all queries
