@@ -124,18 +124,18 @@ def minhash_signature(hash_col: Column, num_hashes: int = 32) -> Column:
     return F.array(*sigs)
 
 
-def hash_bucket(col: Column | str, salt: str, buckets: int = 100) -> Column:
-    """Deterministic bucket in [0, buckets): md5-hash of ``salt|key``.
+def hash_bucket(col: Column | str, salt: str) -> Column:
+    """Deterministic bucket in [0, 100): md5-hash of ``salt|key``.
     THE parity-critical construction behind split assignment and
     stratified sampling — change it here and in ``hash_bucket_sql``
     together, never in one place."""
     c = F.col(col) if isinstance(col, str) else col
-    return md5_bigint(F.concat(F.lit(f"{salt}|"), c.cast("string"))) % buckets
+    return md5_bigint(F.concat(F.lit(f"{salt}|"), c.cast("string"))) % 100
 
 
-def hash_bucket_sql(expr: str, salt: str, buckets: int = 100) -> str:
+def hash_bucket_sql(expr: str, salt: str) -> str:
     """DuckDB twin of ``hash_bucket`` (for oracle generators)."""
     return (
         f"(CAST(('0x'||substr(md5('{salt}|' || CAST({expr} AS VARCHAR)),1,"
-        f"{MD5_HEX_DIGITS})) AS BIGINT) % {buckets})"
+        f"{MD5_HEX_DIGITS})) AS BIGINT) % 100)"
     )

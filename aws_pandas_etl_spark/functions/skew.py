@@ -15,11 +15,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, entropy_cols: list[str], num_salts: int = 16,
-              salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt in [0, num_salts) derived from value columns
+def with_salt(df: DataFrame, entropy_cols: list[str], num_salts: int = 16) -> DataFrame:
+    """Deterministic ``_salt`` in [0, num_salts) derived from value columns
     (not rand(): reproducible plans, stable retries)."""
-    return df.withColumn(salt_col, F.pmod(F.xxhash64(*entropy_cols), F.lit(num_salts)))
+    return df.withColumn("_salt", F.pmod(F.xxhash64(*entropy_cols), F.lit(num_salts)))
 
 
 def salted_sum(

@@ -43,7 +43,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aws_pandas_etl_spark.functions.literals import lit_array
-from aws_pandas_etl_spark.operators.similarity import dot, l2sq
+from aws_pandas_etl_spark.operators.similarity import (
+    ID_COL,
+    ROUND_DIGITS,
+    VEC_COL,
+    dot,
+    l2sq,
+)
 
 
 def _dist_structs(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Column:
@@ -153,11 +159,11 @@ def nearest_centroid(vec_col: str, cents: list[tuple[int, list[float]]]) -> F.Co
     return _cell.asNondeterministic()(F.col(vec_col))
 
 
-def _update(assigned: DataFrame, vec_col: str) -> list[tuple[int, list[float]]]:
+def _update(assigned: DataFrame) -> list[tuple[int, list[float]]]:
     """New centroids: exact decimal mean per (cluster, dim) — the
     embedding_label_centroids pattern.  Collects k*dim doubles."""
     rows = (
-        assigned.select("cluster", F.posexplode(vec_col).alias("pos", "v"))
+        assigned.select("cluster", F.posexplode(VEC_COL).alias("pos", "v"))
         # ragged (non-null, wrong-dim) vectors survive posexplode with a
         # NULL cluster from nearest_centroid; drop them or sorted(by_cid)
         # below compares None to int and the fit crashes
@@ -183,20 +189,16 @@ def kmeans_fit(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Run the Lloyd iterations and return the FINAL centroid list
     (the centroids the ``iters``-th assignment round uses) — callers
     choose how to assign against them (argmin for clustering, top-p
     for multi-probe blocking)."""
-    init = (
-        embeddings.orderBy(id_col).limit(k).select(vec_col).collect()
-    )
-    cents = [(i, [float(v) for v in r[vec_col]]) for i, r in enumerate(init)]
+    init = embeddings.orderBy(ID_COL).limit(k).select(VEC_COL).collect()
+    cents = [(i, [float(v) for v in r[VEC_COL]]) for i, r in enumerate(init)]
     for _ in range(iters - 1):
-        assigned = embeddings.withColumn("cluster", nearest_centroid(vec_col, cents))
-        cents = _update(assigned, vec_col)
+        assigned = embeddings.withColumn("cluster", nearest_centroid(VEC_COL, cents))
+        cents = _update(assigned)
     return cents
 
 
@@ -204,17 +206,15 @@ def kmeans_lloyd(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd's: ``iters`` assignment rounds with a
     centroid update between consecutive rounds.  Returns one row per
-    vector: (id_col, cluster).  ``cents`` pins an externally fitted
+    vector: (vec_id, cluster).  ``cents`` pins an externally fitted
     (e.g. artifact-cached) clustering; None fits on the input."""
     if cents is None:
-        cents = kmeans_fit(embeddings, k, iters, id_col, vec_col)
-    return embeddings.select(id_col, nearest_centroid(vec_col, cents).alias("cluster"))
+        cents = kmeans_fit(embeddings, k, iters)
+    return embeddings.select(ID_COL, nearest_centroid(VEC_COL, cents).alias("cluster"))
 
 
 def semantic_dedup_pairs(
@@ -223,9 +223,6 @@ def semantic_dedup_pairs(
     iters: int = 2,
     threshold: float = 0.4,
     assign_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., 2023): cluster embeddings with k-means,
@@ -257,10 +254,7 @@ def semantic_dedup_pairs(
     Returns distinct (a, b, cosine_sim) for shared-cluster pairs with
     rounded cosine >= threshold, a < b.
     """
-    pairs = cluster_blocked_cosine_pairs(
-        embeddings, k, iters, assign_probes, id_col, vec_col, round_digits,
-        cents=cents,
-    )
+    pairs = cluster_blocked_cosine_pairs(embeddings, k, iters, assign_probes, cents)
     return pairs.filter(F.col("cosine_sim") >= threshold)
 
 
@@ -270,9 +264,6 @@ def knn_graph(
     k: int = 8,
     iters: int = 2,
     assign_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Approximate all-kNN join: for EVERY vector, its k_neighbors
@@ -291,9 +282,7 @@ def knn_graph(
     candidates (ties by neighbor id).  ``cents`` pins an externally
     fitted clustering (see knn_graph_extend); None fits on the input.
     """
-    pairs = cluster_blocked_cosine_pairs(
-        embeddings, k, iters, assign_probes, id_col, vec_col, round_digits, cents
-    )
+    pairs = cluster_blocked_cosine_pairs(embeddings, k, iters, assign_probes, cents)
     return _topk_per_source(pairs, k_neighbors)
 
 
@@ -305,9 +294,6 @@ def knn_graph_extend(
     k: int = 8,
     iters: int = 2,
     assign_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Incremental kNN-graph maintenance: extend a materialized graph
@@ -330,35 +316,31 @@ def knn_graph_extend(
     merge is one union + the same per-source top-k window, keyed by
     source id."""
     if cents is None:
-        cents = kmeans_fit(
-            old_emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-        )
+        cents = kmeans_fit(old_emb, k=k, iters=iters)
     all_emb = old_emb.unionByName(new_emb)
-    assigned = _topp_assign(all_emb, cents, assign_probes, id_col, vec_col)
-    is_new = new_emb.select(F.col(id_col), F.lit(True).alias("___new"))
+    assigned = _topp_assign(all_emb, cents, assign_probes, ID_COL, VEC_COL)
+    is_new = new_emb.select(F.col(ID_COL), F.lit(True).alias("___new"))
     # flagged feeds BOTH aliases of the cell self-join below: without a
     # pin the Arrow-batched _topp_assign pass runs once per alias
     # (r15 measured 0.86-0.93x pinned, interleaved min-of-5 x2);
     # the pinned frame is (id, cluster, flag) — assign_probes rows per
     # vector, never the embeddings themselves
-    flagged = assigned.join(is_new, id_col, "left").select(
-        id_col, "cluster", F.coalesce(F.col("___new"), F.lit(False)).alias("___new")
+    flagged = assigned.join(is_new, ID_COL, "left").select(
+        ID_COL, "cluster", F.coalesce(F.col("___new"), F.lit(False)).alias("___new")
     ).localCheckpoint(eager=False)
     cand = (
         flagged.alias("x")
         .join(flagged.alias("y"), "cluster")
         .filter(
-            (F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+            (F.col(f"x.{ID_COL}") < F.col(f"y.{ID_COL}"))
             & (F.col("x.___new") | F.col("y.___new"))
         )
-        .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"))
+        .select(F.col(f"x.{ID_COL}").alias("a"), F.col(f"y.{ID_COL}").alias("b"))
         .distinct()
     )
     # new_pairs feeds both orientations of the directed union — pin the
     # rescore (a cosine fold per candidate pair) to one evaluation
-    new_pairs = _rescore_pairs(
-        cand, all_emb, id_col, vec_col, round_digits
-    ).localCheckpoint(eager=False)
+    new_pairs = _rescore_pairs(cand, all_emb).localCheckpoint(eager=False)
     # old_edges are already directed; fold them in as one-orientation
     # candidates on top of the new pairs' two orientations
     directed_new = new_pairs.unionByName(
@@ -556,37 +538,31 @@ def cell_pair_cos(
     )
 
 
-def _rescore_pairs(
-    cand: DataFrame,
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    round_digits: int,
-) -> DataFrame:
+def _rescore_pairs(cand: DataFrame, embeddings: DataFrame) -> DataFrame:
     """One cosine fold per unique (a, b) candidate pair, with the
     per-vector norm precomputed once."""
     v = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("___nrm"),
+        F.col(ID_COL),
+        F.col(VEC_COL),
+        F.sqrt(dot(F.col(VEC_COL), F.col(VEC_COL))).alias("___nrm"),
     )
     sim = F.round(
         dot(F.col("___va"), F.col("___vb")) / (F.col("___na") * F.col("___nb")),
-        round_digits,
+        ROUND_DIGITS,
     )
     return (
         cand.join(
             v.select(
-                F.col(id_col).alias("a"),
-                F.col(vec_col).alias("___va"),
+                F.col(ID_COL).alias("a"),
+                F.col(VEC_COL).alias("___va"),
                 F.col("___nrm").alias("___na"),
             ),
             "a",
         )
         .join(
             v.select(
-                F.col(id_col).alias("b"),
-                F.col(vec_col).alias("___vb"),
+                F.col(ID_COL).alias("b"),
+                F.col(VEC_COL).alias("___vb"),
                 F.col("___nrm").alias("___nb"),
             ),
             "b",
@@ -616,9 +592,6 @@ def cluster_blocked_cosine_pairs(
     k: int = 8,
     iters: int = 2,
     assign_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Shared candidates-then-rescore core: k-means top-p blocking,
@@ -627,26 +600,23 @@ def cluster_blocked_cosine_pairs(
     an externally fitted clustering (incremental maintenance); None
     fits on the input."""
     if cents is None:
-        cents = kmeans_fit(
-            embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-        )
-    assigned = _topp_assign(embeddings, cents, assign_probes, id_col, vec_col)
+        cents = kmeans_fit(embeddings, k=k, iters=iters)
+    assigned = _topp_assign(embeddings, cents, assign_probes, ID_COL, VEC_COL)
     cand = (
         assigned.alias("x")
         .join(assigned.alias("y"), "cluster")
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+        .filter(F.col(f"x.{ID_COL}") < F.col(f"y.{ID_COL}"))
         .select(
-            F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b")
+            F.col(f"x.{ID_COL}").alias("a"), F.col(f"y.{ID_COL}").alias("b")
         )
         .distinct()
     )
-    return _rescore_pairs(cand, embeddings, id_col, vec_col, round_digits)
+    return _rescore_pairs(cand, embeddings)
 
 
 def pca_fit(
     embeddings: DataFrame,
     iters: int = 3,
-    vec_col: str = "embedding",
 ) -> tuple[list[float], list[float]]:
     """Power-iteration fit: returns (per-dim exact-decimal mean, unit
     top-component vector) — the reusable half of pca_top_component,
@@ -655,7 +625,7 @@ def pca_fit(
     import math
 
     mean_rows = (
-        embeddings.select(F.posexplode(vec_col).alias("pos", "v"))
+        embeddings.select(F.posexplode(VEC_COL).alias("pos", "v"))
         .groupBy("pos")
         .agg(
             (
@@ -671,7 +641,7 @@ def pca_fit(
     dim = len(mean)
     mean_lit = lit_array(mean)
     xc = F.zip_with(
-        F.col(vec_col), mean_lit, lambda x, m: x.cast("double") - m
+        F.col(VEC_COL), mean_lit, lambda x, m: x.cast("double") - m
     )
     centered = embeddings.select(xc.alias("___xc"))
 
@@ -704,9 +674,6 @@ def pca_fit(
 def pca_top_component(
     embeddings: DataFrame,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Top principal component by power iteration — the data-DRIVEN
     projection next to the data-oblivious JL (similarity.py): center
@@ -725,8 +692,8 @@ def pca_top_component(
     |dim|-row shuffle; driver traffic is dim doubles per round (the
     centroid-update class).  Returns (dim 1-based, loading rounded).
     """
-    _, v = pca_fit(embeddings, iters=iters, vec_col=vec_col)
-    rows = [(i + 1, round(c, round_digits)) for i, c in enumerate(v)]
+    _, v = pca_fit(embeddings, iters=iters)
+    rows = [(i + 1, round(c, ROUND_DIGITS)) for i, c in enumerate(v)]
     return embeddings.sparkSession.createDataFrame(
         rows, "dim int, loading double"
     )

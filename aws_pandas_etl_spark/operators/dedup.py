@@ -6,7 +6,7 @@ Scale posture (100 TB):
 - Near-dup avoids O(n²): MinHash-LSH bands candidate pairs with an
   equi-join on (band_index, band_hash) — shuffle is proportional to
   candidate volume, not n².  Skewed bands (boilerplate text) are
-  handled by AQE skew-join; a ``max_bucket`` guard drops degenerate
+  handled by AQE skew-join; a ``MAX_BUCKET`` guard drops degenerate
   buckets (standard practice — boilerplate buckets are near-useless
   and quadratic).
 - All hashing is the engine-portable md5-based 60-bit family
@@ -84,13 +84,7 @@ def shingle_hash_table(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, shingle_n: int = 3) -> DataFrame:
     """Per-doc shingle set + MinHash signature.
 
     Shingle/base-hash extraction is ``shingle_hash_table`` (a JVM
@@ -101,25 +95,21 @@ def minhash_signatures(
     blocks are reference-counted (freed by the ContextCleaner when the
     frame is garbage-collected), so repeated invocation in a long-lived
     session cannot accumulate storage the way a ``persist()``
-    CacheManager entry would.  The ``num_hashes`` affine derivations
+    CacheManager entry would.  The ``NUM_HASHES`` affine derivations
     stay JVM-side (cheap integer array math)."""
-    base = shingle_hash_table(df, id_col, text_col, shingle_n).localCheckpoint(
+    base = shingle_hash_table(df, shingle_n=shingle_n).localCheckpoint(
         eager=False  # lazy: no Spark job at plan-construction time
     )
     return base.withColumn(
-        "sig", minhash_signature(F.col("hashes"), num_hashes=num_hashes)
+        "sig", minhash_signature(F.col("hashes"), num_hashes=NUM_HASHES)
     )
 
 
-def band_rows(
-    sigs: DataFrame,
-    num_bands: int = NUM_BANDS,
-    num_hashes: int = NUM_HASHES,
-) -> DataFrame:
+def band_rows(sigs: DataFrame) -> DataFrame:
     """Explode signatures into (doc_id, band, band_hash) rows — the
     shared banding step of the LSH pipeline (lsh_candidate_pairs) and
-    its diagnostics (lsh_band_stats).  One explode, rows x num_bands."""
-    rpb = num_hashes // num_bands
+    its diagnostics (lsh_band_stats).  One explode, rows x NUM_BANDS."""
+    rpb = NUM_HASHES // NUM_BANDS
     return sigs.select(
         "doc_id",
         F.explode(
@@ -133,33 +123,28 @@ def band_rows(
                             )
                         ).alias("band_hash"),
                     )
-                    for b in range(num_bands)
+                    for b in range(NUM_BANDS)
                 ]
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.band_hash")
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    num_bands: int = NUM_BANDS,
-    num_hashes: int = NUM_HASHES,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Band signatures, bucket-join to candidate pairs (a < b).
 
-    One explode (rows x num_bands), one equi-join shuffle on
-    (band, band_hash).  ``max_bucket`` drops degenerate buckets
-    (boilerplate) to keep the join linear-ish at scale.
+    One explode (rows x ``NUM_BANDS``), one equi-join shuffle on
+    (band, band_hash).  Buckets above ``MAX_BUCKET`` are dropped as
+    degenerate (boilerplate) to keep the join linear-ish at scale.
     """
-    banded = band_rows(sigs, num_bands, num_hashes)
+    banded = band_rows(sigs)
     # Degenerate-bucket guard: the oversized-bucket list is tiny (it's
     # the pathological tail), so a broadcast anti-join beats a Window
     # count (which would shuffle every banded row).
     oversized = (
         banded.groupBy("band", "band_hash")
         .agg(F.count("*").alias("bucket_n"))
-        .filter(F.col("bucket_n") > max_bucket)
+        .filter(F.col("bucket_n") > MAX_BUCKET)
         .select("band", "band_hash")
     )
     sized = banded.join(F.broadcast(oversized), ["band", "band_hash"], "left_anti")
@@ -173,30 +158,25 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_band_stats(
-    sigs: DataFrame,
-    num_bands: int = NUM_BANDS,
-    num_hashes: int = NUM_HASHES,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
+def lsh_band_stats(sigs: DataFrame) -> DataFrame:
     """Per-band LSH bucket economics — the scale diagnostic behind the
     "candidates ∝ bucket sizes, not n²" claim (key_skew_report's twin
     for the dedup pipeline).  For each band: live bucket count, largest
     bucket, candidate pairs the bucket-join will materialize
-    (Σ n·(n−1)/2 over buckets within the max_bucket guard), and the
+    (Σ n·(n−1)/2 over buckets within the ``MAX_BUCKET`` guard), and the
     oversized buckets / pairs the guard drops.  Run BEFORE a large
     dedup to predict its join cost and spot a boilerplate-bucket blowup
     while it is still one aggregate, not a hung shuffle.
 
     Scale shape: one explode + one (band, band_hash) groupBy — the same
-    shuffle the real pipeline pays — then a num_bands-row aggregate.
+    shuffle the real pipeline pays — then a ``NUM_BANDS``-row aggregate.
     No pair is ever materialized."""
-    banded = band_rows(sigs, num_bands, num_hashes)
+    banded = band_rows(sigs)
     sizes = banded.groupBy("band", "band_hash").agg(
         F.count("*").cast("bigint").alias("n")
     )
     pair_n = F.col("n") * (F.col("n") - F.lit(1))
-    in_guard = F.col("n") <= F.lit(max_bucket)
+    in_guard = F.col("n") <= F.lit(MAX_BUCKET)
     zero = F.lit(0).cast("bigint")
     return (
         sizes.groupBy("band")
@@ -250,11 +230,7 @@ def exact_jaccard(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
 
 
 def dedup_near_minhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
+    df: DataFrame, threshold: float = 0.5, shingle_n: int = 3
 ) -> DataFrame:
     """X2 — near-duplicate pairs with exact-Jaccard >= threshold,
     LSH-blocked.  Returns (a, b, jaccard), a < b."""
@@ -265,7 +241,7 @@ def dedup_near_minhash(
     # above it is cheap to recompute per consumer.  At
     # 100 TB this materialization is the standard "signature table"
     # stage of a MinHash pipeline (tiny vs the corpus: ids + hashes).
-    sigs = minhash_signatures(df, id_col, text_col, shingle_n)
+    sigs = minhash_signatures(df, shingle_n)
     pairs = lsh_candidate_pairs(sigs)
     return exact_jaccard(pairs, sigs).filter(F.col("jaccard") >= threshold)
 
@@ -273,10 +249,7 @@ def dedup_near_minhash(
 def dedup_incremental(
     new_docs: DataFrame,
     corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     near_threshold: float | None = None,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Admit only new-batch docs that are not already in the historical
     corpus — the shape every production ingest actually runs (dedup the
@@ -296,19 +269,15 @@ def dedup_incremental(
     Doc ids must be unique across both sides.  Returns the admitted
     subset of ``new_docs`` (all columns).
     """
-    seen = corpus.select(F.md5(F.col(text_col)).alias("_seen_h")).distinct()
+    seen = corpus.select(F.md5(F.col("text")).alias("_seen_h")).distinct()
     admitted = new_docs.join(
-        seen, F.md5(F.col(text_col)) == F.col("_seen_h"), "left_anti"
+        seen, F.md5(F.col("text")) == F.col("_seen_h"), "left_anti"
     )
     if near_threshold is None:
         return admitted
-    both = corpus.select(id_col, text_col).unionByName(
-        new_docs.select(id_col, text_col)
-    )
-    pairs = dedup_near_minhash(
-        both, id_col, text_col, threshold=near_threshold, shingle_n=shingle_n
-    )
-    old_ids = corpus.select(F.col(id_col).alias("_oid"))
+    both = corpus.select("doc_id", "text").unionByName(new_docs.select("doc_id", "text"))
+    pairs = dedup_near_minhash(both, threshold=near_threshold)
+    old_ids = corpus.select(F.col("doc_id").alias("_oid"))
     # orient pairs both ways, keep edges whose partner is a corpus doc;
     # the other endpoint is then a new doc to drop
     edges = pairs.select(F.col("a").alias("_x"), F.col("b").alias("_y")).unionByName(
@@ -316,10 +285,10 @@ def dedup_incremental(
     )
     drop = (
         edges.join(old_ids, edges._x == F.col("_oid"), "left_semi")
-        .select(F.col("_y").alias(id_col))
+        .select(F.col("_y").alias("doc_id"))
         .distinct()
     )
-    return admitted.join(drop, id_col, "left_anti")
+    return admitted.join(drop, "doc_id", "left_anti")
 
 
 def _check_simhash_bits(num_bits: int) -> None:
@@ -332,9 +301,7 @@ def _check_simhash_bits(num_bits: int) -> None:
         raise ValueError(f"simhash num_bits must be in [1, 63], got {num_bits}")
 
 
-def simhash_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", num_bits: int = 32
-) -> DataFrame:
+def simhash_table(df: DataFrame, num_bits: int = 32) -> DataFrame:
     """doc_id -> simhash via numpy-vectorized mapInPandas: SimHash over
     the normalized tokens, bit i set when the sum over tokens of
     (bit_i(md5_15hex(token)) ? +1 : -1) is positive.  ``num_bits`` <= 63
@@ -358,7 +325,7 @@ def simhash_table(
         bit_idx = np.arange(num_bits, dtype=np.uint64)
         for pdf in batches:
             ids, hashes = [], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
                 toks = pytext.tokens(t)
                 if not toks:
                     continue
@@ -374,16 +341,14 @@ def simhash_table(
                 {"doc_id": "int64", "simhash": "int64"}
             )
 
-    return df.select(id_col, text_col).mapInPandas(_extract, schema=out_schema)
+    return df.select("doc_id", "text").mapInPandas(_extract, schema=out_schema)
 
 
-def dedup_simhash(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", num_bits: int = 32
-) -> DataFrame:
+def dedup_simhash(df: DataFrame, num_bits: int = 32) -> DataFrame:
     """SimHash dedup report: docs sharing an identical simhash are
     near-dup candidates; one shuffle on the 64-bit key."""
     return (
-        simhash_table(df, id_col, text_col, num_bits)
+        simhash_table(df, num_bits=num_bits)
         .groupBy("simhash")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_docs"))
     )
@@ -392,8 +357,6 @@ def dedup_simhash(
 def decontaminate(
     df: DataFrame,
     benchmark_max_id: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 8,
 ) -> DataFrame:
     """Benchmark decontamination: find corpus documents that share any
@@ -410,14 +373,12 @@ def decontaminate(
     documents pairwise — cost is O(total shingles)."""
 
     def _grams(side: DataFrame) -> DataFrame:
-        return shingle_hash_table(side, id_col, text_col, shingle_n=shingle_n).select(
+        return shingle_hash_table(side, shingle_n=shingle_n).select(
             "doc_id", F.explode("hashes").alias("h")
         )
 
-    bench = (
-        _grams(df.filter(F.col(id_col) < benchmark_max_id)).select("h").distinct()
-    )
-    corpus = _grams(df.filter(F.col(id_col) >= benchmark_max_id))
+    bench = _grams(df.filter(F.col("doc_id") < benchmark_max_id)).select("h").distinct()
+    corpus = _grams(df.filter(F.col("doc_id") >= benchmark_max_id))
     return (
         corpus.join(F.broadcast(bench), "h")
         .groupBy("doc_id")
@@ -584,12 +545,7 @@ def decontaminate_bloom(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 30,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     """Transitive closure of a pair list -> dedup clusters: every node
     labeled with the minimum doc id reachable through the edge set
     (near-dup pairs are pairwise; survivors-per-cluster needs the
@@ -613,9 +569,9 @@ def connected_components(
     needed for dedup workloads.
 
     Returns (doc_id, component_id) for every node that appears in
-    ``edges``.
+    ``edges``' ``a`` or ``b`` column.
     """
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    e = edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
     e = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct().localCheckpoint()
@@ -729,19 +685,13 @@ WINNOW_MIN_SHARED = 3
 WINNOW_POS_MOD = 1 << 20
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    chunk_grams: int = WINNOW_POS_MOD,
-) -> DataFrame:
-    """Winnowing fingerprint table: (id, fp, pos) — the MOSS
+def winnow_fingerprints(df: DataFrame, chunk_grams: int = WINNOW_POS_MOD) -> DataFrame:
+    """Winnowing fingerprint table: (doc_id, fp, pos) — the MOSS
     plagiarism-detector selection, the third near-dup family next to
     MinHash-LSH (probabilistic, set-level) and rare-shingle blocking
     (frequency-selective): winnowing is POSITION-ROBUST — it
-    guarantees detection of any shared substring of >= k+w-1 tokens,
+    guarantees detection of any shared substring of
+    >= ``WINNOW_K + WINNOW_W - 1`` tokens,
     which set-level Jaccard dilutes away when the shared passage is a
     small fraction of each document.
 
@@ -750,7 +700,7 @@ def winnow_fingerprints(
     hash k-grams (pytext md5-prefix invariant, byte-identical to the
     Column/oracle twins), pack (hash, rightmost-pos), numpy sliding
     min, per-doc unique — emitting ~2/(w+1) of gram positions as
-    (id, fp, pos) rows with NO explode, NO per-doc window shuffle and
+    (doc_id, fp, pos) rows with NO explode, NO per-doc window shuffle and
     NO distinct (a Column + Window draft of the same selection
     measured ~4x slower at sf0.1: per-element HOF gram building plus
     two shuffles).  One Python call per Arrow batch; a document is
@@ -770,6 +720,7 @@ def winnow_fingerprints(
 
     from aws_pandas_etl_spark.functions import pytext
 
+    k, w = WINNOW_K, WINNOW_W
     if chunk_grams < 2 * w:
         raise ValueError(f"chunk_grams must be >= {2 * w} (got {chunk_grams})")
     if chunk_grams > WINNOW_POS_MOD:
@@ -779,7 +730,7 @@ def winnow_fingerprints(
 
     out_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("fp", T.LongType()),
             T.StructField("pos", T.IntegerType()),
         ]
@@ -801,7 +752,7 @@ def winnow_fingerprints(
             ids: list[int] = []
             fps: list[int] = []
             poss: list[int] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = pytext.tokens(text)
                 n = len(toks) - k + 1
                 if n < w:
@@ -849,36 +800,31 @@ def winnow_fingerprints(
                 poss.extend(gp.tolist())
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "fp": pd.Series(fps, dtype="int64"),
                     "pos": pd.Series(poss, dtype="int32"),
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(_extract, schema=out_schema)
+    return df.select("doc_id", "text").mapInPandas(_extract, schema=out_schema)
 
 
-def winnow_pairs(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    df_cap: int = WINNOW_DF_CAP,
-    min_shared: int = WINNOW_MIN_SHARED,
-) -> DataFrame:
+def winnow_pairs(fps: DataFrame, min_shared: int = WINNOW_MIN_SHARED) -> DataFrame:
     """Near-duplicate pairs from a winnowing fingerprint table: docs
     sharing >= min_shared distinct fingerprints, blocked per
-    fingerprint with the rare-token df cap (a fingerprint in > df_cap
-    docs is boilerplate — template headers — and would form a
+    fingerprint with the rare-token df cap (a fingerprint in more than
+    ``WINNOW_DF_CAP`` docs is boilerplate — template headers — and would form a
     quadratic bucket; dropping it loses only pairs ALSO joined by a
-    rarer fingerprint, the same recall argument as LSH's max_bucket).
+    rarer fingerprint, the same recall argument as LSH's MAX_BUCKET).
 
     Returns (a, b, n_shared).  Scale shape: candidate volume is
-    bounded by |fingerprint vocabulary| x C(df_cap, 2), vocabulary-
+    bounded by |fingerprint vocabulary| x C(WINNOW_DF_CAP, 2), vocabulary-
     proportional like rare-token blocking (BASELINE.md r11 measured
     that bound's behavior directly)."""
-    f = fps.select(F.col(id_col).alias("___d"), "fp").distinct()
+    f = fps.select(F.col("doc_id").alias("___d"), "fp").distinct()
     dfreq = f.groupBy("fp").agg(F.count("*").alias("___df"))
     kept = f.join(
-        dfreq.filter(F.col("___df") <= df_cap).select("fp"), "fp"
+        dfreq.filter(F.col("___df") <= WINNOW_DF_CAP).select("fp"), "fp"
     )
     return (
         kept.alias("x")
@@ -892,13 +838,7 @@ def winnow_pairs(
     )
 
 
-def excise_duplicate_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-) -> DataFrame:
+def excise_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Span-excision curation: consume winnowing's localized shared
     spans (the ``winnowing_shared_spans`` shape — (a, b, n_shared,
     a_pos_min/max, b_pos_min/max) with a < b) and CUT the duplicated
@@ -909,11 +849,11 @@ def excise_duplicate_spans(
 
     Keep-longest policy: per pair, the doc with FEWER tokens loses
     (tie → the larger doc_id, i.e. ``b``); the loser's matched extent
-    [pos_min, pos_max + k - 1] (gram positions widened to token
+    [pos_min, pos_max + WINNOW_K - 1] (gram positions widened to token
     positions by the k-gram span) is removed.  A doc losing several
     pairs accumulates all its ranges; overlaps union naturally.
 
-    Returns one row per EXCISED doc: (id, n_tokens_before,
+    Returns one row per EXCISED doc: (doc_id, n_tokens_before,
     n_tokens_after, text_excised) where the rebuilt text is the kept
     normalized tokens space-joined (normalization is the corpus-wide
     invariant all fingerprint families share; originals stay
@@ -929,13 +869,13 @@ def excise_duplicate_spans(
     for the rebuild — a JVM-side higher-order filter over the token
     array, no Python, no explode, no shuffle of non-losing docs."""
     toks_expr = F.filter(
-        F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " "),
+        F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " "),
         lambda t: t != "",
     )
     # one row per doc; pin ONE evaluation — la/lb below would otherwise
     # each re-run the full tokenize scan for their branch of the join
     lens = docs.select(
-        F.col(id_col).alias("___d"), F.size(toks_expr).alias("___n")
+        F.col("doc_id").alias("___d"), F.size(toks_expr).alias("___n")
     ).localCheckpoint(eager=False)
     la = lens.select(
         F.col("___d").alias("___da"), F.col("___n").alias("___na")
@@ -955,7 +895,7 @@ def excise_duplicate_spans(
         .alias("___s"),
         (
             F.when(b_loses, F.col("b_pos_max")).otherwise(F.col("a_pos_max"))
-            + F.lit(k - 1)
+            + F.lit(WINNOW_K - 1)
         ).alias("___e"),
     )
     per_doc = ranges.groupBy("___loser").agg(
@@ -964,9 +904,9 @@ def excise_duplicate_spans(
     # join FIRST, tokenize after: only losing docs pay the rebuild
     # tokenization (and the probe side stays the raw two-column scan)
     joined = (
-        docs.select(id_col, text_col)
-        .join(per_doc, F.col(id_col) == F.col("___loser"))
-        .select(F.col(id_col), toks_expr.alias("___toks"), "___rng")
+        docs.select("doc_id", "text")
+        .join(per_doc, F.col("doc_id") == F.col("___loser"))
+        .select(F.col("doc_id"), toks_expr.alias("___toks"), "___rng")
     )
     kept = F.filter(
         F.col("___toks"),
@@ -976,7 +916,7 @@ def excise_duplicate_spans(
         ),
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("___toks").cast("bigint").alias("n_tokens_before"),
         F.size(kept).cast("bigint").alias("n_tokens_after"),
         F.concat_ws(" ", kept).alias("text_excised"),

@@ -40,33 +40,31 @@ def pagerank(
     nodes: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
 ) -> DataFrame:
-    """Rank every node in ``nodes`` after ``iters`` synchronous
-    PageRank rounds over directed ``edges``.  Returns (node, pr).
+    """Rank every ``node`` of ``nodes`` after ``iters`` synchronous
+    PageRank rounds over directed ``edges`` (``src``, ``dst``).
+    Returns (node, pr).
 
     ``nodes`` must include isolated vertices (they receive only the
     teleport term); ``edges`` rows are unweighted — parallel edges
     count as parallel (dedupe upstream if unwanted)."""
-    edges = edges.select(src, dst).localCheckpoint()
-    outd = edges.groupBy(src).agg(F.count("*").cast("bigint").alias("outdeg"))
+    edges = edges.select("src", "dst").localCheckpoint()
+    outd = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("outdeg"))
     n_nodes = nodes.agg(F.count("*").cast("bigint").alias("n_nodes"))
 
     pr = (
         nodes.crossJoin(F.broadcast(n_nodes))
         .select(
-            node, (F.lit(1.0) / F.col("n_nodes").cast("double")).alias("pr")
+            "node", (F.lit(1.0) / F.col("n_nodes").cast("double")).alias("pr")
         )
         .localCheckpoint()
     )
     for _ in range(iters):
         contrib = (
-            edges.join(outd, src)
-            .join(pr.select(F.col(node).alias(src), "pr"), src)
+            edges.join(outd, "src")
+            .join(pr.select(F.col("node").alias("src"), "pr"), "src")
             .select(
-                F.col(dst).alias(node),
+                F.col("dst").alias("node"),
                 F.round(
                     F.col("pr") / F.col("outdeg").cast("double"), PR_SUM_DIGITS
                 )
@@ -74,12 +72,12 @@ def pagerank(
                 .alias("w"),
             )
         )
-        sums = contrib.groupBy(node).agg(F.sum("w").cast("double").alias("s"))
+        sums = contrib.groupBy("node").agg(F.sum("w").cast("double").alias("s"))
         pr = (
-            nodes.join(sums, node, "left")
+            nodes.join(sums, "node", "left")
             .crossJoin(F.broadcast(n_nodes))
             .select(
-                node,
+                "node",
                 (
                     F.lit(1.0 - damping) / F.col("n_nodes").cast("double")
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))

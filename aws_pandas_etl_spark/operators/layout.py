@@ -53,10 +53,8 @@ def _interleave(dims: list[Column], bits: int) -> Column:
     return z
 
 
-def zorder_value(
-    df: DataFrame, cols: list[str], bits: int = DEFAULT_BITS, out_col: str = "_z"
-) -> DataFrame:
-    """Attach the z-order key for ``cols`` (2+ dims; per-dim resolution
+def zorder_value(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Attach the z-order key ``_z`` for ``cols`` (2+ dims; per-dim resolution
     is capped so the interleaved key fits a long — more dims = coarser
     cells, same construction).
 
@@ -65,7 +63,7 @@ def zorder_value(
     of one approxQuantile pass over the columns."""
     if len(cols) < 2:
         raise ValueError("zorder_value needs at least 2 columns")
-    nq = min(1 << bits, 256, 1 << (62 // len(cols)))
+    nq = min(1 << DEFAULT_BITS, 256, 1 << (62 // len(cols)))
     # boundary count: 256 cells/dim localizes plenty and keeps the
     # literal array (and quantile pass) small
     probs = [i / nq for i in range(1, nq)]
@@ -75,7 +73,7 @@ def zorder_value(
         .approxQuantile(cols, probs, 0.01)
     )
     return df.withColumn(
-        out_col,
+        "_z",
         _interleave(
             [_bucket(F.col(c), b, eff_bits) for c, b in zip(cols, bounds)],
             eff_bits,
@@ -88,14 +86,13 @@ def zorder_write(
     path: str,
     cols: list[str],
     num_files: int = 32,
-    bits: int = DEFAULT_BITS,
 ) -> None:
     """Write ``df`` as parquet clustered on the z-order of ``cols``:
     range-partition on the z-value (one shuffle), sort within
     partitions, drop the helper column.  Selective reads on EITHER
     column now skip most files/row-groups on min/max stats — the
     lakehouse OPTIMIZE ZORDER BY shape, as plain open Spark."""
-    zdf = zorder_value(df, cols, bits)
+    zdf = zorder_value(df, cols)
     (
         zdf.repartitionByRange(num_files, F.col("_z"))
         .sortWithinPartitions("_z")

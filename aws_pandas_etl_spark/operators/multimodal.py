@@ -47,7 +47,7 @@ def decode_image(payload: bytes) -> tuple[int, int]:
     return ((payload[0] % 64) + 1, (payload[-1] % 64) + 1)
 
 
-def extract_features(binary_df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+def extract_features(binary_df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     ``mapInPandas``: each batch arrives as a pandas DataFrame; output
@@ -57,11 +57,11 @@ def extract_features(binary_df: DataFrame, id_col: str = "doc_id", payload_col: 
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             dims = [decode_image(p if p is not None else b"") for p in payloads]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "byte_len": [len(p) if p is not None else 0 for p in payloads],
                     "content_md5": [
                         hashlib.md5(p if p is not None else b"").hexdigest() for p in payloads
@@ -99,8 +99,6 @@ def resize_batch(
     binary_df: DataFrame,
     width: int = 32,
     height: int = 32,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Arrow-batched resize: binary in -> (smaller) binary out.  The
     canonical image-normalization stage: output partition size is
@@ -111,10 +109,10 @@ def resize_batch(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "payload": [
                         resize_image(p if p is not None else b"", width, height)
-                        for p in pdf[payload_col]
+                        for p in pdf["payload"]
                     ],
                     "out_width": width,
                     "out_height": height,
@@ -137,8 +135,6 @@ def sample_frames(
     binary_df: DataFrame,
     every_n_bytes: int = 64,
     max_frames: int = 8,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """STUB frame sampler — real implementation seeks keyframes via
     ffmpeg; the fake slices the payload every ``every_n_bytes``.  Shape
@@ -150,7 +146,7 @@ def sample_frames(
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, nos, frames = [], [], []
-            for doc_id, p in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
                 p = p if p is not None else b""
                 for i in range(min(max_frames, max(1, len(p) // every_n_bytes))):
                     ids.append(int(doc_id))

@@ -98,14 +98,13 @@ def _global_rank_with_total(
 def global_rank(
     df: DataFrame,
     order_cols: list[str],
-    out_col: str = "global_rank",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Dense global 1-based rank over a UNIQUE composite order key,
-    without a single-partition global sort.  Equivalent to
+    """Dense global 1-based rank (column ``global_rank``) over a UNIQUE
+    composite order key, without a single-partition global sort.  Equivalent to
     ``row_number() OVER (ORDER BY order_cols)`` (== rank(), since the
     key is unique)."""
-    return _global_rank_with_total(df, order_cols, out_col, num_partitions).drop(
+    return _global_rank_with_total(df, order_cols, "global_rank", num_partitions).drop(
         "_n_total"
     )
 

@@ -37,7 +37,6 @@ def range_join_binned(
     left_ts: str,
     right_ts: str,
     tolerance_us: int,
-    extra_on: list[str] | None = None,
 ) -> DataFrame:
     """All (left, right) pairs with ``|left_ts - right_ts| <= tolerance``.
 
@@ -46,16 +45,14 @@ def range_join_binned(
     equi-join: bucket timestamps into ``tolerance``-wide bins, join on
     bin with the left side exploded to {b-1, b, b+1}, then apply the
     exact predicate.  Candidate volume is bounded by true temporal
-    locality, not n·m.  ``extra_on`` adds equi-keys (e.g. user_id) to
-    the bin join when present."""
-    extra_on = extra_on or []
+    locality, not n·m."""
     lbin = tolerance_bin(left_ts, tolerance_us)
     rbin = tolerance_bin(right_ts, tolerance_us)
     l = left.withColumn(
         "_bin", F.explode(F.array(lbin - 1, lbin, lbin + 1))
     )
     r = right.withColumn("_bin", rbin)
-    joined = l.join(r, ["_bin", *extra_on])
+    joined = l.join(r, "_bin")
     gap = F.unix_micros(F.col(left_ts)) - F.unix_micros(F.col(right_ts))
     return (
         joined.filter(F.abs(gap) <= tolerance_us)

@@ -82,7 +82,6 @@ def neyman_sample(
     value_col: str,
     total_target: int,
     id_col: str,
-    salt: str = "neyman",
 ) -> DataFrame:
     """Optimal-allocation stratified sampling (Neyman): stratum sample
     sizes ∝ n_h·σ_h, so strata whose measured variable varies more get
@@ -150,7 +149,7 @@ def neyman_sample(
     )
     return (
         df.join(F.broadcast(rates), group_col)
-        .filter(hash_fraction(F.col(id_col), salt) < F.col("_rate"))
+        .filter(hash_fraction(F.col(id_col), "neyman") < F.col("_rate"))
         .drop("_rate")
     )
 

@@ -24,6 +24,12 @@ from pyspark.sql import functions as F
 
 from aws_pandas_etl_spark.functions.literals import lit_array
 
+# The embeddings table's columns and the cosine rounding every
+# similarity and clustering operator reports.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+ROUND_DIGITS = 6
+
 
 def hyperplane(plane: int, dims: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-1, 1]^dims.
@@ -58,9 +64,6 @@ def topk_bruteforce(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """X3 baseline — exact cosine top-k against a literal query vector.
 
@@ -69,10 +72,10 @@ def topk_bruteforce(
     the driver side of the sort.  Scales linearly with a 100 TB scan.
     """
     q = lit_array(query_vec)
-    sim = F.round(cosine(F.col(vec_col), q), round_digits)
+    sim = F.round(cosine(F.col(VEC_COL), q), ROUND_DIGITS)
     return (
-        embeddings.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        embeddings.select(F.col(ID_COL), sim.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col(ID_COL))
         .limit(k)
     )
 
@@ -94,9 +97,6 @@ def topk_lsh(
     query_vec: list[float],
     k: int = 10,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     hamming_probe: int = 0,
 ) -> DataFrame:
     """X3 scale path — ANN top-k searching the query's LSH bucket plus,
@@ -117,8 +117,8 @@ def topk_lsh(
         if sum(a * b for a, b in zip(p, query_vec)) >= 0:
             qsketch |= 1 << i
     q = lit_array(query_vec)
-    sim = F.round(cosine(F.col(vec_col), q), round_digits)
-    sketch = lsh_sketch(F.col(vec_col), planes)
+    sim = F.round(cosine(F.col(VEC_COL), q), ROUND_DIGITS)
+    sketch = lsh_sketch(F.col(VEC_COL), planes)
     if hamming_probe <= 0:
         bucket_pred = sketch == F.lit(qsketch)
     else:
@@ -141,8 +141,8 @@ def topk_lsh(
         bucket_pred = sketch.isin(probed)
     return (
         embeddings.filter(bucket_pred)
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        .select(F.col(ID_COL), sim.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col(ID_COL))
         .limit(k)
     )
 
@@ -165,19 +165,15 @@ def topk_ivf(
     k: int = 10,
     num_centroids: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     cents: list[tuple[int, list[float]]] | None = None,
-    iters: int = 2,
 ) -> DataFrame:
     """X3 scale path (IVF flavor): assign the table to k-means cells,
     search only the query's ``nprobe`` nearest cells with exact cosine.
 
     ``cents`` pins an externally fitted (artifact-cached) clustering —
     the fit-once/assign-many contract every IVF-family query shares;
-    None trains here with the same deterministic Lloyd's the
-    clustering operators use (id-ordered init, exact-decimal updates —
+    None trains here with two rounds of the same deterministic Lloyd's
+    the clustering operators use (id-ordered init, exact-decimal updates —
     see operators/clustering.py for the determinism contract).  Probe
     cells are the query's ``nprobe`` nearest (``nearest_cells``, on the
     driver) and every vector's cell is ``nearest_centroid``: one
@@ -196,17 +192,15 @@ def topk_ivf(
     )
 
     if cents is None:
-        cents = kmeans_fit(
-            embeddings, k=num_centroids, iters=iters, id_col=id_col, vec_col=vec_col
-        )
+        cents = kmeans_fit(embeddings, k=num_centroids)
     probe = nearest_cells(query_vec, cents, nprobe)
     qlit = lit_array(query_vec)
-    sim = F.round(cosine(F.col(vec_col), qlit), round_digits)
+    sim = F.round(cosine(F.col(VEC_COL), qlit), ROUND_DIGITS)
     return (
-        embeddings.withColumn("cluster", nearest_centroid(vec_col, cents))
+        embeddings.withColumn("cluster", nearest_centroid(VEC_COL, cents))
         .filter(F.col("cluster").isin(probe))
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        .select(F.col(ID_COL), sim.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col(ID_COL))
         .limit(k)
     )
 
@@ -215,9 +209,6 @@ def similarity_self_join(
     embeddings: DataFrame,
     threshold: float = 0.95,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     dims: int | None = None,
 ) -> DataFrame:
     """X6 — all pairs with cosine >= threshold, LSH-blocked.
@@ -234,11 +225,11 @@ def similarity_self_join(
     """
     if dims is None:
         # Explicit fallback probe — one-row scan, documented cost.
-        first = embeddings.select(vec_col).first()
+        first = embeddings.select(VEC_COL).first()
         if first is None or first[0] is None:
             raise ValueError(
                 "similarity_self_join: cannot infer dims from an empty "
-                f"table or NULL first {vec_col!r}; pass dims= explicitly"
+                f"table or NULL first {VEC_COL!r}; pass dims= explicitly"
             )
         dims = len(first[0])
     planes = [hyperplane(p, dims) for p in range(num_planes)]
@@ -249,10 +240,10 @@ def similarity_self_join(
     # Same FP values — norms are the same sqrt(dot(v,v)) expression,
     # just not recomputed per pair.
     sk = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        lsh_sketch(F.col(vec_col), planes).alias("sketch"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
+        F.col(ID_COL).alias("id"),
+        F.col(VEC_COL).alias("v"),
+        lsh_sketch(F.col(VEC_COL), planes).alias("sketch"),
+        F.sqrt(dot(F.col(VEC_COL), F.col(VEC_COL))).alias("norm"),
     ).localCheckpoint(eager=False)  # lazy: no job at plan-construction time
     a = sk.select(F.col("id").alias("a"), F.col("v").alias("va"), "sketch",
                   F.col("norm").alias("norm_a"))
@@ -260,7 +251,7 @@ def similarity_self_join(
                   F.col("norm").alias("norm_b"))
     sim = F.round(
         dot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b")),
-        round_digits,
+        ROUND_DIGITS,
     )
     return (
         a.join(b, "sketch")
@@ -273,10 +264,7 @@ def similarity_self_join(
 def jl_project(
     embeddings: DataFrame,
     out_dims: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: out_dims deterministic
     md5-derived hyperplanes (the LSH plane family, offset so the two
@@ -291,16 +279,14 @@ def jl_project(
     collect_list away.  Values are unscaled dot products — relative
     distances are what ANN ranking consumes; apply 1/sqrt(out_dims)
     for calibrated absolute distances."""
-    from pyspark.sql import DataFrame as _DF  # noqa: F401
-
-    ndims = dims or len(embeddings.select(vec_col).first()[0])
+    ndims = dims or len(embeddings.select(VEC_COL).first()[0])
     planes = [hyperplane(1000 + p, ndims) for p in range(out_dims)]
     projected = F.array(
         *[
-            F.round(dot(F.col(vec_col), lit_array(pl)), round_digits)
+            F.round(dot(F.col(VEC_COL), lit_array(pl)), ROUND_DIGITS)
             for pl in planes
         ]
     )
     return embeddings.select(
-        id_col, F.posexplode(projected).alias("dim", "value")
-    ).select(id_col, F.col("dim").cast("int").alias("dim"), "value")
+        ID_COL, F.posexplode(projected).alias("dim", "value")
+    ).select(ID_COL, F.col("dim").cast("int").alias("dim"), "value")

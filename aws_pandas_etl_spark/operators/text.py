@@ -105,11 +105,11 @@ def predict_lang_staged(
     return df.withColumn(out_col, predict_lang(text_col))
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document stats projection: char/token counts, alpha and
-    punctuation ratios, distinct-token ratio."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    toks = tokens(text_col)
+def text_stats(df: DataFrame) -> DataFrame:
+    """Per-document stats projection of the ``text`` column: char/token
+    counts, alpha and punctuation ratios, distinct-token ratio."""
+    c = F.coalesce(F.col("text"), F.lit(""))
+    toks = tokens("text")
     n_tok = F.size(toks)
     n_char = F.length(c)
     n_alpha = F.length(F.regexp_replace(c, "[^a-zA-Z]", ""))
@@ -146,20 +146,14 @@ def quality_score(col: Column | str) -> Column:
     return _let(tokens(c), token_terms) + F.lit(0.3) * alpha_ratio
 
 
-def fingerprint(col: Column | str, n: int = 8) -> Column:
+def fingerprint(col: Column | str) -> Column:
     """Document fingerprint: md5 of the normalized text (whole-doc
     content hash, robust to case/punct/whitespace)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(normalize_text(F.coalesce(c, F.lit(""))))
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 64,
-    stride: int = 48,
-) -> DataFrame:
+def chunk_documents(df: DataFrame, chunk_tokens: int = 64, stride: int = 48) -> DataFrame:
     """Context-window chunking: split each document into overlapping
     token chunks (``chunk_tokens`` wide, ``stride`` apart) — the
     standard pretraining-data windowing step.  1->N explode of a pure
@@ -172,9 +166,7 @@ def chunk_documents(
     # Bind tokens to a column first: embedding the tokenize tree inside
     # the transform lambda would re-run it per chunk (HOF lambdas are
     # interpreted with no subexpression caching).
-    base = df.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("_toks")
-    )
+    base = df.select("doc_id", tokens("text").alias("_toks"))
     toks = F.col("_toks")
     n = F.size(toks)
     # integer ceil((n-chunk)+ / stride): last window index
@@ -244,17 +236,17 @@ def repeated_2gram_fraction(col: Column | str) -> Column:
     return (total - distinct).cast("double") / F.greatest(total, F.lit(1))
 
 
-def assign_split(id_col: Column | str, train_pct: int = 80, val_pct: int = 10) -> Column:
-    """Deterministic train/val/test assignment by hashing the document
-    key — stable across runs, machines, and engine versions (unlike
-    ``rand()``-based splits), and uniformly distributed regardless of
-    key clustering.  Bucket = md5-hash(id) mod 100."""
+def assign_split(id_col: Column | str) -> Column:
+    """Deterministic 80/10/10 train/val/test assignment by hashing the
+    document key — stable across runs, machines, and engine versions
+    (unlike ``rand()``-based splits), and uniformly distributed
+    regardless of key clustering.  Bucket = md5-hash(id) mod 100."""
     from aws_pandas_etl_spark.functions.hashing import hash_bucket
 
     bucket = hash_bucket(id_col, "split")
     return (
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
+        F.when(bucket < 80, F.lit("train"))
+        .when(bucket < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
 
@@ -262,7 +254,6 @@ def assign_split(id_col: Column | str, train_pct: int = 80, val_pct: int = 10) -
 def pack_sequences(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     budget: int = 512,
 ) -> DataFrame:
     """Assign documents to fixed-token-budget training packs:
@@ -280,7 +271,7 @@ def pack_sequences(
     unique (it is the ordering key)."""
     from aws_pandas_etl_spark.operators.ranking import global_prefix_sum
 
-    ntok = F.size(tokens(text_col))
+    ntok = F.size(tokens("text"))
     base = df.select(F.col(id_col).alias("doc_id"), ntok.alias("n_tokens"))
     packed = global_prefix_sum(base, ["doc_id"], "n_tokens", out_col="start_tok")
     return packed.withColumn(
@@ -288,9 +279,7 @@ def pack_sequences(
     )
 
 
-def lang_id_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", lang_col: str = "lang"
-) -> DataFrame:
+def lang_id_table(df: DataFrame) -> DataFrame:
     """doc_id -> (lang, pred_lang) via Arrow-batched mapInPandas.
 
     Same stopword-argmax semantics as ``predict_lang`` (Column twin):
@@ -316,7 +305,7 @@ def lang_id_table(
     def _predict(batches):
         for pdf in batches:
             preds = []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 toks = pytext.tokens(t)
                 scores = {
                     lang: sum(1 for tk in toks if tk in stopsets[lang])
@@ -329,18 +318,16 @@ def lang_id_table(
                     preds.append(next(l for l in langs if scores[l] == best))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "lang": pdf[lang_col],
+                    "doc_id": pdf["doc_id"].astype("int64"),
+                    "lang": pdf["lang"],
                     "pred_lang": preds,
                 }
             )
 
-    return df.select(id_col, lang_col, text_col).mapInPandas(_predict, schema=out_schema)
+    return df.select("doc_id", "lang", "text").mapInPandas(_predict, schema=out_schema)
 
 
-def fingerprint_features(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 8
-) -> DataFrame:
+def fingerprint_features(df: DataFrame, n: int = 8) -> DataFrame:
     """Per-doc fingerprints via Arrow-batched mapInPandas: whole-doc
     content md5 (byte-identical to ``fingerprint`` above) + the minimal
     60-bit md5 over word ``n``-gram shingles, both on the shared
@@ -365,7 +352,7 @@ def fingerprint_features(
     def _extract(batches):
         for pdf in batches:
             fps, mins = [], []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 norm = pytext.normalized(t)
                 fps.append(hashlib.md5(norm.encode("utf-8")).hexdigest())
                 grams = pytext.shingles(pytext.tokens(t), n)
@@ -374,13 +361,13 @@ def fingerprint_features(
                 )
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "fp_md5": fps,
                     "min_gram_hash": mins,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(_extract, schema=out_schema)
+    return df.select("doc_id", "text").mapInPandas(_extract, schema=out_schema)
 
 
 def misra_gries_candidates(
@@ -465,28 +452,24 @@ def heavy_hitters_exact(
     )
 
 
-def bpe_top_merges(
-    df: DataFrame, text_col: str = "text", iters: int = 3
-) -> DataFrame:
+def bpe_top_merges(df: DataFrame, iters: int = 3) -> DataFrame:
     """Wrapper over :func:`_bpe_train` returning only the merge rows —
     see that function for the algorithm and determinism notes."""
-    results, _ = _bpe_train(df, text_col, iters)
+    results, _ = _bpe_train(df, iters=iters)
     return df.sparkSession.createDataFrame(
         results, "iteration int, pair string, cnt bigint"
     )
 
 
-def bpe_vocab_stats(
-    df: DataFrame, text_col: str = "text", iters: int = 3
-) -> DataFrame:
+def bpe_vocab_stats(df: DataFrame) -> DataFrame:
     """Tokenizer APPLY readout: corpus token counts before (characters)
-    and after the ``iters`` learned merges, with the compression ratio
+    and after the 3 learned merges, with the compression ratio
     — one aggregate over the training loop's own final vocabulary
     state, so apply costs nothing beyond training (at deployment the
     (word -> symbols) table joins any corpus as a broadcast
     vocabulary).  Returns 1 row: (n_words, tokens_pre, tokens_post,
     compression)."""
-    _, cur = _bpe_train(df, text_col, iters)
+    _, cur = _bpe_train(df)
     return bpe_vocab_stats_from_state(cur)
 
 

@@ -109,9 +109,7 @@ def standardize_column_names(df: DataFrame) -> DataFrame:
     return df.toDF(*[normalize_column_name(c) for c in df.columns])
 
 
-def enforce_schema(
-    df: DataFrame, schema: T.StructType, truncate_ts_to_ms: bool = True
-) -> DataFrame:
+def enforce_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """P8 — cast-or-fail projection to the declared schema (ref
     ``pa.Table.from_pandas(df, schema=...)``,
     dataframe_operations.py:103).
@@ -128,7 +126,7 @@ def enforce_schema(
     cols: list[Column] = []
     for f in schema.fields:
         c = F.col(f.name).cast(f.dataType)
-        if truncate_ts_to_ms and isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
+        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
             c = F.timestamp_millis(F.unix_millis(c))
         cols.append(c.alias(f.name))
     return df.select(*cols)

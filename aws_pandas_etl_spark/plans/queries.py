@@ -2046,12 +2046,11 @@ MAX_BLOCK_DOCS = 10_000
 
 def _ngram_jaccard_pairs_blocked(
     docs: DataFrame,
-    threshold: float = 0.3,
     max_block_docs: int = MAX_BLOCK_DOCS,
     shingle_table: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact word-3-gram Jaccard over (lang, source) attribute blocks
-    with a degenerate-block guard (same shape as dedup.py MAX_BUCKET).
+    """Exact word-3-gram Jaccard >= 0.3 over (lang, source) attribute
+    blocks with a degenerate-block guard (same shape as dedup.py MAX_BUCKET).
     ``shingle_table`` lets callers pass the build-once _shingle3_table
     artifact instead of re-running the shingle extraction."""
     from aws_pandas_etl_spark.operators.dedup import shingle_hash_table
@@ -2087,7 +2086,7 @@ def _ngram_jaccard_pairs_blocked(
     # (gram, block), count shared grams per pair.  |A∪B| = na+nb-shared,
     # so jaccard needs no array ops — pure shuffle relational plan
     # (interpreted array_intersect over ~500k pairs was the bottleneck).
-    # Pairs sharing zero grams have jaccard 0 < threshold — safe to omit.
+    # Pairs sharing zero grams have jaccard 0 < 0.3 — safe to omit.
     # g feeds both sides of the self-join below; the two exchange
     # subtrees canonicalize identically, so ReusedExchange computes the
     # join+explode once — no persist (a CacheManager entry would outlive
@@ -2111,7 +2110,7 @@ def _ngram_jaccard_pairs_blocked(
         F.col("na") + F.col("nb") - F.col("shared"), F.lit(1)
     )
     return shared.select("a", "b", jaccard.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+        F.col("jaccard") >= 0.3
     )
 
 
@@ -4937,9 +4936,24 @@ def _cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parquet_memo(spark, "cc_labels", src, "cc-v1|thr=0.5|sh=3", _build)
 
 
-def _clusters_oracle() -> str:
-    return f"""
-WITH RECURSIVE pairs AS (
+def _cc_labeled(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
+    """Every row of ``docs`` with its near-dup ``component_id`` from
+    ``_cc_components``; a document in no pair is its own component.
+    Columns: doc_id, component_id, then the rest of ``docs``."""
+    comp = _cc_components(spark, sf_dir).select("doc_id", "component_id")
+    return docs.join(comp, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("component_id"), F.col("doc_id")).alias("component_id"),
+        *[c for c in docs.columns if c != "doc_id"],
+    )
+
+
+def _cc_oracle_ctes() -> str:
+    """The oracle twin of ``_cc_components``: ``WITH RECURSIVE`` CTEs
+    ending in ``comp(doc_id, component_id)``, the least doc id reachable
+    through the MinHash pairs (a recursive closure, not label
+    propagation)."""
+    return f"""WITH RECURSIVE pairs AS (
   {_minhash_oracle()}
 ), e AS (
   SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs
@@ -4949,7 +4963,12 @@ WITH RECURSIVE pairs AS (
   SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.node
 ), comp AS (
   SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-)
+)"""
+
+
+def _clusters_oracle() -> str:
+    return f"""
+{_cc_oracle_ctes()}
 SELECT doc_id, component_id,
        CAST(COUNT(*) OVER (PARTITION BY component_id) AS BIGINT) AS cluster_size
 FROM comp
@@ -4973,17 +4992,7 @@ def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cluster_histogram_oracle() -> str:
     return f"""
-WITH RECURSIVE pairs AS (
-  {_minhash_oracle()}
-), e AS (
-  SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs
-), reach(node, r) AS (
-  SELECT u, u FROM e
-  UNION
-  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.node
-), comp AS (
-  SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-), lab AS (
+{_cc_oracle_ctes()}, lab AS (
   SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS component_id
   FROM documents d LEFT JOIN comp c USING (doc_id)
 ), sizes AS (
@@ -5009,13 +5018,8 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (via the shared materialized labeling, _cc_components), then two
     size-bounded aggregates (|components| rows, then |distinct sizes|
     rows)."""
-    docs_full = load_table(spark, sf_dir, "documents")
-    docs = docs_full.select("doc_id")
-    comp = _cc_components(spark, sf_dir).select("doc_id", "component_id")
-    lab = docs.join(comp, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("component_id"), F.col("doc_id")).alias("component_id"),
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    lab = _cc_labeled(spark, sf_dir, docs)
     sizes = lab.groupBy("component_id").agg(
         F.count("*").cast("bigint").alias("n")
     )
@@ -5031,17 +5035,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _survivors_oracle() -> str:
     return f"""
-WITH RECURSIVE pairs AS (
-  {_minhash_oracle()}
-), e AS (
-  SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs
-), reach(node, r) AS (
-  SELECT u, u FROM e
-  UNION
-  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.node
-), comp AS (
-  SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-), lab AS (
+{_cc_oracle_ctes()}, lab AS (
   SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS component_id,
          d.n_chars
   FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -5070,12 +5064,7 @@ def dedup_survivors_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one left join and one per-component window; singleton
     components ride the same path with no special case."""
     docs = load_table(spark, sf_dir, "documents")
-    comp = _cc_components(spark, sf_dir).select("doc_id", "component_id")
-    lab = docs.select("doc_id", "n_chars").join(comp, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("component_id"), F.col("doc_id")).alias("component_id"),
-        "n_chars",
-    )
+    lab = _cc_labeled(spark, sf_dir, docs.select("doc_id", "n_chars"))
     w = Window.partitionBy("component_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id")
     )
@@ -7158,8 +7147,8 @@ def _kmeans_ctes(
     return "".join(parts), f"{tag}a{iters - 1}", f"{tag}d{iters - 1}"
 
 
-def _kmeans_oracle(iters: int = KMEANS_ITERS) -> str:
-    prefix, final, _ = _kmeans_ctes(iters)
+def _kmeans_oracle() -> str:
+    prefix, final, _ = _kmeans_ctes(KMEANS_ITERS)
     return (
         prefix
         + f"\nSELECT vec_id, CAST(cluster AS INTEGER) AS cluster FROM {final}"
@@ -7296,22 +7285,22 @@ def _pca_ctes(iters: int = PCA_ITERS) -> str:
     return "".join(parts)
 
 
-def _pca_oracle(iters: int = PCA_ITERS) -> str:
-    return f"""{_pca_ctes(iters)}
+def _pca_oracle() -> str:
+    return f"""{_pca_ctes(PCA_ITERS)}
 SELECT dim, ROUND(loading, 6) AS loading FROM (
   SELECT unnest(generate_series(1, len(v))) AS dim, unnest(v) AS loading
-  FROM v{iters}
+  FROM v{PCA_ITERS}
 ) ORDER BY dim
 """
 
 
-def _pca_proj_oracle(iters: int = PCA_ITERS) -> str:
-    return f"""{_pca_ctes(iters)}, pr AS (
+def _pca_proj_oracle() -> str:
+    return f"""{_pca_ctes(PCA_ITERS)}, pr AS (
   SELECT x.vec_id,
          ROUND(list_sum(list_transform(list_zip(xc, v),
                  p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), 6)
            AS proj
-  FROM x, v{iters}
+  FROM x, v{PCA_ITERS}
 )
 SELECT label,
        CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -7575,10 +7564,10 @@ def semantic_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 JL_DIMS = 16
 
 
-def _jl_oracle(out_dims: int = JL_DIMS) -> str:
+def _jl_oracle() -> str:
     import aws_pandas_etl_spark.operators.similarity as _sim
 
-    planes = [_sim.hyperplane(1000 + p, 64) for p in range(out_dims)]
+    planes = [_sim.hyperplane(1000 + p, 64) for p in range(JL_DIMS)]
     cells = ", ".join(
         f"ROUND({_dk_dot('embedding', _dk_plane(pl))}, 6)" for pl in planes
     )
@@ -7587,7 +7576,7 @@ WITH p AS (
   SELECT vec_id, [{cells}] AS proj FROM embeddings
 )
 SELECT vec_id, CAST(i - 1 AS INTEGER) AS dim, proj[i] AS value
-FROM p, unnest(generate_series(1, {out_dims})) AS u(i)
+FROM p, unnest(generate_series(1, {JL_DIMS})) AS u(i)
 """
 
 
@@ -9531,24 +9520,24 @@ def _bpe_ctes(iters: int = BPE_ITERS) -> str:
     return "".join(parts)
 
 
-def _bpe_oracle(iters: int = BPE_ITERS) -> str:
+def _bpe_oracle() -> str:
     finals = "\nUNION ALL\n".join(
         f"SELECT CAST({t} AS INTEGER) AS iteration, pair, cnt FROM t{t}"
-        for t in range(1, iters + 1)
+        for t in range(1, BPE_ITERS + 1)
     )
-    return _bpe_ctes(iters) + "\n" + finals
+    return _bpe_ctes(BPE_ITERS) + "\n" + finals
 
 
-def _bpe_apply_oracle(iters: int = BPE_ITERS) -> str:
-    """The s{iters} CTE of the unrolled training replay IS the merged
+def _bpe_apply_oracle() -> str:
+    """The s{BPE_ITERS} CTE of the unrolled training replay IS the merged
     vocabulary — corpus tokenization stats are one aggregate over it."""
-    return f"""{_bpe_ctes(iters)}
+    return f"""{_bpe_ctes(BPE_ITERS)}
 SELECT CAST(COUNT(*) AS BIGINT) AS n_words,
        CAST(SUM(freq * length(word)) AS BIGINT) AS tokens_pre,
        CAST(SUM(freq * len(sym)) AS BIGINT) AS tokens_post,
        ROUND(CAST(SUM(freq * len(sym)) AS DOUBLE)
              / CAST(SUM(freq * length(word)) AS DOUBLE), 6) AS compression
-FROM s{iters}
+FROM s{BPE_ITERS}
 """
 
 
@@ -11368,17 +11357,7 @@ def write_shard_plan_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _survivors_quality_oracle() -> str:
     return f"""
-WITH RECURSIVE pairs AS (
-  {_minhash_oracle()}
-), e AS (
-  SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs
-), reach(node, r) AS (
-  SELECT u, u FROM e
-  UNION
-  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.node
-), comp AS (
-  SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-), q AS (
+{_cc_oracle_ctes()}, q AS (
   SELECT doc_id,
          ROUND(
            0.4 * LEAST(1.0, CAST(len({_dk_toks('text')}) AS DOUBLE) / 50.0)
@@ -11418,19 +11397,10 @@ def dedup_survivors_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality expression + one per-component window, so changing
     survivor policy never re-runs the LSH->CC build."""
     docs = load_table(spark, sf_dir, "documents")
-    comp = _cc_components(spark, sf_dir).select("doc_id", "component_id")
-    lab = (
-        docs.select(
-            "doc_id", F.round(TX.quality_score("text"), 6).alias("quality")
-        )
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component_id"), F.col("doc_id")).alias(
-                "component_id"
-            ),
-            "quality",
-        )
+    lab = _cc_labeled(
+        spark,
+        sf_dir,
+        docs.select("doc_id", F.round(TX.quality_score("text"), 6).alias("quality")),
     )
     w = Window.partitionBy("component_id").orderBy(
         F.col("quality").desc(), F.col("doc_id")
@@ -15188,7 +15158,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 MARKOV_ITERS = 3
 
 
-def _markov_oracle(iters: int = MARKOV_ITERS) -> str:
+def _markov_oracle() -> str:
     """Unrolled power iteration (the pagerank/kmeans precedent): each
     step rounds every product term to 12 decimals, casts DECIMAL, and
     sums exactly — order-independent cross-engine."""
@@ -15214,7 +15184,7 @@ WITH t AS (
   SELECT ty, CAST(ROUND(1.0 / k, 12) AS DECIMAL(20,12)) AS v FROM s, nt
 )"""
     prev = "v0"
-    for i in range(1, iters + 1):
+    for i in range(1, MARKOV_ITERS + 1):
         ctes += f""", m{i} AS (
   SELECT p.tt AS ty,
          SUM(CAST(ROUND(CAST({prev}.v AS DOUBLE) * p.p, 12)
@@ -16552,7 +16522,7 @@ def uniform_sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 RAKE_ITERS = 4
 
 
-def _rake_oracle(iters: int = RAKE_ITERS) -> str:
+def _rake_oracle() -> str:
     decsum = (
         "CAST(SUM(CAST(ROUND(w * frac, 12) AS DECIMAL(28,12))) AS DOUBLE)"
     )
@@ -16571,7 +16541,7 @@ kk AS (
   FROM cells, tot, kk
 )"""
     ]
-    for i in range(iters):
+    for i in range(RAKE_ITERS):
         parts.append(
             f""", lm{i} AS (
   SELECT lang, {decsum} AS m FROM w{i} GROUP BY lang
@@ -16591,7 +16561,7 @@ kk AS (
         f"""
 SELECT lang, source, n, ROUND(w, 6) AS weight,
        ROUND(w * frac, 6) AS cell_share
-FROM w{iters} ORDER BY lang, source"""
+FROM w{RAKE_ITERS} ORDER BY lang, source"""
     )
     return "".join(parts)
 
@@ -16819,7 +16789,7 @@ MMR_K = 10
 MMR_LAMBDA = 0.7
 
 
-def _mmr_oracle(n_cand: int = MMR_N_CAND, k: int = MMR_K) -> str:
+def _mmr_oracle() -> str:
     lam = MMR_LAMBDA
     parts = [
         f"""WITH qv AS (
@@ -16832,7 +16802,7 @@ def _mmr_oracle(n_cand: int = MMR_N_CAND, k: int = MMR_K) -> str:
   FROM embeddings e, qv
 ), cand AS MATERIALIZED (
   SELECT vec_id, v, nrm, rel FROM base
-  ORDER BY rel DESC, vec_id LIMIT {n_cand}
+  ORDER BY rel DESC, vec_id LIMIT {MMR_N_CAND}
 ), ps AS MATERIALIZED (
   SELECT a.vec_id AS i, b.vec_id AS j,
          ROUND({_dk_dot('a.v', 'b.v')} / (a.nrm * b.nrm), 12) AS s
@@ -16841,7 +16811,7 @@ def _mmr_oracle(n_cand: int = MMR_N_CAND, k: int = MMR_K) -> str:
   SELECT vec_id, rel, 0.0 AS msim FROM cand
 )"""
     ]
-    for t in range(1, k + 1):
+    for t in range(1, MMR_K + 1):
         parts.append(
             f""", p{t} AS MATERIALIZED (
   SELECT vec_id, rel, {lam} * rel - {1.0 - lam:.1f} * msim AS score
@@ -16857,7 +16827,7 @@ def _mmr_oracle(n_cand: int = MMR_N_CAND, k: int = MMR_K) -> str:
         )
     sel = " UNION ALL ".join(
         f"SELECT {t} AS rank, vec_id, rel, score FROM p{t}"
-        for t in range(1, k + 1)
+        for t in range(1, MMR_K + 1)
     )
     parts.append(
         f"""
@@ -16957,7 +16927,7 @@ def mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 LPA_ITERS = 3
 
 
-def _lpa_oracle(iters: int = LPA_ITERS) -> str:
+def _lpa_oracle() -> str:
     parts = [
         _knn_ctes()
         + """
@@ -16970,7 +16940,7 @@ def _lpa_oracle(iters: int = LPA_ITERS) -> str:
   SELECT DISTINCT node, node AS label FROM nb
 )"""
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, LPA_ITERS + 1):
         parts.append(
             f""", cnt{t} AS MATERIALIZED (
   SELECT nb.node, l.label, CAST(COUNT(*) AS BIGINT) AS c
@@ -16988,7 +16958,7 @@ def _lpa_oracle(iters: int = LPA_ITERS) -> str:
     parts.append(
         f"""
 SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_nodes
-FROM l{iters} GROUP BY label ORDER BY n_nodes DESC, community"""
+FROM l{LPA_ITERS} GROUP BY label ORDER BY n_nodes DESC, community"""
     )
     return "".join(parts)
 
@@ -19105,17 +19075,7 @@ def frame_near_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mixture_after_dedup_oracle() -> str:
     return f"""
-WITH RECURSIVE pairs AS (
-  {_minhash_oracle()}
-), e AS (
-  SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs
-), reach(node, r) AS (
-  SELECT u, u FROM e
-  UNION
-  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.node
-), comp AS (
-  SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-), lab AS (
+{_cc_oracle_ctes()}, lab AS (
   SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS component_id,
          d.n_chars, d.source
   FROM documents d LEFT JOIN comp c USING (doc_id)
@@ -19158,19 +19118,7 @@ def source_mixture_after_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     two |sources|-row aggregates and two scalar-total broadcasts —
     nothing beyond the dedup family's own economics."""
     docs = load_table(spark, sf_dir, "documents")
-    comp = _cc_components(spark, sf_dir).select("doc_id", "component_id")
-    lab = (
-        docs.select("doc_id", "n_chars", "source")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component_id"), F.col("doc_id")).alias(
-                "component_id"
-            ),
-            "n_chars",
-            "source",
-        )
-    )
+    lab = _cc_labeled(spark, sf_dir, docs.select("doc_id", "n_chars", "source"))
     w = Window.partitionBy("component_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id")
     )
@@ -19607,17 +19555,7 @@ def _leak_repair_oracle() -> str:
 
     bucket = hash_bucket_sql("d.doc_id", "split")
     return f"""
-WITH RECURSIVE pairs AS (
-  {_minhash_oracle()}
-), e AS (
-  SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs
-), reach(node, r) AS (
-  SELECT u, u FROM e
-  UNION
-  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.node
-), comp AS (
-  SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-), lab AS (
+{_cc_oracle_ctes()}, lab AS (
   SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS component_id,
          CASE WHEN {bucket} < 80 THEN 'train'
               WHEN {bucket} < 90 THEN 'val'
@@ -19653,19 +19591,8 @@ def split_leakage_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     repair itself is one per-component MAX window over the labeled
     frame and a row filter — dedup-family economics, no new joins."""
     docs = load_table(spark, sf_dir, "documents")
-    comp = _cc_components(spark, sf_dir).select("doc_id", "component_id")
-    lab = (
-        docs.select(
-            "doc_id", TX.assign_split("doc_id").alias("split")
-        )
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component_id"), F.col("doc_id")).alias(
-                "component_id"
-            ),
-            "split",
-        )
+    lab = _cc_labeled(
+        spark, sf_dir, docs.select("doc_id", TX.assign_split("doc_id").alias("split"))
     )
     rk = (
         F.when(F.col("split") == "test", 2)

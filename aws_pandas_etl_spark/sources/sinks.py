@@ -38,25 +38,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _write_text(fs, jpath, text: str) -> None:
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(text.encode("utf-8"))
-    finally:
-        stream.close()
-
-
-def _read_text(spark: SparkSession, fs, jpath) -> str:
-    stream = fs.open(jpath)
-    try:
-        # commons-io rides on Spark's classpath; a py4j bytearray read
-        # would NOT round-trip (Java-side writes into a passed byte[]
-        # never propagate back to Python)
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
 def _with_count(df: DataFrame):
     """``(df', count)``: ``df'`` observes its row count on whatever job
     writes it, and ``count()`` returns that count once the job ran — no
@@ -495,14 +476,39 @@ def read_layout_marker(spark: SparkSession, path: str) -> dict | None:
     fs, jpath = _layout_marker_path(spark, path)
     if not fs.exists(jpath):
         return None
-    return json.loads(_read_text(spark, fs, jpath))
+    stream = fs.open(jpath)
+    try:
+        # commons-io rides on Spark's classpath; a py4j bytearray read
+        # would NOT round-trip (Java-side writes into a passed byte[]
+        # never propagate back to Python)
+        return json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
+    finally:
+        stream.close()
+
+
+def _layout(
+    keys: list[str], order_col: str, partition_col: str, layout_spec: str | None
+) -> dict:
+    """The ``_layout.json`` stamp of a ``merge_load_partitioned`` target."""
+    return {
+        "partition_col": partition_col,
+        "keys": sorted(keys),
+        "order_col": order_col,
+        "layout_spec": layout_spec,
+    }
 
 
 def _write_layout_marker(spark: SparkSession, path: str, spec: dict) -> None:
     import json
 
     fs, jpath = _layout_marker_path(spark, path)
-    _write_text(fs, jpath, json.dumps(spec, sort_keys=True))
+    stream = fs.create(jpath, True)
+    try:
+        stream.write(json.dumps(spec, sort_keys=True).encode("utf-8"))
+    finally:
+        stream.close()
 
 
 def stamp_layout(
@@ -531,12 +537,7 @@ def stamp_layout(
     stamp exists); it is the loud, auditable escape hatch that
     replaces the old silent grandfathering.  Returns the stamped
     spec."""
-    layout = {
-        "partition_col": partition_col,
-        "keys": sorted(keys),
-        "order_col": order_col,
-        "layout_spec": layout_spec,
-    }
+    layout = _layout(keys, order_col, partition_col, layout_spec)
     _write_layout_marker(spark, path, layout)
     return layout
 
@@ -621,12 +622,7 @@ def merge_load_partitioned(
     # layout stamp: refuse a target whose recorded key→partition layout
     # differs from this call's — the silent-resurrection mode the
     # per-batch guard's induction can't see (see docstring).
-    layout = {
-        "partition_col": partition_col,
-        "keys": sorted(keys),
-        "order_col": order_col,
-        "layout_spec": layout_spec,
-    }
+    layout = _layout(keys, order_col, partition_col, layout_spec)
     stamped = read_layout_marker(spark, path)
     if stamped is None:
         # marker absent: only an EMPTY target is a first write.  A
@@ -730,9 +726,9 @@ def merge_load_partitioned(
         if has_data
         else None
     )
-    merged = _latest_per_key(
-        df, existing, keys, order_col, tiebreak_col
-    ).localCheckpoint(eager=True)
+    # the row count rides the eager checkpoint's own job
+    merged, count = _with_count(_latest_per_key(df, existing, keys, order_col, tiebreak_col))
+    merged = merged.localCheckpoint(eager=True)
     if stamped is None:
         # first write or a declaration-only layout_spec upgrade: pin
         # the layout BEFORE the data write.  The other order (r13) left
@@ -747,18 +743,24 @@ def merge_load_partitioned(
         .partitionBy(partition_col)
         .parquet(path)
     )
-    return merged.count()
+    return count()
 
 
-def _partition_subdirs(fs, jpath) -> list:
-    """Hive-style ``col=value`` child directories of ``jpath`` (hidden
-    entries excluded) — the marker of a partitioned target."""
-    out = []
+def _layout_subdirs(fs, jpath) -> tuple[list, list]:
+    """``(partition_dirs, batch_dirs)``: the Hive-style ``col=value``
+    child directories of ``jpath`` (the marker of a partitioned target)
+    and its ``batch-<id>`` ones (the marker of an
+    ``idempotent_append_load`` target), hidden entries excluded."""
+    parts, batches = [], []
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
-        if st.isDirectory() and "=" in name and not name.startswith((".", "_")):
-            out.append(st.getPath())
-    return out
+        if not st.isDirectory() or name.startswith((".", "_")):
+            continue
+        if "=" in name:
+            parts.append(st.getPath())
+        if name.startswith("batch-"):
+            batches.append(st.getPath())
+    return parts, batches
 
 
 def _partition_leaves(spark: SparkSession, path: str) -> list[str]:
@@ -775,21 +777,10 @@ def _partition_leaves(spark: SparkSession, path: str) -> list[str]:
         name = st.getPath().getName()
         if name.startswith(".") and name.endswith("._merge_old") and "=" in name:
             _recover(spark, f"{base}/{name[1:-len('._merge_old')]}")
-    subs = _partition_subdirs(fs, jpath)
+    subs, _ = _layout_subdirs(fs, jpath)
     if not subs:
         return [path]
     return [leaf for sub in subs for leaf in _partition_leaves(spark, sub.toString())]
-
-
-def _batch_subdirs(fs, jpath) -> list:
-    """``batch-<id>`` child directories of ``jpath`` — the marker of an
-    ``idempotent_append_load`` (batched) target."""
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch-"):
-            out.append(st.getPath())
-    return out
 
 
 def compact_table(
@@ -896,8 +887,7 @@ def compact_table(
     # restores partition leaves a crashed compaction left aside, before
     # anything below lists the layout
     leaves = _partition_leaves(spark, path)
-    part_dirs = _partition_subdirs(fs, jfinal)
-    batch_dirs = _batch_subdirs(fs, jfinal)
+    part_dirs, batch_dirs = _layout_subdirs(fs, jfinal)
     kinds = {
         "top-level part-files": sum("/" not in n for n in root.seen),
         "col=value partition subdirectories": len(part_dirs),

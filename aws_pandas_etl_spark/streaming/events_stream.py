@@ -199,6 +199,10 @@ def scratch_dir(prefix: str, keep: tuple[str, ...] = ()) -> Iterator[str]:
     atexit.register(shutil.rmtree, base, ignore_errors=True)
 
 
+# How long a streaming run may take before it is stopped and refused.
+STREAM_TIMEOUT_SEC = 300
+
+
 def run_available_now(
     spark: SparkSession, writer: DataStreamWriter, base: str, timeout_sec: float
 ) -> None:
@@ -232,7 +236,6 @@ def _run_to_parquet_sink(
     spark: SparkSession,
     df: DataFrame,
     name_prefix: str,
-    timeout_sec: int,
 ) -> DataFrame:
     """Execution scaffold for append-mode streaming queries whose output
     size is NOT bounded by construction (joins, dedup, sessionize):
@@ -249,7 +252,7 @@ def _run_to_parquet_sink(
     with scratch_dir(name_prefix, keep=("out",)) as base:
         out = os.path.join(base, "out")
         writer = df.writeStream.format("parquet").option("path", out).outputMode("append")
-        run_available_now(spark, writer, base, timeout_sec)
+        run_available_now(spark, writer, base, STREAM_TIMEOUT_SEC)
         # the declared schema, not inference: a committed zero-row batch
         # leaves no data file to infer from, and neither does a run
         # that committed no batch at all — both read back as 0 rows
@@ -261,7 +264,6 @@ def _run_to_memory_sink(
     df: DataFrame,
     output_mode: str,
     name_prefix: str,
-    timeout_sec: int,
 ) -> DataFrame:
     """availableNow run into a memory sink.  Memory sinks collect
     results to the driver — reserved for complete-mode aggregates whose
@@ -270,12 +272,12 @@ def _run_to_memory_sink(
     with scratch_dir(name_prefix) as base:
         name = os.path.basename(base)
         writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-        run_available_now(spark, writer, base, timeout_sec)
+        run_available_now(spark, writer, base, STREAM_TIMEOUT_SEC)
     return spark.table(name)
 
 
 def run_tumbling_agg_stream(
-    spark: SparkSession, sf_dir: str, window: str = "1 hour", timeout_sec: int = 300
+    spark: SparkSession, sf_dir: str, window: str = "1 hour"
 ) -> DataFrame:
     """Execute the windowed agg as a real streaming query (availableNow
     -> memory sink, complete mode) and return the result DataFrame.
@@ -284,14 +286,13 @@ def run_tumbling_agg_stream(
     ``tumbling_window_agg`` over the batch read — asserted in tests and
     by the DuckDB oracle."""
     agg = tumbling_window_agg(events_stream(spark, sf_dir, with_watermark=None), window)
-    return _run_to_memory_sink(spark, agg, "complete", "tumbling", timeout_sec)
+    return _run_to_memory_sink(spark, agg, "complete", "tumbling")
 
 
 def run_streaming_dedup(
     spark: SparkSession,
     sf_dir: str,
     keys: list[str] | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Streaming exact deduplication: ``dropDuplicates`` over the event
     stream (stateful — one state-store entry per key seen), append-mode
@@ -303,7 +304,7 @@ def run_streaming_dedup(
     exactly what a reprocessing/backfill job does."""
     keys = keys or ["event_id"]
     stream = events_stream(spark, sf_dir, with_watermark=None).select(*keys)
-    return _run_to_parquet_sink(spark, stream.dropDuplicates(keys), "dedup", timeout_sec)
+    return _run_to_parquet_sink(spark, stream.dropDuplicates(keys), "dedup")
 
 
 def _ordered_split_source(
@@ -392,7 +393,7 @@ def run_foreach_batch_merge(
     spark: SparkSession,
     sf_dir: str,
     n_splits: int = 4,
-    timeout_sec: int = 300,
+    timeout_sec: int = STREAM_TIMEOUT_SEC,
     partition_buckets: int | None = None,
 ) -> DataFrame:
     """Continuous CDC apply: stream the events table in time-ordered
@@ -480,7 +481,6 @@ def run_streaming_linear_count(
     spark: SparkSession,
     sf_dir: str,
     buckets: int = 4096,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Streaming approximate distinct-user counting with BOUNDED state
     by construction: hash each user into one of ``buckets`` md5
@@ -502,10 +502,7 @@ def run_streaming_linear_count(
         "event_type", bucket.alias("bucket")
     )
     back = _run_to_parquet_sink(
-        spark,
-        stream.dropDuplicates(["event_type", "bucket"]),
-        "lincount",
-        timeout_sec,
+        spark, stream.dropDuplicates(["event_type", "bucket"]), "lincount"
     )
     occ = back.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("occupied")
@@ -522,13 +519,11 @@ def run_streaming_psi_drift(
     spark: SparkSession,
     sf_dir: str,
     nbins: int = 20,
-    timeout_sec: int = 300,
-    n_splits: int = 3,
 ) -> DataFrame:
     """Streaming population-stability drift monitor: the REFERENCE
     histogram (each type's first temporal half, a bounded
     |types| x |bins| table) is computed batch-side; the CURRENT stream
-    (the second half, delivered in ``n_splits`` real micro-batches)
+    (the second half, delivered in 3 real micro-batches)
     accumulates its (type, bin) counts in a streaming aggregate whose
     state is bounded by the bin grid FOREVER — no watermark needed,
     same bounded-by-construction posture as the linear-counting
@@ -568,11 +563,11 @@ def run_streaming_psi_drift(
     )
 
     with scratch_dir("psidrift") as base:
-        stream = _ordered_split_source(spark, second, ["ts", "event_id"], n_splits, base)
+        stream = _ordered_split_source(spark, second, ["ts", "event_id"], 3, base)
         counts = stream.groupBy("event_type", "bin").agg(
             F.count("*").cast("bigint").alias("nb")
         )
-        back = _run_to_memory_sink(spark, counts, "complete", "psidrift", timeout_sec)
+        back = _run_to_memory_sink(spark, counts, "complete", "psidrift")
     return ref.join(back, ["event_type", "bin"], "full_outer").select(
         "event_type",
         "bin",
@@ -581,13 +576,7 @@ def run_streaming_psi_drift(
     )
 
 
-def run_session_window_agg(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    timeout_sec: int = 300,
-) -> DataFrame:
+def run_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (``F.session_window``): Spark's own
     merging session state, watermark-bounded, append mode — the
     idiomatic streaming sessionization (the custom
@@ -596,15 +585,15 @@ def run_session_window_agg(
     numbering and arbitrary per-session state).
 
     Emission contract (exact, oracle-verified): a session [first_ts,
-    last_ts + gap) is emitted once the event-time watermark
-    (max(ts) - delay) passes its end; sessions still open at the end
+    last_ts + 30 minutes) is emitted once the event-time watermark
+    (max(ts) - 2 hours) passes its end; sessions still open at the end
     of the backlog stay in state, unemitted — precisely the
     incremental semantics a resumed availableNow run needs.  Session
-    boundary: a gap >= ``gap`` starts a new session (session windows
+    boundary: a gap >= 30 minutes starts a new session (session windows
     merge only on strict overlap)."""
-    stream = events_stream(spark, sf_dir, with_watermark=watermark)
+    stream = events_stream(spark, sf_dir, with_watermark="2 hours")
     agg = (
-        stream.groupBy("user_id", F.session_window("ts", gap))
+        stream.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(F.count("*").cast("bigint").alias("n_events"))
         .select(
             "user_id",
@@ -613,34 +602,32 @@ def run_session_window_agg(
             "n_events",
         )
     )
-    return _run_to_parquet_sink(spark, agg, "sesswin", timeout_sec)
+    return _run_to_parquet_sink(spark, agg, "sesswin")
 
 
 def run_streaming_dedup_within_watermark(
     spark: SparkSession,
     sf_dir: str,
     keys: list[str] | None = None,
-    delay: str = "2 hours",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Streaming dedup with BOUNDED state:
     ``dropDuplicatesWithinWatermark`` holds each key only until the
-    watermark passes its event time + delay, then evicts — state size
+    watermark passes its event time + 2 hours, then evicts — state size
     tracks the late-data horizon, not the full key history.  This is
     the 100 TB/continuous-ingest shape of ``run_streaming_dedup``
     (whose full-state variant is the right tool for bounded backfills
     only).
 
-    Contract: duplicates arriving within ``delay`` of the first
+    Contract: duplicates arriving within 2 hours of the first
     occurrence are dropped; a key re-arriving after its state was
     evicted is re-admitted (exactly the documented semantics —
     eviction/readmission is pinned by
     tests/test_streaming_multibatch.py).  On fixtures with unique keys
     the result equals DISTINCT, which is the exact oracle."""
     keys = keys or ["event_id"]
-    stream = events_stream(spark, sf_dir, with_watermark=delay).select("ts", *keys)
+    stream = events_stream(spark, sf_dir, with_watermark="2 hours").select("ts", *keys)
     deduped = stream.dropDuplicatesWithinWatermark(keys).select(*keys)
-    return _run_to_parquet_sink(spark, deduped, "dedupww", timeout_sec)
+    return _run_to_parquet_sink(spark, deduped, "dedupww")
 
 
 def run_stream_stream_range_join(
@@ -648,7 +635,6 @@ def run_stream_stream_range_join(
     sf_dir: str,
     tolerance_us: int = 300_000_000,
     watermark: str = "10 minutes",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Stream-stream interval join: every (error, click) pair within
     ±tolerance, both sides unbounded.
@@ -671,7 +657,7 @@ def run_stream_stream_range_join(
     left = events_stream(spark, sf_dir, with_watermark=None)
     right = events_stream(spark, sf_dir, with_watermark=None)
     joined = stream_stream_range_join(left, right, tolerance_us, watermark)
-    return _run_to_parquet_sink(spark, joined, "ssrange", timeout_sec)
+    return _run_to_parquet_sink(spark, joined, "ssrange")
 
 
 def stream_stream_range_join(
@@ -727,7 +713,6 @@ def run_stream_static_join(
     static_df: DataFrame,
     join_key: str,
     group_col: str,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Stream-static join: enrich the event stream with a batch-side
     dimension (recomputed per micro-batch — the standard pattern for
@@ -739,7 +724,7 @@ def run_stream_static_join(
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_value"),
     )
-    return _run_to_memory_sink(spark, agg, "complete", "ssjoin", timeout_sec)
+    return _run_to_memory_sink(spark, agg, "complete", "ssjoin")
 
 
 def _mg_snapshot_path(state_dir: str, batch_id: int) -> str:
@@ -880,11 +865,7 @@ def run_streaming_heavy_hitters(
     )
 
 
-def run_streaming_hll(
-    spark: SparkSession,
-    sf_dir: str,
-    timeout_sec: int = 300,
-) -> DataFrame:
+def run_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HyperLogLog (operators/sketches.py) with BOUNDED state
     by construction: the stream dedups on (event_type, register, rank)
     — a domain of at most |types| * 64 * 55 distinct triples, so the
@@ -904,10 +885,7 @@ def run_streaming_hll(
         .select("event_type", *SK.hll_register_rank(F.col("h")))
     )
     back = _run_to_parquet_sink(
-        spark,
-        stream.dropDuplicates(["event_type", "reg", "rank"]),
-        "hllsketch",
-        timeout_sec,
+        spark, stream.dropDuplicates(["event_type", "reg", "rank"]), "hllsketch"
     )
     regs = back.groupBy("event_type", "reg").agg(F.max("rank").alias("mr"))
     return SK.hll_fold(regs, "event_type").select(
@@ -922,7 +900,6 @@ def run_stream_stream_outer_range_join(
     sf_dir: str,
     tolerance_us: int = 300_000_000,
     watermark: str = "10 minutes",
-    timeout_sec: int = 300,
     n_splits: int = 1,
     join_type: str = "leftOuter",
 ) -> DataFrame:
@@ -1006,7 +983,7 @@ def run_stream_stream_outer_range_join(
         joined = stream_stream_range_join(
             stream, stream, tolerance_us, watermark, join_type
         )
-        out = _run_to_parquet_sink(spark, joined, "ssouter", timeout_sec)
+        out = _run_to_parquet_sink(spark, joined, "ssouter")
     # sentinels: the pair they form with each other, and (fullOuter
     # only) any null-completions of their never-matching exploded
     # copies — all carry a -1 id on the side that emitted them
@@ -1033,9 +1010,7 @@ def quarantine_reason() -> F.Column:
     )
 
 
-def run_streaming_quarantine_split(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_streaming_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter-queue pattern over the event stream: every
     micro-batch splits on the declarative row contract
     (``quarantine_reason``) — passing rows land in the MAIN sink,
@@ -1076,7 +1051,9 @@ def run_streaming_quarantine_split(
                 "event_id", "event_type", "value", "reason"
             ).write.mode("overwrite").parquet(os.path.join(base, "quarantine", leaf))
 
-        run_available_now(spark, stream.writeStream.foreachBatch(_split), base, timeout_sec)
+        run_available_now(
+            spark, stream.writeStream.foreachBatch(_split), base, STREAM_TIMEOUT_SEC
+        )
         n_src = load_table(spark, sf_dir, "events").count()
         n_main = spark.read.parquet(main_glob).count()
         n_quar = spark.read.parquet(quar_glob).count()
@@ -1092,8 +1069,6 @@ def run_stream_stream_full_outer_range_join(
     spark: SparkSession,
     sf_dir: str,
     tolerance_us: int = 300_000_000,
-    watermark: str = "10 minutes",
-    timeout_sec: int = 300,
     n_splits: int = 1,
 ) -> DataFrame:
     """FULL OUTER stream-stream interval join — pairs, matchless
@@ -1122,8 +1097,6 @@ def run_stream_stream_full_outer_range_join(
         spark,
         sf_dir,
         tolerance_us=tolerance_us,
-        watermark=watermark,
-        timeout_sec=timeout_sec,
         n_splits=n_splits,
         join_type="fullOuter",
     )

@@ -90,15 +90,13 @@ def _final_per_key(frags: DataFrame) -> DataFrame:
     )
 
 
-def run_ewma_stream(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute via availableNow into a parquet sink, then compact
     fragments to the final row per key (``_final_per_key``)."""
     from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
 
     return _final_per_key(
-        _run_to_parquet_sink(spark, ewma_stream(spark, sf_dir), "ewma", timeout_sec)
+        _run_to_parquet_sink(spark, ewma_stream(spark, sf_dir), "ewma")
     )
 
 
@@ -180,15 +178,11 @@ ROCKSDB_STATE_STORE = {
 }
 
 
-def run_ewma_stream_tws(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_ewma_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow execution + fragment compaction, exactly like
     ``run_ewma_stream``; RocksDB provider scoped to the run."""
     from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
 
     with scoped_conf(spark, ROCKSDB_STATE_STORE):
-        frags = _run_to_parquet_sink(
-            spark, ewma_stream_tws(spark, sf_dir), "ewma_tws", timeout_sec
-        )
+        frags = _run_to_parquet_sink(spark, ewma_stream_tws(spark, sf_dir), "ewma_tws")
     return _final_per_key(frags)

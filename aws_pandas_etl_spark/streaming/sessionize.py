@@ -104,9 +104,7 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_sessionize_stream(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute via availableNow into a memory sink; returns the
     per-session result (emits every session seen in the backlog,
     including still-open ones — matching the batch query's output on
@@ -123,9 +121,7 @@ def run_sessionize_stream(
     through the driver)."""
     from aws_pandas_etl_spark.streaming.events_stream import _run_to_parquet_sink
 
-    return _run_to_parquet_sink(
-        spark, sessionize_stream(spark, sf_dir), "sessions", timeout_sec
-    )
+    return _run_to_parquet_sink(spark, sessionize_stream(spark, sf_dir), "sessions")
 
 
 # ---------------------------------------------------------------------------
@@ -186,9 +182,7 @@ def sessionize_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_sessionize_stream_tws(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_sessionize_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow execution, exactly like ``run_sessionize_stream``.
     transformWithState REQUIRES the RocksDB state-store provider; the
     conf is scoped to this run and restored after (the engine's other
@@ -200,6 +194,5 @@ def run_sessionize_stream_tws(
 
     with scoped_conf(spark, ROCKSDB_STATE_STORE):
         return _run_to_parquet_sink(
-            spark, sessionize_stream_tws(spark, sf_dir), "sessions_tws",
-            timeout_sec,
+            spark, sessionize_stream_tws(spark, sf_dir), "sessions_tws"
         )

@@ -746,6 +746,36 @@ def test_overwrite_load_runs_one_spark_job(spark, tmp_path):
         assert scheduler.nextJobId() - first == 1
 
 
+def test_merge_load_partitioned_counts_rows_on_its_checkpoint_job(spark, tmp_path):
+    """The returned row count is observed on the eager checkpoint of the
+    merged rows, so a partitioned merge runs its guard, checkpoint and
+    write jobs and no count job of its own (a ``count()`` of the
+    checkpoint was two more jobs under AQE: its shuffle map stage and
+    the result)."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from aws_pandas_etl_spark.sources.sinks import merge_load_partitioned
+
+    p = str(tmp_path / "t")
+    bkt = (F.col("k") % 2).cast("int")
+    first_load = spark.createDataFrame(
+        [Row(k=k, v="a", ver=1) for k in range(1, 5)]
+    ).withColumn("bkt", bkt)
+    update = spark.createDataFrame(
+        [Row(k=1, v="a2", ver=2), Row(k=5, v="e", ver=1)]
+    ).withColumn("bkt", bkt)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    # the update also reads the touched partition back: one scan job more
+    for batch, rows, jobs in ((first_load, 4, 6), (update, 3, 7)):
+        first = scheduler.nextJobId()
+        assert (
+            merge_load_partitioned(batch, p, keys=["k"], order_col="ver", partition_col="bkt")
+            == rows
+        )
+        assert scheduler.nextJobId() - first == jobs
+
+
 def test_merge_load_sibling_paths_are_hidden(tmp_path):
     """Swap siblings are dot-prefixed so Spark's file index (which skips
     names starting with '.' or '_') never surfaces an in-flight tmp or

@@ -294,9 +294,9 @@ def test_parquet_sink_scaffold_cleans_checkpoint_and_reports_real_errors(
     stream = events_stream(spark, "/root/testdata/sf0.001").select(
         "event_id", "ts", "event_type"
     )
-    out = _run_to_parquet_sink(spark, stream, "probe6", 120)
+    out = _run_to_parquet_sink(spark, stream, "probe6")
     assert out.count() > 0
-    empty = _run_to_parquet_sink(spark, stream.filter(F.lit(False)), "probe6", 120)
+    empty = _run_to_parquet_sink(spark, stream.filter(F.lit(False)), "probe6")
     assert empty.count() == 0 and empty.columns == stream.columns
     bases = os.listdir(tmp_path)
     assert len(bases) == 2 and all(b.startswith("probe6_") for b in bases)
@@ -672,7 +672,7 @@ def test_load_table_reads_directory_shaped_nanos_table(spark, tmp_path):
     span = [F.min("ts").alias("mn"), F.max("ts").alias("mx")]
     [b] = got.agg(*span).collect()
     stream = open_events_stream(spark, directory).agg(*span)
-    [s] = _run_to_memory_sink(spark, stream, "complete", "nanosdir", 120).collect()
+    [s] = _run_to_memory_sink(spark, stream, "complete", "nanosdir").collect()
     assert (s["mn"], s["mx"]) == (b["mn"], b["mx"])
 
 

@@ -884,13 +884,13 @@ def test_parquet_sink_reads_back_empty_results_with_the_declared_schema(
     )
 
     none_kept = open_events_stream(spark, SF).filter(F.col("value") < -1e18)
-    back = _run_to_parquet_sink(spark, none_kept, "emptybatch", 120)
+    back = _run_to_parquet_sink(spark, none_kept, "emptybatch")
     assert back.count() == 0
     assert back.schema.fieldNames() == none_kept.schema.fieldNames()
 
     src = tmp_path / "src"
     src.mkdir()
     no_files = spark.readStream.schema("k bigint, v string").parquet(str(src))
-    back = _run_to_parquet_sink(spark, no_files, "emptysrc", 120)
+    back = _run_to_parquet_sink(spark, no_files, "emptysrc")
     assert back.count() == 0
     assert back.schema.simpleString() == "struct<k:bigint,v:string>"
