@@ -283,7 +283,7 @@ def knn_graph(
     fitted clustering (see knn_graph_extend); None fits on the input.
     """
     pairs = cluster_blocked_cosine_pairs(embeddings, k, iters, assign_probes, cents)
-    return _topk_per_source(pairs, k_neighbors)
+    return _topk_per_source(_both_ways(pairs), k_neighbors)
 
 
 def knn_graph_extend(
@@ -343,18 +343,8 @@ def knn_graph_extend(
     new_pairs = _rescore_pairs(cand, all_emb).localCheckpoint(eager=False)
     # old_edges are already directed; fold them in as one-orientation
     # candidates on top of the new pairs' two orientations
-    directed_new = new_pairs.unionByName(
-        new_pairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "cosine_sim")
-    )
-    from pyspark.sql import Window
-
-    merged = old_edges.select("a", "b", "cosine_sim").unionByName(directed_new)
-    w = Window.partitionBy("a").orderBy(F.col("cosine_sim").desc(), F.col("b"))
-    return (
-        merged.withColumn("___rn", F.row_number().over(w))
-        .filter(F.col("___rn") <= k_neighbors)
-        .select("a", "b", "cosine_sim")
-    )
+    old = old_edges.select("a", "b", "cosine_sim")
+    return _topk_per_source(old.unionByName(_both_ways(new_pairs)), k_neighbors)
 
 
 def _topp_assign(
@@ -571,14 +561,18 @@ def _rescore_pairs(cand: DataFrame, embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _topk_per_source(pairs: DataFrame, k_neighbors: int) -> DataFrame:
-    """Directed view (both orientations) -> per-source top-k by
-    (cosine_sim DESC, neighbor id)."""
-    from pyspark.sql import Window
-
-    directed = pairs.unionByName(
+def _both_ways(pairs: DataFrame) -> DataFrame:
+    """Directed view of (a, b, cosine_sim) pairs: both orientations."""
+    return pairs.unionByName(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "cosine_sim")
     )
+
+
+def _topk_per_source(directed: DataFrame, k_neighbors: int) -> DataFrame:
+    """Directed edges -> per-source top-k by (cosine_sim DESC,
+    neighbor id)."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("a").orderBy(F.col("cosine_sim").desc(), F.col("b"))
     return (
         directed.withColumn("___rn", F.row_number().over(w))

@@ -25,10 +25,10 @@ from aws_pandas_etl_spark.functions.hashing import (
     base_hash,
     md5_bigint,
     minhash_signature,
-    normalize_text,
     shingles,
 )
 from aws_pandas_etl_spark.functions.literals import lit_array
+from aws_pandas_etl_spark.operators.text import tokens
 
 # Default MinHash geometry: 16 hashes = 4 bands x 4 rows.
 # P(candidate | jaccard=j) = 1 - (1 - j^4)^4  ->  ~0.5 at j~0.66.
@@ -634,10 +634,7 @@ def exact_span_duplicates(
 
     Returns (span, n_occ, n_docs) for spans seen in >= 2 documents.
     """
-    toks = F.filter(
-        F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " "),
-        lambda t: t != "",
-    )
+    toks = tokens(text_col)
     n = F.size("___toks")
     anchors = F.filter(
         F.sequence(F.lit(1), n - span_tokens + 1),
@@ -868,10 +865,7 @@ def excise_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     BEFORE tokenization, so only losing documents are ever tokenized
     for the rebuild — a JVM-side higher-order filter over the token
     array, no Python, no explode, no shuffle of non-losing docs."""
-    toks_expr = F.filter(
-        F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " "),
-        lambda t: t != "",
-    )
+    toks_expr = tokens("text")
     # one row per doc; pin ONE evaluation — la/lb below would otherwise
     # each re-run the full tokenize scan for their branch of the join
     lens = docs.select(

@@ -199,12 +199,9 @@ def dsir_log_weights(
     ``n_grams`` the occurrence count, ``log_weight`` 0.0 for empty
     docs (no evidence either way).
     """
-    from aws_pandas_etl_spark.functions.hashing import normalize_text
+    from aws_pandas_etl_spark.operators.text import tokens
 
-    toks = F.filter(
-        F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " "),
-        lambda t: t != "",
-    )
+    toks = tokens(text_col)
     n = F.size(toks)
     bigrams = F.when(
         n >= 2,

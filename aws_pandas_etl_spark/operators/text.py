@@ -58,16 +58,18 @@ def _let(value: Column, body) -> Column:
     return F.transform(F.array(value), body)[0]
 
 
+def _stopword_hits(toks: Column, lang: str) -> Column:
+    """How many of the tokens ``toks`` are ``lang`` stopwords."""
+    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
+    return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
+
+
 def predict_lang(col: Column | str) -> Column:
     """argmax of per-language stopword hit counts; ties broken by
     language code order; all-zero -> 'unk'.  Expressed as a CASE
     cascade so the oracle SQL is literally the same expression; the
     tokens and the score array are each bound once per row."""
     langs = sorted(LANG_STOPWORDS)  # deterministic tie order
-
-    def hits(toks: Column, lang: str) -> Column:
-        sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-        return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
     def argmax(scores: Column) -> Column:
         best = F.array_max(scores)
@@ -78,7 +80,9 @@ def predict_lang(col: Column | str) -> Column:
 
     return _let(
         tokens(col),
-        lambda toks: _let(F.array(*[hits(toks, lang) for lang in langs]), argmax),
+        lambda toks: _let(
+            F.array(*[_stopword_hits(toks, lang) for lang in langs]), argmax
+        ),
     )
 
 
@@ -88,13 +92,8 @@ def lang_score_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
     mixed-language detector's inputs; CollapseProject keeps
     multiply-referenced aliases)."""
     staged = df.withColumn("_toks", tokens(text_col))
-
-    def _hits(lang: str) -> Column:
-        sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-        return F.size(F.filter(F.col("_toks"), lambda t: F.array_contains(sw, t)))
-
     for lang in sorted(LANG_STOPWORDS):
-        staged = staged.withColumn(f"_s_{lang}", _hits(lang))
+        staged = staged.withColumn(f"_s_{lang}", _stopword_hits(F.col("_toks"), lang))
     return staged
 
 
@@ -264,16 +263,16 @@ def pack_sequences(
     order).
 
     Scale posture: the corpus-wide prefix sum runs through
-    ``ranking.global_prefix_sum`` — ``repartitionByRange(doc_id)``,
+    ``ranking.global_prefix_sums`` — ``repartitionByRange(doc_id)``,
     partition-local prefix sums, broadcast per-partition offsets — so
     the plan contains a range exchange plus ``num_partitions``-way
     windows, never a single-partition global sort.  ``id_col`` must be
     unique (it is the ordering key)."""
-    from aws_pandas_etl_spark.operators.ranking import global_prefix_sum
+    from aws_pandas_etl_spark.operators.ranking import global_prefix_sums
 
     ntok = F.size(tokens("text"))
     base = df.select(F.col(id_col).alias("doc_id"), ntok.alias("n_tokens"))
-    packed = global_prefix_sum(base, ["doc_id"], "n_tokens", out_col="start_tok")
+    packed = global_prefix_sums(base, ["doc_id"], ["n_tokens"], ["start_tok"])
     return packed.withColumn(
         "pack_id", F.expr(f"CAST(start_tok DIV {budget} AS BIGINT)")
     )

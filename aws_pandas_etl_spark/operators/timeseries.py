@@ -345,7 +345,7 @@ def sliding_range_sum(
         trail(e) = C(key, ts_e) - C(key, ts_e - W - eps)
     where C is the per-key inclusive prefix sum in time order.  Both
     terms ride ONE global prefix sum over (key, ts, probe-flag) —
-    ``ranking.global_prefix_sum``'s range-repartitioned two-pass scheme
+    ``ranking.global_prefix_sums``' range-repartitioned two-pass scheme
     splits a hot key across partitions by time range — with one probe
     row injected per distinct (key, ts) at ts - window_us, flagged to
     sort BEFORE real rows at the same timestamp so its prefix counts

@@ -34,7 +34,6 @@ from aws_pandas_etl_spark.artifacts import (
     parquet_memo,
     publish_parquet_artifact,
 )
-from aws_pandas_etl_spark.functions.hashing import normalize_text
 from aws_pandas_etl_spark.functions.literals import lit_array
 from aws_pandas_etl_spark.operators import dedup as D
 from aws_pandas_etl_spark.operators import multimodal as MM
@@ -47,6 +46,7 @@ from aws_pandas_etl_spark.operators.transforms import (
     enforce_schema,
 )
 from aws_pandas_etl_spark.sources.readers import load_table
+from aws_pandas_etl_spark.streaming import stateful as ST
 from aws_pandas_etl_spark.streaming.events_stream import (
     run_tumbling_agg_stream,
     tumbling_window_agg,
@@ -507,13 +507,16 @@ FROM s GROUP BY user_id, session_no
 # semantics by shared-fold construction).  Without this, a green row
 # from a protobuf-less environment was indistinguishable from one that
 # exercised the StatefulProcessor path.
-def _tws_state_api() -> str:
-    from aws_pandas_etl_spark.streaming.ewma_stream import tws_available
-
-    return "tws" if tws_available() else "groupstate_fallback"
+TWS_STATE_API = "tws" if ST.tws_available() else "groupstate_fallback"
 
 
-TWS_STATE_API = _tws_state_api()
+def _tws_twin(spark: SparkSession, sf_dir: str, op: ST.KeyedFold) -> DataFrame:
+    """Run ``op`` through transformWithStateInPandas where the
+    environment supports it, else through the applyInPandasWithState
+    form (identical semantics), as ``TWS_STATE_API`` records."""
+    run = ST.run_tws if TWS_STATE_API == "tws" else ST.run_groupstate
+    return run(spark, sf_dir, op)
+
 
 SESSION_TWS_ORACLE = (
     "SELECT user_id, session_no, n_events, session_start, session_end, "
@@ -551,10 +554,10 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
     per-user sessionization with 30-min gap.  Oracle is the batch
-    lag+cumsum SQL — stream and batch agree on bounded input."""
-    from aws_pandas_etl_spark.streaming.sessionize import run_sessionize_stream
-
-    return run_sessionize_stream(spark, sf_dir)
+    lag+cumsum SQL — stream and batch agree on bounded input (a
+    session spanning micro-batches would come out as one fragment per
+    batch under the same ``session_no``; consumers merge by key)."""
+    return ST.run_groupstate(spark, sf_dir, ST.SESSIONS)
 
 
 @register("streaming_sessionize_tws", SESSION_TWS_ORACLE)
@@ -562,7 +565,7 @@ def streaming_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``transformWithStateInPandas`` twin of the stateful sessionizer
     — with the TWS EWMA twin this completes the Spark-4 migration pair
     for BOTH custom stateful operators the engine ships (the two APIs
-    share one ``_fold_sessions`` replay, so batch, GroupState stream,
+    share one ``stateful.SESSIONS`` fold, so batch, GroupState stream,
     and TWS stream all verify against the single lag+cumsum oracle).
     Capability-gated on protobuf with fallback to the GroupState form
     (identical semantics); RocksDB provider scoped to the run.  The
@@ -570,17 +573,7 @@ def streaming_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     environment resolved — "tws" or "groupstate_fallback" — in the
     result and the oracle alike, so every green driver row is
     self-describing about what it certified."""
-    from aws_pandas_etl_spark.streaming.ewma_stream import tws_available
-    from aws_pandas_etl_spark.streaming.sessionize import (
-        run_sessionize_stream,
-        run_sessionize_stream_tws,
-    )
-
-    out = (
-        run_sessionize_stream_tws(spark, sf_dir)
-        if tws_available()
-        else run_sessionize_stream(spark, sf_dir)
-    )
+    out = _tws_twin(spark, sf_dir, ST.SESSIONS)
     return out.withColumn("state_api", F.lit(TWS_STATE_API))
 
 
@@ -3099,10 +3092,7 @@ def winnowing_fingerprint_density(spark: SparkSession, sf_dir: str) -> DataFrame
     audit belongs next to the operator like pq_recall_at10 does for
     PQ."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(normalize_text(F.coalesce(F.col("text"), F.lit(""))), " "),
-        lambda t: t != "",
-    )
+    toks = TX.tokens("text")
     grams = docs.select(
         "doc_id",
         "lang",
@@ -5107,7 +5097,7 @@ def sample_to_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute token counts).  Order comes from the md5 of the doc id
     (shuffle-free, engine-portable randomness); the running token sum
     is an exact BIGINT window.  At 100 TB the per-lang cumsum becomes
-    the two-pass global_prefix_sum (ranking.py) exactly as
+    the two-pass global_prefix_sums (ranking.py) exactly as
     pack_sequences_greedy does; the per-partition window here is the
     small-stratum form."""
     docs = load_table(spark, sf_dir, "documents")
@@ -7970,9 +7960,7 @@ def streaming_ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (alpha=1/2, bit-reproducible), so both share one oracle.
     State is two numbers per key; on an unbounded stream a watermark
     timeout evicts idle keys."""
-    from aws_pandas_etl_spark.streaming.ewma_stream import run_ewma_stream
-
-    return run_ewma_stream(spark, sf_dir)
+    return ST.latest_ewma(ST.run_groupstate(spark, sf_dir, ST.EWMA))
 
 
 EWMA_TWS_ORACLE = (
@@ -8002,17 +7990,7 @@ def streaming_ewma_per_user_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     "groupstate_fallback" — in the result and the oracle alike, so
     every green driver row is self-describing about what it
     certified."""
-    from aws_pandas_etl_spark.streaming.ewma_stream import (
-        run_ewma_stream,
-        run_ewma_stream_tws,
-        tws_available,
-    )
-
-    out = (
-        run_ewma_stream_tws(spark, sf_dir)
-        if tws_available()
-        else run_ewma_stream(spark, sf_dir)
-    )
+    out = ST.latest_ewma(_tws_twin(spark, sf_dir, ST.EWMA))
     return out.withColumn("state_api", F.lit(TWS_STATE_API))
 
 

@@ -580,7 +580,7 @@ def run_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (``F.session_window``): Spark's own
     merging session state, watermark-bounded, append mode — the
     idiomatic streaming sessionization (the custom
-    ``applyInPandasWithState`` sessionizer in sessionize.py exists for
+    ``applyInPandasWithState`` sessionizer in stateful.py exists for
     the semantics session_window can't express: cross-batch fragment
     numbering and arbitrary per-session state).
 

@@ -28,7 +28,7 @@ from aws_pandas_etl_spark.plans import queries as Q  # noqa: E402
 
 
 def _capabilities() -> dict:
-    from aws_pandas_etl_spark.streaming.ewma_stream import tws_available
+    from aws_pandas_etl_spark.streaming.stateful import tws_available
 
     return {
         "protobuf": tws_available(),

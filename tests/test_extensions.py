@@ -220,9 +220,9 @@ def test_multimodal_features_match_python(spark):
 
 def test_stateful_sessionize_stream_matches_batch(spark):
     from aws_pandas_etl_spark.plans.queries import QUERIES
-    from aws_pandas_etl_spark.streaming.sessionize import run_sessionize_stream
+    from aws_pandas_etl_spark.streaming.stateful import SESSIONS, run_groupstate
 
-    stream = sorted(tuple(r) for r in run_sessionize_stream(spark, SF).collect())
+    stream = sorted(tuple(r) for r in run_groupstate(spark, SF, SESSIONS).collect())
     batch = sorted(tuple(r) for r in QUERIES["sessionize_events"](spark, SF).collect())
     assert stream == batch
 

@@ -5,7 +5,11 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from aws_pandas_etl_spark.operators.ranking import global_percent_rank, global_rank
+from aws_pandas_etl_spark.operators.ranking import (
+    global_percent_rank,
+    global_prefix_sums,
+    global_rank,
+)
 
 
 def _frame(spark, n=5_000):
@@ -32,18 +36,19 @@ def test_global_rank_matches_window_row_number(spark, nparts):
 
 def test_global_percent_rank_matches_window(spark):
     df = _frame(spark, 3_001)
-    got = {
-        r["id"]: r["pct"]
-        for r in global_percent_rank(
-            df, ["score", "id"], "pct", num_partitions=13
-        ).collect()
-    }
     w = Window.orderBy("score", "id")
     want = {
         r["id"]: r["pct"]
         for r in df.withColumn("pct", F.percent_rank().over(w)).collect()
     }
-    assert got == want  # exact doubles: same (rank-1)/(n-1) integers
+    for nparts in (1, 13, 32):
+        got = {
+            r["id"]: r["pct"]
+            for r in global_percent_rank(
+                df, ["score", "id"], "pct", num_partitions=nparts
+            ).collect()
+        }
+        assert got == want, nparts  # exact doubles: same (rank-1)/(n-1) integers
 
 
 def test_global_percent_rank_single_row_is_zero(spark):
@@ -77,37 +82,14 @@ def test_global_rank_plan_has_no_global_sort(spark):
 
 
 def test_global_prefix_sums_multi_channel_matches_single(spark):
-    """The one-exchange multi-column variant must equal N independent
-    global_prefix_sum calls channel-for-channel (exclusive prefix in
-    (k, t) order), including the zero for the first row."""
-    from pyspark.sql import Window
-
-    from aws_pandas_etl_spark.operators.ranking import (
-        global_prefix_sum,
-        global_prefix_sums,
-    )
-
+    """Every channel of the one-exchange scan equals the
+    single-partition window oracle (exclusive prefix in id order),
+    including the zero for the first row, at any partition count."""
     df = spark.range(200).select(
         F.col("id"),
         (F.col("id") % 7).alias("a"),
         (F.col("id") % 3 + 1).alias("b"),
     )
-    multi = {
-        r["id"]: (r["pa"], r["pb"])
-        for r in global_prefix_sums(
-            df, ["id"], ["a", "b"], ["pa", "pb"], num_partitions=8
-        ).collect()
-    }
-    sa = {
-        r["id"]: r["pa"]
-        for r in global_prefix_sum(df, ["id"], "a", "pa", 8).collect()
-    }
-    sb = {
-        r["id"]: r["pb"]
-        for r in global_prefix_sum(df, ["id"], "b", "pb", 8).collect()
-    }
-    assert multi == {k: (sa[k], sb[k]) for k in sa}
-    # and both equal the single-partition window oracle
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
     oracle = {
         r["id"]: (r["pa"] or 0, r["pb"] or 0)
@@ -117,4 +99,11 @@ def test_global_prefix_sums_multi_channel_matches_single(spark):
             F.sum("b").over(w).alias("pb"),
         ).collect()
     }
-    assert multi == oracle
+    for nparts in (1, 7, 32):
+        multi = {
+            r["id"]: (r["pa"], r["pb"])
+            for r in global_prefix_sums(
+                df, ["id"], ["a", "b"], ["pa", "pb"], num_partitions=nparts
+            ).collect()
+        }
+        assert multi == oracle, nparts

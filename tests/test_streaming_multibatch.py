@@ -12,14 +12,17 @@ import uuid
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from aws_pandas_etl_spark.plans.queries import QUERIES
 from aws_pandas_etl_spark.streaming.events_stream import open_events_stream
-from aws_pandas_etl_spark.streaming.sessionize import (
-    OUTPUT_SCHEMA,
-    STATE_SCHEMA,
-    _sessionize_group,
+from aws_pandas_etl_spark.streaming.stateful import (
+    EWMA,
+    SESSIONS,
+    apply_groupstate,
+    latest_ewma,
+    run_groupstate,
+    run_tws,
+    tws_available,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -66,10 +69,7 @@ def test_session_continues_across_batch_boundary(spark, tmp_path):
     stream = open_events_stream(
         spark, str(tmp_path), "batch_*.parquet", max_files_per_trigger=1
     )
-    sess = stream.groupBy("user_id").applyInPandasWithState(
-        _sessionize_group, OUTPUT_SCHEMA, STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    sess = apply_groupstate(stream, SESSIONS)
     name = f"cont_{uuid.uuid4().hex[:6]}"
     q = (
         sess.writeStream.format("memory").queryName(name).outputMode("append")
@@ -95,10 +95,7 @@ def test_state_carries_across_micro_batches(spark, split_events_dir):
     stream = open_events_stream(
         spark, split_events_dir, "batch_*.parquet", max_files_per_trigger=1
     )
-    sess = stream.groupBy("user_id").applyInPandasWithState(
-        _sessionize_group, OUTPUT_SCHEMA, STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    sess = apply_groupstate(stream, SESSIONS)
     name = f"mb_{uuid.uuid4().hex[:6]}"
     q = (
         sess.writeStream.format("memory").queryName(name).outputMode("append")
@@ -422,19 +419,11 @@ def test_ewma_state_carries_across_batches(spark, split_events_dir):
     the batch EWMA bit-for-bit (alpha=1/2).  If state were lost, later
     batches would restart the recurrence and values would diverge."""
     from aws_pandas_etl_spark.operators.timeseries import ewma_last_per_key
-    from aws_pandas_etl_spark.streaming.ewma_stream import (
-        OUTPUT_SCHEMA as EWMA_OUT,
-        STATE_SCHEMA as EWMA_STATE,
-        _ewma_group,
-    )
 
     stream = open_events_stream(
         spark, split_events_dir, "batch_*.parquet", max_files_per_trigger=1
-    ).select("user_id", "ts", "event_id", "value")
-    ew = stream.groupBy("user_id").applyInPandasWithState(
-        _ewma_group, EWMA_OUT, EWMA_STATE, "append",
-        GroupStateTimeout.NoTimeout,
     )
+    ew = apply_groupstate(stream, EWMA)
     name = f"ewma_{uuid.uuid4().hex[:6]}"
     q = (
         ew.writeStream.format("memory").queryName(name).outputMode("append")
@@ -564,26 +553,18 @@ def test_tws_ewma_twin_gate_and_parity(spark):
     alpha=1/2 bit-reproducible); without it the capability gate must
     refuse LOUDLY before the query starts (the raw API crashes the
     Python driver worker only after start — a hang-shaped failure)."""
-    import pytest
-
-    from aws_pandas_etl_spark.streaming.ewma_stream import (
-        run_ewma_stream,
-        run_ewma_stream_tws,
-        tws_available,
-    )
-
     sf = "/root/testdata/sf0.001"
     if not tws_available():
         with pytest.raises(RuntimeError, match="protobuf"):
-            run_ewma_stream_tws(spark, sf)
+            run_tws(spark, sf, EWMA)
         return
     tws = {
         r["user_id"]: (r["n_events"], r["ewma"])
-        for r in run_ewma_stream_tws(spark, sf).collect()
+        for r in latest_ewma(run_tws(spark, sf, EWMA)).collect()
     }
     old = {
         r["user_id"]: (r["n_events"], r["ewma"])
-        for r in run_ewma_stream(spark, sf).collect()
+        for r in latest_ewma(run_groupstate(spark, sf, EWMA)).collect()
     }
     assert tws == old
 
@@ -593,28 +574,20 @@ def test_tws_sessionize_twin_gate_and_parity(spark):
     Spark-4 migration pair for both custom stateful operators): with
     protobuf present its availableNow run must equal the
     applyInPandasWithState sessionizer row-for-row (both run the
-    shared ``_fold_sessions`` replay); without it the gate refuses
-    loudly pre-start."""
-    import pytest
-
-    from aws_pandas_etl_spark.streaming.ewma_stream import tws_available
-    from aws_pandas_etl_spark.streaming.sessionize import (
-        run_sessionize_stream,
-        run_sessionize_stream_tws,
-    )
-
+    shared ``SESSIONS`` fold); without it the gate refuses loudly
+    pre-start."""
     sf = "/root/testdata/sf0.001"
     if not tws_available():
         with pytest.raises(RuntimeError, match="protobuf"):
-            run_sessionize_stream_tws(spark, sf)
+            run_tws(spark, sf, SESSIONS)
         return
     key = lambda df: sorted(
         (r["user_id"], r["session_no"], r["n_events"],
          r["session_start"], r["session_end"])
         for r in df.collect()
     )
-    assert key(run_sessionize_stream_tws(spark, sf)) == key(
-        run_sessionize_stream(spark, sf)
+    assert key(run_tws(spark, sf, SESSIONS)) == key(
+        run_groupstate(spark, sf, SESSIONS)
     )
 
 
@@ -844,8 +817,6 @@ def test_tws_entries_record_resolved_state_api(spark):
         QUERIES,
         TWS_STATE_API,
     )
-    from aws_pandas_etl_spark.streaming.ewma_stream import tws_available
-
     expected = "tws" if tws_available() else "groupstate_fallback"
     assert TWS_STATE_API == expected
     for name in ("streaming_ewma_per_user_tws", "streaming_sessionize_tws"):

@@ -130,7 +130,7 @@ def main() -> None:
         spark.catalog.clearCache()
 
     from aws_pandas_etl_spark.plans.queries import TWS_STATE_API
-    from aws_pandas_etl_spark.streaming.ewma_stream import tws_available
+    from aws_pandas_etl_spark.streaming.stateful import tws_available
 
     payload = {
         "sf_dir": args.sf,

@@ -49,9 +49,7 @@ from aws_pandas_etl_spark.streaming.events_stream import (  # noqa: E402
     run_available_now,
     scratch_dir,
 )
-from aws_pandas_etl_spark.streaming.ewma_stream import (  # noqa: E402
-    ROCKSDB_STATE_STORE,
-)
+from aws_pandas_etl_spark.streaming.stateful import ROCKSDB_STATE_STORE  # noqa: E402
 
 SCHEMA = T.StructType(
     [
